@@ -42,15 +42,22 @@ object Sources {
     else Try(spark.read.parquet(path)).getOrElse(csv)
   }
 
-  /** S2: multi-file union scan (reference `scripts/validation.py:67-80`).
-    * When all parts share a declared schema, prefer [[readMultiPath]] — one
-    * scan node instead of a `Union` of N scans. The fold form exists for the
-    * schema-less case where parts may disagree on column order.
+  /** S2: multi-file scan (reference `scripts/validation.py:67-80`). When a
+    * schema is declared and every part is `.csv` — the pipeline's ingest
+    * shape — the parts are ONE multi-path CSV scan (one relation, one split
+    * list; each part's header line is skipped), as [[readMultiPath]] is
+    * for parquet. The `unionByName` fold remains for the schema-less and
+    * mixed-format cases, where parts may disagree on column order.
     */
   def readAndUnion(spark: SparkSession, paths: Seq[String],
       csvSchema: Option[StructType] = None): Option[DataFrame] =
-    paths.map(readParquetOrCsv(spark, _, csvSchema))
-      .reduceOption(_.unionByName(_))
+    csvSchema match {
+      case Some(s) if paths.nonEmpty && paths.forall(_.endsWith(".csv")) =>
+        Some(spark.read.option("header", "true").schema(s).csv(paths: _*))
+      case _ =>
+        paths.map(readParquetOrCsv(spark, _, csvSchema))
+          .reduceOption(_.unionByName(_))
+    }
 
   /** S2 (scale path): single multi-path scan — the planner gets one relation
     * with N files, so file listing, split planning, and pushdown happen once.
@@ -58,10 +65,17 @@ object Sources {
   def readMultiPath(spark: SparkSession, paths: Seq[String]): DataFrame =
     spark.read.parquet(paths: _*)
 
-  /** S3: strict single-table scan, None on failure
-    * (reference `scripts/transformation.py:107-119`). */
-  def readTable(spark: SparkSession, path: String): Option[DataFrame] =
-    Try(spark.read.parquet(path)).toOption
+  /** S3: strict single-table scan (reference
+    * `scripts/transformation.py:107-119`): None ONLY when nothing exists at
+    * `path` — the caller's "table not available" branch. Any other failure
+    * (a corrupt or unreadable file, a listing error) propagates: read as
+    * "absent", it would silently switch `Pipeline.transformJob` to a
+    * partial-data mode and merge NULL KPI fields over a date. */
+  def readTable(spark: SparkSession, path: String): Option[DataFrame] = {
+    val p = new org.apache.hadoop.fs.Path(normalizeScheme(path))
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (fs.exists(p)) Some(spark.read.parquet(path)) else None
+  }
 
   /** Load one testdata table: `<dir>/<name>.parquet`. */
   def table(spark: SparkSession, dir: String, name: String): DataFrame =

@@ -37,8 +37,8 @@ import org.apache.spark.sql.functions._
   * round's blocks become unreachable and the ContextCleaner reclaims
   * them — a long-lived driver holds NOTHING after the call (the
   * edge cache is released in-method too; no caller clearCache
-  * contract). Cluster caveat as in Kpi.computeKpis: checkpoint
-  * blocks are executor-local, unrecoverable on executor loss. */
+  * contract). Cluster caveat: checkpoint blocks are executor-local,
+  * unrecoverable on executor loss. */
 object BfsHops {
 
   /** Fixed round count — diameter-bound, matching d9's measured

@@ -217,8 +217,7 @@ object EntityResolution {
     * (offset counts, the rank join) must see ONE exchange — without
     * materialization a non-reused exchange could re-sample different
     * boundaries per consumer and mis-stitch offsets to partitions
-    * (cluster caveat as in Kpi.computeKpis: checkpoint blocks are
-    * executor-local). */
+    * (cluster caveat: checkpoint blocks are executor-local). */
   private def globalRank(customers: DataFrame,
       sortKey: Column): DataFrame = {
     val W = org.apache.spark.sql.expressions.Window

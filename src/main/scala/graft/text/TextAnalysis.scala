@@ -896,7 +896,7 @@ object TextAnalysis {
     * and the only driver traffic is the ≤65-row delta whose bias row
     * doubles as the mistake count (bias occurs exactly once per doc).
     * Weight state lives on the driver between rounds exactly like
-    * BPE's merge table. Released in-method (computeKpis lifecycle). */
+    * BPE's merge table. Released in-method. */
   def perceptronTrain(docs: DataFrame,
       iters: Int = PtronIters): DataFrame = {
     val spark = docs.sparkSession
@@ -2025,13 +2025,13 @@ object TextAnalysis {
       .groupBy(col("r"), col("bucket"))
       .agg(sum(col("cell_n")).as("cell_n"))
 
-  /** EAGER (the Kpi.computeKpis lifecycle, round-9 verdict): both
+  /** EAGER (round-9 verdict): both
     * consumers of the shared token-grain base are BOUNDED (the cell
     * table is ≤ CmsRows×CmsWidth rows, the top list k rows), so they
     * are materialized off the cache at call time and the corpus-scale
     * persist is released before this returns — no caller contract, no
-    * leaked cached relation on a long-lived driver. Cluster caveat as
-    * in computeKpis: localCheckpoint blocks live only on executors, so
+    * leaked cached relation on a long-lived driver. Cluster caveat:
+    * localCheckpoint blocks live only on executors, so
     * an executor loss after this call makes the frames unrecoverable;
     * acceptable for bounded reporting frames a caller can re-run. */
   def heavyHitters(docs: DataFrame, k: Int = 20): DataFrame = {

@@ -68,6 +68,30 @@ class KpiSpec extends SparkSpec {
     assert(cat.head.isNullAt(cat.head.fieldIndex("avg_order_value")))
   }
 
+  test("computeKpis ≡ the per-family aggregates: NULL category, items-only, empty join") {
+    // the fused one-action form must equal categoryKpi / orderKpi* over
+    // the same join, including a NULL-category group (not the grand
+    // total) and an empty join (no category rows, one global row)
+    val withNullCat = mk(productsS, Row(1L, "toys"), Row(99L, null))
+    val noItems = mk(itemsS)
+    def rows(df: DataFrame) = df.collect().map(_.toString).sorted.toSeq
+    def check(got: (Option[DataFrame], Option[DataFrame]), cat: DataFrame,
+        ord: DataFrame) = {
+      assert(rows(got._1.get) === rows(cat))
+      assert(got._1.get.schema === cat.schema)
+      assert(rows(got._2.get) === rows(ord))
+      assert(got._2.get.schema === ord.schema)
+    }
+    for (p <- Seq(products, withNullCat); it <- Seq(items, noItems)) {
+      val j = Kpi.threeWayJoin(orders, it, p)
+      check(Kpi.computeKpis(Some(orders), Some(it), Some(p)),
+        Kpi.categoryKpi(j), Kpi.orderKpiComplete(j))
+      val ij = Kpi.itemsProductsJoin(it, p)
+      check(Kpi.computeKpis(None, Some(it), Some(p)),
+        Kpi.categoryKpi(ij), Kpi.orderKpiItemsOnly(ij))
+    }
+  }
+
   test("items-only order KPIs run over the items⋈products join (orphans excluded)") {
     val (cat, ord) = Kpi.computeKpis(None, Some(items), Some(products))
     val r = ord.get.collect().head

@@ -105,6 +105,44 @@ class PipelineSpec extends SparkSpec {
     assert(ordRow.getAs[String]("last_updated") === "2024-06-01T12:00:00Z")
   }
 
+  test("a clean daily batch stays within its Spark job budget") {
+    // Every job of validate → transform → both store commits, counted by
+    // a listener over the second of two batches of one date (the first
+    // warms up and seeds the store, so the second merges against it).
+    // The gate is one action and the KPI families one more: 26 jobs under
+    // AQE on local[4] (the six-action gate with the checkpointed KPI path
+    // ran 49). The ceiling keeps later changes from quietly adding
+    // actions back.
+    val MaxJobs = 26
+    val d = dir()
+    val (op, ip, p) = cleanFixtures(d)
+    def batch(n: Int): Unit = {
+      val res = Pipeline.validateJob(spark, op, ip, Some(p),
+        s"$d/validated$n", s"$d/result$n.json")
+      assert(res.status === "success")
+      Pipeline.transformJob(spark, s"$d/validated$n", res.processingDate.get,
+        s"$d/store", now = s"t$n")
+      ()
+    }
+    batch(1)
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        jobs.incrementAndGet(); ()
+      }
+    }
+    org.apache.spark.graft.ListenerDrain.drain(sc)
+    sc.addSparkListener(listener)
+    try {
+      batch(2)
+      org.apache.spark.graft.ListenerDrain.drain(sc)
+    } finally sc.removeSparkListener(listener)
+    assert(jobs.get <= MaxJobs,
+      s"a clean batch ran ${jobs.get} Spark jobs, budget $MaxJobs")
+  }
+
   test("orders-only rerun merges counts but preserves revenue fields") {
     val d = dir()
     val (op, ip, p) = cleanFixtures(d)

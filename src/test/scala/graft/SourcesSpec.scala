@@ -56,6 +56,42 @@ class SourcesSpec extends SparkSpec {
     assert(Sources.readTable(spark, s"$sf0001/region.parquet").nonEmpty)
   }
 
+  test("readTable propagates a corrupt table instead of reading it as absent") {
+    // an unreadable table must fail the batch: as None, the transform
+    // would switch to a partial-data mode and merge NULL KPI fields
+    val dir = java.nio.file.Paths.get(s"$tmp/corrupt_table")
+    Files.createDirectories(dir)
+    Files.write(dir.resolve("part-00000.parquet"),
+      "not a parquet file".getBytes("UTF-8"))
+    intercept[Exception] {
+      Sources.readTable(spark, dir.toString).foreach(_.collect())
+    }
+  }
+
+  test("readAndUnion plans declared-schema CSV parts as ONE multi-path scan") {
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    import org.apache.spark.sql.catalyst.plans.logical.Union
+    val schema = StructType(Seq(
+      StructField("order_id", LongType), StructField("amount", DoubleType)))
+    val parts = Seq("1,10.5\n2,20.0\n", "3,30.0\n", "4,\n5,50.0\n")
+      .zipWithIndex.map { case (body, i) =>
+        val f = s"$tmp/multi_part$i.csv"
+        Files.writeString(java.nio.file.Paths.get(f), "order_id,amount\n" + body)
+        f
+      }
+    val df = Sources.readAndUnion(spark, parts, Some(schema)).get
+    val perFile = parts.map(Sources.readParquetOrCsv(spark, _, Some(schema)))
+      .reduce(_ union _)
+    assert(df.schema === schema)
+    // every part's header skipped, every data row kept
+    assert(df.collect().map(_.toString).sorted ===
+      perFile.collect().map(_.toString).sorted)
+    assert(df.count() === 5)
+    val qe = df.queryExecution
+    assert(qe.optimizedPlan.collect { case u: Union => u }.isEmpty)
+    assert(qe.sparkPlan.collect { case s: FileSourceScanExec => s }.size === 1)
+  }
+
   test("compact rewrites a fragmented table to few files, data intact") {
     val out = s"$tmp/fragmented"
     val df = Sources.table(spark, sf0001, "lineitem")
