@@ -1,10 +1,16 @@
 package graft.io
 
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+import org.apache.parquet.hadoop.{Footer, ParquetFileReader}
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StructType, TimestampNTZType, TimestampType}
 
 import scala.util.Try
+
+import graft.pipeline.ForkJoin
 
 /** Scan/source/sink combinators (reference SURVEY.md §2.1, S1-S6).
   *
@@ -70,11 +76,55 @@ object Sources {
     * `path` — the caller's "table not available" branch. Any other failure
     * (a corrupt or unreadable file, a listing error) propagates: read as
     * "absent", it would silently switch `Pipeline.transformJob` to a
-    * partial-data mode and merge NULL KPI fields over a date. */
+    * partial-data mode and merge NULL KPI fields over a date.
+    *
+    * The schema comes from one data file's footer read on the driver
+    * ([[footerSchema]]), so opening a table launches no Spark job (schema
+    * inference runs one per table); the resulting schema equals
+    * `spark.read.parquet(path).schema`, partition columns included. A
+    * table with no data file is read exactly as inference reads it. */
   def readTable(spark: SparkSession, path: String): Option[DataFrame] = {
-    val p = new org.apache.hadoop.fs.Path(normalizeScheme(path))
+    val p = new Path(normalizeScheme(path))
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(p)) Some(spark.read.parquet(path)) else None
+    if (!fs.exists(p)) None
+    else Some(firstDataFile(fs, fs.getFileStatus(p)) match {
+      case Some(f) => spark.read.schema(footerSchema(spark, f)).parquet(path)
+      case None => spark.read.parquet(path)
+    })
+  }
+
+  /** The file whose footer `spark.read.parquet` would infer the schema
+    * from (no schema merging): the first data file by path, listing as
+    * Spark's file index does, skipping `_`/`.`-prefixed names except
+    * `_col=value` partition directories. Summary files (`_metadata`,
+    * `_common_metadata`) are not consulted; nothing here writes them. */
+  private def firstDataFile(fs: FileSystem, root: FileStatus)
+      : Option[FileStatus] = {
+    def hidden(n: String) = (n.startsWith("_") && !n.contains("=")) ||
+      n.startsWith(".") || n.endsWith("._COPYING_")
+    def leaves(s: FileStatus): Iterator[FileStatus] =
+      if (!s.isDirectory) Iterator(s)
+      else fs.listStatus(s.getPath).iterator
+        .filterNot(c => hidden(c.getPath.getName)).flatMap(leaves)
+    leaves(root).minByOption(_.getPath.toString)
+  }
+
+  /** A parquet file's Spark schema read from its footer on the driver,
+    * through Spark's own conversion (the Spark row metadata when the
+    * writer stored it, else the parquet types) — what schema inference
+    * computes, minus the Spark job inference runs to read the footer.
+    * Partition columns are not part of it; the reader infers them from
+    * the directory names as before. */
+  private def footerSchema(spark: SparkSession, file: FileStatus)
+      : StructType = {
+    val reader = ParquetFileReader.open(
+      HadoopInputFile.fromStatus(file, spark.sparkContext.hadoopConfiguration))
+    val footer = try new Footer(file.getPath, reader.getFooter)
+    finally reader.close()
+    val conf = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sessionState.conf
+    ParquetFileFormat.readSchemaFromFooter(footer,
+      new ParquetToSparkSchemaConverter(conf))
   }
 
   /** Load one testdata table: `<dir>/<name>.parquet`. */
@@ -140,6 +190,20 @@ object Sources {
     * `scripts/validation.py:196-199`). */
   def writeUnpartitioned(df: DataFrame, path: String): Unit =
     df.write.mode("overwrite").parquet(path)
+
+  /** The validation job's three table writes (reference
+    * `scripts/validation.py:193-199`), run CONCURRENTLY: `orders` and
+    * `order_items` partitioned by `dt` ([[writePartitioned]]), `products`
+    * unpartitioned. The writes share no path, so nothing orders them;
+    * [[ForkJoin.all]] joins all of them before this returns or throws. */
+  def writeValidated(orders: DataFrame, items: DataFrame,
+      products: Option[DataFrame], outBase: String, dt: String): Unit = {
+    ForkJoin.all(orders.sparkSession)(Seq(
+      () => writePartitioned(orders, s"$outBase/orders", dt),
+      () => writePartitioned(items, s"$outBase/order_items", dt)) ++
+      products.map(p => () => writeUnpartitioned(p, s"$outBase/products")))
+    ()
+  }
 
   /** E65: content-stable sharded output write — the training-corpus
     * writer: every row lands in the 16-way shard its id hashes to

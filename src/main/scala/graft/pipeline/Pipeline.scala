@@ -48,6 +48,12 @@ object Pipeline {
     * The null gate, both RI gates and the processing date are ONE action
     * ([[Validation.gate]]) — not the reference's job-per-column loop; the
     * three validated-table writes are the only other actions.
+    *
+    * Concurrency: the three writes run concurrently
+    * ([[Sources.writeValidated]]), and only after the gate has passed — a
+    * rejected batch writes nothing. They are all joined before the result
+    * doc is emitted and before this returns; a failed write makes the
+    * result `failed`/`UNKNOWN` once every other write has finished.
     */
   def validateJob(spark: SparkSession,
       ordersPaths: Seq[String], itemsPaths: Seq[String],
@@ -103,10 +109,7 @@ object Pipeline {
                   o.select(substring(col("created_at"), 1, 10))
                     .head().getString(0)
                 else minDate.orNull
-              Sources.writePartitioned(o, s"$outBase/orders", dt)
-              Sources.writePartitioned(i, s"$outBase/order_items", dt)
-              products.foreach(p =>
-                Sources.writeUnpartitioned(p, s"$outBase/products"))
+              Sources.writeValidated(o, i, products, outBase, dt)
               emit(ValidateResult("success", Some(dt), None, None))
           }
         case _ =>
@@ -300,11 +303,11 @@ object Pipeline {
     (live ++ versioned).reduce(_ unionByName _)
   }
 
-  private def catSchema = StructType.fromDDL(
+  private val catSchema = StructType.fromDDL(
     "category STRING, order_date STRING, daily_revenue DOUBLE, " +
       "avg_order_value DOUBLE, avg_return_rate DOUBLE, " +
       "data_sources ARRAY<STRING>, last_updated STRING")
-  private def ordSchema = StructType.fromDDL(
+  private val ordSchema = StructType.fromDDL(
     "order_date STRING, total_orders BIGINT, total_revenue DOUBLE, " +
       "total_items_sold BIGINT, return_rate DOUBLE, unique_customers BIGINT, " +
       "data_sources ARRAY<STRING>, last_updated STRING")
@@ -317,6 +320,14 @@ object Pipeline {
     * to the processing date's partition (`dt = processingDate`) — the
     * scale-correct tightening of the reference's full-base-path read,
     * SURVEY §4 row 2.
+    *
+    * Concurrency: once both KPI families are computed (one action), the
+    * `category_kpi` and `order_kpi` commits ([[upsertStore]]) run
+    * concurrently ([[ForkJoin.all]]); each keeps its own lease, CAS epoch
+    * checks, `.bak` swap and manifest. Both are joined before this returns
+    * or throws: a failed commit (say, a held lease) is rethrown only after
+    * the other store's commit has finished, and that commit stands — a
+    * rerun of the batch is idempotent on it.
     */
   def transformJob(spark: SparkSession, validatedBase: String,
       processingDate: String, storeBase: String, now: String,
@@ -340,7 +351,7 @@ object Pipeline {
     // last_updated rides through the merge as a regular coalesced field:
     // updated rows get `now`, untouched target rows keep their old stamp
     // (reference helperfunction.py:73-78,121-125)
-    val catRows = catKpi.map { k =>
+    val catCommit = () => catKpi.map { k =>
       val updates = k
         .withColumn("order_date", lit(processingDate))
         .withColumn("data_sources", typedLit(sources))
@@ -352,7 +363,7 @@ object Pipeline {
           "last_updated"))
     }.getOrElse(0L)
 
-    val ordRows = ordKpi.map { k =>
+    val ordCommit = () => ordKpi.map { k =>
       val updates = k
         .withColumn("order_date", lit(processingDate))
         .withColumn("data_sources", typedLit(sources))
@@ -364,7 +375,8 @@ object Pipeline {
           "return_rate", "unique_customers", "last_updated"))
     }.getOrElse(0L)
 
-    (catRows, ordRows)
+    val rows = ForkJoin.all(spark)(Seq(catCommit, ordCommit))
+    (rows(0), rows(1))
   }
 
   /** Incremental store merge — the Delta-`MERGE INTO` analogue without
@@ -399,6 +411,13 @@ object Pipeline {
     * merge write is the commit's only action: measured on a 60-order
     * daily batch at local[4], 1–3 Spark jobs and 6–17 generated classes
     * per store commit.
+    *
+    * Concurrency: every piece of state a commit touches — lease, manifest,
+    * staging dir, `.bak`, `.hist` — is per store path, so commits to
+    * DIFFERENT stores (what [[transformJob]] runs concurrently) never
+    * interact. Concurrent commits to the SAME store are arbitrated by the
+    * lease and the epoch CAS: the loser aborts clean, as between
+    * processes.
     *
     * @return total rows in the store after the merge (result-doc metadata;
     *         counted from parquet footers on the driver)

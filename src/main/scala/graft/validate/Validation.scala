@@ -44,7 +44,7 @@ object Validation {
     val col0 = col(c)
     df.schema(c).dataType match {
       case DoubleType | FloatType => col0.isNull || isnan(col0)
-      case StringType => col0.isNull || isnan(expr(s"try_cast(`$c` AS DOUBLE)"))
+      case StringType => col0.isNull || isnan(col0.try_cast(DoubleType))
       case _ => col0.isNull
     }
   }

@@ -68,6 +68,41 @@ class SourcesSpec extends SparkSpec {
     }
   }
 
+  test("readTable resolves a validated table's schema without a Spark job, " +
+      "equal to inference") {
+    val d = Files.createTempDirectory("graft-io-rt")
+    val (op, ip, p) = BatchFixtures.clean(d)
+    val sc = spark.sparkContext
+    for (compat <- Seq(false, true)) {
+      val out = s"$d/validated_$compat"
+      assert(graft.pipeline.Pipeline.validateJob(spark, op, ip, Some(p), out,
+        s"$d/result_$compat.json", allStringsCompat = compat)
+        .status === "success")
+      for (t <- Seq("orders", "order_items", "products")) {
+        val path = s"$out/$t"
+        val jobs = new java.util.concurrent.atomic.AtomicInteger()
+        val listener = new org.apache.spark.scheduler.SparkListener {
+          override def onJobStart(
+              j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+            jobs.incrementAndGet(); ()
+          }
+        }
+        org.apache.spark.graft.ListenerDrain.drain(sc)
+        sc.addSparkListener(listener)
+        val df = try {
+          val r = Sources.readTable(spark, path).get
+          org.apache.spark.graft.ListenerDrain.drain(sc)
+          r
+        } finally sc.removeSparkListener(listener)
+        assert(jobs.get === 0, s"$t (compat=$compat): opening ran a job")
+        assert(df.schema === spark.read.parquet(path).schema,
+          s"$t (compat=$compat)")
+        assert(df.collect().map(_.toString).sorted ===
+          spark.read.parquet(path).collect().map(_.toString).sorted)
+      }
+    }
+  }
+
   test("readAndUnion plans declared-schema CSV parts as ONE multi-path scan") {
     import org.apache.spark.sql.execution.FileSourceScanExec
     import org.apache.spark.sql.catalyst.plans.logical.Union
