@@ -1290,8 +1290,8 @@ object SparkEntry {
     // half keys). The d5→d5x lesson applied at frame grain: 16-bit band
     // keys admit ~2n²/2^16 random candidates — the term d5's history
     // measured into a quadratic wall on a signature-concentrated
-    // corpus; 30-bit halves push it to ~2n²/2^30 (tools/Mm3Ab records
-    // both curves). frameNearDupPairs defaults to this width; the
+    // corpus; 30-bit halves push it to ~2n²/2^30 (BASELINE.md "mm3 vs
+    // mm3x: the candidate-volume curve, measured" records both curves). frameNearDupPairs defaults to this width; the
     // 32-bit density-watch exhibit (mm3) is the explicit-arg variant.
     "mm3x_frame_neardup60" -> ((s, d) =>
       Multimodal.frameNearDupPairs(Sources.table(s, d, "documents"))),

@@ -29,6 +29,13 @@ object Sources {
     if (path.startsWith("s3://")) "s3a://" + path.stripPrefix("s3://")
     else path
 
+  /** The Hadoop filesystem holding `path` (scheme-normalized), from the
+    * session's Hadoop conf; Hadoop caches one instance per scheme,
+    * authority and user. */
+  private[graft] def fileSystem(spark: SparkSession, path: String): FileSystem =
+    FileSystem.get(new java.net.URI(normalizeScheme(path)),
+      spark.sparkContext.hadoopConfiguration)
+
   /** S1: primary-format-or-CSV scan. The reference tries Delta and falls back
     * to headered, schema-less CSV (reference `scripts/validation.py:51-64`).
     * Delta jars are not on this classpath, so the lake format here is parquet;
@@ -238,9 +245,8 @@ object Sources {
     */
   def compact(spark: SparkSession, path: String,
       targetBytes: Long = 128L * 1024 * 1024): (Int, Int) = {
-    import org.apache.hadoop.fs.{FileSystem, Path => HPath}
-    val fs = FileSystem.get(new java.net.URI(normalizeScheme(path)),
-      spark.sparkContext.hadoopConfiguration)
+    import org.apache.hadoop.fs.{Path => HPath}
+    val fs = fileSystem(spark, path)
     def dataFiles(p: HPath): Seq[org.apache.hadoop.fs.FileStatus] = {
       val it = fs.listFiles(p, true)
       val buf = scala.collection.mutable.ArrayBuffer
@@ -296,9 +302,8 @@ object Sources {
     * fragmented. Returns per-partition (before, after) file counts. */
   def compactPartitioned(spark: SparkSession, path: String,
       targetBytes: Long = 128L * 1024 * 1024): Map[String, (Int, Int)] = {
-    import org.apache.hadoop.fs.{FileSystem, Path => HPath}
-    val fs = FileSystem.get(new java.net.URI(normalizeScheme(path)),
-      spark.sparkContext.hadoopConfiguration)
+    import org.apache.hadoop.fs.{Path => HPath}
+    val fs = fileSystem(spark, path)
     fs.listStatus(new HPath(path)).toSeq
       .filter { s =>
         val n = s.getPath.getName

@@ -396,8 +396,9 @@ object Multimodal {
     * pairs plus the genuine near-dups; everything after runs at
     * candidate grain. Default width is the scale-safe [[SigBitsWide]]
     * (30-bit half keys); pass `bits = SigBits` for the measured 32-bit
-    * density-watch exhibit (the d5/d5x twin-pair convention — tools/Mm3Ab
-    * records both widths' candidate-volume curves in BASELINE). */
+    * density-watch exhibit (the d5/d5x twin-pair convention — BASELINE.md
+    * "mm3 vs mm3x: the candidate-volume curve, measured" records both
+    * widths' curves). */
   def frameNearDupPairs(docs: DataFrame,
       maxHamming: Int = Mm3MaxHamming,
       bits: Int = SigBitsWide): DataFrame =
@@ -446,9 +447,9 @@ object Multimodal {
   }
 
   /** The twinned corpus' banded frame signatures at either width — the
-    * candidate-generation half of [[frameNearDupPairs]], factored so the
-    * candidate-volume harness (tools/Mm3Ab) measures exactly the
-    * relation the query joins. */
+    * candidate-generation half of [[frameNearDupPairs]]; the candidate
+    * volumes in BASELINE.md "mm3 vs mm3x: the candidate-volume curve,
+    * measured" count exactly this relation's self-join. */
   private[graft] def bandedFrames(docs: DataFrame, bits: Int): DataFrame = {
     require(bits == SigBits || bits == SigBitsWide,
       s"mm3 signature width $bits: only the $SigBits-bit exhibit and " +

@@ -61,8 +61,8 @@ object BfsHops {
     // edge table gives a 100-TB cluster (guide §2.4). g4 keeps its
     // plain cache deliberately: its round join keys on dst with a
     // skewed layout, where the pre-partitioned cache measured SLOWER
-    // (the round-12 GraphAb negative) — the contract stays per
-    // operator, set by measurement.
+    // (the negative in BASELINE.md "Round-11 close") — the contract
+    // stays per operator, set by measurement.
     val edges = GraphState.persistGraph(PageRank.copurchaseEdges(lineitem)
       .repartition(col("src")).sortWithinPartitions("src"))
     try hubHopsFromEdges(edges, iters)
@@ -70,7 +70,7 @@ object BfsHops {
   }
 
   /** Composition form over a CALLER-persisted edge relation (the
-    * SharedGraph path): rounds materialize eagerly in-method, so the
+    * shared-edges path): rounds materialize eagerly in-method, so the
     * returned frame reads only round-K checkpoint blocks and holds no
     * reference to the caller's cache. */
   def hubHopsFromEdges(edges: DataFrame,

@@ -70,7 +70,7 @@ object LabelPropagation {
   }
 
   /** Composition form over a CALLER-persisted edge relation (the
-    * SharedGraph path): rounds materialize eagerly in-method, so the
+    * shared-edges path): rounds materialize eagerly in-method, so the
     * returned frame reads only round-K checkpoint blocks and holds no
     * reference to the caller's cache. */
   def communitiesFromEdges(edges: DataFrame,

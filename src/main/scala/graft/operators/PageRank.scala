@@ -67,17 +67,18 @@ object PageRank {
     * over interior persists, auto-released after the first action
     * ([[CacheRelease]], r16; clearCache stays the fallback for a
     * built-but-never-run frame), because BOTH
-    * eager-release forms measured 3–4× slower at sf0.1 (GraphAb A/B;
-    * BASELINE round 12): `localCheckpoint(true)` materializes through
-    * `Dataset.rdd` with the plan finalized before adaptive execution,
-    * and a `persist()+count()` cache build equally runs without AQE
-    * (cached-plan output partitioning must stay stable) — either way
-    * the node-grain joins AQE would runtime-plan fall back to static
-    * SMJ. The `*FromEdges` overloads are the composition path — the
-    * SharedLabels convention applied to the graph family: the CALLER
+    * eager-release forms measured 3–4× slower at sf0.1 (BASELINE.md
+    * "The eager-materialization regression"): `localCheckpoint(true)`
+    * materializes through `Dataset.rdd` with the plan finalized before
+    * adaptive execution, and a `persist()+count()` cache build equally
+    * runs without AQE (cached-plan output partitioning must stay
+    * stable) — either way the node-grain joins AQE would runtime-plan
+    * fall back to static SMJ. The `*FromEdges` overloads are the composition path — the
+    * FromLabels convention applied to the graph family: the CALLER
     * persists this relation once, feeds all four operators, and
-    * unpersists after (tools/SharedGraph measures the saving; the
-    * standalone entries do exactly that around a single consumer). */
+    * unpersists after (BASELINE.md "Shared-edges graph composition:
+    * measured at ×30" records the saving; the standalone entries do
+    * exactly that around a single consumer). */
   def copurchaseEdges(lineitem: DataFrame): DataFrame = {
     val li = lineitem
       .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk"))
@@ -107,10 +108,10 @@ object PageRank {
     * [[copurchaseEdges]] for the contract). Returns the LAZY dataflow —
     * the caller materializes and then releases the interior persists
     * (`clearCache()` after consuming, the t14 convention; the
-    * SharedGraph driver releases once after all four consumers).
+    * shared-edges path releases once after all four consumers).
     *
-    * Lazy is a MEASURED choice, twice over (round 12, GraphAb A/B at
-    * sf0.1): eager in-method materialization costs 3–4× here whichever
+    * Lazy is a MEASURED choice, twice over (round 12, sf0.1 A/B in
+    * BASELINE.md "The eager-materialization regression"): eager in-method materialization costs 3–4× here whichever
     * way it's done — `localCheckpoint(true)` materializes through
     * `Dataset.rdd` (plan finalized WITHOUT adaptive execution: g1
     * 9.5 s vs 3.2 lazy, g2 12.8 vs 3.2) and `persist()+count()` builds
@@ -125,7 +126,7 @@ object PageRank {
       iters: Int = PrIters): DataFrame = {
     val (ranks, interior) = rankDataflow(edges, iters)
     // the caller's edge cache is THEIRS to release (it feeds the other
-    // three family operators on the SharedGraph path); the interior
+    // three family operators on the shared-edges path); the interior
     // persists release after the first action.
     CacheRelease.afterFirstRun(ranks, interior: _*)
   }

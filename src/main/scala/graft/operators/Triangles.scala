@@ -58,7 +58,7 @@ object Triangles {
   }
 
   /** Composition form over a CALLER-persisted edge relation (the
-    * SharedGraph path): returns the LAZY census dataflow — the caller
+    * shared-edges path): returns the LAZY census dataflow — the caller
     * materializes, then releases the interior persists (clearCache
     * after consuming). Lazy is the measured round-12 choice: both
     * eager materializations (localCheckpoint's `.rdd` path AND a
@@ -67,7 +67,7 @@ object Triangles {
     * [[PageRank.productPageRankFromEdges]] for the numbers. */
   def triangleCensusFromEdges(edges: DataFrame): DataFrame = {
     val (census, interior) = censusDataflow(edges)
-    // the caller's edge cache is THEIRS (SharedGraph path); interior
+    // the caller's edge cache is THEIRS (shared-edges path); interior
     // persists release after the first action.
     CacheRelease.afterFirstRun(census, interior: _*)
   }

@@ -156,9 +156,7 @@ object Pipeline {
     * the action, and calling readOrInit again resolves the new committed
     * snapshot cleanly. */
   def readOrInit(spark: SparkSession, path: String, schema: StructType): DataFrame = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(Sources.normalizeScheme(path)),
-      spark.sparkContext.hadoopConfiguration)
+    val fs = Sources.fileSystem(spark, path)
     var attempts = 0
     while (true) {
       val before = latestManifest(fs, path)
@@ -222,9 +220,7 @@ object Pipeline {
     // durably DELETE every pre-existing row of the touched dates whose
     // key wasn't in that batch. Existence is checked explicitly; any
     // other failure propagates and aborts the batch (the safe outcome).
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(Sources.normalizeScheme(path)),
-      spark.sparkContext.hadoopConfiguration)
+    val fs = Sources.fileSystem(spark, path)
     if (!fs.exists(new org.apache.hadoop.fs.Path(Sources.normalizeScheme(path))))
       spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
@@ -255,9 +251,7 @@ object Pipeline {
   def readAt(spark: SparkSession, path: String, epoch: Long,
       schema: StructType): DataFrame = {
     import org.apache.hadoop.fs.{Path => HPath}
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(Sources.normalizeScheme(path)),
-      spark.sparkContext.hadoopConfiguration)
+    val fs = Sources.fileSystem(spark, path)
     val m = manifestAt(fs, path, epoch).getOrElse(
       throw new IllegalStateException(
         s"store $path: no manifest for epoch $epoch — it is outside the " +
@@ -427,11 +421,9 @@ object Pipeline {
       fields: Seq[String], partCol: String = "order_date",
       expectedEpoch: Option[Long] = None,
       leaseTtlMs: Long = DefaultLeaseTtlMs): Long = {
-    import org.apache.hadoop.fs.{FileSystem, Path => HPath}
+    import org.apache.hadoop.fs.{Path => HPath}
 
-    val fsPre = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(Sources.normalizeScheme(path)),
-      spark.sparkContext.hadoopConfiguration)
+    val fs = Sources.fileSystem(spark, path)
     // a crashed forgetKeys leaves a durable tombstone ([[forgetKeys]]'s
     // crash contract); finish that erasure BEFORE this batch merges.
     // The recovery sweep inside runs UNDER the commit lease
@@ -454,10 +446,10 @@ object Pipeline {
     // ([[StoreLeaseHeldException]]), a crashed holder is taken over by
     // epoch/TTL fencing, and the write-once manifest publish remains the
     // final backstop beneath all of it.
-    val planEpoch = latestManifest(fsPre, path).map(_.epoch).getOrElse(0L)
+    val planEpoch = latestManifest(fs, path).map(_.epoch).getOrElse(0L)
     val baseEpoch = expectedEpoch.getOrElse(planEpoch)
     def conflictCheck(stage: String): Unit = {
-      val now = latestManifest(fsPre, path).map(_.epoch).getOrElse(0L)
+      val now = latestManifest(fs, path).map(_.epoch).getOrElse(0L)
       if (now != baseEpoch)
         throw new StoreConflictException(
           s"store $path: manifest epoch moved $baseEpoch -> $now ($stage)" +
@@ -485,8 +477,6 @@ object Pipeline {
     // before it even attempted the lease. Unique names make staging
     // race-free; crashed writers' orphans are GC'd under the lease below.
     val tmp = stagingDir(path)
-    val fs = FileSystem.get(new java.net.URI(Sources.normalizeScheme(path)),
-      spark.sparkContext.hadoopConfiguration)
     // the merge plan reads the store partitions being replaced, so write
     // to the temp dir first (finishes the read), then swap directories
     merged.write.mode("overwrite").partitionBy(partCol).parquet(tmp)
@@ -638,11 +628,10 @@ object Pipeline {
   def forgetKeys(spark: SparkSession, path: String, schema: StructType,
       keyValues: DataFrame, keys: Seq[String],
       partCol: String = "order_date"): (Long, Long) = {
-    import org.apache.hadoop.fs.{FileSystem, Path => HPath}
+    import org.apache.hadoop.fs.{Path => HPath}
     require(!keys.contains(partCol),
       s"forget keys must be data columns, not the partition column $partCol")
-    val fs = FileSystem.get(new java.net.URI(Sources.normalizeScheme(path)),
-      spark.sparkContext.hadoopConfiguration)
+    val fs = Sources.fileSystem(spark, path)
     // finish a tombstone publish a crash left half-swapped BEFORE looking
     // at the pending dir, so the read below always sees a complete record;
     // the whole recovery sweep (swap promote + backup restore) runs under
@@ -691,9 +680,9 @@ object Pipeline {
     fs.create(new HPath(pendingTmp, "_graft_committed"), true).close()
     if (fs.exists(pendingDir)) { // superseded: its keys are folded in
       fs.delete(pendingOld, true)
-      renameOrFail(fs, pendingDir, pendingOld)
+      Sources.renameOrFail(fs, pendingDir, pendingOld)
     }
-    renameOrFail(fs, pendingTmp, pendingDir)
+    Sources.renameOrFail(fs, pendingTmp, pendingDir)
     fs.delete(pendingOld, true)
     // the published tombstone is the authoritative key set: re-reading it
     // (instead of keeping the in-memory union plan alive) means a cache
@@ -743,7 +732,7 @@ object Pipeline {
             if (fs.exists(bak)) fs.delete(bak, true)
             if (fs.exists(dst)) {
               if (!fs.exists(bak.getParent)) fs.mkdirs(bak.getParent)
-              renameOrFail(fs, dst, bak)
+              Sources.renameOrFail(fs, dst, bak)
             }
           }
           fs.delete(new HPath(tmp), true)
@@ -791,9 +780,9 @@ object Pipeline {
                 val tmp = new HPath(ep.getPath, s"_$orig.fk.tmp")
                 if (fs.exists(live)) fs.delete(st.getPath, true)
                 else if (fs.exists(tmp)) { // crash between the two renames
-                  renameOrFail(fs, tmp, live)
+                  Sources.renameOrFail(fs, tmp, live)
                   fs.delete(st.getPath, true)
-                } else renameOrFail(fs, st.getPath, live)
+                } else Sources.renameOrFail(fs, st.getPath, live)
               case _ => ()
             }
           }
@@ -821,8 +810,8 @@ object Pipeline {
               // preamble above finishes this swap if we crash inside it
               val hOld = new HPath(ep.getPath, s"_${pd.getPath.getName}.fk.old")
               fs.delete(hOld, true)
-              renameOrFail(fs, pd.getPath, hOld)
-              renameOrFail(fs, htmp, pd.getPath)
+              Sources.renameOrFail(fs, pd.getPath, hOld)
+              Sources.renameOrFail(fs, htmp, pd.getPath)
               fs.delete(hOld, true)
             }
           }
@@ -841,9 +830,8 @@ object Pipeline {
     * No-op when no tombstone exists. */
   private[graft] def completePendingForget(spark: SparkSession, path: String,
       schema: StructType, partCol: String = "order_date"): Unit = {
-    import org.apache.hadoop.fs.{FileSystem, Path => HPath}
-    val fs = FileSystem.get(new java.net.URI(Sources.normalizeScheme(path)),
-      spark.sparkContext.hadoopConfiguration)
+    import org.apache.hadoop.fs.{Path => HPath}
+    val fs = Sources.fileSystem(spark, path)
     recoverUnderLease(fs, path)
     val pending = new HPath(path + ".forget.pending")
     if (fs.exists(pending)) {
@@ -877,11 +865,11 @@ object Pipeline {
       fs.delete(tmp, true)
     } else if (fs.exists(new HPath(tmp, "_graft_committed")) ||
         fs.exists(new HPath(tmp, "_SUCCESS"))) {
-      renameOrFail(fs, tmp, pending)
+      Sources.renameOrFail(fs, tmp, pending)
       fs.delete(old, true)
     } else if (fs.exists(old)) {
       fs.delete(tmp, true)
-      renameOrFail(fs, old, pending)
+      Sources.renameOrFail(fs, old, pending)
     } else fs.delete(tmp, true)
     ()
   }
@@ -914,9 +902,7 @@ object Pipeline {
   def retentionSweep(spark: SparkSession, path: String,
       keepFrom: String, partCol: String = "order_date"): Seq[String] = {
     import org.apache.hadoop.fs.{Path => HPath}
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(Sources.normalizeScheme(path)),
-      spark.sparkContext.hadoopConfiguration)
+    val fs = Sources.fileSystem(spark, path)
     recoverUnderLease(fs, path)
     latestManifest(fs, path) match {
       case None => Nil // pre-manifest store: nothing committed to expire
@@ -980,9 +966,7 @@ object Pipeline {
     * file-grain — the Delta-versioned-file-names trade we did not take). */
   def compactStore(spark: SparkSession, path: String,
       targetBytes: Long = 128L * 1024 * 1024): Map[String, (Int, Int)] = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(Sources.normalizeScheme(path)),
-      spark.sparkContext.hadoopConfiguration)
+    val fs = Sources.fileSystem(spark, path)
     recoverUnderLease(fs, path)
     val epoch = latestManifest(fs, path).map(_.epoch).getOrElse(0L)
     val lease = acquireStoreLease(fs, path, epoch)
@@ -1301,7 +1285,7 @@ object Pipeline {
           "single-flight (T4) or under a storage lease to avoid this " +
           "window entirely.")
     }
-    renameOrFail(fs, tmp, dst)
+    Sources.renameOrFail(fs, tmp, dst)
   }
 
   /** Prune manifests (and the `.hist` versions that back them) outside the
@@ -1372,7 +1356,7 @@ object Pipeline {
     val out = fs.create(tmp, true)
     try out.write(epoch.toString.getBytes("UTF-8")) finally out.close()
     fs.delete(new HPath(root, "_epoch"), true)
-    renameOrFail(fs, tmp, new HPath(root, "_epoch"))
+    Sources.renameOrFail(fs, tmp, new HPath(root, "_epoch"))
   }
 
   private[graft] def listPartitionDirs(fs: org.apache.hadoop.fs.FileSystem,
@@ -1440,13 +1424,13 @@ object Pipeline {
           val dst = new HPath(path, s.getPath.getName)
           if (inFlight) {
             if (fs.exists(dst)) fs.delete(dst, true)
-            renameOrFail(fs, s.getPath, dst)
+            Sources.renameOrFail(fs, s.getPath, dst)
           } else if (forgetPending) fs.delete(s.getPath, true)
-          else if (!fs.exists(dst)) renameOrFail(fs, s.getPath, dst)
+          else if (!fs.exists(dst)) Sources.renameOrFail(fs, s.getPath, dst)
           else be.foreach { e =>
             val histDir = new HPath(s"$path.hist/$e")
             if (!fs.exists(histDir)) fs.mkdirs(histDir)
-            renameOrFail(fs, s.getPath, new HPath(histDir, s.getPath.getName))
+            Sources.renameOrFail(fs, s.getPath, new HPath(histDir, s.getPath.getName))
           }
         }
       // in-flight rollback also sweeps the crashed batch's UNCOMMITTED
@@ -1463,12 +1447,6 @@ object Pipeline {
     }
   }
 
-  // fail-loud rename shared with the io tier: graft.io.Sources.renameOrFail
-  private def renameOrFail(fs: org.apache.hadoop.fs.FileSystem,
-      src: org.apache.hadoop.fs.Path,
-      dst: org.apache.hadoop.fs.Path): Unit =
-    Sources.renameOrFail(fs, src, dst)
-
   /** Crash-safe directory swap: keep the old dir as a backup until the new
     * one is in place (a failure leaves either the old data or old-as-bak +
     * new-in-temp — never nothing). Backups are dropped by the caller after
@@ -1480,9 +1458,9 @@ object Pipeline {
     if (fs.exists(bak)) fs.delete(bak, true)
     if (fs.exists(dst)) {
       if (!fs.exists(bak.getParent)) fs.mkdirs(bak.getParent)
-      renameOrFail(fs, dst, bak)
+      Sources.renameOrFail(fs, dst, bak)
     }
     if (!fs.exists(dst.getParent)) fs.mkdirs(dst.getParent)
-    renameOrFail(fs, src, dst)
+    Sources.renameOrFail(fs, src, dst)
   }
 }

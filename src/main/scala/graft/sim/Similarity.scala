@@ -655,10 +655,8 @@ object Similarity {
     * @return rows deleted from the index. */
   def ivfSqForget(spark: org.apache.spark.sql.SparkSession, path: String,
       keys: DataFrame): Long = {
-    import org.apache.hadoop.fs.{FileSystem, Path => HPath}
-    val fs = FileSystem.get(
-      new java.net.URI(graft.io.Sources.normalizeScheme(path)),
-      spark.sparkContext.hadoopConfiguration)
+    import org.apache.hadoop.fs.{Path => HPath}
+    val fs = graft.io.Sources.fileSystem(spark, path)
     val root = new HPath(path)
     if (!fs.exists(root)) return 0L
     // HDFS-contract rename reports failure as `false`, not an exception;
@@ -1642,7 +1640,8 @@ object Similarity {
     * ships all seeds to every executor), growing linearly in the cell
     * count — the measured crossover against the two-level assignment
     * ([[semDedupHier]], d13) sits at ≈1000–2000 cells (≈1–1.5M vectors
-    * under the derived default; CellCrossover table in BASELINE.md).
+    * under the derived default; table in BASELINE.md "Hierarchical
+    * SemDeDup assignment").
     * This stays the default because its partition is the exact argmin;
     * above ~1M vectors use [[semDedupHier]], and past the seed-collect
     * bound (~1e5 cells) flat is infeasible outright. */
@@ -1693,8 +1692,9 @@ object Similarity {
     * oracle mirrors both argmin stages (same seed set, same fine→coarse
     * bucketing, same rank form) in SQL.
     *
-    * When to use which — MEASURED, not extrapolated (CellCrossover on
-    * the ×100 / 400k-vector corpus, BASELINE.md): flat cost grows
+    * When to use which — MEASURED, not extrapolated (the ×100 /
+    * 400k-vector corpus, BASELINE.md "Hierarchical SemDeDup
+    * assignment"): flat cost grows
     * linearly in the cell count (assignment is N×cells) while this
     * operator flat-lines — 4.9 vs 5.5 s at 521 cells (flat wins,
     * narrowly), 13.0 vs 4.9 s at 2000, 34.6 vs 7.9 s at 5000 (4.4×),

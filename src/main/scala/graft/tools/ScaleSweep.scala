@@ -1,11 +1,9 @@
 package graft.tools
 
-
-
-
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.Session
 import graft.functions.TextFunctions
 
 /** Scaling-curve harness for the dedup/CC/ANN tier: fan the sf0.1
@@ -290,8 +288,9 @@ object ScaleSweep {
     // candidate side ~2·frames²/2^16 + planted twins (×N); flat jobs
     "mm3_frame_neardup",
     // mm3x = the same pipeline at the 60-bit default width: the
-    // candidate side's random term drops to ~2·frames²/2^30 (tools/
-    // Mm3Ab records both widths' raw candidate counts) — expect the
+    // candidate side's random term drops to ~2·frames²/2^30 (BASELINE.md
+    // "mm3 vs mm3x: the candidate-volume curve, measured" records both
+    // widths' raw candidate counts) — expect the
     // same linear scan with a smaller join side
     "mm3x_frame_neardup60",
     // pk2 = one token-count scan + a source-partitioned prefix sum +
@@ -511,21 +510,14 @@ object ScaleSweep {
     val only = sys.env.get("SPARK_GRAFT_SWEEP_ONLY")
       .map(_.split(",").map(_.trim).toSet)
     val queries = SweepQueries.filter(q => only.forall(_.contains(q)))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
     // the cluster's first sizing lever, exposed so OOM cells can be
     // re-measured at higher partition counts WITHOUT a bigger heap
     // (g4 ×100: partial-agg/shuffle pressure scales with rows per
     // partition, and raising the count is what a real cluster turns
     // before provisioning memory)
-    val shufflePartitions =
-      sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", cpus)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shufflePartitions)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local(cpus,
+      sys.env.get("SPARK_GRAFT_SHUFFLE_PARTITIONS").fold(cpus)(_.toInt))
 
     // the tier-layout version the completion marker must CONTAIN (not
     // just exist as): a work dir generated by an older layout — the
@@ -554,10 +546,10 @@ object ScaleSweep {
         val out = s"$workDir/x$f"
         new java.io.File(s"$out/_graft_sweep_complete").delete()
         scaleDocuments(spark.read.parquet(s"$srcDir/documents.parquet"), f)
-          .repartition(cpus.toInt)
+          .repartition(cpus)
           .write.mode("overwrite").parquet(s"$out/documents.parquet")
         scaleEmbeddings(spark.read.parquet(s"$srcDir/embeddings.parquet"), f)
-          .repartition(cpus.toInt)
+          .repartition(cpus)
           .write.mode("overwrite").parquet(s"$out/embeddings.parquet")
         // the user/customer id space is ONE space across the events and
         // fact tiers (jc1 joins o_custkey to user_id): both shift by the
@@ -571,7 +563,7 @@ object ScaleSweep {
           ord0.agg(max(col("o_custkey"))).head().getLong(0),
           cust0.agg(max(col("c_custkey"))).head().getLong(0)).max + 1
         scaleEvents(ev0, f, Some(sharedStride))
-          .repartition(cpus.toInt)
+          .repartition(cpus)
           .write.mode("overwrite").parquet(s"$out/events.parquet")
         // round 10: the fact tier fans out too (it was a pass-through
         // before — jc1's curve now sees BOTH sides grow, the more honest
@@ -583,9 +575,9 @@ object ScaleSweep {
           spark.read.parquet(s"$srcDir/supplier.parquet"),
           spark.read.parquet(s"$srcDir/part.parquet"), f,
           Some(sharedStride))
-        o.repartition(cpus.toInt)
+        o.repartition(cpus)
           .write.mode("overwrite").parquet(s"$out/orders.parquet")
-        li.repartition(cpus.toInt)
+        li.repartition(cpus)
           .write.mode("overwrite").parquet(s"$out/lineitem.parquet")
         c.coalesce(4).write.mode("overwrite").parquet(s"$out/customer.parquet")
         su.coalesce(1).write.mode("overwrite").parquet(s"$out/supplier.parquet")

@@ -254,8 +254,8 @@ class BpeSpec extends SparkSpec with TableDrivenPropertyChecks {
   }
 
   test("t22: the knobs measured — iters is the stable knob, seed width is not") {
-    // the knob probe's spec pin (tools/UniKnobs carries the wall
-    // numbers; BASELINE the table). MEASURED answers, both pinned:
+    // the knob probe's spec pin (the wall numbers are BASELINE.md's
+    // "t22 knob-cost probe" table). MEASURED answers, both pinned:
     //  - 3 -> 5 EM iterations leave the kept vocabulary AND its
     //    ranking identical (hard-EM has converged by 3 — the exhibit's
     //    iteration count is sufficient, not merely cheap);

@@ -12,8 +12,8 @@ import graft.operators.{BfsHops, LabelPropagation, PageRank, Triangles}
   * `*FromEdges` overloads, hash-identical to the four standalone runs
   * that each rebuild the graph privately — and the round-12 unified
   * cache-lifetime contract holds: every operator releases every cache
-  * it creates in-method (tools/SharedGraph measures the ×30 saving;
-  * BASELINE records it). */
+  * it creates in-method (BASELINE.md "Shared-edges graph composition:
+  * measured at ×30" records the saving). */
 class SharedGraphSpec extends SparkSpec {
 
   private def li = Sources.table(spark, sf0001, "lineitem")
