@@ -1665,8 +1665,8 @@ object SparkEntry {
     // change with nothing actually wrong. The gate therefore checks a
     // per-day within-±1 indicator (granular like the exact gate, immune
     // to a single collision), while the sketch column itself stays
-    // mergeable across days (hll_union_agg, SketchKpiSpec) without ever
-    // rescanning history.
+    // mergeable across days (hll_union_agg) without ever rescanning
+    // history.
     "k1_distinct_sketch" -> ((s, d) =>
       graft.kpi.SketchKpi.dailyUserSketch(o(s, d))
         .select(col("order_date"),

@@ -137,7 +137,6 @@ object Dedup {
   // ---- D2: n-gram Jaccard near-dup ----------------------------------------
 
   val JaccardThreshold = 0.6
-  val ShingleN = 3
 
   /** Distinct (doc_id, shingle-hash) pairs — the shingle set relation.
     * Token hashes are materialized as a column first, then combined

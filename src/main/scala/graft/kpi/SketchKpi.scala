@@ -3,36 +3,28 @@ package graft.kpi
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** Mergeable distinct-count sketches for the incremental KPI store —
-  * the 100-TB form of A2's `unique_customers`.
+/** Per-day distinct-count sketches — the 100-TB form of A2's
+  * `unique_customers`.
   *
   * The exact `countDistinct` (reference `scripts/transformation.py:203`,
-  * kept verbatim in [[Kpi.orderKpiComplete]]) is correct per batch but NOT
-  * mergeable: two days' unique-customer counts cannot be added (users
-  * overlap), so any cross-day distinct over the store forces a rescan of
-  * raw history — O(history) per question. The production shape stores a
-  * Datasketches HLL sketch PER PARTITION ROW next to the exact count:
-  * sketches union associatively and idempotently, so
-  *
-  *  - a batch merge unions the incoming day's sketch into the stored row
-  *    (same coalesce altitude as [[graft.merge.KpiMerge]] fields),
-  *  - any rolling-window / all-time distinct is one `hll_union_agg` over
-  *    the stored rows — never a rescan,
-  *  - retried batches are safe: `union(s, s) = s`.
+  * kept verbatim in [[Kpi.orderKpiComplete]]) is correct per batch but
+  * NOT mergeable: two days' unique-customer counts cannot be added (users
+  * overlap). A Datasketches HLL sketch stored next to the exact count per
+  * day is mergeable: sketches union associatively and idempotently
+  * (`hll_union_agg`), so a cross-day distinct needs no rescan of raw
+  * history.
   *
   * Spark ships the whole family codegen-compatible (`hll_sketch_agg`,
-  * `hll_union`, `hll_union_agg`, `hll_sketch_estimate` — Apache
-  * DataSketches HLL under the hood), so this is composition, not a custom
-  * expression. `lgK = 12` ⇒ 2^12 registers ≈ 1.6 % standard error and
-  * ≤ 4 KB per sketch; below ~k distincts the sparse representation is
-  * EXACT, which the spec exploits for equality assertions at test scale.
+  * `hll_union_agg`, `hll_sketch_estimate` — Apache DataSketches HLL under
+  * the hood), so this is composition, not a custom expression.
+  * `lgK = 12` ⇒ 2^12 registers ≈ 1.6 % standard error and ≤ 4 KB per
+  * sketch; below ~k distincts the sparse representation is EXACT.
   *
   * The sketch BYTES cannot be hash-compared cross-engine (DuckDB's HLL
   * internals differ), but the ESTIMATE can: below ~2^lgK distincts the
   * coupon representation is exact, so the `k1_distinct_sketch` driver
   * query pins per-day estimates against the oracle's exact
-  * `count(DISTINCT)`; merge/idempotence/rolling-window behavior is covered
-  * by SketchKpiSpec.
+  * `count(DISTINCT)`.
   */
 object SketchKpi {
 
@@ -49,30 +41,4 @@ object SketchKpi {
       .agg(
         hll_sketch_agg(col("user_id"), lgK).as("user_sketch"),
         countDistinct(col("user_id")).as("unique_customers"))
-
-  /** Merge a batch of per-day sketch rows into the store: per-key sketch
-    * UNION on conflict (the sketch-field analogue of KpiMerge's
-    * coalesce), exact counts taken from the newer row. Union is
-    * associative, commutative, and idempotent — a retried batch changes
-    * nothing. */
-  def mergeDailySketches(store: DataFrame, updates: DataFrame): DataFrame =
-    store.select(col("order_date"), col("user_sketch"),
-        col("unique_customers"), lit(0).as("__pri"))
-      .unionByName(updates.select(col("order_date"), col("user_sketch"),
-        col("unique_customers"), lit(1).as("__pri")))
-      .groupBy(col("order_date"))
-      .agg(
-        hll_union_agg(col("user_sketch")).as("user_sketch"),
-        // newer row wins for the exact per-day field (same-day re-runs
-        // replace; distinct days pass through)
-        max_by(col("unique_customers"), col("__pri")).as("unique_customers"))
-
-  /** Distinct users across a date range — ONE union over the stored
-    * sketches; cost is O(days in range), independent of raw history. */
-  def distinctOverRange(store: DataFrame, fromDate: String,
-      toDate: String): DataFrame =
-    store
-      .filter(col("order_date").between(fromDate, toDate))
-      .agg(hll_sketch_estimate(hll_union_agg(col("user_sketch")))
-        .as("unique_customers_est"))
 }

@@ -67,13 +67,4 @@ object KpiMerge {
     merge(target, updates, Seq("category", "order_date"),
       Seq("daily_revenue", "avg_order_value", "avg_return_rate"),
       Some("data_sources"))
-
-  /** Order-KPI merge: key (order_date), fields per
-    * `scripts/helperfunction.py:127-201`. A mode that doesn't set a field
-    * simply carries NULL there and the old value survives. */
-  def mergeOrderKpi(target: DataFrame, updates: DataFrame): DataFrame =
-    merge(target, updates, Seq("order_date"),
-      Seq("total_orders", "total_revenue", "total_items_sold",
-        "return_rate", "unique_customers"),
-      Some("data_sources"))
 }

@@ -37,11 +37,6 @@ object Multimodal {
 
   val FrameSize = 16 // stub "frame" = 16 payload bytes
   val HashMod = 1000000007L
-  val MetaSchema: StructType = StructType(Seq(
-    StructField("format", StringType, nullable = false),
-    StructField("width", IntegerType, nullable = false),
-    StructField("height", IntegerType, nullable = false),
-    StructField("n_frames", IntegerType, nullable = false)))
 
   /** Synthesize a deterministic media corpus from `documents`: payload
     * bytes derived from the text (repeatable at any scale factor), metadata
@@ -733,10 +728,10 @@ object Multimodal {
       FROM sm),
     banded AS (
       SELECT doc_id, frame_no, sig, 0::BIGINT AS band,
-        sig // ${1L << (SigBits / 2)} AS key FROM sg
+        sig // $Mm3BandMod AS key FROM sg
       UNION ALL
       SELECT doc_id, frame_no, sig, 1::BIGINT AS band,
-        sig % ${1L << (SigBits / 2)} AS key FROM sg)
+        sig % $Mm3BandMod AS key FROM sg)
     SELECT doc_a, doc_b, count(*)::BIGINT AS n_frame_pairs,
       min(hamming) AS min_hamming
     FROM (

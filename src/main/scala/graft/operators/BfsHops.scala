@@ -69,8 +69,8 @@ object BfsHops {
     finally { edges.unpersist(); () }
   }
 
-  /** Composition form over a CALLER-persisted edge relation (the
-    * shared-edges path): rounds materialize eagerly in-method, so the
+  /** The rounds over a CALLER-persisted edge relation: they
+    * materialize eagerly in-method, so the
     * returned frame reads only round-K checkpoint blocks and holds no
     * reference to the caller's cache. */
   def hubHopsFromEdges(edges: DataFrame,

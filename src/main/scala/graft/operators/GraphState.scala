@@ -18,9 +18,8 @@ import org.apache.spark.storage.StorageLevel
   * it spills state to local SSDs rather than provisioning DRAM.
   *
   * Scope: the per-round state of the ITERATIVE graph operators
-  * ([[LabelPropagation]] g4, [[BfsHops]] g3) and their edge caches,
-  * plus the caller-persisted edge relation on the shared-edges
-  * composition path. d9's connected components already pins its edge
+  * ([[LabelPropagation]] g4, [[BfsHops]] g3) and their edge caches.
+  * d9's connected components already pins its edge
   * relation `DISK_ONLY` by construction (`Dedup.connectedComponents`)
   * and is not routed through this switch; the single-dataflow
   * operators (g1/g2) keep their measured lazy-persist contract

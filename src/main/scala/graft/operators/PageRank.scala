@@ -22,8 +22,8 @@ import org.apache.spark.sql.functions._
   * hash-verifiable fixpoint, irrelevant to ranking.
   *
   * Scale shape: degree and the edge relation build once and persist
-  * (cache lifetime: the family contract on [[PageRank.copurchaseEdges]]
-  * — released in-method, shared via the FromEdges form); each round is
+  * (cache lifetime: the family contract on [[PageRank.copurchaseEdges]]);
+  * each round is
   * ONE join-aggregate (shuffle on the node key, map-side-combined sum),
   * so K rounds = K blocking jobs exactly like d9's min-label loop.
   * Long arithmetic holds to ~10⁵ nodes per mass unit at this grid
@@ -73,12 +73,8 @@ object PageRank {
     * adaptive execution, and a `persist()+count()` cache build equally
     * runs without AQE (cached-plan output partitioning must stay
     * stable) — either way the node-grain joins AQE would runtime-plan
-    * fall back to static SMJ. The `*FromEdges` overloads are the composition path — the
-    * FromLabels convention applied to the graph family: the CALLER
-    * persists this relation once, feeds all four operators, and
-    * unpersists after (BASELINE.md "Shared-edges graph composition:
-    * measured at ×30" records the saving; the standalone entries do
-    * exactly that around a single consumer). */
+    * fall back to static SMJ. Each entry persists this relation around
+    * its own single consumer. */
   def copurchaseEdges(lineitem: DataFrame): DataFrame = {
     val li = lineitem
       .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk"))
@@ -102,33 +98,6 @@ object PageRank {
     val edges = copurchaseEdges(lineitem).persist()
     val (ranks, interior) = rankDataflow(edges, iters)
     CacheRelease.afterFirstRun(ranks, (edges +: interior): _*)
-  }
-
-  /** Composition form: rank over a CALLER-persisted edge relation (see
-    * [[copurchaseEdges]] for the contract). Returns the LAZY dataflow —
-    * the caller materializes and then releases the interior persists
-    * (`clearCache()` after consuming, the t14 convention; the
-    * shared-edges path releases once after all four consumers).
-    *
-    * Lazy is a MEASURED choice, twice over (round 12, sf0.1 A/B in
-    * BASELINE.md "The eager-materialization regression"): eager in-method materialization costs 3–4× here whichever
-    * way it's done — `localCheckpoint(true)` materializes through
-    * `Dataset.rdd` (plan finalized WITHOUT adaptive execution: g1
-    * 9.5 s vs 3.2 lazy, g2 12.8 vs 3.2) and `persist()+count()` builds
-    * the cache with AQE's runtime join planning equally disabled
-    * (output partitioning of a cached plan must stay stable: g1 9.2,
-    * g2 22.3). Only the lazy form lets AQE pick the physical joins at
-    * every scale, so single-dataflow operators return it and the
-    * release moves to the caller; ITERATIVE operators (g3/g4) keep
-    * in-method checkpoint+release — their rounds must truncate lineage
-    * regardless, and their bands carry that cost. */
-  def productPageRankFromEdges(edges: DataFrame,
-      iters: Int = PrIters): DataFrame = {
-    val (ranks, interior) = rankDataflow(edges, iters)
-    // the caller's edge cache is THEIRS to release (it feeds the other
-    // three family operators on the shared-edges path); the interior
-    // persists release after the first action.
-    CacheRelease.afterFirstRun(ranks, interior: _*)
   }
 
   /** The lazy rank dataflow (plan-inspectable: PlanSpec/PageRankSpec

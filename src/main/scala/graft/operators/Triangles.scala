@@ -57,21 +57,6 @@ object Triangles {
     CacheRelease.afterFirstRun(census, (edges +: interior): _*)
   }
 
-  /** Composition form over a CALLER-persisted edge relation (the
-    * shared-edges path): returns the LAZY census dataflow — the caller
-    * materializes, then releases the interior persists (clearCache
-    * after consuming). Lazy is the measured round-12 choice: both
-    * eager materializations (localCheckpoint's `.rdd` path AND a
-    * persist+count cache build) run without AQE's runtime join
-    * planning and cost 4× here — see
-    * [[PageRank.productPageRankFromEdges]] for the numbers. */
-  def triangleCensusFromEdges(edges: DataFrame): DataFrame = {
-    val (census, interior) = censusDataflow(edges)
-    // the caller's edge cache is THEIRS (shared-edges path); interior
-    // persists release after the first action.
-    CacheRelease.afterFirstRun(census, interior: _*)
-  }
-
   /** The lazy census dataflow (plan-inspectable: the gate pins the
     * persisted adjacency and the equi-join enumeration). Returns the
     * census frame and the interior persists (deg, oriented) the public

@@ -1,8 +1,5 @@
 package graft.runner
 
-import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions._
-
 import scala.annotation.tailrec
 import scala.util.{Failure, Success, Try}
 
@@ -31,15 +28,6 @@ object Runner {
       case _ => None
     }
   }
-
-  /** P5: the columnar form — route a path column into a file_type column
-    * (reference `lambda/lab6-ttl.py:72-74`). */
-  def routePaths(files: DataFrame, pathCol: String): DataFrame =
-    files.withColumn("file_type",
-      when(col(pathCol).contains("/orders/"), "orders")
-        .when(col(pathCol).contains("/order_items/"), "order_items")
-        .when(col(pathCol).contains("/products/"), "products")
-        .otherwise("unknown"))
 
   // ---- T6: status lifecycle (readme.md:25-53, confirm_status.py) ----------
 

@@ -57,13 +57,6 @@ object Schemas {
   def allStrings(s: StructType): StructType =
     StructType(s.fields.map(f => f.copy(dataType = StringType)))
 
-  /** Required header sets enforced at ingest
-    * (reference `lambda/s3_validation.py:25-29,128-135`). */
-  val requiredHeaders: Map[String, Set[String]] = Map(
-    "orders" -> orders.fieldNames.toSet,
-    "order_items" -> orderItems.fieldNames.toSet,
-    "products" -> products.fieldNames.toSet)
-
   /** Columns that must be non-null per table
     * (reference `scripts/validation.py:179-186`). */
   val requiredNonNull: Map[String, Seq[String]] = Map(

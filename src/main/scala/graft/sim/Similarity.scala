@@ -68,9 +68,6 @@ object Similarity {
   def cosine(a: Column, b: Column): Column =
     dot(a, b) / (norm2(a) * norm2(b))
 
-  def cosineSql(a: String, b: String): String =
-    s"${dotSql(a, b)} / (${norm2Sql(a)} * ${norm2Sql(b)})"
-
   /** N1: brute-force cosine top-k — for each query vector (vec_id <
     * numQueries), the k nearest other vectors by cosine, rank-ordered with
     * id tie-break. */
@@ -1656,7 +1653,7 @@ object Similarity {
     // argmin-cell via the native PqEncode kernel with m=1 (same distance
     // form -2⟨v,s⟩+|s|², same double total-order, same lower-id
     // tie-break as the array_sort formulation — AnnIndexSpec pins the
-    // equivalence for PQ, ClusteringSpec/d12 hash parity pins it here).
+    // equivalence for PQ, AnnRecallSpec/d12 hash parity pins it here).
     // The composed [[sortedCellsFor]] unrolls `cells` struct builds +
     // an array_sort PER ROW: fine at the fixed 16-cell IVF default, but
     // the SIZE-DERIVED cell count grows with the corpus, and at ×100
@@ -1687,7 +1684,7 @@ object Similarity {
     * boundary may land in a different fine cell), which is exactly how
     * production IVF assignment works — and identical vectors still take
     * identical paths, so planted twins always share a cell and the d12
-    * recall-by-construction property holds unchanged (ClusteringSpec).
+    * recall-by-construction property holds unchanged (AnnRecallSpec).
     * Pair join + keeper aggregate are [[semDedup]]'s verbatim. The
     * oracle mirrors both argmin stages (same seed set, same fine→coarse
     * bucketing, same rank form) in SQL.

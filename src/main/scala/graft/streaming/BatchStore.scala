@@ -4,7 +4,7 @@ import org.apache.hadoop.fs.{Path => HPath}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** The per-batch committed-increment store protocol shared by the
-  * streaming operators (E114 near-dup signatures, E126 anomaly stats):
+  * streaming operators (E114 near-dup signatures, CDC snapshots):
   * every micro-batch writes its increment to `dir/batch=<id>` with
   * overwrite mode and an explicit `_graft_committed` marker AFTER the
   * parquet lands (`_SUCCESS` is config-dependent on object stores — the

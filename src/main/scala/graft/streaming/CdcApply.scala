@@ -11,7 +11,7 @@ import graft.merge.Scd2
   * is consumed micro-batch by micro-batch into an SCD2 dimension held
   * in the [[BatchStore]] per-batch committed-snapshot protocol.
   *
-  * State model: unlike the signature/stats stores (E114/E126), the SCD2
+  * State model: unlike the signature store (E114), the SCD2
   * dimension is a FULL state, not an increment — each batch writes the
   * complete post-apply dimension to `dimDir/batch=<id>` and readers take
   * the LATEST committed snapshot, not the union. Exactly-once falls out

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 
 /** E101: stream-static dimension enrichment — the most common production
   * streaming pattern (and the one the tier was missing next to windowed
-  * aggs E16, stream-stream joins E41, streaming dedup E53, and the
+  * aggs E16, stream-stream joins E41, and the
   * debounce state machine E42): every event is decorated with attributes
   * from a dimension table, unknown keys flagged rather than dropped.
   *

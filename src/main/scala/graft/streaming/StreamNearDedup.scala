@@ -33,7 +33,7 @@ import graft.dedup.Dedup
   * and the store increment; the survivor-doc write is the only pass
   * over the text itself.
   *
-  * Scale: unlike the exact E53 path (bounded watermark state inside the
+  * Scale: unlike exact dedup (bounded watermark state inside the
   * streaming engine), near-dup state must span the whole corpus — which
   * is exactly why it lives in a parquet store the cluster can partition,
   * not in executor state-store memory. */

@@ -15,30 +15,6 @@ import org.apache.spark.sql.functions._
   */
 object WindowedAgg {
 
-  /** Tumbling event-time counts/sums per (window, event_type).
-    * `events` needs `ts` (timestamp or epoch-nanos long — normalized by
-    * [[graft.io.Sources.epochSec]]), `event_type`, `value`. */
-  def eventTypeWindows(events: DataFrame, windowLen: String,
-      watermark: String): DataFrame =
-    events
-      .withColumn("event_ts",
-        timestamp_seconds(graft.io.Sources.epochSec(events)))
-      .withWatermark("event_ts", watermark)
-      .groupBy(window(col("event_ts"), windowLen), col("event_type"))
-      .agg(count(lit(1)).as("n_events"),
-        // DECIMAL through the sum (double at the boundary): double
-        // addition is order-dependent, and streaming partial aggregation
-        // adds in a different order than the batch scan — the documented
-        // batch ≡ streaming parity needs an order-independent fold (the
-        // e2 driver query applies the same discipline)
-        // (38, 6): enough integral headroom that no realistic event value
-        // can hit an ANSI CAST_OVERFLOW — (18, 6) would cap at ~1e12
-        sum(col("value").cast(org.apache.spark.sql.types.DecimalType(38, 6)))
-          .cast("double").as("total_value"))
-      .select(col("window.start").as("window_start"),
-        col("window.end").as("window_end"),
-        col("event_type"), col("n_events"), col("total_value"))
-
   /** TRUE session windows (gap-based) per user — e4's exact column
     * logic with the watermark the STREAMING form needs (session state
     * can only finalize once the watermark passes the gap; in batch the

@@ -552,7 +552,6 @@ object TextAnalysis {
     FROM totals t LEFT JOIN kept k ON k.source = t.source"""
 
   val PackBudget = 1024L
-  val PackShards = 16
 
   /** PK1 (E48): sequence packing — assign docs to fixed-token-budget
     * training sequences. Fully distributed form: docs are sharded by a
@@ -2006,25 +2005,6 @@ object TextAnalysis {
     explode(array((0 until CmsRows).map(r =>
       struct(lit(r).as("r"), cmsBucket(h, r).as("bucket"))): _*))
 
-  /** The count-min cell table as a standalone build: (r, bucket, cell_n)
-    * from a corpus batch. Mergeable by construction — cells are COUNTS,
-    * so per-batch tables union + re-sum to exactly the one-shot table
-    * (CorpusOpsSpec pins it), the additive twin of the bloom word
-    * table's bit_or fold: the streaming/incremental heavy-hitters store
-    * never rescans history. */
-  def cmsCells(docs: DataFrame): DataFrame =
-    docs.select(explode(toksCol).as("token"))
-      .select(charHash(col("token")).as("h"))
-      .select(cmsRowBuckets(col("h")).as("rb"))
-      .groupBy(col("rb.r").as("r"), col("rb.bucket").as("bucket"))
-      .agg(count(lit(1)).as("cell_n"))
-
-  /** Merge per-batch count-min cell tables (counts add). */
-  def cmsMerge(tables: DataFrame*): DataFrame =
-    tables.reduce(_ unionByName _)
-      .groupBy(col("r"), col("bucket"))
-      .agg(sum(col("cell_n")).as("cell_n"))
-
   /** EAGER (round-9 verdict): both
     * consumers of the shared token-grain base are BOUNDED (the cell
     * table is ≤ CmsRows×CmsWidth rows, the top list k rows), so they
@@ -2142,21 +2122,12 @@ object TextAnalysis {
       explode(array((0 until CmsRows).map(r => bloomPos(col("fp"), r)): _*))
         .as("pos"): _*)
 
-  /** The bloom word table as a standalone build: (word, bits) rows from a
-    * set of member fingerprints. Mergeable by construction — `bit_or` is
-    * associative/commutative/idempotent, so per-batch tables union +
-    * re-aggregate to exactly the one-shot table (CorpusOpsSpec pins it);
-    * the incremental block-list store never rescans history. */
+  /** The bloom word table: (word, bits) rows from a set of member
+    * fingerprints, one `bit_or` per word. */
   def bloomWords(memberFps: DataFrame): DataFrame =
     bloomPositions(memberFps)
       .groupBy(bloomWord(col("pos")).as("word"))
       .agg(bit_or(bloomMask(col("pos"))).as("bits"))
-
-  /** Merge per-batch word tables into one filter (the k1 hll_union_agg
-    * analog for membership). */
-  def bloomMerge(tables: DataFrame*): DataFrame =
-    tables.reduce(_ unionByName _)
-      .groupBy(col("word")).agg(bit_or(col("bits")).as("bits"))
 
   def bloomPrune(docs: DataFrame): DataFrame = {
     def mask(pos: Column) = bloomMask(pos)
@@ -3259,7 +3230,12 @@ object TextAnalysis {
     * position — with the position recovered as len(acc) (DuckDB's
     * list_reduce takes no zero element, so the fold runs over
     * same-typed dummy elements with the init prepended). Candidate
-    * probability parenthesized exactly as the Spark fold multiplies. */
+    * probability parenthesized exactly as the Spark fold multiplies.
+    * The best candidate is the head of the (score, s, seg) structs
+    * sorted descending: `s` is unique per candidate, so that is the
+    * (score, s-desc) order of the Spark fold. A nested `list_reduce`
+    * argmax in its place is mis-evaluated by DuckDB 1.0.0 once a
+    * vector holds several words, and crashes it at sf0.1. */
   private def uniViterbiSql(word: String, m: String, tpv: String)
       : String = s"""
     list_reduce(
@@ -3267,7 +3243,7 @@ object TextAnalysis {
         list_transform(range(1, length($word) + 1),
           i -> [{'score': 0.0::DOUBLE, 's': 0, 'seg': []::VARCHAR[]}])),
       (acc, x) -> list_append(acc,
-        list_reduce(
+        list_sort(
           list_filter(
             list_transform(range(1, least($UniMaxPieceLen, len(acc)) + 1),
               s -> {'score': acc[len(acc) - s + 1].score *
@@ -3277,8 +3253,7 @@ object TextAnalysis {
                     'seg': list_append(acc[len(acc) - s + 1].seg,
                       substr($word, (len(acc) - s + 1)::INT, s::INT))}),
             c -> c.score IS NOT NULL),
-          (b, c) -> CASE WHEN c.score > b.score OR
-              (c.score = b.score AND c.s > b.s) THEN c ELSE b END))
+          'DESC')[1])
     )[length($word) + 1].seg"""
 
   /** Shared CTE pipeline of the unigram oracles: word table → seed

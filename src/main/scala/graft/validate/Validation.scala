@@ -303,54 +303,6 @@ object Validation {
       "1990-01-01 00:00:00", "2030-01-01 00:00:00"),
     RuleMatches("priority_format", "o_orderpriority", "^[1-5]-"))
 
-  /** Parse a rule suite from JSON — the wire form the config-driven DQ
-    * tools (Great Expectations / dbt tests) actually ship: rules arrive
-    * as a document, not as code. Schema: a JSON array of objects with
-    * `kind` ∈ {not_null, positive, in_domain, unique, in_range_ts,
-    * matches}, `name`, `column`, and the kind's parameters (`values`
-    * for in_domain, `lo`/`hi` for in_range_ts, `regex` for matches).
-    * Fails loud on an unknown kind or a missing field — a silently
-    * dropped rule is a DQ hole. Parsed with json4s (on Spark's own
-    * classpath; no extra dependency). */
-  def rulesFromJson(json: String): Seq[Rule] = {
-    import org.json4s._
-    import org.json4s.jackson.JsonMethods
-    val items = JsonMethods.parse(json) match {
-      case JArray(xs) => xs
-      case other => throw new IllegalArgumentException(
-        s"rule suite must be a JSON array, got ${other.getClass.getSimpleName}")
-    }
-    items.map { j =>
-      def str(f: String): String = j \ f match {
-        case JString(s) => s
-        case _ => throw new IllegalArgumentException(
-          s"rule is missing string field '$f': ${JsonMethods.compact(j)}")
-      }
-      str("kind") match {
-        case "not_null" => RuleNotNull(str("name"), str("column"))
-        case "positive" => RulePositive(str("name"), str("column"))
-        case "in_domain" =>
-          val vs = j \ "values" match {
-            case JArray(xs) => xs.map {
-              case JString(s) => s
-              case v => throw new IllegalArgumentException(
-                s"in_domain values must be strings: $v")
-            }
-            case _ => throw new IllegalArgumentException(
-              s"in_domain rule needs a 'values' array: ${JsonMethods.compact(j)}")
-          }
-          RuleInDomain(str("name"), str("column"), vs)
-        case "unique" => RuleUnique(str("name"), str("column"))
-        case "in_range_ts" =>
-          RuleInRangeTs(str("name"), str("column"), str("lo"), str("hi"))
-        case "matches" => RuleMatches(str("name"), str("column"),
-          str("regex"))
-        case k => throw new IllegalArgumentException(
-          s"unknown rule kind '$k' (a silently dropped rule is a DQ hole)")
-      }
-    }
-  }
-
   /** The multi-rule DQ report over a declared rule set: every rule's
     * violation count in ONE fused scan (the a6/v1 philosophy — one
     * conditional aggregate; a uniqueness rule rides the same pass's

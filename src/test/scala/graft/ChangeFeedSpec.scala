@@ -204,10 +204,9 @@ class ChangeFeedSpec extends SparkSpec {
       ("2024-06-03", 3L, "insert")))
   }
 
-  // ---- E175: the streaming cdc2 twin (CdcAggMaintain) -------------------
+  // ---- the streaming cdc1 twin (CdcApply) ---------------------------------
 
   import org.apache.spark.sql.functions._
-  import org.apache.spark.sql.types.DecimalType
 
   private val ordKeys = Seq("order_id")
   private val ordTracked = Seq("status", "total_price")
@@ -232,99 +231,13 @@ class ChangeFeedSpec extends SparkSpec {
     (a, b, c)
   }
 
-  private def statusAgg(df: org.apache.spark.sql.DataFrame) =
-    df.groupBy(col("status"))
-      .agg(count(lit(1)).as("n_orders"),
-        count(col("total_price")).as("n_vals"),
-        sum(col("total_price").cast(DecimalType(18, 2))).as("sum_total"))
-
-  private def sortedRows(df: org.apache.spark.sql.DataFrame) =
-    df.select(col("status"), col("n_orders"), col("n_vals"),
-      col("sum_total").cast("double").as("sum_total"))
-      .collect().map(_.toString).sorted.toSeq
-
-  test("cdc2 streaming: key-split chunks then a second refresh land on agg(C); replay is a no-op") {
-    import graft.streaming.CdcAggMaintain
-    val (a, b, c) = ordSnaps("/root/testdata/sf0.001")
-    val feedAB = ChangeFeed.diff(a, b, ordKeys, ordTracked)
-      .localCheckpoint(true)
-    val feedBC = ChangeFeed.diff(b, c, ordKeys, ordTracked)
-      .localCheckpoint(true)
-    val aggDir = java.nio.file.Files
-      .createTempDirectory("graft-cdc-agg").toString
-    val base0 = statusAgg(a)
-    // batches 0/1: ONE diff split per-key (the cdc1 contract) — the
-    // intermediate state is the hybrid snapshot's aggregate, and the
-    // end state must equal the direct aggregate of B
-    def chunk(p: Int) = feedAB.filter(pmod(col("order_id"), lit(2)) === p)
-    CdcAggMaintain.processBatch(chunk(0), 0L, aggDir, base0,
-      "status", "total_price")
-    CdcAggMaintain.processBatch(chunk(1), 1L, aggDir, base0,
-      "status", "total_price")
-    val afterB = graft.streaming.CdcApply.readLatest(spark, aggDir).get
-    assert(sortedRows(afterB) === sortedRows(statusAgg(b)),
-      "key-split chunks must land on the direct aggregate of B")
-    // batch 2: the next snapshot-consistent refresh — the store's
-    // snapshot (not base0) is the base, i.e. the chained maintain
-    CdcAggMaintain.processBatch(feedBC, 2L, aggDir, base0,
-      "status", "total_price")
-    val afterC = graft.streaming.CdcApply.readLatest(spark, aggDir).get
-    assert(sortedRows(afterC) === sortedRows(statusAgg(c)),
-      "the chained refresh must land on the direct aggregate of C")
-    assert(afterC.schema("sum_total").dataType === DecimalType(18, 2),
-      "the stored snapshot must keep the exact decimal through parquet")
-    // replay: re-running batch 2 reads only snapshots < 2 as its base
-    // and overwrites its own output — the state is unchanged
-    CdcAggMaintain.processBatch(feedBC, 2L, aggDir, base0,
-      "status", "total_price")
-    assert(sortedRows(
-      graft.streaming.CdcApply.readLatest(spark, aggDir).get) ===
-      sortedRows(statusAgg(c)), "replayed batch id must be a no-op")
-  }
-
-  test("cdc2 streaming: a checkpointed restart continues batch ids over the aggregate store") {
-    import graft.streaming.{CdcAggMaintain, CdcApply}
-    import java.nio.file.Files
-    val (a, b, c) = ordSnaps("/root/testdata/sf0.001")
-    val feedAB = ChangeFeed.diff(a, b, ordKeys, ordTracked)
-      .localCheckpoint(true)
-    val feedBC = ChangeFeed.diff(b, c, ordKeys, ordTracked)
-      .localCheckpoint(true)
-    val in = Files.createTempDirectory("graft-cdcagg-in").toString
-    val aggDir = Files.createTempDirectory("graft-cdcagg-st").toString
-    val ckpt = Files.createTempDirectory("graft-cdcagg-ck").toString
-    val base0 = statusAgg(a)
-    val schema = feedAB.schema
-    feedAB.coalesce(1).write.parquet(s"$in/f1")
-    def start() = CdcAggMaintain.start(
-      spark.readStream.schema(schema).parquet(s"$in/*"),
-      aggDir, base0, "status", "total_price", ckpt)
-    val q1 = start()
-    try q1.processAllAvailable() finally q1.stop()
-    // "crash"; the next refresh arrives; the SAME checkpoint must
-    // continue batch numbering so phase 1's aggregate is prior state
-    feedBC.coalesce(1).write.parquet(s"$in/f2")
-    val q2 = start()
-    try q2.processAllAvailable() finally q2.stop()
-    assert(sortedRows(CdcApply.readLatest(spark, aggDir).get) ===
-      sortedRows(statusAgg(c)),
-      "the restarted stream must land on the direct aggregate of C")
-    val snaps = new java.io.File(aggDir).list()
-      .filter(_.startsWith("batch="))
-    assert(snaps.length >= 2, s"expected >=2 snapshots: ${snaps.toSeq}")
-  }
-
-  test("cdc capstone: ONE feed drives BOTH consumers with a crash/restart between refreshes; dimension slice and aggregate both equal the direct computation") {
-    // the composition the pieces exist for (round-13 verdict task 3):
-    // one CDF stream fans out to CdcApply (feed → SCD2 dimension) and
-    // CdcAggMaintain (feed → maintained KPI) as SIBLING foreachBatch
-    // consumers over their own BatchStore dirs, each with its own
-    // checkpoint; the stream is killed between the two refreshes and
-    // restarted on the same checkpoints. End state must satisfy all
-    // three equalities a warehouse audit would run: current slice ≡
-    // final snapshot, maintained aggregate ≡ direct aggregate, and the
-    // two consumers agree with EACH OTHER (agg of current slice).
-    import graft.streaming.{CdcAggMaintain, CdcApply}
+  test("cdc capstone: the feed drives CdcApply across a crash/restart") {
+    // one CDF stream drives CdcApply (feed → SCD2 dimension) as a
+    // foreachBatch consumer over its own BatchStore dir and checkpoint;
+    // the stream is killed between the two refreshes and restarted on
+    // the same checkpoint. End state: the current slice ≡ the final
+    // snapshot.
+    import graft.streaming.CdcApply
     import graft.merge.Scd2
     import java.nio.file.Files
     val (a, b, c) = ordSnaps("/root/testdata/sf0.001")
@@ -334,32 +247,23 @@ class ChangeFeedSpec extends SparkSpec {
       .localCheckpoint(true)
     val in = Files.createTempDirectory("graft-cap-in").toString
     val dimDir = Files.createTempDirectory("graft-cap-dim").toString
-    val aggDir = Files.createTempDirectory("graft-cap-agg").toString
     val ckDim = Files.createTempDirectory("graft-cap-ckd").toString
-    val ckAgg = Files.createTempDirectory("graft-cap-cka").toString
     val dim0 = Scd2.init(a, Scd2.D0)
-    val base0 = statusAgg(a)
     val schema = feedAB.schema
-    def startBoth() = (
-      CdcApply.start(
-        spark.readStream.schema(schema).parquet(s"$in/*"),
-        dimDir, dim0, ordKeys, ordTracked,
-        id => f"2024-07-${id + 1}%02d", ckDim),
-      CdcAggMaintain.start(
-        spark.readStream.schema(schema).parquet(s"$in/*"),
-        aggDir, base0, "status", "total_price", ckAgg))
+    def start() = CdcApply.start(
+      spark.readStream.schema(schema).parquet(s"$in/*"),
+      dimDir, dim0, ordKeys, ordTracked,
+      id => f"2024-07-${id + 1}%02d", ckDim)
     feedAB.coalesce(1).write.parquet(s"$in/f1")
-    val (q1, q2) = startBoth()
-    try { q1.processAllAvailable(); q2.processAllAvailable() }
-    finally { q1.stop(); q2.stop() }
+    val q1 = start()
+    try q1.processAllAvailable() finally q1.stop()
     // "crash" between refreshes; the next snapshot-consistent diff
-    // arrives; the SAME checkpoints must continue batch numbering on
-    // BOTH consumers so each one's phase-1 snapshot is prior state
+    // arrives; the SAME checkpoint must continue batch numbering so the
+    // phase-1 snapshot is prior state
     feedBC.coalesce(1).write.parquet(s"$in/f2")
-    val (q3, q4) = startBoth()
-    try { q3.processAllAvailable(); q4.processAllAvailable() }
-    finally { q3.stop(); q4.stop() }
-    // 1. the dimension's CURRENT slice is snapshot C, column for column
+    val q2 = start()
+    try q2.processAllAvailable() finally q2.stop()
+    // the dimension's CURRENT slice is snapshot C, column for column
     val cur = CdcApply.readLatest(spark, dimDir).get
       .filter(col("is_current"))
       .select(col("order_id"), col("status"), col("total_price"))
@@ -367,13 +271,5 @@ class ChangeFeedSpec extends SparkSpec {
       df.collect().map(_.toString).sorted.toSeq
     assert(keyRows(cur) === keyRows(c),
       "the dimension's current slice must equal the final snapshot")
-    // 2. the maintained aggregate is the direct aggregate of C
-    val maintained = CdcApply.readLatest(spark, aggDir).get
-    assert(sortedRows(maintained) === sortedRows(statusAgg(c)),
-      "the maintained aggregate must equal the direct aggregate of C")
-    // 3. the two consumers agree: aggregating the dimension's current
-    // slice reproduces the maintained KPI (the cross-consumer audit)
-    assert(sortedRows(statusAgg(cur)) === sortedRows(maintained),
-      "the dimension and aggregate consumers must agree with each other")
   }
 }

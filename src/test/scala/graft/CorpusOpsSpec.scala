@@ -315,40 +315,6 @@ class CorpusOpsSpec extends SparkSpec {
     } finally out.unpersist()
   }
 
-  test("b1: bloom word table folds across batches to the one-shot filter") {
-    import graft.functions.TextFunctions._
-    // bit_or is associative/commutative/idempotent — building the filter
-    // from two disjoint member batches and merging must equal building it
-    // from the whole block list at once (the k1/t11 incremental-store
-    // convention for the membership sketch)
-    val fps = docs
-      .select(charHash(norm(col("text"))).as("fp"),
-        pmod(col("doc_id"), lit(97)).as("m"))
-      .filter(col("m") === 0).select(col("fp")).distinct().cache()
-    try {
-      def rows(df: org.apache.spark.sql.DataFrame) =
-        df.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-      val oneShot = rows(TextAnalysis.bloomWords(fps))
-      val merged = rows(TextAnalysis.bloomMerge(
-        TextAnalysis.bloomWords(fps.filter(pmod(col("fp"), lit(2)) === 0)),
-        TextAnalysis.bloomWords(fps.filter(pmod(col("fp"), lit(2)) =!= 0))))
-      assert(oneShot.nonEmpty && merged === oneShot)
-    } finally { fps.unpersist(); () }
-  }
-
-  test("t14: count-min cells fold across batches to the one-shot sketch") {
-    // cells are counts — building the sketch from two disjoint corpus
-    // batches and summing must equal building it from the whole corpus
-    // (the additive twin of the bloom bit_or fold)
-    def rows(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(r => (r.getInt(0), r.getLong(1), r.getLong(2))).toSet
-    val oneShot = rows(TextAnalysis.cmsCells(docs))
-    val merged = rows(TextAnalysis.cmsMerge(
-      TextAnalysis.cmsCells(docs.filter(pmod(col("doc_id"), lit(2)) === 0)),
-      TextAnalysis.cmsCells(docs.filter(pmod(col("doc_id"), lit(2)) =!= 0))))
-    assert(oneShot.nonEmpty && merged === oneShot)
-  }
-
   test("s3: leakage matrix partitions d3's pair set, off-diagonal flagged") {
     import graft.dedup.Dedup
     val nPairs = Dedup.minhashLshPairs(Dedup.withNearDups(docs)).count()

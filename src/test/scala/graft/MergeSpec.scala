@@ -33,8 +33,13 @@ class MergeSpec extends SparkSpec {
       }
     }.toSet
 
+  // the order-KPI merge: key (order_date), fields per
+  // scripts/helperfunction.py:127-201
   private def mergeO(t: DataFrame, u: DataFrame): DataFrame =
-    KpiMerge.mergeOrderKpi(t, u)
+    KpiMerge.merge(t, u, Seq("order_date"),
+      Seq("total_orders", "total_revenue", "total_items_sold",
+        "return_rate", "unique_customers"),
+      Some("data_sources"))
 
   // -- example-based: the three source modes --------------------------------
 

@@ -6,41 +6,16 @@ import org.apache.spark.sql.functions._
 import graft.io.Sources
 import graft.operators.{BfsHops, LabelPropagation, PageRank, Triangles}
 
-/** E176: the graph-family composition contract (the FromLabels
-  * convention applied to the second shared-upstream family): ONE
-  * persisted co-purchase edge relation feeds g1/g2/g3/g4 through the
-  * `*FromEdges` overloads, hash-identical to the four standalone runs
-  * that each rebuild the graph privately — and the round-12 unified
-  * cache-lifetime contract holds: every operator releases every cache
-  * it creates in-method (BASELINE.md "Shared-edges graph composition:
-  * measured at ×30" records the saving). */
+/** The graph family's cache-lifetime contract (round 12, r16): every
+  * operator over the co-purchase edge relation releases every cache it
+  * creates — iterative ones in-method, single-dataflow ones after the
+  * first action — and a result stays readable after its caches go. */
 class SharedGraphSpec extends SparkSpec {
 
   private def li = Sources.table(spark, sf0001, "lineitem")
 
   private def rows(df: DataFrame): Seq[String] =
     df.collect().map(_.toString).sorted.toSeq
-
-  test("one persisted edge relation feeds all four operators, hash-identical to standalone") {
-    val standalone = Seq(
-      rows(PageRank.productPageRank(li)),
-      rows(Triangles.triangleCensus(li)),
-      rows(BfsHops.hubHops(li)),
-      rows(LabelPropagation.communities(li)))
-    val edges = PageRank.copurchaseEdges(li).persist()
-    val shared = try Seq(
-      rows(PageRank.productPageRankFromEdges(edges)),
-      rows(Triangles.triangleCensusFromEdges(edges)),
-      rows(BfsHops.hubHopsFromEdges(edges)),
-      rows(LabelPropagation.communitiesFromEdges(edges)))
-    finally { edges.unpersist(); () }
-    Seq("g1", "g2", "g3", "g4").zip(standalone.zip(shared)).foreach {
-      case (name, (a, b)) =>
-        assert(a.nonEmpty, s"$name: fixture produced no rows")
-        assert(a === b, s"$name: FromEdges over a shared persisted " +
-          "edge relation must be hash-identical to the standalone run")
-    }
-  }
 
   test("lifetime: iterative operators release in-method; single-dataflow caches release after the first action") {
     // a UNIQUE input frame (no other suite builds this exact plan, so

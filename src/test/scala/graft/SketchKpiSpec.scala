@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import graft.io.RefShape
 import graft.kpi.SketchKpi
 
-/** Mergeable HLL distinct sketches (E44): the incremental form of A2's
+/** Per-day HLL distinct sketches (E44): the incremental form of A2's
   * unique_customers. Assertions use the property that DataSketches HLL is
   * EXACT below ~2^lgK distincts (sparse mode), so at test scale the
   * estimates must EQUAL the exact counts — any drift is a real bug, not
@@ -26,52 +26,5 @@ class SketchKpiSpec extends SparkSpec {
       assert(r.getAs[Long]("est") === r.getAs[Long]("unique_customers"),
         s"sketch must be exact in sparse range for ${r.getString(0)}")
     }
-  }
-
-  test("union of stored day sketches equals a rescan — overlap NOT double-counted") {
-    val daily = SketchKpi.dailyUserSketch(orders)
-    val (from, to) = ("0000-01-01", "9999-12-31")
-    val est = SketchKpi.distinctOverRange(daily, from, to)
-      .head().getAs[Long]("unique_customers_est")
-    val exact = orders.select(col("user_id")).distinct().count()
-    val sumOfDailies = daily.agg(sum(col("unique_customers")))
-      .head().getAs[Long](0)
-    assert(est === exact,
-      "union-of-sketches must equal the exact cross-day distinct")
-    assert(exact < sumOfDailies,
-      "fixture must actually have cross-day user overlap, or this test " +
-        "proves nothing")
-  }
-
-  test("merge is idempotent and incremental: re-sent batch changes nothing") {
-    val daily = SketchKpi.dailyUserSketch(orders)
-    val dates = daily.select(col("order_date")).orderBy(col("order_date"))
-      .collect().map(_.getString(0))
-    assert(dates.length >= 2, "need at least two dates in the fixture")
-    val (d1, d2) = (dates.head, dates.last)
-    val store0 = daily.filter(col("order_date") === d1)
-    val batch = daily.filter(col("order_date") === d2)
-
-    val store1 = SketchKpi.mergeDailySketches(store0, batch)
-    val store2 = SketchKpi.mergeDailySketches(store1, batch) // retry
-
-    def snapshot(df: org.apache.spark.sql.DataFrame) = df
-      .select(col("order_date"),
-        hll_sketch_estimate(col("user_sketch")).as("est"),
-        col("unique_customers"))
-      .collect().map(r => (r.getString(0), r.getAs[Long]("est"),
-        r.getAs[Long]("unique_customers"))).toSet
-
-    assert(store1.count() === 2, "merge adds the new day")
-    assert(snapshot(store2) === snapshot(store1),
-      "unioning the same sketch again must be a no-op")
-
-    // and the merged store answers the cross-day question without rescan
-    val est = SketchKpi.distinctOverRange(store2, d1, d2)
-      .head().getAs[Long]("unique_customers_est")
-    val exact = orders
-      .filter(substring(col("created_at"), 1, 10).isin(d1, d2))
-      .select(col("user_id")).distinct().count()
-    assert(est === exact)
   }
 }

@@ -6,67 +6,10 @@ import org.apache.spark.sql.streaming.Trigger
 import graft.io.Sources
 import graft.streaming.WindowedAgg
 
-/** Streaming windowed aggregation: the same transform runs batch and
+/** Streaming event-time operators: the same transform runs batch and
   * streaming, and a file-driven streaming query over the events table
-  * produces exactly the batch result (complete mode, no late data). */
+  * produces exactly the batch result. */
 class StreamingAggSpec extends SparkSpec {
-
-  test("checkpointed append-mode file sink resumes exactly-once") {
-    import spark.implicits._
-    import java.nio.file.Files
-    val in = Files.createTempDirectory("graft-ckpt-in").toString
-    val out = Files.createTempDirectory("graft-ckpt-out").toString
-    val ckpt = Files.createTempDirectory("graft-ckpt-state").toString
-
-    def hourNanos(h: Int, m: Int): Long = (h * 3600L + m * 60L) * 1000000000L
-    def addFile(name: String, ts: Long*): Unit =
-      ts.map(t => (t, "x", 1.0)).toDF("ts", "event_type", "value")
-        .coalesce(1).write.parquet(s"$in/$name")
-    val schema = org.apache.spark.sql.types.StructType.fromDDL(
-      "ts BIGINT, event_type STRING, value DOUBLE")
-
-    def start() = WindowedAgg.eventTypeWindows(
-        spark.readStream.schema(schema).parquet(s"$in/*"),
-        "1 hour", "0 seconds")
-      .writeStream.format("parquet")
-      .option("path", out).option("checkpointLocation", ckpt)
-      .outputMode("append").trigger(Trigger.ProcessingTime(100L)).start()
-
-    // append mode emits a window in the batch AFTER the watermark passes
-    // its end, so each later file both adds data and flushes earlier
-    // windows
-    addFile("f1", hourNanos(0, 10), hourNanos(1, 10))
-    val q1 = start()
-    q1.processAllAvailable()
-    addFile("f2", hourNanos(3, 10)) // advances watermark past hour 0
-    q1.processAllAvailable()
-    q1.stop() // "crash" between batches
-
-    val afterFirstRun = spark.read.parquet(out).collect()
-      .map(_.getAs[java.sql.Timestamp]("window_start").getTime / 1000)
-      .sorted
-    // hour 0 is certainly flushed; hour 1 may or may not be, depending on
-    // whether a no-data micro-batch ran before the stop — either is legal,
-    // what matters below is that NOTHING repeats after the resume
-    assert(afterFirstRun.nonEmpty && afterFirstRun.toSet.subsetOf(Set(0L, 3600L))
-      && afterFirstRun.contains(0L) && afterFirstRun.distinct.length == afterFirstRun.length,
-      s"unexpected pre-restart windows: ${afterFirstRun.toSeq}")
-
-    // resume from the SAME checkpoint: prior output must not repeat
-    val q2 = start()
-    q2.processAllAvailable()
-    addFile("f3", hourNanos(5, 10)) // advances watermark past hour 3
-    q2.processAllAvailable()
-    q2.stop()
-
-    val finalRows = spark.read.parquet(out).collect()
-      .map(r => (r.getAs[java.sql.Timestamp]("window_start").getTime / 1000,
-        r.getAs[Long]("n_events")))
-      .sorted
-    // hours 0, 1, 3 finalized exactly once each; hour 5 still in state
-    assert(finalRows.toSeq === Seq((0L, 1L), (3600L, 1L), (3L * 3600, 1L)),
-      s"exactly-once resume violated: ${finalRows.toSeq}")
-  }
 
   test("stream-stream interval join matches the batch join") {
     val events = Sources.table(spark, sf0001, "events")
@@ -147,31 +90,6 @@ class StreamingAggSpec extends SparkSpec {
       assert(streamOut === batchOut,
         "watermark closure must emit exactly the batch result " +
           s"(stream $streamOut vs batch $batchOut)")
-    } finally q.stop()
-  }
-
-  test("streaming windowed agg over the events table matches batch") {
-    val dir = s"$sf0001/events.parquet"
-    val batchOut = WindowedAgg.eventTypeWindows(
-      Sources.table(spark, sf0001, "events"), "1 hour", "2 hours")
-      .collect().map(_.toString).sorted
-
-    // the file stream source requires a DIRECTORY; stage the table file
-    val stage = java.nio.file.Files.createTempDirectory("graft-stream")
-    java.nio.file.Files.copy(java.nio.file.Paths.get(dir),
-      stage.resolve("events.parquet"))
-    val schema = spark.read.parquet(dir).schema
-    val stream = spark.readStream.schema(schema).parquet(stage.toString)
-    val q = WindowedAgg.eventTypeWindows(stream, "1 hour", "2 hours")
-      .writeStream.format("memory").queryName("winagg_out")
-      .outputMode("complete")
-      .trigger(Trigger.ProcessingTime(100L)).start()
-    try {
-      q.processAllAvailable()
-      val streamOut = spark.sql("SELECT * FROM winagg_out")
-        .collect().map(_.toString).sorted
-      assert(streamOut.nonEmpty)
-      assert(streamOut.toSeq === batchOut.toSeq)
     } finally q.stop()
   }
 

@@ -335,49 +335,6 @@ class ValidationSpec extends SparkSpec {
     assert(out("k_not_null") === 2L)
   }
 
-  test("dq1 rules-as-data: the JSON wire form parses to the same suite; bad specs fail loud") {
-    import Validation._
-    val json = """[
-      {"kind": "not_null",    "name": "totalprice_not_null",
-       "column": "o_totalprice"},
-      {"kind": "positive",    "name": "totalprice_positive",
-       "column": "o_totalprice"},
-      {"kind": "in_domain",   "name": "status_in_domain",
-       "column": "o_orderstatus", "values": ["F", "O", "P"]},
-      {"kind": "unique",      "name": "orderkey_unique",
-       "column": "o_orderkey"},
-      {"kind": "in_range_ts", "name": "orderdate_in_range",
-       "column": "o_orderdate",
-       "lo": "1990-01-01 00:00:00", "hi": "2030-01-01 00:00:00"},
-      {"kind": "matches",     "name": "priority_format",
-       "column": "o_orderpriority", "regex": "^[1-5]-"}
-    ]"""
-    assert(rulesFromJson(json) === OrdersExpectations,
-      "the JSON document must parse to the exact ADT suite")
-    // and the parsed suite drives the operator to the identical report
-    val orders = graft.io.Sources.table(spark, sf0001, "orders")
-    val viaJson = expectations(orders, rulesFromJson(json))
-      .collect().map(_.toString).sorted.toSeq
-    val viaAdt = expectations(orders, OrdersExpectations)
-      .collect().map(_.toString).sorted.toSeq
-    assert(viaJson === viaAdt)
-    // a wire-form name with a backslash must survive the Spark literal
-    // splice intact (Spark literals backslash-escape; DuckDB's don't)
-    val weird = expectations(orders,
-      Seq(RuleNotNull("""path\basic 'q'""", "o_totalprice"))).collect()
-    assert(weird.head.getAs[String]("rule") === """path\basic 'q'""")
-    // silently dropping a bad rule would be a DQ hole — fail loud
-    intercept[IllegalArgumentException] {
-      rulesFromJson("""[{"kind": "frobnicate", "name": "x", "column": "c"}]""")
-    }
-    intercept[IllegalArgumentException] {
-      rulesFromJson("""[{"kind": "matches", "name": "x", "column": "c"}]""")
-    }
-    intercept[IllegalArgumentException] {
-      rulesFromJson("""{"kind": "not_null"}""")
-    }
-  }
-
   test("dq1 rules-as-data: subsets and reorderings renumber but agree rule-by-rule") {
     import Validation._
     val orders = graft.io.Sources.table(spark, sf0001, "orders")
@@ -404,6 +361,11 @@ class ValidationSpec extends SparkSpec {
     assert(sql.contains("count(o_orderkey) - count(DISTINCT o_orderkey)")
       === false, "subset omits the uniqueness rule")
     assert(sql.contains("CASE WHEN o_totalprice IS NULL"))
+    // a rule name with a backslash must survive the Spark literal
+    // splice intact (Spark literals backslash-escape; DuckDB's don't)
+    val weird = expectations(orders,
+      Seq(RuleNotNull("""path\basic 'q'""", "o_totalprice"))).collect()
+    assert(weird.head.getAs[String]("rule") === """path\basic 'q'""")
   }
 
   test("exactPercentilesAndBounds ≡ built-in percentile(), bit for bit") {
