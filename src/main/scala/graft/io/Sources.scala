@@ -58,9 +58,10 @@ object Sources {
   /** S2: multi-file scan (reference `scripts/validation.py:67-80`). When a
     * schema is declared and every part is `.csv` — the pipeline's ingest
     * shape — the parts are ONE multi-path CSV scan (one relation, one split
-    * list; each part's header line is skipped), as [[readMultiPath]] is
-    * for parquet. The `unionByName` fold remains for the schema-less and
-    * mixed-format cases, where parts may disagree on column order.
+    * list, so listing, split planning and pushdown happen once; each
+    * part's header is skipped). The `unionByName` fold remains for the
+    * schema-less and mixed-format cases, where parts may disagree on
+    * column order.
     */
   def readAndUnion(spark: SparkSession, paths: Seq[String],
       csvSchema: Option[StructType] = None): Option[DataFrame] =
@@ -71,12 +72,6 @@ object Sources {
         paths.map(readParquetOrCsv(spark, _, csvSchema))
           .reduceOption(_.unionByName(_))
     }
-
-  /** S2 (scale path): single multi-path scan — the planner gets one relation
-    * with N files, so file listing, split planning, and pushdown happen once.
-    */
-  def readMultiPath(spark: SparkSession, paths: Seq[String]): DataFrame =
-    spark.read.parquet(paths: _*)
 
   /** S3: strict single-table scan (reference
     * `scripts/transformation.py:107-119`): None ONLY when nothing exists at
@@ -101,19 +96,21 @@ object Sources {
   }
 
   /** The file whose footer `spark.read.parquet` would infer the schema
-    * from (no schema merging): the first data file by path, listing as
-    * Spark's file index does, skipping `_`/`.`-prefixed names except
-    * `_col=value` partition directories. Summary files (`_metadata`,
-    * `_common_metadata`) are not consulted; nothing here writes them. */
+    * from (no schema merging): the least data file path, skipping
+    * `_`/`.`-prefixed names except `_col=value` partition directories,
+    * found depth-first (a directory sorts as its path plus `/`), so only
+    * the directories on the way to it are listed. Summary files are not
+    * consulted; nothing here writes them. */
   private def firstDataFile(fs: FileSystem, root: FileStatus)
       : Option[FileStatus] = {
     def hidden(n: String) = (n.startsWith("_") && !n.contains("=")) ||
       n.startsWith(".") || n.endsWith("._COPYING_")
-    def leaves(s: FileStatus): Iterator[FileStatus] =
-      if (!s.isDirectory) Iterator(s)
-      else fs.listStatus(s.getPath).iterator
-        .filterNot(c => hidden(c.getPath.getName)).flatMap(leaves)
-    leaves(root).minByOption(_.getPath.toString)
+    def first(s: FileStatus): Option[FileStatus] =
+      if (!s.isDirectory) Some(s)
+      else fs.listStatus(s.getPath).filterNot(c => hidden(c.getPath.getName))
+        .sortBy(c => c.getPath.toString + (if (c.isDirectory) "/" else ""))
+        .iterator.flatMap(first).nextOption()
+    first(root)
   }
 
   /** A parquet file's Spark schema read from its footer on the driver,
@@ -134,9 +131,12 @@ object Sources {
       new ParquetToSparkSchemaConverter(conf))
   }
 
-  /** Load one testdata table: `<dir>/<name>.parquet`. */
-  def table(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+  /** Load one testdata table: `<dir>/<name>.parquet`, its schema read from
+    * a footer as [[readTable]] reads it (no inference job). */
+  def table(spark: SparkSession, dir: String, name: String): DataFrame = {
+    val path = s"$dir/$name.parquet"
+    readTable(spark, path).getOrElse(spark.read.parquet(path))
+  }
 
   /** Event-time normalizer: epoch MICROSECONDS regardless of the column's
     * physical type. The `events.ts` fixture has shipped as both epoch-nanos

@@ -25,14 +25,14 @@ import org.apache.spark.sql.types.DecimalType
   *  - products is the small dimension → explicit `broadcast` hint (the
   *    reference left it to AQE; at a 1000-executor scale you don't want a
   *    sort-merge join against a dimension table ever).
-  *  - both KPI families come from ONE aggregate over one join (a
-  *    ROLLUP on category) — the reference re-executed the full 3-way
+  *  - both KPI families come from ONE action over one join (GROUPING
+  *    SETS on category) — the reference re-executed the full 3-way
   *    join once per family (`scripts/transformation.py:193,205`) — and
   *    their bounded outputs are collected, so no fact-scale cache
   *    outlives the call.
-  *  - `countDistinct` is exact (Expand + 2-phase agg), matching the
-  *    reference; `approx_count_distinct` is the documented relaxation when a
-  *    5% error is acceptable at 100 TB.
+  *  - distinct counts are exact (a 2-phase agg), matching the reference;
+  *    `approx_count_distinct` is the documented relaxation when a 5% error
+  *    is acceptable at 100 TB.
   */
 object Kpi {
 
@@ -79,15 +79,15 @@ object Kpi {
   /** A2: global order KPIs, complete mode
     * (reference `scripts/transformation.py:197-203`). */
   def orderKpiComplete(joined: DataFrame): DataFrame =
-    joined.agg(orderAggsComplete.head, orderAggsComplete.tail: _*)
+    joined.agg(countDistinct(col("o.order_id")).as("total_orders"),
+      orderMeasures :+
+        countDistinct(col("o.user_id")).as("unique_customers"): _*)
 
-  private def orderAggsComplete: Seq[Column] = Seq(
-      countDistinct(col("o.order_id")).as("total_orders"),
+  private def orderMeasures: Seq[Column] = Seq(
       sum(col("oi.sale_price").cast(money)).cast("double").as("total_revenue"),
       count(col("oi.id")).as("total_items_sold"),
       ratio(count(when(col("oi.status") === "returned", true)).cast("double"),
-        count(col("oi.id"))).as("return_rate"),
-      countDistinct(col("o.user_id")).as("unique_customers"))
+        count(col("oi.id"))).as("return_rate"))
 
   /** A3: order_items_only mode — orders-table KPIs are typed nulls
     * (reference `scripts/transformation.py:225-231`). NB the reference
@@ -96,15 +96,8 @@ object Kpi {
     * [[itemsProductsJoin]] output here (already carrying the `oi` alias),
     * not raw items. */
   def orderKpiItemsOnly(items: DataFrame): DataFrame =
-    items.agg(orderAggsItemsOnly.head, orderAggsItemsOnly.tail: _*)
-
-  private def orderAggsItemsOnly: Seq[Column] = Seq(
-      lit(null).cast("long").as("total_orders"),
-      sum(col("oi.sale_price").cast(money)).cast("double").as("total_revenue"),
-      count(col("oi.id")).as("total_items_sold"),
-      ratio(count(when(col("oi.status") === "returned", true)).cast("double"),
-        count(col("oi.id"))).as("return_rate"),
-      lit(null).cast("long").as("unique_customers"))
+    items.agg(lit(null).cast("long").as("total_orders"),
+      orderMeasures :+ lit(null).cast("long").as("unique_customers"): _*)
 
   /** A4: orders_only mode (reference `scripts/transformation.py:238-244`). */
   def orderKpiOrdersOnly(orders: DataFrame): DataFrame =
@@ -134,33 +127,47 @@ object Kpi {
       "Products table is required for KPI computation"))
     (orders, items) match {
       case (Some(o), Some(i)) =>
-        collectFamilies(threeWayJoin(o, i, p), orderAggsComplete)
+        collectFamilies(threeWayJoin(o, i, p), orderKpiComplete,
+          Seq("order_id", "user_id"))
       case (None, Some(i)) =>
-        collectFamilies(itemsProductsJoin(i, p), orderAggsItemsOnly)
+        collectFamilies(itemsProductsJoin(i, p), orderKpiItemsOnly, Nil)
       case (Some(o), None) =>
         (None, Some(collected(orderKpiOrdersOnly(o))))
       case (None, None) => (None, None)
     }
   }
 
-  /** Both KPI families of one join in ONE aggregate: ROLLUP(category)
-    * yields the category rows (grouping id 0) and the global row (1) from
-    * one pass over one join, each row carrying both families' aggregates.
-    * Spark's ROLLUP emits no grand-total row for EMPTY input, where the
-    * global aggregate has one: only then are the order aggregates
-    * evaluated on their own (over the empty join). Measured on a 60-order
-    * daily batch at local[4]: 5 Spark jobs and 21 generated classes. */
-  private def collectFamilies(joined: DataFrame, orderAggs: Seq[Column])
-      : (Option[DataFrame], Option[DataFrame]) = {
+  /** Both KPI families of one join in ONE action: GROUPING SETS
+    * ((category), (), (key) per `counted` key of `o`), then a second
+    * aggregate that passes the category and global rows through and
+    * counts each key's rows into the global row. No aggregate has two
+    * distinct keys (whose Expand follows expression-id hashes), so the
+    * code is the same for every batch. On EMPTY input, where grouping
+    * sets emit no global row, `order` runs on its own. Measured on a
+    * 60-order daily batch at local[4]: 5 Spark jobs, 20 generated classes. */
+  private def collectFamilies(joined: DataFrame, order: DataFrame => DataFrame,
+      counted: Seq[String]): (Option[DataFrame], Option[DataFrame]) = {
     val cat = categoryKpi(joined)
-    val ord = joined.agg(orderAggs.head, orderAggs.tail: _*)
-    val rows = joined.rollup(categoryKey)
-      .agg(grouping_id().as("grouping_id"), categoryAggs ++ orderAggs: _*)
+    val ord = order(joined)
+    val countNames = Seq("total_orders", "unique_customers")
+    val grouped = col("p.category") +: counted.map(k => col(s"o.$k"))
+    // grouping_id sets the bit of each column a row's set leaves out
+    val all = (1 << grouped.size) - 1
+    def only(i: Int) = all - (1 << (grouped.size - 1 - i))
+    val passed = (cat.columns.tail ++ ord.columns.diff(countNames))
+      .map(c => max(when(col("gid").isin(only(0), all), col(c))).as(c))
+    val rows = joined.groupingSets(Nil +: grouped.map(Seq(_)), grouped: _*)
+      .agg(grouping_id().as("gid"), categoryAggs ++ orderMeasures: _*)
+      .groupBy((col("gid") === only(0)).as("is_category"), col("category"))
+      .agg(passed.head, passed.tail ++ countNames.zipWithIndex.map {
+        case (n, i) => counted.lift(i).fold(lit(null).cast("long"))(k =>
+          count(when(col("gid") === only(i + 1), col(k)))).as(n)
+      }: _*)
       .collect()
     def picked(like: DataFrame, rs: Seq[Row]) =
       local(like, rs.map(r => Row.fromSeq(like.columns.toSeq.map(r.getAs[Any]))))
-    val (global, perCategory) =
-      rows.toSeq.partition(_.getAs[Number]("grouping_id").intValue == 1)
+    val (perCategory, global) =
+      rows.toSeq.partition(_.getAs[Boolean]("is_category"))
     (Some(picked(cat, perCategory)),
       Some(if (global.nonEmpty) picked(ord, global) else collected(ord)))
   }

@@ -1,6 +1,7 @@
 package graft.pipeline
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
@@ -342,34 +343,23 @@ object Pipeline {
 
     val (catKpi, ordKpi) = Kpi.computeKpis(orders, items, products)
 
-    // last_updated rides through the merge as a regular coalesced field:
-    // updated rows get `now`, untouched target rows keep their old stamp
-    // (reference helperfunction.py:73-78,121-125)
-    val catCommit = () => catKpi.map { k =>
+    // every column but the keys and `data_sources` merges as a coalesced
+    // field, last_updated too: updated rows get `now`, untouched target
+    // rows keep their old stamp (reference helperfunction.py:73-78,121-125)
+    def commit(kpi: Option[DataFrame], store: String, schema: StructType,
+        keys: Seq[String]) = () => kpi.map { k =>
       val updates = k
         .withColumn("order_date", lit(processingDate))
         .withColumn("data_sources", typedLit(sources))
         .withColumn("last_updated", lit(now))
-        .select(catSchema.fieldNames.map(col): _*)
-      upsertStore(spark, s"$storeBase/category_kpi", catSchema, updates,
-        Seq("category", "order_date"),
-        Seq("daily_revenue", "avg_order_value", "avg_return_rate",
-          "last_updated"))
+        .select(schema.fieldNames.map(col): _*)
+      upsertStore(spark, s"$storeBase/$store", schema, updates, keys,
+        schema.fieldNames.toSeq.diff(keys :+ "data_sources"))
     }.getOrElse(0L)
 
-    val ordCommit = () => ordKpi.map { k =>
-      val updates = k
-        .withColumn("order_date", lit(processingDate))
-        .withColumn("data_sources", typedLit(sources))
-        .withColumn("last_updated", lit(now))
-        .select(ordSchema.fieldNames.map(col): _*)
-      upsertStore(spark, s"$storeBase/order_kpi", ordSchema, updates,
-        Seq("order_date"),
-        Seq("total_orders", "total_revenue", "total_items_sold",
-          "return_rate", "unique_customers", "last_updated"))
-    }.getOrElse(0L)
-
-    val rows = ForkJoin.all(spark)(Seq(catCommit, ordCommit))
+    val rows = ForkJoin.all(spark)(Seq(
+      commit(catKpi, "category_kpi", catSchema, Seq("category", "order_date")),
+      commit(ordKpi, "order_kpi", ordSchema, Seq("order_date"))))
     (rows(0), rows(1))
   }
 
@@ -398,13 +388,12 @@ object Pipeline {
     * full, never date A new + date B old.
     *
     * `updates` are KPI-grain rows (keys × touched dates, bounded at any
-    * data scale): they are collected ONCE, so the touched dates are known
-    * on the driver and the merge reads a local relation. A frame that is
-    * already local (what [[Kpi.computeKpis]] returns) collects with no
-    * Spark job, and the row counts come from parquet footers, so the
-    * merge write is the commit's only action: measured on a 60-order
-    * daily batch at local[4], 1–3 Spark jobs and 6–17 generated classes
-    * per store commit.
+    * data scale) in a local frame, as [[Kpi.computeKpis]] returns them
+    * (any other plan is rejected), merged with no collect round trip. Only
+    * touched dates the snapshot holds are read, and row counts come from
+    * parquet footers. Measured on a 60-order daily batch at local[4]: new
+    * dates, 1 Spark job and 6 generated classes per store commit, the same
+    * for every batch; a rerun of a stored date, 3 jobs, ~15 classes more.
     *
     * Concurrency: every piece of state a commit touches — lease, manifest,
     * staging dir, `.bak`, `.hist` — is per store path, so commits to
@@ -459,16 +448,27 @@ object Pipeline {
     }
     conflictCheck("before planning")
 
-    val rows = updates.collect()
-    val dates = rows.map(_.getAs[String](partCol)).distinct.sorted
-    val target = readOrInit(spark, path, schema)
-      .where(col(partCol).isin(dates: _*))
-    // ONE partition: when the touched dates are new, AQE drops the join
-    // with the empty target, and a multi-split local relation would then
+    val rel = updates.queryExecution.optimizedPlan match {
+      case r: LocalRelation => r
+      case p => throw new IllegalArgumentException(
+        s"store $path: updates must be a local frame, not ${p.nodeName}")
+    }
+    val at = rel.schema.fieldIndex(partCol)
+    val dates = rel.data.map(r => Option(r.getUTF8String(at)).map(_.toString)
+      .orNull).distinct.sorted
+    // new dates merge against an empty local target, which the optimizer
+    // folds away: one shuffle-free plan for every such batch, and no
+    // listing of the store (readOrInit lists every partition dir)
+    val stored = dates.filter(
+      committedPartitions(fs, path, partCol, latestManifest(fs, path)).toSet)
+    val target =
+      if (stored.isEmpty) spark.createDataFrame(
+        java.util.Collections.emptyList[org.apache.spark.sql.Row], schema)
+      else readOrInit(spark, path, schema).where(col(partCol).isin(stored: _*))
+    // ONE partition: when the touched dates are new the join with the
+    // empty target is dropped, and a multi-split local relation would then
     // write one file per split into the partition
-    val merged = KpiMerge.merge(target,
-      spark.createDataFrame(java.util.Arrays.asList(rows: _*), updates.schema)
-        .coalesce(1),
+    val merged = KpiMerge.merge(target, updates.coalesce(1),
       keys, fields, Some("data_sources"))
       .select(schema.fieldNames.map(col): _*)
 
@@ -527,20 +527,18 @@ object Pipeline {
       val curManifest = latestManifest(fs, path)
       // pinned by conflictCheck("at commit") just above
       val curEpoch = baseEpoch
-      // bootstrap a pre-manifest store's partition list from its dirs
-      val baseParts = curManifest.map(_.partitions)
-        .getOrElse(listPartitionDirs(fs, path, partCol))
+      val baseParts = committedPartitions(fs, path, partCol, curManifest)
+      def rowsIn(parts: Seq[String]) =
+        parts.map(dt => footerRows(fs, new HPath(s"$path/$partCol=$dt"))).sum
       // post-merge store size in O(touched), not O(store): the previous
-      // total rides the manifest (#rows; one full-count fallback on a
-      // legacy/swept manifest); the committed touched partitions (their
-      // live dirs: recovery ran before planning and the lease + epoch
-      // check pin them) and the staged replacement are counted from
+      // total rides the manifest (#rows; one count of every committed
+      // partition on a legacy/swept manifest); the committed partitions
+      // (their live dirs: recovery ran before planning and the lease +
+      // epoch check pin them) and the staged replacement are counted from
       // parquet footers on the driver — the result is carried forward on
       // the new manifest, so per-batch cost never grows with store age
-      val prevTotal = curManifest.flatMap(_.rows)
-        .getOrElse(readOrInit(spark, path, schema).count())
-      val prevTouched = dates.filter(baseParts.toSet)
-        .map(dt => footerRows(fs, new HPath(s"$path/$partCol=$dt"))).sum
+      val prevTotal = curManifest.flatMap(_.rows).getOrElse(rowsIn(baseParts))
+      val prevTouched = rowsIn(dates.filter(baseParts.toSet))
       val newTotal = prevTotal - prevTouched + footerRows(fs, new HPath(tmp))
       writeBakEpoch(fs, path, curEpoch)
       dates.foreach { dt =>
@@ -562,6 +560,12 @@ object Pipeline {
       newTotal
     } finally releaseStoreLease(fs, path, lease)
   }
+
+  /** The committed snapshot's partitions (a pre-manifest store's dirs). */
+  private def committedPartitions(fs: org.apache.hadoop.fs.FileSystem,
+      path: String, partCol: String, manifest: Option[StoreManifest])
+      : Seq[String] =
+    manifest.map(_.partitions).getOrElse(listPartitionDirs(fs, path, partCol))
 
   /** Rows in the parquet data files under `dir`, summed from their footers
     * on the driver (no Spark job); `_`/`.`-prefixed entries are skipped as
@@ -718,8 +722,8 @@ object Pipeline {
           conflictCheck("at commit")
           sweepOrphanStaging(fs, path, exclude = tmp,
             ttlMs = DefaultLeaseTtlMs)
-          val baseParts = latestManifest(fs, path).map(_.partitions)
-            .getOrElse(listPartitionDirs(fs, path, partCol))
+          val baseParts =
+            committedPartitions(fs, path, partCol, latestManifest(fs, path))
           writeBakEpoch(fs, path, baseEpoch)
           present.foreach { dt =>
             swapDir(fs, new HPath(s"$tmp/$partCol=$dt"),

@@ -2,8 +2,10 @@ package graft.tools
 
 import scala.collection.mutable
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
 
 import graft.{Session, SparkEntry}
 
@@ -11,9 +13,9 @@ import graft.{Session, SparkEntry}
   *  - `run`: show each query's first 20 rows (full stack on error);
   *  - `explain`: print each query's formatted physical plan;
   *  - `stages`: run each query twice (cold, then warm) and print per
-  *    stage its wall ms, tasks, input and shuffle read/write and the job
-  *    description — the stage budget of the real operators, measured
-  *    instead of guessed.
+  *    pass its Janino compiles and compile ms, and per stage its wall
+  *    ms, tasks, input and shuffle read/write and the job description —
+  *    the stage budget of the real operators, measured, not guessed.
   *
   * Usage: runMain graft.tools.Dev run|explain|stages <sfDir> <query>[,<query>...]
   * on `local[SPARK_GRAFT_CPUS]` (default 4); other confs as `-Dspark.x=y`. */
@@ -84,12 +86,16 @@ object Dev {
       for (pass <- 1 to 2) {
         org.apache.spark.graft.ListenerDrain.drain(sc)
         done.clear()
+        val compiles0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+        val compileNs0 = CodeGenerator.compileTime
         val t0 = System.nanoTime()
         query(n).count()
         val dt = (System.nanoTime() - t0) / 1e9
         org.apache.spark.graft.ListenerDrain.drain(sc)
+        val compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiles0
+        val compileMs = (CodeGenerator.compileTime - compileNs0) / 1e6
         spark.catalog.clearCache()
-        println(f"\n===== $n pass $pass: $dt%.2f s, ${done.size} stages, ${done.map(_.tasks).sum} tasks")
+        println(f"\n===== $n pass $pass: $dt%.2f s, ${done.size} stages, ${done.map(_.tasks).sum} tasks, $compiles compiles, $compileMs%.1f compile ms")
         done.sortBy(_.id).foreach { s =>
           println(f"  [j${s.job}%3d s${s.id}%3d] ${s.ms}%6d ms ${s.tasks}%4d tasks  in=${s.in / 1024}%8d KB  sr=${s.sr / 1024}%7d KB  sw=${s.sw / 1024}%7d KB  ${s.name}  | ${s.desc.take(50)}")
         }

@@ -158,9 +158,9 @@ class BatchConcurrencySpec extends SparkSpec {
     // Measured on local[4] for the second of two fixture batches (the
     // gate, three validated writes, the KPI aggregate, both store merge
     // writes, each with its AQE stage jobs). The same code with the writes
-    // and the commits run one after another also runs 23: concurrency
+    // and the commits run one after another also runs 20: concurrency
     // adds and drops no job.
-    val ExpectedJobs = 23
+    val ExpectedJobs = 20
     val d = dir()
     val (op, ip, p) = BatchFixtures.clean(d)
     def batch(n: Int): Unit = {

@@ -53,6 +53,10 @@ class DevSpec extends SparkSpec {
   test("stages reports the stages of both passes, with their tasks") {
     val out = dev("stages", sf0001, q)
     assert(out.contains(s"===== $q pass 1:") && out.contains(s"===== $q pass 2:"))
+    // each pass line carries its Janino compile count and compile ms
+    val codegen = s"""===== $q pass [12]: .*, (\\d+) compiles, (\\d+\\.\\d) compile ms""".r
+      .findAllMatchIn(out).toSeq
+    assert(codegen.size === 2, out)
     val tasks = """\]\s+-?\d+ ms\s+(\d+) tasks""".r
       .findAllMatchIn(out).map(_.group(1).toInt).toSeq
     assert(tasks.nonEmpty && tasks.exists(_ > 0), out)

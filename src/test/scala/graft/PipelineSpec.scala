@@ -85,11 +85,12 @@ class PipelineSpec extends SparkSpec {
     // warms up and seeds the store, so the second merges against it).
     // The gate is one action and the KPI families one more, and opening
     // the validated tables reads their schema from a footer instead of an
-    // inference job each: 23 jobs under AQE on local[4] (26 with the
+    // inference job each: 20 jobs under AQE on local[4] (23 with the
+    // gate's dedup aggregates before its existence lookups, 26 with the
     // inference jobs; the six-action gate with the checkpointed KPI path
     // ran 49). The ceiling keeps later changes from quietly adding
     // actions back.
-    val MaxJobs = 23
+    val MaxJobs = 20
     val d = dir()
     val (op, ip, p) = cleanFixtures(d)
     def batch(n: Int): Unit = {
@@ -117,6 +118,57 @@ class PipelineSpec extends SparkSpec {
     } finally sc.removeSparkListener(listener)
     assert(jobs.get <= MaxJobs,
       s"a clean batch ran ${jobs.get} Spark jobs, budget $MaxJobs")
+  }
+
+  test("a batch's gate, KPI and commit plans generate the same code for " +
+      "every batch") {
+    // Spark caches compiled classes by their code, so a plan whose code
+    // changes between batches (an aggregate over two distinct keys orders
+    // its Expand by expression-id hash) compiles again on every batch
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.execution.debug.codegenStringSeq
+    val d = dir()
+    val first = cleanFixtures(d)
+    val d2 = Files.createDirectory(d.resolve("b2"))
+    val second = (Seq(write(d2, "orders_part1.csv", BatchFixtures.ordersHeader,
+      "7,20,complete,2024-07-09 08:00:00,,,,2",
+      "8,21,returned,2024-07-09 09:30:00,,,,1",
+      "9,20,complete,2024-07-10 10:00:00,,,,1")),
+      Seq(write(d2, "order_items_part1.csv", itemsHeader,
+        "201,7,20,7,complete,2024-07-09 08:00:00,,,,12.5",
+        "202,7,20,9,returned,2024-07-09 08:00:00,,,,40.0",
+        "203,8,21,8,complete,2024-07-09 09:30:00,,,,99.9",
+        "204,9,20,8,complete,2024-07-10 10:00:00,,,,5.0")),
+      write(d2, "products.csv", productsHeader,
+        "7,SKU7,10.0,toys,Car,BrandA,25.0,kids",
+        "8,SKU8,30.0,books,Atlas,BrandB,75.0,media",
+        "9,SKU9,20.0,games,Chess,BrandC,40.0,kids"))
+    def code(batch: (Seq[String], Seq[String], String), n: Int): Seq[String] = {
+      val plans = new java.util.concurrent.ConcurrentLinkedQueue[QueryExecution]
+      val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+        def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = {
+          plans.add(qe); ()
+        }
+        def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+      }
+      spark.listenerManager.register(listener)
+      try {
+        val (op, ip, p) = batch
+        val res = Pipeline.validateJob(spark, op, ip, Some(p),
+          s"$d/validated$n", s"$d/result$n.json")
+        assert(res.status === "success")
+        Pipeline.transformJob(spark, s"$d/validated$n", res.processingDate.get,
+          s"$d/store$n", now = s"t$n")
+        org.apache.spark.graft.ListenerDrain.drain(spark.sparkContext)
+      } finally spark.listenerManager.unregister(listener)
+      // gate, three validated writes, KPI, two store commits
+      assert(plans.size === 7)
+      plans.toArray(Array.empty[QueryExecution]).toSeq
+        .flatMap(qe => codegenStringSeq(qe.executedPlan).map(_._2)).sorted
+    }
+    val a = code(first, 1)
+    assert(a.nonEmpty)
+    assert(a === code(second, 2))
   }
 
   test("orders-only rerun merges counts but preserves revenue fields") {

@@ -13,6 +13,25 @@ class SourcesSpec extends SparkSpec {
 
   private lazy val tmp = Files.createTempDirectory("graft-io").toString
 
+  /** `f`'s result and the Spark jobs started while it ran. */
+  private def withJobs[T](f: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        jobs.incrementAndGet(); ()
+      }
+    }
+    org.apache.spark.graft.ListenerDrain.drain(sc)
+    sc.addSparkListener(listener)
+    try {
+      val r = f
+      org.apache.spark.graft.ListenerDrain.drain(sc)
+      (r, jobs.get)
+    } finally sc.removeSparkListener(listener)
+  }
+
   test("normalizeScheme rewrites s3:// only") {
     assert(Sources.normalizeScheme("s3://b/k.csv") === "s3a://b/k.csv")
     assert(Sources.normalizeScheme("s3a://b/k.csv") === "s3a://b/k.csv")
@@ -36,8 +55,6 @@ class SourcesSpec extends SparkSpec {
     val one = Sources.readAndUnion(spark, Seq(p)).get.count()
     val two = Sources.readAndUnion(spark, Seq(p, p)).get.count()
     assert(two === 2 * one)
-    // scale path: single multi-path scan sees the same rows
-    assert(Sources.readMultiPath(spark, Seq(p, p)).count() === two)
   }
 
   test("writePartitioned lays out dt partitions that prune") {
@@ -72,7 +89,6 @@ class SourcesSpec extends SparkSpec {
       "equal to inference") {
     val d = Files.createTempDirectory("graft-io-rt")
     val (op, ip, p) = BatchFixtures.clean(d)
-    val sc = spark.sparkContext
     for (compat <- Seq(false, true)) {
       val out = s"$d/validated_$compat"
       assert(graft.pipeline.Pipeline.validateJob(spark, op, ip, Some(p), out,
@@ -80,27 +96,61 @@ class SourcesSpec extends SparkSpec {
         .status === "success")
       for (t <- Seq("orders", "order_items", "products")) {
         val path = s"$out/$t"
-        val jobs = new java.util.concurrent.atomic.AtomicInteger()
-        val listener = new org.apache.spark.scheduler.SparkListener {
-          override def onJobStart(
-              j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-            jobs.incrementAndGet(); ()
-          }
-        }
-        org.apache.spark.graft.ListenerDrain.drain(sc)
-        sc.addSparkListener(listener)
-        val df = try {
-          val r = Sources.readTable(spark, path).get
-          org.apache.spark.graft.ListenerDrain.drain(sc)
-          r
-        } finally sc.removeSparkListener(listener)
-        assert(jobs.get === 0, s"$t (compat=$compat): opening ran a job")
+        val (df, jobs) = withJobs(Sources.readTable(spark, path).get)
+        assert(jobs === 0, s"$t (compat=$compat): opening ran a job")
         assert(df.schema === spark.read.parquet(path).schema,
           s"$t (compat=$compat)")
         assert(df.collect().map(_.toString).sorted ===
           spark.read.parquet(path).collect().map(_.toString).sorted)
       }
     }
+  }
+
+  test("table resolves a testdata table's schema without a Spark job, " +
+      "equal to inference, for both events.ts physical shapes") {
+    import org.apache.spark.sql.functions._
+    import spark.implicits._
+    val dir = Files.createTempDirectory("graft-io-table").toString
+    val us = Seq(1718000000123456L, 1718000003999999L)
+    // epoch-nanos int64 and parquet timestamp[us] isAdjustedToUTC=false,
+    // the two shapes events.ts has shipped in
+    us.map(_ * 1000L).toDF("ts").write.parquet(s"$dir/nanos.parquet")
+    us.toDF("us").select(timestamp_micros(col("us"))
+        .cast(TimestampNTZType).as("ts"))
+      .write.parquet(s"$dir/micros.parquet")
+    val tables = Seq((dir, "nanos", Some(LongType)),
+      (dir, "micros", Some(TimestampNTZType)),
+      (sf0001, "events", None), (sf0001, "lineitem", None))
+    for ((d, name, tsType) <- tables) {
+      val (df, jobs) = withJobs(Sources.table(spark, d, name))
+      assert(jobs === 0, s"$name: opening ran a job")
+      val inferred = spark.read.parquet(s"$d/$name.parquet")
+      assert(df.schema === inferred.schema, name)
+      tsType.foreach(t => assert(df.schema("ts").dataType === t, name))
+      assert(df.collect().map(_.toString).sorted ===
+        inferred.collect().map(_.toString).sorted, name)
+    }
+    intercept[org.apache.spark.sql.AnalysisException] {
+      Sources.table(spark, dir, "absent")
+    }
+  }
+
+  test("readTable takes the footer inference takes: the least file path, " +
+      "past empty and prefix-named partition dirs") {
+    import spark.implicits._
+    val dir = Files.createTempDirectory("graft-io-first").toString
+    // `k=1-x/...` sorts before `k=1/...` ('-' < '/') though `k=1` is the
+    // lesser name; the two footers differ, so the pick shows in the schema
+    Seq(1L).toDF("a").write.parquet(s"$dir/t/k=1")
+    Seq((2L, "b")).toDF("a", "b").write.parquet(s"$dir/t/k=1-x")
+    Files.createDirectories(java.nio.file.Paths.get(s"$dir/t/k=0"))
+    val (df, jobs) = withJobs(Sources.readTable(spark, s"$dir/t").get)
+    assert(jobs === 0)
+    val inferred = spark.read.parquet(s"$dir/t")
+    assert(inferred.columns.contains("b"))
+    assert(df.schema === inferred.schema)
+    assert(df.collect().map(_.toString).sorted ===
+      inferred.collect().map(_.toString).sorted)
   }
 
   test("readAndUnion plans declared-schema CSV parts as ONE multi-path scan") {

@@ -2,6 +2,8 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.types._
+import org.scalacheck.Gen
+import org.scalacheck.rng.Seed
 
 import graft.validate.Validation
 
@@ -70,6 +72,111 @@ class ValidationSpec extends SparkSpec {
     val clean = items.filter("order_id IS NOT NULL")
     assert(Validation.validate(orders, clean, None,
       Map("order_items" -> Seq("id"))).isEmpty)
+  }
+
+  // -- the gate ≡ the verdict derived from nullCheck and riViolations -------
+
+  private val gOrdersS = StructType(Seq(
+    StructField("order_id", LongType), StructField("user_id", LongType)))
+  private val gItemsS = StructType(Seq(StructField("id", LongType),
+    StructField("order_id", LongType), StructField("product_id", LongType)))
+  private val gProductsS = StructType(Seq(
+    StructField("id", LongType), StructField("cost", DoubleType)))
+  private val gRequired = Map("orders" -> Seq("order_id", "user_id"),
+    "order_items" -> Seq("id", "order_id", "product_id"),
+    "products" -> Seq("id", "cost"))
+
+  /** The gate's verdict re-derived from the per-part checks: null counts
+    * per table in declaration order, then order RI, then product RI. */
+  private def derived(orders: DataFrame, items: DataFrame,
+      products: Option[DataFrame], required: Map[String, Seq[String]])
+      : Option[(String, String)] = {
+    val tables = Seq("orders" -> orders, "order_items" -> items) ++
+      products.map("products" -> _)
+    val nullErrs = tables.flatMap { case (t, df) =>
+      val cols = required.getOrElse(t, Nil)
+      if (cols.isEmpty) Nil
+      else {
+        val r = Validation.nullCheck(df, cols).head()
+        cols.zipWithIndex.collect { case (c, i) if r.getLong(i) > 0 =>
+          s"$t.$c has ${r.getLong(i)} null values" }
+      }
+    }
+    def ri(key: String, parent: DataFrame, parentKey: String) =
+      Validation.riViolations(items, key, parent, parentKey).count()
+    lazy val orderViol = ri("order_id", orders, "order_id")
+    lazy val prodViol = products.fold(0L)(ri("product_id", _, "id"))
+    if (nullErrs.nonEmpty)
+      Some("NULL_VALIDATION_ERROR" -> nullErrs.mkString("; "))
+    else if (orderViol > 0) Some("REFERENTIAL_ERROR" ->
+      s"$orderViol order_id values in order_items missing from orders")
+    else if (prodViol > 0) Some("REFERENTIAL_ERROR" ->
+      s"$prodViol product_id values in order_items missing from products")
+    else None
+  }
+
+  private def gateVerdict(orders: DataFrame, items: DataFrame,
+      products: Option[DataFrame], required: Map[String, Seq[String]]) =
+    Validation.validate(orders, items, products, required)
+      .map(e => e.errorType -> e.message)
+
+  private val gKey: Gen[java.lang.Long] = Gen.frequency(
+    1 -> Gen.const(null: java.lang.Long),
+    4 -> Gen.choose(0L, 4L).map(java.lang.Long.valueOf))
+  private val gCase = for {
+    orders <- Gen.listOf(Gen.zip(gKey, gKey).map { case (o, u) => Row(o, u) })
+    items <- Gen.listOf(Gen.zip(gKey, gKey, gKey).map { case (i, o, p) =>
+      Row(i, o, p) })
+    products <- Gen.option(Gen.listOf(Gen.zip(gKey, Gen.oneOf[Any](
+      null, 1.0, Double.NaN)).map { case (i, c) => Row(i, c) }))
+    ro <- Gen.someOf(gRequired("orders"))
+    ri <- Gen.someOf(gRequired("order_items"))
+    rp <- Gen.someOf(gRequired("products"))
+  } yield (orders, items, products, Map("orders" -> ro.toSeq,
+    "order_items" -> ri.toSeq, "products" -> rp.toSeq))
+
+  test("gate ≡ nullCheck + riViolations over random tables with NULL and " +
+      "duplicate keys on both sides") {
+    (1 to 12).foreach { i =>
+      val (o, it, p, required) =
+        gCase.pureApply(Gen.Parameters.default.withSize(8), Seed(i.toLong))
+      val (orders, items) = (mk(gOrdersS, o: _*), mk(gItemsS, it: _*))
+      val products = p.map(mk(gProductsS, _: _*))
+      assert(gateVerdict(orders, items, products, required) ===
+        derived(orders, items, products, required), s"seed $i")
+    }
+  }
+
+  test("gate edge cases: NULL keys, order-RI precedence, absent products") {
+    val ri = Map("order_items" -> Seq("id"))
+    def check(orders: Seq[Row], items: Seq[Row], products: Option[Seq[Row]],
+        required: Map[String, Seq[String]], want: Option[(String, String)]) = {
+      val (o, i) = (mk(gOrdersS, orders: _*), mk(gItemsS, items: _*))
+      val p = products.map(mk(gProductsS, _: _*))
+      assert(gateVerdict(o, i, p, required) === want)
+      assert(derived(o, i, p, required) === want)
+    }
+    // a NULL parent key matches nothing, not even a NULL child key
+    check(Seq(Row(null, 1L)), Seq(Row(1L, 1L, 1L), Row(2L, null, 1L)),
+      None, ri, Some("REFERENTIAL_ERROR" ->
+        "1 order_id values in order_items missing from orders"))
+    // a NULL child key is the null gate's, and never an orphan
+    check(Seq(Row(1L, 1L)), Seq(Row(1L, null, 1L)), None,
+      Map("order_items" -> Seq("id", "order_id")),
+      Some("NULL_VALIDATION_ERROR" -> "order_items.order_id has 1 null values"))
+    check(Seq(Row(1L, 1L)), Seq(Row(1L, null, null)),
+      Some(Seq(Row(1L, 1.0))), ri, None)
+    // both foreign keys dangle (two distinct orphan orders over three
+    // rows): the order message wins
+    check(Seq(Row(1L, 1L)),
+      Seq(Row(1L, 2L, 9L), Row(2L, 2L, 9L), Row(3L, 3L, 1L)),
+      Some(Seq(Row(1L, 1.0))), ri, Some("REFERENTIAL_ERROR" ->
+        "2 order_id values in order_items missing from orders"))
+    check(Seq(Row(1L, 1L)), Seq(Row(1L, 1L, 9L), Row(2L, 1L, 9L)),
+      Some(Seq(Row(1L, 1.0), Row(1L, 1.0))), ri, Some("REFERENTIAL_ERROR" ->
+        "1 product_id values in order_items missing from products"))
+    // products absent: product keys are not checked
+    check(Seq(Row(1L, 1L)), Seq(Row(1L, 1L, 9L)), None, ri, None)
   }
 
   test("missingHeaders is required-minus-present") {
