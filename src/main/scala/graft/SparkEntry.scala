@@ -309,10 +309,7 @@ object SparkEntry {
     // to the SCD2 dimension bootstrapped from snapshot A — postimages +
     // inserts merge through m2's one definition, deletes CLOSE their
     // open version. Invariant (spec-pinned): the result's current slice
-    // IS snapshot B row-for-row, and A still resolves as of D0. The
-    // foreachBatch streaming twin (streaming/CdcApply, BatchStore
-    // latest-snapshot protocol) replays disjoint-key chunks to the
-    // identical dimension.
+    // IS snapshot B row-for-row, and A still resolves as of D0.
     "cdc1_apply_feed" -> ((s, d) => {
       val (oldS, newS) = cdfSnapshots(s, d)
       val feed = ChangeFeed.diff(oldS, newS, Seq("order_id"),
@@ -923,9 +920,7 @@ object SparkEntry {
         TextAnalysis.weightedKeep(Sources.table(s, d, "documents")))),
 
     // E65 (SH1): content-stable output sharding audit — per-shard doc and
-    // token totals under the 16-way writer hash (Sources.writeSharded
-    // does the actual partitioned write; CorpusOpsSpec checks layout,
-    // round-trip, and balance).
+    // token totals under the 16-way writer hash.
     "sh1_shard_audit" -> ((s, d) =>
       TextAnalysis.shardAudit(Sources.table(s, d, "documents"))),
 
@@ -1400,11 +1395,8 @@ object SparkEntry {
 
     // E153 (E6): daily TRENDING KEYS — tumbling-window top-k: per
     // 1-day window, the 3 hottest `props.k` items by event count (the
-    // "trending now" panel every event platform serves; the batch twin
-    // of the STREAMING windowed top-k, streaming/StreamTopK.scala —
-    // whose snapshot is spec-pinned bitwise-equal to this query on the
-    // same events, restart continuation included). Composes e2's epoch-us
-    // tumbling-window convention (integer day bucketing, no TZ
+    // "trending now" panel every event platform serves). Composes e2's
+    // epoch-us tumbling-window convention (integer day bucketing, no TZ
     // semantics in the answer) with f13's JSON extraction and the
     // rec1 rank discipline: exact integer counts, deterministic
     // (n desc, k) tie-break, WindowGroupLimit bounding the per-window

@@ -701,15 +701,8 @@ object Dedup {
     * re-join against the signature relation (which would recompute the
     * shingle pass or demand a materialized cache). The self-join's two
     * sides share one shuffle (ReusedExchange). */
-  def minhashLshPairs(docs: DataFrame): DataFrame =
-    minhashLshPairsFromSigs(lshSigArray(docs))
-
-  /** [[minhashLshPairs]] from an ALREADY-COMPUTED signature relation
-    * (`(doc_id, sig)` — [[minhashSigStore]]'s shape): the form a caller
-    * holding signatures uses to avoid re-shingling (E114's per-batch
-    * self-dedup reuses the one signature pass this way). */
-  def minhashLshPairsFromSigs(sigs: DataFrame): DataFrame = {
-    val banded = lshBanded(sigs)
+  def minhashLshPairs(docs: DataFrame): DataFrame = {
+    val banded = lshBanded(lshSigArray(docs))
     val est = lshEst
     banded.as("x")
       .join(banded.as("y"),
@@ -849,16 +842,8 @@ object Dedup {
     * doc (keeper = lowest-id store match, best estimate, match count —
     * the d12 shape). */
   def incrementalLshDedup(batch: DataFrame, storeSigs: DataFrame)
-      : DataFrame =
-    incrementalLshDedupFromSigs(lshSigArray(batch), storeSigs)
-
-  /** [[incrementalLshDedup]] from already-computed batch signatures —
-    * the E114 form: the streaming driver computes ONE signature pass per
-    * micro-batch and reuses it for self-dedup, the store check, and the
-    * store increment. */
-  def incrementalLshDedupFromSigs(batchSigs: DataFrame,
-      storeSigs: DataFrame): DataFrame = {
-    val bb = lshBanded(batchSigs)
+      : DataFrame = {
+    val bb = lshBanded(lshSigArray(batch))
     val sb = lshBanded(storeSigs)
     bb.as("x")
       .join(sb.as("y"),

@@ -212,24 +212,6 @@ object Sources {
     ()
   }
 
-  /** E65: content-stable sharded output write — the training-corpus
-    * writer: every row lands in the 16-way shard its id hashes to
-    * ([[graft.text.TextAnalysis.shardOf]], the t5/mix1/pk1 hash
-    * convention), written as a `shard=N` hive layout so each downstream
-    * trainer/reader opens exactly its own directory. Deterministic by
-    * construction: a retried/re-run write task re-derives identical shard
-    * assignments (vs `repartition(n)`'s round-robin, which reshuffles
-    * rows on every retry). The repartition ON the shard column before
-    * `partitionBy` means each task writes one shard file, not one file
-    * per (task × shard) — at 100 TB that is the difference between 16×
-    * tasks files and tasks files. */
-  def writeSharded(df: DataFrame, idCol: String, path: String): Unit = {
-    val keyed = df.withColumn("shard",
-      graft.text.TextAnalysis.shardOf(col(idCol)))
-    keyed.repartition(col("shard"))
-      .write.mode("overwrite").partitionBy("shard").parquet(path)
-  }
-
   /** Small-files compaction — the maintenance operator every incremental
     * lake store eventually needs: per-batch upserts (e.g.
     * `Pipeline.upsertStore`) accrete one file set per batch, and at 100 TB

@@ -109,8 +109,7 @@ object Scd2 {
     * left join against the delete-key set — which sizes with the
     * feed's churn, not the table (AQE broadcasts it when it fits).
     * Disjoint-key feed chunks commute: applying a key-partitioned feed
-    * chunk-by-chunk at one date equals the single apply (what makes
-    * the foreachBatch form exact — streaming/CdcApply). */
+    * chunk-by-chunk at one date equals the single apply. */
   def applyFeed(dim: DataFrame, feed: DataFrame, keys: Seq[String],
       tracked: Seq[String], batchDate: String): DataFrame = {
     val cols = keys ++ tracked

@@ -401,10 +401,9 @@ object Multimodal {
 
   /** [[frameNearDupPairs]] over an EXISTING frame-signature relation
     * (doc_id, frame_no, sig) — the form that makes the pair pipeline
-    * SIGNATURE-SOURCE-AGNOSTIC: the hex-fold defaults, the
-    * [[FrameCodec]] mapPartitions seam, and the streaming store all feed
-    * the identical banded join (MultimodalSpec pins the seam
-    * equivalence). */
+    * SIGNATURE-SOURCE-AGNOSTIC: the hex-fold defaults and the
+    * [[FrameCodec]] mapPartitions seam feed the identical banded join
+    * (MultimodalSpec pins the seam equivalence). */
   def frameNearDupPairsFromSigs(sigs: DataFrame,
       maxHamming: Int = Mm3MaxHamming,
       bits: Int = SigBitsWide): DataFrame =
@@ -474,9 +473,7 @@ object Multimodal {
       * arithmetic downstream must derive from THIS, never from an
       * independent caller-supplied width — a codec emitting 60-bit
       * signatures banded with 32-bit arithmetic silently produces
-      * over-wide keys and misses every half-match
-      * ([[graft.streaming.StreamFrameNearDup.processBatch]] asserts the
-      * coupling). */
+      * over-wide keys and misses every half-match. */
     def bits: Int
     /** Executor-side, once per partition: build the codec context and
       * return the per-frame signature function. Frames arrive as exactly
@@ -568,9 +565,8 @@ object Multimodal {
   }
 
   /** Band an existing frame-signature relation (doc_id, frame_no, sig)
-    * into the two-half pigeonhole — the piece the STREAMING consumer
-    * ([[graft.streaming.StreamFrameNearDup]]) shares with the batch
-    * query, so the band arithmetic can never fork between them. */
+    * into the two-half pigeonhole — the one band arithmetic behind
+    * [[bandedFrames]] and [[frameNearDupPairsFromSigs]]. */
   def bandSigs(sigs: DataFrame, bits: Int = SigBitsWide): DataFrame = {
     val bandMod = 1L << (bits / 2)
     sigs.select(col("doc_id"), col("frame_no"), col("sig"),

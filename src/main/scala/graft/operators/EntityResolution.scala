@@ -18,7 +18,7 @@ import org.apache.spark.sql.functions._
   * blocking key keeps groups bounded. At 100 TB you also (a) block on
   * several independent keys (name prefix, phonetic code, zip) and union
   * the candidate sets so a noisy block key doesn't cost recall, and
-  * (b) salt any pathological block (the SkewJoin convention) — both are
+  * (b) salt any pathological block with a random sub-key — both are
   * composition of this same shape, so the single-key form is the
   * operator. The comparator stays inside whole-stage codegen
   * (`levenshtein` is a codegen'd Catalyst expression, not a UDF).

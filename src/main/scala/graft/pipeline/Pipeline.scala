@@ -55,11 +55,14 @@ object Pipeline {
     * rejected batch writes nothing. They are all joined before the result
     * doc is emitted and before this returns; a failed write makes the
     * result `failed`/`UNKNOWN` once every other write has finished.
+    *
+    * `allStringsCompat` is E18's reference-parity mode: it reads the CSV
+    * parts schema-less, every column a string, as the reference does.
     */
   def validateJob(spark: SparkSession,
       ordersPaths: Seq[String], itemsPaths: Seq[String],
       productsPath: Option[String], outBase: String,
-      resultPath: String, anyFirstRowDate: Boolean = false,
+      resultPath: String,
       allStringsCompat: Boolean = false): ValidateResult = {
 
     // §1.2 compat: the reference reads headered, schema-less CSV — every
@@ -91,12 +94,10 @@ object Pipeline {
 
       (orders, items) match {
         case (Some(o), Some(i)) =>
-          // W1: the processing date. Default is the DETERMINISTIC
-          // min(created_at)[:10], computed inside the gate's one action;
-          // `anyFirstRowDate` preserves the reference's
-          // `first()["created_at"][:10]` behavior (validation.py:191) —
-          // whichever row the scan yields first, nondeterministic under
-          // parallel reads — as a compat flag.
+          // W1: the processing date is the DETERMINISTIC
+          // min(created_at)[:10], computed inside the gate's one action —
+          // not the reference's `first()["created_at"][:10]`
+          // (validation.py:191), whichever row the scan yields first.
           val (verdict, minDate) = Validation.gate(o, i, products,
             Schemas.requiredNonNull,
             Some(substring(min(col("created_at")), 1, 10)))
@@ -105,11 +106,7 @@ object Pipeline {
               emit(ValidateResult("failed", None, Some(err.errorType),
                 Some(err.message)))
             case None =>
-              val dt =
-                if (anyFirstRowDate)
-                  o.select(substring(col("created_at"), 1, 10))
-                    .head().getString(0)
-                else minDate.orNull
+              val dt = minDate.orNull
               Sources.writeValidated(o, i, products, outBase, dt)
               emit(ValidateResult("success", Some(dt), None, None))
           }
@@ -325,12 +322,12 @@ object Pipeline {
     * rerun of the batch is idempotent on it.
     */
   def transformJob(spark: SparkSession, validatedBase: String,
-      processingDate: String, storeBase: String, now: String,
-      pruneToDate: Boolean = true): (Long, Long) = {
+      processingDate: String, storeBase: String,
+      now: String): (Long, Long) = {
 
     def readValidated(name: String): Option[DataFrame] =
       Sources.readTable(spark, s"$validatedBase/$name")
-        .map(df => if (pruneToDate && df.columns.contains("dt"))
+        .map(df => if (df.columns.contains("dt"))
           df.where(col("dt") === processingDate) else df)
 
     val orders = readValidated("orders")

@@ -336,7 +336,7 @@ object Similarity {
   /** Per-vector-symmetric int8 quantization pass: `(vec_id, embedding,
     * codes)` — the raw vector rides along for callers that also derive
     * index structure from it (cell assignment in [[ivfSqTopK]]); the
-    * stored search index keeps only the codes. */
+    * index rows keep only the codes. */
   private def withCodes(emb: DataFrame): DataFrame =
     emb.select(col("vec_id"), col("embedding"),
       org.apache.spark.sql.graft.VectorExpressions
@@ -554,183 +554,23 @@ object Similarity {
     * coarse quantizer restricts the candidate SET (n4's cell equi-join)
     * while scalar quantization shrinks the BYTES per stored candidate 4×
     * (n6's code cosine). Cell assignment happens at index-build time on
-    * the raw vector (the one moment it exists); the stored index row is
-    * only (cell, codes) — at 100 TB the raw float corpus is never kept in
-    * the search tier at all. One narrow build pass computes codes AND
-    * cell together; the probe join and bounded-aggregator ranking are
-    * exactly n4's. AnnRecallSpec measures the composition's recall
-    * tracking n4's (SQ preserves cosine order near-perfectly, so the
-    * composition costs ~nothing in recall on top of the cell
-    * restriction). */
-  /** The IVF-SQ index AS DATA: one narrow pass per vector computes int8
-    * codes, the code norm, and the cell under `seedCorpus`'s quantizer —
-    * the persistable search-tier row (vec_id, cell, codes, n2). Kept
-    * separate from [[ivfSqSearch]] so the index is a maintainable STORE,
-    * not a query-time intermediate. */
-  def ivfSqIndex(vectors: DataFrame, seedCorpus: DataFrame): DataFrame =
-    ivfSqIndexWith(vectors, sortedCellsFor(seedCorpus))
-
-  private def ivfSqIndexWith(vectors: DataFrame,
-      sortedCells: Column => Column): DataFrame =
-    withCodes(vectors)
+    * the raw vector (the one moment it exists); the index row is only
+    * (vec_id, cell, codes, n2), so the probe join never carries the raw
+    * floats. One narrow build pass computes codes AND cell together; the
+    * probe join and bounded-aggregator ranking are exactly n4's.
+    * AnnRecallSpec measures the composition's recall tracking n4's (SQ
+    * preserves cosine order near-perfectly, so the composition costs
+    * ~nothing in recall on top of the cell restriction). */
+  def ivfSqTopK(emb: DataFrame, numQueries: Int, k: Int,
+      nprobe: Int = NumProbes): DataFrame = {
+    // ONE seed collect serves both the index build and the query probes
+    val sortedCells = sortedCellsFor(emb)
+    val index = withCodes(emb)
       .select(col("vec_id"), col("codes"), norm2(col("codes")).as("n2"),
         element_at(sortedCells(col("embedding")), 1).getField("cell_id")
           .as("cell"))
       .filter(col("n2") > 0.0)
-
-  /** E68: incremental index maintenance — the d8 analogy for vectors: a
-    * new batch enters the index at PER-BATCH cost (quantize + assign
-    * against the SAME quantizer seeds, then union) — no retrain, no
-    * rebuild, the existing index rows never rewrite. Because the seeded
-    * quantizer is a pure function of `seedCorpus` (data-independent of
-    * the batch), append ≡ full rebuild bit-for-bit — AnnIndexSpec proves
-    * index-row and search-result equivalence. At 100 TB this is the
-    * difference between re-scanning the corpus per crawl and paying for
-    * the crawl alone (the `Pipeline.upsertStore` philosophy applied to
-    * the vector tier).
-    *
-    * NOT idempotent per batch, by construction (a union, like every
-    * additive store here — [[graft.text.TextAnalysis.dfStoreUpdate]]
-    * documents the same contract): re-applying a batch duplicates its
-    * rows and a duplicated neighbor would occupy two of a query's k
-    * slots. Exactly-once application is the store swap layer's job —
-    * commit each append through an epoch manifest
-    * (`Pipeline.upsertStore`) or an equivalent put-if-absent publish,
-    * never by blind re-run. */
-  def ivfSqAppend(index: DataFrame, batch: DataFrame,
-      seedCorpus: DataFrame): DataFrame =
-    index.unionByName(ivfSqIndex(batch, seedCorpus))
-
-  /** Persist an [[ivfSqIndex]] CELL-PARTITIONED (`cell=N` hive layout,
-    * one file per cell via the repartition-before-partitionBy shape of
-    * [[graft.io.Sources.writeSharded]]): a probe's candidate read
-    * becomes `nprobe` DIRECTORY reads with Spark's partition pruning —
-    * at 100 TB the search tier never scans the index, it opens the 2-of-
-    * 1000s of cell dirs the query hashes to (AnnIndexSpec pins the
-    * PartitionFilters in the read plan, round-trip equivalence, and
-    * that appends land as new files in existing cell dirs). `append`
-    * mode carries [[ivfSqAppend]]'s non-idempotence contract: a retried
-    * write duplicates the batch — publish through the same exactly-once
-    * swap layer as every additive store. */
-  def writeIvfSqIndex(index: DataFrame, path: String): Unit =
-    index.repartition(col("cell"))
-      .write.mode("append").partitionBy("cell").parquet(path)
-
-  /** FORGET keys from a persisted [[writeIvfSqIndex]] index — the GDPR
-    * erase path the vector tier was missing: `Pipeline.forgetKeys`
-    * removes a subject from the document store and its history, but an
-    * embedding that stays searchable is not erased. Per-cell left-anti
-    * REWRITE of only the touched cell partitions (the E100
-    * partition-rewrite philosophy at the vector tier):
-    *
-    *  - ONE column-pruned scan of (vec_id, cell) finds the touched
-    *    cells — a request-grain collect (forgotten keys live in at most
-    *    |keys| cells), never the index data;
-    *  - each touched `cell=N` dir is rewritten dropping the keys and
-    *    swapped RENAME-ASIDE (rewrite → `_fk_tmp.cell=N`, live →
-    *    `_fk_old.cell=N`, tmp → live, old dropped): a durable copy of
-    *    the cell exists on disk at every instant (recoverable by the
-    *    preamble), but between the two renames the LIVE `cell=N` dir is
-    *    absent and the aside copy's leading `_` hides it from partition
-    *    discovery — this path is SINGLE-WRITER and assumes no concurrent
-    *    reader: a search running during a forget may transiently miss
-    *    the cell being swapped. Every rename's boolean result is
-    *    checked; a failed rename aborts BEFORE the old aside is dropped,
-    *    so the preamble can always roll the cell back;
-    *  - a cell ERASED EMPTY is retired (dir removed — an absent dir is
-    *    exactly what partition pruning expects of an empty cell);
-    *  - untouched cells are never opened, so they stay byte-identical
-    *    (spec-pinned);
-    *  - a recovery preamble finishes or rolls back any half-done swap a
-    *    crash left behind, so a RERUN is safe and idempotent (the keys
-    *    are already gone → touched set empty → no-op, spec-pinned).
-    *
-    * Append-after-forget ≡ rebuild-without-keys: the quantizer is a pure
-    * function of the seed corpus, so dropping rows commutes with
-    * [[ivfSqAppend]] (spec-pinned bit-for-bit).
-    *
-    * @return rows deleted from the index. */
-  def ivfSqForget(spark: org.apache.spark.sql.SparkSession, path: String,
-      keys: DataFrame): Long = {
-    import org.apache.hadoop.fs.{Path => HPath}
-    val fs = graft.io.Sources.fileSystem(spark, path)
-    val root = new HPath(path)
-    if (!fs.exists(root)) return 0L
-    // HDFS-contract rename reports failure as `false`, not an exception;
-    // an unchecked false between "live renamed aside" and "tmp renamed
-    // live" would let the delete(old) below destroy the last copy of the
-    // cell. Every rename in this method goes through this guard.
-    def mustRename(src: HPath, dst: HPath): Unit =
-      if (!fs.rename(src, dst))
-        throw new java.io.IOException(
-          s"ivfSqForget: rename $src -> $dst failed; aborting before any" +
-            " delete so the recovery preamble can roll the cell back")
-    // recovery preamble: a tmp dir is an incomplete rewrite (drop it —
-    // the live cell is intact); an old dir beside a live cell is a
-    // completed swap's leftover (drop it); an old dir WITHOUT its live
-    // cell is a crash between the two renames (roll the live copy back)
-    fs.listStatus(root).foreach { st =>
-      val nm = st.getPath.getName
-      if (nm.startsWith("_fk_tmp.")) { fs.delete(st.getPath, true); () }
-      else if (nm.startsWith("_fk_old.")) {
-        val live = new HPath(root, nm.stripPrefix("_fk_old."))
-        if (fs.exists(live)) { fs.delete(st.getPath, true); () }
-        else mustRename(st.getPath, live)
-      }
-    }
-    val k = keys.select(col("vec_id")).distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val touched = spark.read.parquet(path)
-        .select(col("vec_id"), col("cell").cast("long").as("cell"))
-        .join(k, Seq("vec_id"))
-        .select(col("cell")).distinct()
-        .collect().map(_.getLong(0)) // bounded: ≤ |request keys| cells
-      var deleted = 0L
-      touched.sorted.foreach { c =>
-        val dir = new HPath(root, s"cell=$c")
-        val cur = spark.read.parquet(dir.toString)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        try {
-          val kept = cur.join(k, Seq("vec_id"), "left_anti")
-          val total = cur.count()
-          val keptN = kept.count()
-          deleted += total - keptN
-          val old = new HPath(root, s"_fk_old.cell=$c")
-          if (keptN == 0L) {
-            // retired cell: no tmp write — rename aside, then drop
-            mustRename(dir, old); fs.delete(old, true); ()
-          } else {
-            val tmp = new HPath(root, s"_fk_tmp.cell=$c")
-            kept.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-            mustRename(dir, old)
-            val liveDir = new HPath(root, s"cell=$c")
-            mustRename(tmp, liveDir)
-            // drop the aside only once the live dir verifiably exists —
-            // until then the aside is the only recoverable copy
-            if (!fs.exists(liveDir))
-              throw new java.io.IOException(
-                s"ivfSqForget: $liveDir absent after swap; keeping $old")
-            fs.delete(old, true); ()
-          }
-        } finally { cur.unpersist(); () }
-      }
-      deleted
-    } finally { k.unpersist(); () }
-  }
-
-  /** Search an [[ivfSqIndex]]-shaped index: `queryVecs` (raw vectors)
-    * quantize and probe their `nprobe` nearest cells under `seedCorpus`'s
-    * quantizer; candidates score by code cosine and rank via the bounded
-    * aggregator. */
-  def ivfSqSearch(index: DataFrame, queryVecs: DataFrame,
-      seedCorpus: DataFrame, k: Int,
-      nprobe: Int = NumProbes): DataFrame =
-    ivfSqSearchWith(index, queryVecs, sortedCellsFor(seedCorpus), k, nprobe)
-
-  private def ivfSqSearchWith(index: DataFrame, queryVecs: DataFrame,
-      sortedCells: Column => Column, k: Int, nprobe: Int): DataFrame = {
-    val q = withCodes(queryVecs)
+    val q = withCodes(emb.filter(col("vec_id") < numQueries))
       .select(col("vec_id").as("query_id"), col("codes").as("qc"),
         norm2(col("codes")).as("qn"),
         sortedCells(col("embedding")).as("sc"))
@@ -746,14 +586,6 @@ object Similarity {
           (col("qn") * col("c.n2"))).as("cosine"))
     rankTopKAgg(joined, k)
       .withColumnRenamed("cosine", "approx_cosine")
-  }
-
-  def ivfSqTopK(emb: DataFrame, numQueries: Int, k: Int,
-      nprobe: Int = NumProbes): DataFrame = {
-    // ONE seed collect serves both the index build and the query probes
-    val sortedCells = sortedCellsFor(emb)
-    ivfSqSearchWith(ivfSqIndexWith(emb, sortedCells),
-      emb.filter(col("vec_id") < numQueries), sortedCells, k, nprobe)
   }
 
   def ivfSqTopKSql(numQueries: Int, k: Int,

@@ -50,14 +50,15 @@ object TopKAggregator {
       }
     }
 
-    def zero: Seq[Scored] = Vector.empty
-    def reduce(buf: Seq[Scored], s: Scored): Seq[Scored] = insert(buf, s)
-    def merge(a: Seq[Scored], b: Seq[Scored]): Seq[Scored] =
+    override def zero: Seq[Scored] = Vector.empty
+    override def reduce(buf: Seq[Scored], s: Scored): Seq[Scored] =
+      insert(buf, s)
+    override def merge(a: Seq[Scored], b: Seq[Scored]): Seq[Scored] =
       b.foldLeft(a)(insert)
-    def finish(buf: Seq[Scored]): Seq[Scored] = buf
-    def bufferEncoder: Encoder[Seq[Scored]] =
+    override def finish(buf: Seq[Scored]): Seq[Scored] = buf
+    override def bufferEncoder: Encoder[Seq[Scored]] =
       org.apache.spark.sql.catalyst.encoders.ExpressionEncoder()
-    def outputEncoder: Encoder[Seq[Scored]] =
+    override def outputEncoder: Encoder[Seq[Scored]] =
       org.apache.spark.sql.catalyst.encoders.ExpressionEncoder()
   }
 }

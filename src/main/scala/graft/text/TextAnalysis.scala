@@ -2489,9 +2489,7 @@ object TextAnalysis {
     * retry-stable, so a re-executed write task produces the identical
     * shard file). The audit reports per-shard doc and token totals — what
     * a sharded-output job emits to prove its shards are balanced before
-    * 16 downstream trainers each read one. The actual write is
-    * [[graft.io.Sources.writeSharded]] (partitionBy on this key);
-    * CorpusOpsSpec verifies layout, round-trip, and balance. */
+    * 16 downstream trainers each read one. */
   def shardAudit(docs: DataFrame): DataFrame =
     docs.select(shardOf(col("doc_id")).as("shard"), col("doc_id"),
         size(toksCol).cast("long").as("n_tokens"))
@@ -2501,9 +2499,9 @@ object TextAnalysis {
         max(col("doc_id")).as("max_doc_id"))
 
   /** The 16-way content-stable shard key — ONE definition shared by
-    * [[shardAudit]], [[packSequences]] (pk1's shard), and
-    * [[graft.io.Sources.writeSharded]], so the shared-key invariant
-    * (pk1 sequences and sh1 shards agree for the same doc) can't drift. */
+    * [[shardAudit]] and [[packSequences]] (pk1's shard), so the shared-key
+    * invariant (pk1 sequences and sh1 shards agree for the same doc) can't
+    * drift. */
   def shardOf(id: Column): Column =
     conv(substring(docIdHash(id), 1, 1), 16, 10).cast("long")
 

@@ -31,9 +31,6 @@ object Validation {
   final case class ReferentialError(message: String) extends ValidationError {
     val errorType = "REFERENTIAL_ERROR"
   }
-  final case class UnknownError(message: String) extends ValidationError {
-    val errorType = "UNKNOWN"
-  }
 
   /** The reference's null predicate is `isnull(c) | isnan(c)`
     * (`scripts/validation.py:89`). `isnan` only types on float/double (on the

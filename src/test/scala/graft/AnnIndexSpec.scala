@@ -1,188 +1,29 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.{ProjectExec, WholeStageCodegenExec}
+import org.apache.spark.sql.execution.debug.codegenStringSeq
 import org.apache.spark.sql.functions.col
 
 import graft.io.Sources
 import graft.sim.Similarity
 
-/** E68: incremental IVF-SQ index maintenance — appending a batch against
-  * the same quantizer seeds must equal a full rebuild BIT-FOR-BIT, in
-  * both index rows and search results (the property that makes per-batch
-  * index cost legitimate: nothing about the existing rows changes). */
+/** The native product-quantization kernels ([[org.apache.spark.sql.graft
+  * .PqEncode]] and the query-side distance table) against their composed
+  * Catalyst formulations: identical codes and tables, bit for bit. */
 class AnnIndexSpec extends SparkSpec {
 
-  private def rows(df: DataFrame): Set[(Long, Long, Seq[Float], Long)] =
-    df.collect().map { r =>
-      (r.getAs[Long]("vec_id"), r.getAs[Long]("cell"),
-        r.getSeq[Float](r.fieldIndex("codes")),
-        java.lang.Double.doubleToLongBits(r.getAs[Double]("n2")))
-    }.toSet
-
-  test("append == rebuild, for index rows and search results") {
-    val emb = Sources.table(spark, sf0001, "embeddings")
-    val base = emb.filter(col("vec_id") < 400)
-    val batch = emb.filter(col("vec_id") >= 400)
-    assert(batch.count() > 0, "fixture: the batch must be non-empty")
-    // seeds always come from the BASE corpus — the batch must not move
-    // the quantizer (that is what makes the append incremental)
-    val rebuilt = Similarity.ivfSqIndex(emb, base)
-    val appended = Similarity.ivfSqAppend(
-      Similarity.ivfSqIndex(base, base), batch, base)
-    assert(rows(appended) === rows(rebuilt))
-    // search over the appended index returns exactly the rebuild's
-    // results, and the appended batch is actually searchable
-    val q = emb.filter(col("vec_id") < 10)
-    def res(ix: DataFrame) =
-      Similarity.ivfSqSearch(ix, q, base, k = 5).collect()
-        .map(r => (r.getAs[Long]("query_id"), r.getAs[Long]("rank"),
-          r.getAs[Long]("neighbor_id"))).toSet
-    val fromAppended = res(appended)
-    assert(fromAppended === res(rebuilt))
-    assert(fromAppended.exists(_._3 >= 400),
-      "some neighbor should come from the appended batch")
-  }
-
-  test("cell-partitioned index on disk: probes prune to their directories") {
-    val emb = Sources.table(spark, sf0001, "embeddings")
-    val base = emb.filter(col("vec_id") < 400)
-    val batch = emb.filter(col("vec_id") >= 400)
-    val dir = java.nio.file.Files.createTempDirectory("graft-ivfsq")
-      .toString
-    val path = s"$dir/index"
-    // incremental persistence: base write, then the batch APPENDS as new
-    // files inside existing cell dirs — base files never rewrite
-    Similarity.writeIvfSqIndex(Similarity.ivfSqIndex(base, base), path)
-    val baseFiles = new java.io.File(path).listFiles()
-      .filter(_.getName.startsWith("cell=")).map(d =>
-        d.getName -> d.listFiles().map(_.getName).toSet).toMap
-    Similarity.writeIvfSqIndex(Similarity.ivfSqIndex(batch, base), path)
-    val afterFiles = new java.io.File(path).listFiles()
-      .filter(_.getName.startsWith("cell=")).map(d =>
-        d.getName -> d.listFiles().map(_.getName).toSet).toMap
-    baseFiles.foreach { case (cell, files) =>
-      assert(files.subsetOf(afterFiles(cell)),
-        s"$cell: base files must survive the append untouched")
+  /** `df`'s projection runs inside whole-stage codegen, and Janino
+    * compiles every fused class (a rejected class reports -1 and would
+    * fall back to the interpreted path). */
+  private def assertWholeStage(df: DataFrame): Unit = {
+    val plan = df.queryExecution.executedPlan
+    assert(plan.collectFirst { case w: WholeStageCodegenExec =>
+      w.child.collectFirst { case p: ProjectExec => p } }.flatten.isDefined,
+      s"the projection is not fused:\n$plan")
+    codegenStringSeq(plan).foreach { case (tree, _, stats) =>
+      assert(stats.maxMethodCodeSize >= 0, s"Janino rejected:\n$tree")
     }
-    // the disk round-trip equals the in-memory rebuild
-    val back = spark.read.parquet(path)
-      .select("vec_id", "cell", "codes", "n2")
-    assert(rows(back.withColumn("cell", col("cell").cast("long")))
-      === rows(Similarity.ivfSqIndex(emb, base)
-        .withColumn("cell", col("cell").cast("long"))))
-    // a probe's read PRUNES: the scan plan carries a cell partition
-    // filter, so only the probed directories are opened
-    val probed = back.filter(col("cell").isin(3, 7))
-    val plan = probed.queryExecution.executedPlan.toString
-    // a partitioned scan ALWAYS prints a PartitionFilters entry (possibly
-    // empty) and 'cell' appears in any schema dump — assert the filter
-    // list itself is non-empty and names the cell column
-    assert("PartitionFilters: \\[[^\\]]*cell".r.findFirstIn(plan).isDefined,
-      plan.take(1500))
-    // search over the disk index matches search over the live one
-    val q = emb.filter(col("vec_id") < 10)
-    def res2(ix: org.apache.spark.sql.DataFrame) =
-      Similarity.ivfSqSearch(ix, q, base, k = 5).collect()
-        .map(r => (r.getAs[Long]("query_id"), r.getAs[Long]("rank"),
-          r.getAs[Long]("neighbor_id"))).toSet
-    assert(res2(back) === res2(Similarity.ivfSqIndex(emb, base)))
-  }
-
-  /** Byte-level fingerprint of every `cell=N` dir under `path`:
-    * dir → file → (length, content md5). */
-  private def cellBytes(path: String): Map[String, Map[String, (Long, String)]] =
-    new java.io.File(path).listFiles()
-      .filter(_.getName.startsWith("cell=")).map { d =>
-        d.getName -> d.listFiles().map { f =>
-          val bytes = java.nio.file.Files.readAllBytes(f.toPath)
-          val md = java.security.MessageDigest.getInstance("MD5")
-          f.getName -> ((f.length(), md.digest(bytes).map("%02x".format(_))
-            .mkString))
-        }.toMap
-      }.toMap
-
-  test("forget: touched cells rewrite, untouched stay byte-identical, rerun no-ops") {
-    val emb = Sources.table(spark, sf0001, "embeddings")
-    val dir = java.nio.file.Files.createTempDirectory("graft-ivfsq-fk")
-      .toString
-    val path = s"$dir/index"
-    val index = Similarity.ivfSqIndex(emb, emb)
-    Similarity.writeIvfSqIndex(index, path)
-    // victims: EVERY vector of the smallest cell (must retire the dir)
-    // plus two from the largest (must rewrite, not retire)
-    val byCell = index.groupBy(col("cell").cast("long").as("cell"))
-      .agg(org.apache.spark.sql.functions.collect_list(col("vec_id"))
-        .as("ids"))
-      .collect().map(r => r.getAs[Long]("cell") ->
-        r.getSeq[Long](r.fieldIndex("ids"))).toMap
-    val emptyCell = byCell.minBy { case (c, ids) => (ids.size, c) }._1
-    val trimCell = byCell.maxBy { case (c, ids) => (ids.size, -c) }._1
-    val victims = byCell(emptyCell) ++ byCell(trimCell).sorted.take(2)
-    val keysDf = spark.createDataFrame(
-      victims.map(Tuple1(_))).toDF("vec_id")
-    val before = cellBytes(path)
-    val deleted = Similarity.ivfSqForget(spark, path, keysDf)
-    assert(deleted === victims.size)
-    val after = cellBytes(path)
-    assert(!after.contains(s"cell=$emptyCell"),
-      "a cell erased empty must retire its directory")
-    assert(after.contains(s"cell=$trimCell"))
-    before.foreach { case (cell, files) =>
-      if (cell != s"cell=$emptyCell" && cell != s"cell=$trimCell")
-        assert(after(cell) === files,
-          s"$cell untouched by the forget must stay byte-identical")
-    }
-    // the disk index now equals a rebuild WITHOUT the keys, and no
-    // forgotten id is searchable
-    val back = spark.read.parquet(path)
-      .select("vec_id", "cell", "codes", "n2")
-      .withColumn("cell", col("cell").cast("long"))
-    val expect = Similarity.ivfSqIndex(
-      emb.filter(!col("vec_id").isin(victims: _*)), emb)
-    assert(rows(back) === rows(expect))
-    val hits = Similarity.ivfSqSearch(back,
-        emb.filter(col("vec_id") < 10), emb, k = 5)
-      .collect().map(_.getAs[Long]("neighbor_id")).toSet
-    assert(hits.intersect(victims.toSet).isEmpty,
-      "forgotten vec_ids must never appear in search results")
-    // rerun: idempotent — zero deletions, every surviving cell
-    // byte-identical to the post-forget state
-    assert(Similarity.ivfSqForget(spark, path, keysDf) === 0L)
-    assert(cellBytes(path) === after)
-  }
-
-  test("forget: append-after-forget == rebuild-without-keys; crashed swap recovers") {
-    val emb = Sources.table(spark, sf0001, "embeddings")
-    val base = emb.filter(col("vec_id") < 400)
-    val batch = emb.filter(col("vec_id") >= 400)
-    val dir = java.nio.file.Files.createTempDirectory("graft-ivfsq-fk2")
-      .toString
-    val path = s"$dir/index"
-    Similarity.writeIvfSqIndex(Similarity.ivfSqIndex(base, base), path)
-    val victims = Seq(3L, 57L, 201L)
-    val keysDf = spark.createDataFrame(victims.map(Tuple1(_))).toDF("vec_id")
-    assert(Similarity.ivfSqForget(spark, path, keysDf) === victims.size)
-    // simulate a crash between the two swap renames: live dir moved
-    // aside, tmp never promoted — the next call's preamble must roll
-    // the live copy back before doing anything else
-    val cells = new java.io.File(path).listFiles()
-      .filter(_.getName.startsWith("cell=")).map(_.getName).sorted
-    val crashed = new java.io.File(path, cells.head)
-    val aside = new java.io.File(path, s"_fk_old.${cells.head}")
-    assert(crashed.renameTo(aside))
-    assert(Similarity.ivfSqForget(spark, path, keysDf) === 0L)
-    assert(new java.io.File(path, cells.head).isDirectory &&
-      !aside.exists(), "the recovery preamble must restore the live cell")
-    // append AFTER the forget: the same quantizer seeds, so the disk
-    // state must equal a rebuild over (base minus keys) + batch
-    Similarity.writeIvfSqIndex(Similarity.ivfSqIndex(batch, base), path)
-    val back = spark.read.parquet(path)
-      .select("vec_id", "cell", "codes", "n2")
-      .withColumn("cell", col("cell").cast("long"))
-    val expect = Similarity.ivfSqIndex(
-      base.filter(!col("vec_id").isin(victims: _*)).unionByName(batch),
-      base)
-    assert(rows(back) === rows(expect))
   }
 
   test("native PqEncode == composed argmin, seeded and trained codebooks") {
@@ -200,6 +41,9 @@ class AnnIndexSpec extends SparkSpec {
       val diverged = both
         .filter(col("fast") =!= col("composed")).count()
       assert(diverged === 0)
+      // the native kernels fuse into one whole-stage class Janino accepts
+      assertWholeStage(emb.select(Similarity.pqCodes(cb, col("embedding")),
+        Similarity.pqDtab(cb, col("embedding"))))
       // and the interpreted eval path (nullSafeEval, no codegen) agrees
       // with the codegen'd result on a sample
       import org.apache.spark.sql.catalyst.expressions.Literal
@@ -216,16 +60,21 @@ class AnnIndexSpec extends SparkSpec {
         assert(viaEval === r.getSeq[Int](1))
       }
       // query-side dtab: native node == composed unrolled-literal form,
-      // bit-for-bit (doubleToLongBits) across every (j, c) table entry
-      val dtabs = emb.filter(col("vec_id") < 10).select(col("vec_id"),
-        Similarity.pqDtab(cb, col("embedding")).as("fast"),
-        Similarity.pqDtabComposed(cb, col("embedding")).as("composed"))
-        .collect()
-      dtabs.foreach { r =>
-        def bits(i: Int): Seq[Seq[Long]] =
-          r.getSeq[scala.collection.Seq[Double]](i)
-            .map(_.map(java.lang.Double.doubleToLongBits).toSeq).toSeq
-        assert(bits(1) === bits(2), s"vec ${r.getLong(0)}")
+      // bit-for-bit (doubleToLongBits) across every (j, c) table entry.
+      // One subspace per projection: the composed form unrolls Ksub
+      // entries per subspace, and all PqM of them in one projection (512
+      // at Ksub = 64) outgrow Janino's 64 KB method limit
+      (0 until Similarity.PqM).foreach { j =>
+        val dtabs = emb.filter(col("vec_id") < 10).select(col("vec_id"),
+          Similarity.pqDtab(cb, col("embedding")).getItem(j).as("fast"),
+          Similarity.pqDtabComposed(cb, col("embedding")).getItem(j)
+            .as("composed"))
+        assertWholeStage(dtabs)
+        dtabs.collect().foreach { r =>
+          def bits(i: Int): Seq[Long] = r.getSeq[Double](i)
+            .map(java.lang.Double.doubleToLongBits).toSeq
+          assert(bits(1) === bits(2), s"vec ${r.getLong(0)} subspace $j")
+        }
       }
     }
   }

@@ -203,73 +203,4 @@ class ChangeFeedSpec extends SparkSpec {
       ("2024-06-01", 5L, "update_postimage"),
       ("2024-06-03", 3L, "insert")))
   }
-
-  // ---- the streaming cdc1 twin (CdcApply) ---------------------------------
-
-  import org.apache.spark.sql.functions._
-
-  private val ordKeys = Seq("order_id")
-  private val ordTracked = Seq("status", "total_price")
-
-  private def ordSnaps(dir: String) = {
-    val ords = graft.io.RefShape.orders(spark, dir)
-      .select(col("order_id"), col("status"), col("total_price"))
-    val a = ords.filter(pmod(col("order_id"), lit(5)) =!= 4)
-    val b = ords.filter(pmod(col("order_id"), lit(7)) =!= 2)
-      .withColumn("total_price",
-        when(pmod(col("order_id"), lit(3)) === 0, col("total_price") + 1.0)
-          .otherwise(col("total_price")))
-    // C moves some keys BETWEEN groups (status rewrite) on top of more
-    // churn — the second refresh must exercise the preimage subtraction
-    val c = ords.filter(pmod(col("order_id"), lit(4)) =!= 1)
-      .withColumn("status",
-        when(pmod(col("order_id"), lit(9)) === 0, lit("X"))
-          .otherwise(col("status")))
-      .withColumn("total_price",
-        when(pmod(col("order_id"), lit(6)) === 0, col("total_price") * 2.0)
-          .otherwise(col("total_price")))
-    (a, b, c)
-  }
-
-  test("cdc capstone: the feed drives CdcApply across a crash/restart") {
-    // one CDF stream drives CdcApply (feed → SCD2 dimension) as a
-    // foreachBatch consumer over its own BatchStore dir and checkpoint;
-    // the stream is killed between the two refreshes and restarted on
-    // the same checkpoint. End state: the current slice ≡ the final
-    // snapshot.
-    import graft.streaming.CdcApply
-    import graft.merge.Scd2
-    import java.nio.file.Files
-    val (a, b, c) = ordSnaps("/root/testdata/sf0.001")
-    val feedAB = ChangeFeed.diff(a, b, ordKeys, ordTracked)
-      .localCheckpoint(true)
-    val feedBC = ChangeFeed.diff(b, c, ordKeys, ordTracked)
-      .localCheckpoint(true)
-    val in = Files.createTempDirectory("graft-cap-in").toString
-    val dimDir = Files.createTempDirectory("graft-cap-dim").toString
-    val ckDim = Files.createTempDirectory("graft-cap-ckd").toString
-    val dim0 = Scd2.init(a, Scd2.D0)
-    val schema = feedAB.schema
-    def start() = CdcApply.start(
-      spark.readStream.schema(schema).parquet(s"$in/*"),
-      dimDir, dim0, ordKeys, ordTracked,
-      id => f"2024-07-${id + 1}%02d", ckDim)
-    feedAB.coalesce(1).write.parquet(s"$in/f1")
-    val q1 = start()
-    try q1.processAllAvailable() finally q1.stop()
-    // "crash" between refreshes; the next snapshot-consistent diff
-    // arrives; the SAME checkpoint must continue batch numbering so the
-    // phase-1 snapshot is prior state
-    feedBC.coalesce(1).write.parquet(s"$in/f2")
-    val q2 = start()
-    try q2.processAllAvailable() finally q2.stop()
-    // the dimension's CURRENT slice is snapshot C, column for column
-    val cur = CdcApply.readLatest(spark, dimDir).get
-      .filter(col("is_current"))
-      .select(col("order_id"), col("status"), col("total_price"))
-    def keyRows(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(_.toString).sorted.toSeq
-    assert(keyRows(cur) === keyRows(c),
-      "the dimension's current slice must equal the final snapshot")
-  }
 }

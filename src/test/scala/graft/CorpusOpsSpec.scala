@@ -7,8 +7,7 @@ import graft.text.TextAnalysis
 
 /** Behavior specs for the round-7 corpus operators (the driver oracle
   * verifies their values; these pin the PROPERTIES each op exists for):
-  * c2 flags planted eval twins, mix2 rebalances toward small sources,
-  * sh1/writeSharded produce a balanced deterministic hive layout, t10
+  * c2 flags planted eval twins, mix2 rebalances toward small sources, t10
   * ranks deterministically under ties. */
 class CorpusOpsSpec extends SparkSpec {
 
@@ -102,36 +101,6 @@ class CorpusOpsSpec extends SparkSpec {
     val uniform = TextAnalysis.temperatureMixAudit(docs).collect()
     assert(uniform.forall(r => math.abs(r.getAs[Double]("boost") - 1.0)
       < 1e-12), "uniform corpus must yield unit boosts")
-  }
-
-  test("sh1 + writeSharded: hive layout, round-trip, audit-consistent") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-shard")
-      .toString
-    val out = s"$dir/corpus"
-    Sources.writeSharded(docs, "doc_id", out)
-    val dirs = new java.io.File(out).listFiles()
-      .filter(f => f.isDirectory && f.getName.startsWith("shard="))
-    assert(dirs.length === 16, s"expected 16 shard dirs, got ${dirs.length}")
-    // each shard dir holds exactly one data file (repartition-on-shard)
-    dirs.foreach { d =>
-      val files = d.listFiles().filter(_.getName.endsWith(".parquet"))
-      assert(files.length === 1, s"${d.getName}: ${files.length} files")
-    }
-    val back = spark.read.parquet(out)
-    assert(back.count() === docs.count(), "round-trip row count")
-    // the on-disk partition counts equal the sh1 audit exactly
-    val audit = TextAnalysis.shardAudit(docs)
-      .select("shard", "n_docs").collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val disk = back.groupBy("shard").count().collect()
-      .map(r => r.getAs[Number]("shard").longValue ->
-        r.getAs[Long]("count")).toMap
-    assert(disk === audit, "audit vs on-disk shard counts")
-    // deterministic: a re-run (retry) produces the identical assignment
-    val again = TextAnalysis.shardAudit(docs)
-      .select("shard", "n_docs").collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(again === audit)
   }
 
   test("df store: folding batches equals the one-shot corpus aggregate") {

@@ -224,10 +224,17 @@ class PipelineSpec extends SparkSpec {
     }
     val before = (partFiles("category_kpi"), partFiles("order_kpi"))
 
-    // a second batch for ANOTHER date: must not touch day-1 partitions
-    // (pruneToDate=false so the validated day-1 data feeds a day-2 stamp)
+    // a second batch for ANOTHER date, validated into the same base: its
+    // merge must not touch day-1 partitions
+    val o2 = write(d, "orders_day2.csv", BatchFixtures.ordersHeader,
+      "4,12,complete,2024-06-02 08:00:00,,,,1")
+    val i2 = write(d, "order_items_day2.csv", itemsHeader,
+      "105,4,12,7,complete,2024-06-02 08:00:00,,,,25.0")
+    val day2 = Pipeline.validateJob(spark, Seq(o2), Seq(i2), Some(p),
+      s"$d/validated", s"$d/result2.json")
+    assert(day2.processingDate === Some("2024-06-02"))
     Pipeline.transformJob(spark, s"$d/validated", "2024-06-02",
-      s"$d/store", now = "t2", pruneToDate = false)
+      s"$d/store", now = "t2")
 
     val after = (partFiles("category_kpi"), partFiles("order_kpi"))
     assert(after._1.keySet === before._1.keySet)
@@ -243,22 +250,6 @@ class PipelineSpec extends SparkSpec {
     // ...and the day-2 partition exists with merged data
     assert(Files.isDirectory(d.resolve("store/order_kpi/order_date=2024-06-02")))
     assert(spark.read.parquet(s"$d/store/order_kpi").count() === 2L)
-  }
-
-  test("W1 compat: anyFirstRowDate yields a data date; default stays min") {
-    val d = dir()
-    val (op, ip, p) = cleanFixtures(d)
-    val compat = Pipeline.validateJob(spark, op, ip, Some(p),
-      s"$d/validated_c", s"$d/result_c.json", anyFirstRowDate = true)
-    assert(compat.status === "success")
-    // the reference's first()[:10] is whatever row the scan yields first —
-    // any date present in the data is legal; the flag preserves that
-    assert(Set("2024-06-01", "2024-06-02")
-      .contains(compat.processingDate.get))
-    val strict = Pipeline.validateJob(spark, op, ip, Some(p),
-      s"$d/validated_s", s"$d/result_s.json")
-    assert(strict.processingDate === Some("2024-06-01"),
-      "deterministic min-date mode must remain the default")
   }
 
   test("compat mode: all-strings CSV end-to-end yields the same taxonomy and dates") {

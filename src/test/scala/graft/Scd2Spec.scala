@@ -148,113 +148,4 @@ class Scd2Spec extends SparkSpec {
     assert(r1.getAs[String]("valid_to") === "2024-06-01")
     assert(!r1.getAs[Boolean]("is_current"))
   }
-
-  test("cdc1 streaming: disjoint-key feed chunks replay to the identical dimension") {
-    import org.apache.spark.sql.functions._
-    import graft.streaming.CdcApply
-    val dir = "/root/testdata/sf0.001"
-    val batchApplied = SparkEntry.queries("cdc1_apply_feed")(spark, dir)
-      .collect().map(_.toString).sorted.toSeq
-    // the same feed split into two disjoint-KEY chunks (the CDC-source
-    // contract: a key's change record arrives whole), driven through
-    // the foreachBatch body against the BatchStore snapshot protocol
-    val ords = graft.io.RefShape.orders(spark, dir)
-      .select(col("order_id"), col("status"), col("total_price"))
-    val snapA = ords.filter(pmod(col("order_id"), lit(5)) =!= 4)
-    val snapB = ords.filter(pmod(col("order_id"), lit(7)) =!= 2)
-      .withColumn("total_price",
-        when(pmod(col("order_id"), lit(3)) === 0, col("total_price") + 1.0)
-          .otherwise(col("total_price")))
-    val feed = graft.pipeline.ChangeFeed.diff(snapA, snapB,
-      Seq("order_id"), Seq("status", "total_price")).localCheckpoint(true)
-    val dim0 = Scd2.init(snapA, Scd2.D0)
-    val dimDir = java.nio.file.Files
-      .createTempDirectory("graft-cdc-dim").toString
-    val keys = Seq("order_id"); val tracked = Seq("status", "total_price")
-    // both chunks stamp D1 — chunking must not change the result
-    def chunk(par: Int) = feed.filter(pmod(col("order_id"), lit(2)) === par)
-    CdcApply.processBatch(chunk(0), 0L, dimDir, dim0, keys, tracked,
-      _ => Scd2.D1)
-    CdcApply.processBatch(chunk(1), 1L, dimDir, dim0, keys, tracked,
-      _ => Scd2.D1)
-    val streamed = CdcApply.readLatest(spark, dimDir).get
-      .collect().map(_.toString).sorted.toSeq
-    assert(streamed === batchApplied,
-      "two-chunk foreachBatch apply must equal the single batch apply")
-    // replay: re-running batch 1 overwrites its own output, reads only
-    // batch 0 as prior state — the final dimension is unchanged
-    CdcApply.processBatch(chunk(1), 1L, dimDir, dim0, keys, tracked,
-      _ => Scd2.D1)
-    val replayed = CdcApply.readLatest(spark, dimDir).get
-      .collect().map(_.toString).sorted.toSeq
-    assert(replayed === batchApplied, "replayed batch id must be a no-op")
-  }
-
-  test("cdc1 streaming: an unmarked (crashed-partial) snapshot is invisible to readLatest") {
-    import graft.streaming.{BatchStore, CdcApply}
-    import java.nio.file.Files
-    val dimDir = Files.createTempDirectory("graft-cdc-crash").toString
-    val committed = snap(1L -> "v0")
-    BatchStore.writeBatch(Scd2.init(committed, "2024-01-01"), dimDir, 0L)
-    // simulate a crash mid-write of snapshot 1: parquet lands, marker not
-    Scd2.init(snap(1L -> "v1"), "2024-06-01")
-      .write.parquet(s"$dimDir/batch=1")
-    // plus junk dirs the listing must skip, not throw on
-    Files.createDirectory(java.nio.file.Paths.get(dimDir, "batch="))
-    Files.createDirectory(java.nio.file.Paths.get(dimDir, "batch=tmp"))
-    val latest = CdcApply.readLatest(spark, dimDir).get
-    assert(latest.collect().map(_.getString(1)).toSet === Set("v0"),
-      "only the marker-committed snapshot may serve as state")
-    // and the crashed id replays cleanly over its partial
-    BatchStore.writeBatch(Scd2.init(snap(1L -> "v1"), "2024-06-01"),
-      dimDir, 1L)
-    assert(CdcApply.readLatest(spark, dimDir).get
-      .collect().map(_.getString(1)).toSet === Set("v1"))
-  }
-
-  test("cdc1 streaming: a checkpointed restart continues batch ids over the snapshot store") {
-    import org.apache.spark.sql.functions._
-    import graft.streaming.CdcApply
-    import java.nio.file.Files
-    val dir = "/root/testdata/sf0.001"
-    val batchApplied = SparkEntry.queries("cdc1_apply_feed")(spark, dir)
-      .collect().map(_.toString).sorted.toSeq
-    val ords = graft.io.RefShape.orders(spark, dir)
-      .select(col("order_id"), col("status"), col("total_price"))
-    val snapA = ords.filter(pmod(col("order_id"), lit(5)) =!= 4)
-    val snapB = ords.filter(pmod(col("order_id"), lit(7)) =!= 2)
-      .withColumn("total_price",
-        when(pmod(col("order_id"), lit(3)) === 0, col("total_price") + 1.0)
-          .otherwise(col("total_price")))
-    val feed = graft.pipeline.ChangeFeed.diff(snapA, snapB,
-      Seq("order_id"), Seq("status", "total_price")).localCheckpoint(true)
-    val in = Files.createTempDirectory("graft-cdc-in").toString
-    val dimDir = Files.createTempDirectory("graft-cdc-dim2").toString
-    val ckpt = Files.createTempDirectory("graft-cdc-ckpt").toString
-    val dim0 = Scd2.init(snapA, Scd2.D0)
-    val keys = Seq("order_id"); val tracked = Seq("status", "total_price")
-    val schema = feed.schema
-    // phase 1: even-keyed feed rows only
-    feed.filter(pmod(col("order_id"), lit(2)) === 0)
-      .coalesce(1).write.parquet(s"$in/f1")
-    def start() = CdcApply.start(
-      spark.readStream.schema(schema).parquet(s"$in/*"),
-      dimDir, dim0, keys, tracked, _ => Scd2.D1, ckpt)
-    val q1 = start()
-    try q1.processAllAvailable() finally q1.stop()
-    // "crash", then the odd-keyed rows arrive; the SAME checkpoint must
-    // continue batch numbering so the phase-1 snapshot is prior state,
-    // never overwritten by a renumbered batch 0
-    feed.filter(pmod(col("order_id"), lit(2)) === 1)
-      .coalesce(1).write.parquet(s"$in/f2")
-    val q2 = start()
-    try q2.processAllAvailable() finally q2.stop()
-    val streamed = CdcApply.readLatest(spark, dimDir).get
-      .collect().map(_.toString).sorted.toSeq
-    assert(streamed === batchApplied,
-      "the restarted stream must land on the single-apply dimension")
-    // both batch snapshots committed under distinct continuing ids
-    val fs = new java.io.File(dimDir).list().filter(_.startsWith("batch="))
-    assert(fs.length >= 2, s"expected >=2 committed snapshots: ${fs.toSeq}")
-  }
 }
