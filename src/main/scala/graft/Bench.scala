@@ -50,16 +50,15 @@ object Bench {
     spark.sparkContext.addSparkListener(counters)
     def snapshot(): (Long, Long, Long) = counters.snapshot(spark.sparkContext)
     // Dev aids: SPARK_GRAFT_ONLY=q1,q2 restricts the run;
-    // SPARK_GRAFT_PASSES (or legacy SPARK_GRAFT_REPEAT) sets the pass
-    // count. Default is TWO full passes in one JVM with the per-query MIN
-    // as the headline — four rounds of driver benches ran under ~2×
-    // co-tenant load and single queries spiked 10× between runs, so one
-    // pass measures the load lottery, not the engine; min-of-2 lands in
-    // the idle band whenever either pass escapes the noise.
+    // SPARK_GRAFT_PASSES sets the pass count. Default is TWO full passes
+    // in one JVM with the per-query MIN as the headline — four rounds of
+    // driver benches ran under ~2× co-tenant load and single queries
+    // spiked 10× between runs, so one pass measures the load lottery, not
+    // the engine; min-of-2 lands in the idle band whenever either pass
+    // escapes the noise.
     val only = sys.env.get("SPARK_GRAFT_ONLY")
       .map(_.split(",").map(_.trim).toSet)
-    val passes = sys.env.get("SPARK_GRAFT_PASSES")
-      .orElse(sys.env.get("SPARK_GRAFT_REPEAT")).map(_.toInt)
+    val passes = sys.env.get("SPARK_GRAFT_PASSES").map(_.toInt)
       .getOrElse(2).max(1)
     val selected = SparkEntry.queries.toSeq
       .filter { case (n, _) => only.forall(_.contains(n)) }

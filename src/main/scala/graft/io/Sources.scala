@@ -217,8 +217,10 @@ object Sources {
     * `Pipeline.upsertStore`) accrete one file set per batch, and at 100 TB
     * a scan's task count (and the namenode/listing load) is driven by file
     * COUNT, not bytes. Rewrites the table to ~`targetBytes` files via one
-    * round-robin repartition, then swaps directories (crash keeps either
-    * the old table or old + finished temp — never a partial mix).
+    * round-robin repartition, and puts the rewrite in place with
+    * [[replaceDir]]; the side dirs are `_<name>.compact.tmp` and
+    * `_<name>.compact.bak`, and [[crashedCompactions]] finds what a crash
+    * left of them.
     *
     * Sizing uses the real on-disk byte sum from the FileSystem listing —
     * not a row-count heuristic — so compression ratio carries over.
@@ -227,12 +229,10 @@ object Sources {
     */
   def compact(spark: SparkSession, path: String,
       targetBytes: Long = 128L * 1024 * 1024): (Int, Int) = {
-    import org.apache.hadoop.fs.{Path => HPath}
     val fs = fileSystem(spark, path)
-    def dataFiles(p: HPath): Seq[org.apache.hadoop.fs.FileStatus] = {
+    def dataFiles(p: Path): Seq[FileStatus] = {
       val it = fs.listFiles(p, true)
-      val buf = scala.collection.mutable.ArrayBuffer
-        .empty[org.apache.hadoop.fs.FileStatus]
+      val buf = scala.collection.mutable.ArrayBuffer.empty[FileStatus]
       while (it.hasNext) {
         val f = it.next()
         val n = f.getPath.getName
@@ -243,36 +243,112 @@ object Sources {
       }
       buf.toSeq
     }
-    val table = new HPath(path)
-    // temp/backup live as UNDERSCORE-prefixed siblings: Spark's file
-    // listing and partition discovery skip `_`/`.`-prefixed paths, so a
-    // crash can never leave a dir that a reader parses as data or as a
-    // bogus partition value (a `<part>.compact.tmp` sibling would)
-    val tmp = new HPath(table.getParent, s"_${table.getName}.compact.tmp")
-    val bak = new HPath(table.getParent, s"_${table.getName}.compact.bak")
-    // crash recovery: a prior run that died between the two renames left
-    // the table only in the backup — restore it before anything else
-    if (!fs.exists(table) && fs.exists(bak)) renameOrFail(fs, bak, table)
-    fs.delete(tmp, true)
-    fs.delete(bak, true)
-    val before = dataFiles(table)
-    val totalBytes = before.map(_.getLen).sum
-    val nOut = math.max(1L, (totalBytes + targetBytes - 1) / targetBytes).toInt
-    spark.read.parquet(path).repartition(nOut)
-      .write.mode("overwrite").parquet(tmp.toString)
-    renameOrFail(fs, table, bak)
-    renameOrFail(fs, tmp, table)
-    fs.delete(bak, true)
+    val table = new Path(path)
+    // the side dirs are UNDERSCORE-prefixed siblings, which
+    // compactPartitioned never takes for partitions. Spark's partition
+    // discovery skips them only when the name has no `=`: beside a store
+    // partition (`_order_date=X.compact.tmp`) a reader of the store fails
+    // loud (conflicting partition columns) while they exist
+    val before = replaceDir(fs, table, sideDir(table, CompactStaged),
+        sideDir(table, CompactAside)) { tmp =>
+      val before = dataFiles(table)
+      val totalBytes = before.map(_.getLen).sum
+      val nOut =
+        math.max(1L, (totalBytes + targetBytes - 1) / targetBytes).toInt
+      spark.read.parquet(path).repartition(nOut)
+        .write.mode("overwrite").parquet(tmp.toString)
+      before
+    }
     (before.size, dataFiles(table).size)
+  }
+
+  private val CompactStaged = ".compact.tmp"
+  private val CompactAside = ".compact.bak"
+
+  /** The replaces a crashed [[compact]] left under `dir` (a partitioned
+    * store's root), as [[replacesUnder]] lists them. */
+  private[graft] def crashedCompactions(fs: FileSystem, dir: Path)
+      : Seq[(Path, Path, Path)] =
+    replacesUnder(fs, dir, CompactStaged, CompactAside)
+
+  /** The marker [[replaceDir]] writes into a staged dir once its content
+    * is complete; the committer's `_SUCCESS` counts too, but it depends on
+    * mapreduce.fileoutputcommitter.marksuccessfuljobs, which object-store
+    * configs commonly disable. */
+  private val CommittedMarker = "_graft_committed"
+
+  /** Replace the directory `live` by rename-aside, so that a complete
+    * copy exists at every instant and a torn write never counts as one:
+    *
+    *  1. [[recoverReplace]] what an earlier crashed replace left,
+    *  2. `write` the new content into `staged` (it may read `live`),
+    *  3. mark `staged` complete ([[CommittedMarker]]),
+    *  4. rename `live` (if any) to `aside`, then `staged` to `live`,
+    *  5. delete `aside`.
+    *
+    * A crash at any point leaves a state [[recoverReplace]] turns into
+    * exactly the old or exactly the new `live` with no side dir; every
+    * caller runs it before it next reads or replaces `live`.
+    *
+    * @return what `write` returned */
+  private[graft] def replaceDir[T](fs: FileSystem, live: Path, staged: Path,
+      aside: Path)(write: Path => T): T = {
+    recoverReplace(fs, live, staged, aside)
+    val out = write(staged)
+    fs.create(new Path(staged, CommittedMarker), true).close()
+    if (fs.exists(live)) renameOrFail(fs, live, aside)
+    renameOrFail(fs, staged, live)
+    fs.delete(aside, true)
+    out
+  }
+
+  /** Finish or roll back a crashed [[replaceDir]]. Precedence: a `live`
+    * dir is authoritative (side dirs are dropped); else a COMPLETE
+    * `staged` copy (marker or `_SUCCESS`) is promoted, the newest content;
+    * else the `aside` copy is restored; a torn `staged` alone is deleted.
+    * Idempotent, and restartable after a crash inside it. */
+  private[graft] def recoverReplace(fs: FileSystem, live: Path, staged: Path,
+      aside: Path): Unit = {
+    if (fs.exists(live)) {
+      fs.delete(aside, true)
+      fs.delete(staged, true)
+    } else if (fs.exists(new Path(staged, CommittedMarker)) ||
+        fs.exists(new Path(staged, "_SUCCESS"))) {
+      renameOrFail(fs, staged, live)
+      fs.delete(aside, true)
+    } else if (fs.exists(aside)) {
+      fs.delete(staged, true)
+      renameOrFail(fs, aside, live)
+    } else fs.delete(staged, true)
+    ()
+  }
+
+  /** `_<name><suffix>` beside `live`: the side-dir naming of the replaces
+    * that live inside a listed directory. */
+  private[graft] def sideDir(live: Path, suffix: String): Path =
+    new Path(live.getParent, s"_${live.getName}$suffix")
+
+  /** `(live, staged, aside)` of every replace under `dir` that left a
+    * [[sideDir]] named with either suffix — the arguments of
+    * [[recoverReplace]]. */
+  private[graft] def replacesUnder(fs: FileSystem, dir: Path,
+      stagedSuffix: String, asideSuffix: String): Seq[(Path, Path, Path)] = {
+    val names = if (!fs.exists(dir)) Nil
+      else fs.listStatus(dir).toSeq.map(_.getPath.getName)
+    names.flatMap(n => Seq(stagedSuffix, asideSuffix).collectFirst {
+      case sfx if n.startsWith("_") && n.endsWith(sfx) =>
+        n.substring(1, n.length - sfx.length)
+    }).distinct.map { name =>
+      val live = new Path(dir, name)
+      (live, sideDir(live, stagedSuffix), sideDir(live, asideSuffix))
+    }
   }
 
   /** Hadoop `FileSystem.rename` reports failure by RETURNING FALSE, not
     * throwing — an unchecked rename can silently drop a table (or, on
     * HDFS, nest `src` inside an existing `dst`). Every swap here must
     * fail loud instead. */
-  private[graft] def renameOrFail(fs: org.apache.hadoop.fs.FileSystem,
-      src: org.apache.hadoop.fs.Path,
-      dst: org.apache.hadoop.fs.Path): Unit =
+  private[graft] def renameOrFail(fs: FileSystem, src: Path, dst: Path): Unit =
     if (!fs.rename(src, dst))
       throw new java.io.IOException(s"rename failed: $src -> $dst")
 
@@ -284,9 +360,8 @@ object Sources {
     * fragmented. Returns per-partition (before, after) file counts. */
   def compactPartitioned(spark: SparkSession, path: String,
       targetBytes: Long = 128L * 1024 * 1024): Map[String, (Int, Int)] = {
-    import org.apache.hadoop.fs.{Path => HPath}
     val fs = fileSystem(spark, path)
-    fs.listStatus(new HPath(path)).toSeq
+    fs.listStatus(new Path(path)).toSeq
       .filter { s =>
         val n = s.getPath.getName
         // real hive partition dirs only — skip `_`/`.` work dirs (e.g. a

@@ -128,14 +128,12 @@ object Pipeline {
     * STRING).
     *
     * Manifest-aware snapshot read: when the store carries a commit
-    * manifest ([[upsertStore]] writes one per batch), only
-    * manifest-listed partitions are visible, and while a swap of the
-    * manifest's epoch is in flight (`.bak/_epoch` == manifest epoch) the
-    * pre-swap `.bak` copy of each swapped partition is read instead of
-    * the half-replaced store dir. A reader that RESOLVES the store at any
-    * instant — including concurrently with a crashed multi-date swap —
-    * therefore sees exactly the last COMMITTED batch: partially-swapped
-    * dates come from `.bak`, not-yet-committed new dates are invisible.
+    * manifest ([[upsertStore]] writes one per batch), the latest one is
+    * resolved as [[readAt]] resolves any epoch ([[resolveAt]]): only
+    * manifest-listed partitions are visible, a swap in flight over this
+    * epoch is read from its `.bak` copies, and a listed partition that no
+    * root holds fails loud. A reader therefore sees exactly the last
+    * COMMITTED batch, also concurrently with a crashed multi-date swap.
     * Stores without a manifest (validated tables, pre-manifest stores)
     * read raw, as before.
     *
@@ -144,7 +142,7 @@ object Pipeline {
     * manifest after planning and retries if the epoch moved, so the
     * returned plan is always pinned to ONE committed snapshot; and because
     * a committing writer defers `.bak` deletion to the START of the next
-    * batch ([[upsertStore]] step 4), the snapshot's `.bak` copies outlive
+    * batch ([[publish]] step 4), the snapshot's `.bak` copies outlive
     * the commit that supersedes them — a reader mid-scan never has its
     * files deleted by the commit itself. The residual race is a scan still
     * MATERIALIZING when the *next* batch starts swapping the same
@@ -158,10 +156,11 @@ object Pipeline {
     var attempts = 0
     while (true) {
       val before = latestManifest(fs, path)
-      val resolved = resolveSnapshot(spark, fs, path, schema, before)
+      val resolved = before.fold(rawReadOrInit(spark, path, schema))(
+        resolveAt(spark, fs, path, schema, _))
       // re-validate: a live writer may have committed between the manifest
-      // read and the listing/`.bak` probes inside resolveSnapshot; equal
-      // epochs on both sides pin the whole plan to one snapshot
+      // read and the listings inside resolveAt; equal epochs on both sides
+      // pin the whole plan to one snapshot
       if (latestManifest(fs, path).map(_.epoch) == before.map(_.epoch))
         return resolved
       attempts += 1
@@ -172,41 +171,6 @@ object Pipeline {
             "reader can plan")
     }
     sys.error("unreachable")
-  }
-
-  private def resolveSnapshot(spark: SparkSession,
-      fs: org.apache.hadoop.fs.FileSystem, path: String,
-      schema: StructType,
-      manifest: Option[StoreManifest]): DataFrame = {
-    val raw = rawReadOrInit(spark, path, schema)
-    manifest match {
-      case None => raw
-      case Some(m) =>
-        val partCol = m.partCol
-        val committed =
-          if (m.partitions.isEmpty) raw.limit(0)
-          else raw.where(col(partCol).isin(m.partitions: _*))
-        // .bak copies are authoritative ONLY for an in-flight swap over
-        // THIS manifest's snapshot; a stale .bak (epoch older than the
-        // manifest — the post-commit, pre-cleanup window) is ignored.
-        val bakParts =
-          if (bakEpoch(fs, path).contains(m.epoch))
-            listPartitionDirs(fs, path + ".bak", partCol)
-              .filter(m.partitions.toSet)
-          else Nil
-        if (bakParts.isEmpty) committed
-        else {
-          val dataSchema = StructType(schema.filterNot(_.name == partCol))
-          val live = committed.where(!col(partCol).isin(bakParts: _*))
-          val fromBak = bakParts.map { pv =>
-            spark.read.schema(dataSchema)
-              .parquet(s"$path.bak/$partCol=$pv")
-              .withColumn(partCol, lit(pv))
-              .select(schema.fieldNames.map(col): _*)
-          }
-          fromBak.foldLeft(live)(_ unionByName _)
-        }
-    }
   }
 
   private def rawReadOrInit(spark: SparkSession, path: String,
@@ -230,60 +194,68 @@ object Pipeline {
     * manifests). Historical manifests persist for [[ManifestsToKeep]]
     * epochs behind the current one; the partition content each commit
     * replaced is archived under `<store>.hist/<epoch>/` (see
-    * [[restoreBackups]]) instead of deleted.
-    *
-    * Resolution, per partition of the target manifest: pick the SMALLEST
-    * archived version with stamp h ≥ epoch — `.hist/<h>` (or a pending
-    * `.bak` at its stamp, the not-yet-archived newest case) holds that
-    * partition's content AS OF epoch h, and no h' with epoch ≤ h' < h
-    * existing means the partition was untouched between the two, so the
-    * content at h IS the content at `epoch`. No archived version ⇒ the
-    * partition was never rewritten after `epoch` and the live dir is
-    * exact. A partition that can't be resolved anywhere (expired by
-    * [[retentionSweep]] and GC'd) FAILS LOUD — time travel never silently
-    * returns a partial snapshot.
-    *
-    * Listing cost is manifest partitions × archived epochs (driver-side
-    * metadata, same altitude as the touched-dates collect); the data read
-    * is one scan of exactly the snapshot's dirs. */
+    * [[restoreBackups]]) instead of deleted. The manifest is resolved by
+    * [[resolveAt]], which fails loud on a partition that cannot be
+    * resolved anywhere (expired by [[retentionSweep]] and GC'd): time
+    * travel never silently returns a partial snapshot. */
   def readAt(spark: SparkSession, path: String, epoch: Long,
       schema: StructType): DataFrame = {
-    import org.apache.hadoop.fs.{Path => HPath}
     val fs = Sources.fileSystem(spark, path)
-    val m = manifestAt(fs, path, epoch).getOrElse(
+    resolveAt(spark, fs, path, schema, manifestAt(fs, path, epoch).getOrElse(
       throw new IllegalStateException(
         s"store $path: no manifest for epoch $epoch — it is outside the " +
           s"$manifestsToKeep-epoch time-travel window or was never " +
-          "committed"))
+          "committed")))
+  }
+
+  /** The snapshot manifest `m` committed, per listed partition: the
+    * SMALLEST version root with stamp h ≥ `m.epoch` that holds it —
+    * `.hist/<h>`, or `.bak` at its stamp (a swap in flight over that
+    * snapshot, or the not-yet-archived newest version) — holds its
+    * content AS OF epoch h, and no h' with epoch ≤ h' < h existing means
+    * the partition was untouched between the two, so the content at h IS
+    * the content at `m.epoch`. No version ⇒ the partition was never
+    * rewritten after `m.epoch` and the live dir is exact; a stale `.bak`
+    * (stamp below the epoch) is never a candidate. A partition no root
+    * holds FAILS LOUD.
+    *
+    * The roots are listed once each (manifest partitions never cost a
+    * probe apiece), in the direction partitions move — live, `.bak`,
+    * `.hist` — so one that moves mid-resolution is seen in at least one
+    * listing. The data read is one scan of exactly the snapshot's dirs. */
+  private def resolveAt(spark: SparkSession,
+      fs: org.apache.hadoop.fs.FileSystem, path: String, schema: StructType,
+      m: StoreManifest): DataFrame = {
+    import org.apache.hadoop.fs.{Path => HPath}
     val partCol = m.partCol
     if (m.partitions.isEmpty)
       return spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-    val dataSchema = StructType(schema.filterNot(_.name == partCol))
+    def held(root: String) = listPartitionDirs(fs, root, partCol).toSet
+    val live = held(path)
+    val bak = bakEpoch(fs, path).filter(_ >= m.epoch)
+      .map(e => (e, s"$path.bak", held(s"$path.bak"))).toSeq
     val histRoot = new HPath(path + ".hist")
-    val histEpochs =
+    val hist =
       if (!fs.exists(histRoot)) Nil
       else fs.listStatus(histRoot).toSeq
-        .flatMap(s => scala.util.Try(s.getPath.getName.toLong).toOption)
-    // version roots with stamp ≥ target, smallest stamp first
-    val candidates = (histEpochs.map(h => h -> s"$path.hist/$h") ++
-      bakEpoch(fs, path).map(e => e -> s"$path.bak"))
-      .filter(_._1 >= epoch).sortBy(_._1)
+        .flatMap(s => s.getPath.getName.toLongOption).filter(_ >= m.epoch)
+        .map(h => (h, s"$path.hist/$h", held(s"$path.hist/$h")))
+    val versions = (hist ++ bak).sortBy(_._1)
     val resolved = m.partitions.map { pv =>
-      pv -> candidates.collectFirst {
-        case (_, root) if fs.exists(new HPath(root, s"$partCol=$pv")) =>
-          s"$root/$partCol=$pv"
+      pv -> versions.collectFirst {
+        case (_, root, parts) if parts(pv) => s"$root/$partCol=$pv"
       }
     }
-    val missing = resolved.collect {
-      case (pv, None) if !fs.exists(new HPath(path, s"$partCol=$pv")) => pv
-    }
+    val missing = resolved.collect { case (pv, None) if !live(pv) => pv }
     if (missing.nonEmpty)
       throw new IllegalStateException(
-        s"store $path: epoch $epoch is no longer reconstructable — " +
-          s"partition(s) ${missing.mkString(", ")} expired by retention")
+        s"store $path: epoch ${m.epoch} is no longer reconstructable — " +
+          s"partition(s) ${missing.mkString(", ")} are held by no live, " +
+          ".bak or .hist dir (expired by retention, or lost)")
     val livePv = resolved.collect { case (pv, None) => pv }
-    val live =
+    val dataSchema = StructType(schema.filterNot(_.name == partCol))
+    val liveDf =
       if (livePv.isEmpty) Nil
       else Seq(spark.read.schema(schema).parquet(path)
         .where(col(partCol).isin(livePv: _*)))
@@ -292,7 +264,7 @@ object Pipeline {
         .withColumn(partCol, lit(pv))
         .select(schema.fieldNames.map(col): _*)
     }
-    (live ++ versioned).reduce(_ unionByName _)
+    (liveDf ++ versioned).reduce(_ unionByName _)
   }
 
   private val catSchema = StructType.fromDDL(
@@ -407,8 +379,6 @@ object Pipeline {
       fields: Seq[String], partCol: String = "order_date",
       expectedEpoch: Option[Long] = None,
       leaseTtlMs: Long = DefaultLeaseTtlMs): Long = {
-    import org.apache.hadoop.fs.{Path => HPath}
-
     val fs = Sources.fileSystem(spark, path)
     // a crashed forgetKeys leaves a durable tombstone ([[forgetKeys]]'s
     // crash contract); finish that erasure BEFORE this batch merges.
@@ -425,25 +395,16 @@ object Pipeline {
     // only if the store is still at the epoch I read"), and re-check it at
     // every mutation boundary; a moved epoch aborts CLEAN (temp dir only,
     // store untouched) with [[StoreConflictException]], and the retry
-    // re-merges against the new snapshot. The commit section itself is
-    // EXCLUSIVE under the `_lease` put-if-absent arbiter (see the commit
-    // lease block below): racing swaps past the entry check can no longer
-    // interleave, a live holder turns the second writer away clean
-    // ([[StoreLeaseHeldException]]), a crashed holder is taken over by
-    // epoch/TTL fencing, and the write-once manifest publish remains the
-    // final backstop beneath all of it.
+    // re-merges against the new snapshot. The commit section itself
+    // ([[commitSection]]) is EXCLUSIVE under the `_lease` put-if-absent
+    // arbiter (see the commit lease block below): racing swaps past the
+    // entry check can no longer interleave, a live holder turns the second
+    // writer away clean ([[StoreLeaseHeldException]]), a crashed holder is
+    // taken over by epoch/TTL fencing, and the write-once manifest publish
+    // remains the final backstop beneath all of it.
     val planEpoch = latestManifest(fs, path).map(_.epoch).getOrElse(0L)
     val baseEpoch = expectedEpoch.getOrElse(planEpoch)
-    def conflictCheck(stage: String): Unit = {
-      val now = latestManifest(fs, path).map(_.epoch).getOrElse(0L)
-      if (now != baseEpoch)
-        throw new StoreConflictException(
-          s"store $path: manifest epoch moved $baseEpoch -> $now ($stage)" +
-            " — a concurrent writer committed; this batch merged against a" +
-            " stale snapshot and was aborted cleanly. Re-run to merge" +
-            " against the new snapshot.")
-    }
-    conflictCheck("before planning")
+    checkEpoch(fs, path, baseEpoch, "before planning")
 
     val rel = updates.queryExecution.optimizedPlan match {
       case r: LocalRelation => r
@@ -477,85 +438,113 @@ object Pipeline {
     // the merge plan reads the store partitions being replaced, so write
     // to the temp dir first (finishes the read), then swap directories
     merged.write.mode("overwrite").partitionBy(partCol).parquet(tmp)
-    // commit-section entry: last clean-abort point (nothing in the store
-    // has been touched yet — only the temp dir exists). The lease makes
-    // the section EXCLUSIVE (two writers passing the epoch check together
-    // can no longer interleave their dir swaps); the epoch re-check under
-    // the lease then closes the plan→commit CAS window with no writer
-    // racing it.
-    val lease =
-      try acquireStoreLease(fs, path, baseEpoch, leaseTtlMs)
-      catch { case e: Throwable =>
-        fs.delete(new HPath(tmp), true)
-        throw e
-      }
-    try conflictCheck("at commit")
-    catch { case e: Throwable =>
-      fs.delete(new HPath(tmp), true)
-      releaseStoreLease(fs, path, lease)
-      throw e
-    }
+    commitSection(fs, path, baseEpoch, leaseTtlMs, staged = Some(tmp))(
+      publish(fs, path, tmp, partCol, dates, baseEpoch, _, leaseTtlMs))
+  }
 
-    // Commit protocol (reader isolation — see readOrInit's scaladoc):
-    //  1. stamp `.bak/_epoch` with the CURRENT manifest epoch, so readers
-    //     know the backups about to appear belong to an in-flight swap
-    //     over that snapshot (and not to an already-committed one),
-    //  2. swap the touched partition dirs (old copies land in `.bak`),
-    //  3. COMMIT: atomically publish `_manifest.<epoch+1>` listing every
-    //     committed partition — the single instant the batch becomes
-    //     visible; readers before it resolve `.bak`, readers after it see
-    //     the new dirs and ignore the now-stale `.bak`,
-    //  4. clean up old manifests. `.bak` deletion is DEFERRED to the
-    //     start of the NEXT batch (restoreBackups sweeps a stale one):
-    //     deleting it here would yank files out from under a live reader
-    //     that resolved the pre-commit snapshot and is still scanning its
-    //     bak-preferred plan. The stale `.bak` (epoch < new manifest) is
-    //     ignored by every later reader.
-    // A crash at any point leaves either epoch N fully readable (steps
-    // 1–2: bak-preferred; uncommitted new dates unlisted) or epoch N+1
-    // fully readable (steps 3–4), never a torn mix.
+  /** Abort CLEAN ([[StoreConflictException]]) unless the store's latest
+    * manifest is still at `expected` — the optimistic-concurrency check
+    * of every mutator. */
+  private def checkEpoch(fs: org.apache.hadoop.fs.FileSystem, path: String,
+      expected: Long, stage: String): Unit = {
+    val now = latestManifest(fs, path).map(_.epoch).getOrElse(0L)
+    if (now != expected)
+      throw new StoreConflictException(
+        s"store $path: manifest epoch moved $expected -> $now ($stage)" +
+          " — a concurrent writer committed; this call was aborted cleanly" +
+          " before touching the store. Re-run against the new snapshot.")
+  }
+
+  /** The commit section of every store mutator: take the commit lease (a
+    * live holder turns the caller away clean, [[StoreLeaseHeldException]]),
+    * re-check under it that the manifest is still at `baseEpoch` — the
+    * last clean-abort point, closing the plan→commit CAS window with no
+    * writer racing it — and run `body` as the holder; the lease is
+    * released however `body` ends. An abort before `body` also deletes
+    * the caller's `staged` dir, so nothing but the lease was touched. */
+  private def commitSection[T](fs: org.apache.hadoop.fs.FileSystem,
+      path: String, baseEpoch: Long, ttlMs: Long = DefaultLeaseTtlMs,
+      staged: Option[String] = None)(body: StoreLease => T): T = {
+    def dropStaged(): Unit =
+      staged.foreach(t => fs.delete(new org.apache.hadoop.fs.Path(t), true))
+    val lease =
+      try acquireStoreLease(fs, path, baseEpoch, ttlMs)
+      catch { case e: Throwable => dropStaged(); throw e }
     try {
-      // orphan staging dirs from crashed writers (unique-named): GC'd
-      // here UNDER the lease, and only past the TTL, so no live writer's
-      // in-progress staging is ever yanked (a writer that stages longer
-      // than the TTL loses its swap to renameOrFail and aborts clean —
-      // the same bound every other liveness decision uses)
-      sweepOrphanStaging(fs, path, exclude = tmp, ttlMs = leaseTtlMs)
-      val curManifest = latestManifest(fs, path)
-      // pinned by conflictCheck("at commit") just above
-      val curEpoch = baseEpoch
-      val baseParts = committedPartitions(fs, path, partCol, curManifest)
-      def rowsIn(parts: Seq[String]) =
-        parts.map(dt => footerRows(fs, new HPath(s"$path/$partCol=$dt"))).sum
-      // post-merge store size in O(touched), not O(store): the previous
-      // total rides the manifest (#rows; one count of every committed
-      // partition on a legacy/swept manifest); the committed partitions
-      // (their live dirs: recovery ran before planning and the lease +
-      // epoch check pin them) and the staged replacement are counted from
-      // parquet footers on the driver — the result is carried forward on
-      // the new manifest, so per-batch cost never grows with store age
-      val prevTotal = curManifest.flatMap(_.rows).getOrElse(rowsIn(baseParts))
-      val prevTouched = rowsIn(dates.filter(baseParts.toSet))
-      val newTotal = prevTotal - prevTouched + footerRows(fs, new HPath(tmp))
-      writeBakEpoch(fs, path, curEpoch)
-      dates.foreach { dt =>
-        swapDir(fs, new HPath(s"$tmp/$partCol=$dt"),
-          new HPath(s"$path/$partCol=$dt"),
-          // backups live OUTSIDE the store dir — a `order_date=X.bak` dir
-          // inside it would be picked up by partition discovery
-          new HPath(s"$path.bak/$partCol=$dt"))
-      }
-      fs.delete(new HPath(tmp), true)
-      // fencing check: a takeover (stale-lease break by a writer that
-      // judged us dead) must stop us HERE — publishing after being
-      // fenced out could overwrite the successor's commit
-      verifyStoreLease(fs, path, lease)
-      writeManifest(fs, path, curEpoch + 1, partCol,
-        (baseParts ++ dates).distinct.sorted, rows = Some(newTotal))
-      dropOldManifests(fs, path, current = curEpoch + 1)
-      // no `.bak` delete here — see step 4 of the commit protocol above
-      newTotal
+      try checkEpoch(fs, path, baseEpoch, "at commit")
+      catch { case e: Throwable => dropStaged(); throw e }
+      body(lease)
     } finally releaseStoreLease(fs, path, lease)
+  }
+
+  /** Publish the partition set staged at `tmp` over `dates` as epoch
+    * `baseEpoch + 1`, as the holder of `lease`: a date the staging holds
+    * replaces the store's partition, a date it lacks (emptied) is retired
+    * from the store and the manifest. Returns the new snapshot's rows.
+    *
+    * Commit protocol (reader isolation — see [[readOrInit]]):
+    *  1. stamp `.bak/_epoch` with the CURRENT manifest epoch, so readers
+    *     know the backups about to appear belong to an in-flight swap
+    *     over that snapshot (and not to an already-committed one),
+    *  2. swap the touched partition dirs (old copies land in `.bak`),
+    *  3. COMMIT: atomically publish `_manifest.<epoch+1>` listing every
+    *     committed partition — the single instant the batch becomes
+    *     visible; readers before it resolve `.bak`, readers after it see
+    *     the new dirs and ignore the now-stale `.bak`,
+    *  4. clean up old manifests. `.bak` deletion is DEFERRED to the
+    *     start of the NEXT batch (restoreBackups sweeps a stale one):
+    *     deleting it here would yank files out from under a live reader
+    *     that resolved the pre-commit snapshot and is still scanning its
+    *     bak-preferred plan. The stale `.bak` (epoch < new manifest) is
+    *     ignored by every later reader.
+    * A crash at any point leaves either epoch N fully readable (steps
+    * 1–2: bak-preferred; uncommitted new dates unlisted) or epoch N+1
+    * fully readable (steps 3–4), never a torn mix. */
+  private def publish(fs: org.apache.hadoop.fs.FileSystem, path: String,
+      tmp: String, partCol: String, dates: Seq[String], baseEpoch: Long,
+      lease: StoreLease, ttlMs: Long): Long = {
+    import org.apache.hadoop.fs.{Path => HPath}
+    // orphan staging dirs from crashed writers (unique-named): GC'd
+    // here UNDER the lease, and only past the TTL, so no live writer's
+    // in-progress staging is ever yanked (a writer that stages longer
+    // than the TTL loses its swap to renameOrFail and aborts clean —
+    // the same bound every other liveness decision uses)
+    sweepOrphanStaging(fs, path, exclude = tmp, ttlMs = ttlMs)
+    val curManifest = latestManifest(fs, path)
+    val baseParts = committedPartitions(fs, path, partCol, curManifest)
+    val present = listPartitionDirs(fs, tmp, partCol).toSet
+    val retired = dates.filterNot(present)
+    def rowsIn(parts: Seq[String]) =
+      parts.map(dt => footerRows(fs, new HPath(s"$path/$partCol=$dt"))).sum
+    // post-commit store size in O(touched), not O(store): the previous
+    // total rides the manifest (#rows; one count of every committed
+    // partition on a legacy/swept manifest); the committed partitions
+    // (their live dirs: recovery ran before planning and the lease +
+    // epoch check pin them) and the staged replacement are counted from
+    // parquet footers on the driver — the result is carried forward on
+    // the new manifest, so per-batch cost never grows with store age
+    val prevTotal = curManifest.flatMap(_.rows).getOrElse(rowsIn(baseParts))
+    val prevTouched = rowsIn(dates.filter(baseParts.toSet))
+    val newTotal = prevTotal - prevTouched + footerRows(fs, new HPath(tmp))
+    writeBakEpoch(fs, path, baseEpoch)
+    dates.foreach { dt =>
+      swapDir(fs, Option.when(present(dt))(new HPath(s"$tmp/$partCol=$dt")),
+        new HPath(s"$path/$partCol=$dt"),
+        // backups live OUTSIDE the store dir — a `order_date=X.bak` dir
+        // inside it would be picked up by partition discovery
+        new HPath(s"$path.bak/$partCol=$dt"))
+    }
+    fs.delete(new HPath(tmp), true)
+    // fencing check: a takeover (stale-lease break by a writer that
+    // judged us dead) must stop us HERE — publishing after being
+    // fenced out could overwrite the successor's commit
+    verifyStoreLease(fs, path, lease)
+    writeManifest(fs, path, baseEpoch + 1, partCol,
+      (baseParts.diff(retired) ++ dates.filter(present)).distinct.sorted,
+      rows = Some(newTotal))
+    dropOldManifests(fs, path, current = baseEpoch + 1)
+    // no `.bak` delete here — see step 4 of the commit protocol above
+    newTotal
   }
 
   /** The committed snapshot's partitions (a pre-manifest store's dirs). */
@@ -617,11 +606,10 @@ object Pipeline {
     * different key set is finished as its own pass first), so a routine
     * batch after a crash can never silently retain the keys.
     *
-    * The `.hist` rewrite itself swaps rename-aside: old dir →
-    * `_<dir>.fk.old`, rewritten `_<dir>.fk.tmp` → live name, then the
-    * old copy is dropped — a readable copy of the archived partition
-    * exists on disk at every instant, and the purge's recovery preamble
-    * finishes (or rolls back) any half-done swap a crash left behind.
+    * The tombstone publish and each `.hist` rewrite are
+    * [[Sources.replaceDir]]s: the leased recovery sweep
+    * ([[recoverUnderLease]]) and the purge's per-epoch preamble finish or
+    * roll back whichever one a crash interrupted.
     *
     * @return (manifest epoch after the call, rows deleted from the
     *         current snapshot)
@@ -641,7 +629,7 @@ object Pipeline {
     // outstanding tombstone from a crashed prior forget: same key columns
     // fold into this pass (erasure is idempotent); a different key set is
     // completed as its own pass first, clearing its tombstone
-    val pendingDir = new HPath(path + ".forget.pending")
+    val (pendingDir, pendingTmp, pendingOld) = tombstone(path)
     val requested = keyValues.select(keys.map(col): _*)
     val kvIn =
       if (!fs.exists(pendingDir)) requested
@@ -655,36 +643,13 @@ object Pipeline {
         }
       }
     val baseEpoch = latestManifest(fs, path).map(_.epoch).getOrElse(0L)
-    def conflictCheck(stage: String): Unit = {
-      val now = latestManifest(fs, path).map(_.epoch).getOrElse(0L)
-      if (now != baseEpoch)
-        throw new StoreConflictException(
-          s"store $path: manifest epoch moved $baseEpoch -> $now ($stage)" +
-            " — a concurrent writer committed during the delete; re-run" +
-            " against the new snapshot.")
-    }
-    // durable tombstone BEFORE any mutation: published by RENAME-ASIDE
-    // swap (never delete-then-rename — a crash between those two would
-    // lose a still-pending prior erasure), so a complete tombstone exists
-    // on disk at every instant and a torn write can never masquerade as a
-    // valid record. Size is request-grain (the distinct keys of one
-    // delete request), not data-grain — a bounded write by construction.
-    val pendingTmp = new HPath(path + ".forget.pending.inprogress")
-    val pendingOld = new HPath(path + ".forget.pending.old")
-    fs.delete(pendingTmp, true)
-    kvIn.distinct().coalesce(1).write.parquet(pendingTmp.toString)
-    // completeness marker of OUR OWN, created only after the write
-    // returns: the committer's `_SUCCESS` depends on
-    // mapreduce.fileoutputcommitter.marksuccessfuljobs, which object-store
-    // configs commonly disable — without this marker a fully-written
-    // tombstone would be treated as torn by [[resolvePendingSwap]] there
-    fs.create(new HPath(pendingTmp, "_graft_committed"), true).close()
-    if (fs.exists(pendingDir)) { // superseded: its keys are folded in
-      fs.delete(pendingOld, true)
-      Sources.renameOrFail(fs, pendingDir, pendingOld)
-    }
-    Sources.renameOrFail(fs, pendingTmp, pendingDir)
-    fs.delete(pendingOld, true)
+    // durable tombstone BEFORE any mutation, published by rename-aside
+    // (never delete-then-rename — a crash between those two would lose a
+    // still-pending prior erasure). Size is request-grain (the distinct
+    // keys of one delete request), not data-grain — a bounded write by
+    // construction.
+    Sources.replaceDir(fs, pendingDir, pendingTmp, pendingOld)(t =>
+      kvIn.distinct().coalesce(1).write.parquet(t.toString))
     // the published tombstone is the authoritative key set: re-reading it
     // (instead of keeping the in-memory union plan alive) means a cache
     // eviction can never recompute through the superseded pending dir
@@ -693,128 +658,54 @@ object Pipeline {
       val snapshot = readOrInit(spark, path, schema)
       val touched = snapshot.join(kv, keys, "left_semi")
       val deleted = touched.count()
-      var epoch = baseEpoch
-      if (deleted > 0L) {
-        val dates = touched.select(col(partCol)).distinct()
-          .collect().map(_.getString(0)).sorted.toSeq
-        val remaining = snapshot.where(col(partCol).isin(dates: _*))
-          .join(kv, keys, "left_anti")
-          .select(schema.fieldNames.map(col): _*)
-        val tmp = stagingDir(path) // per-writer, as in upsertStore
-        remaining.write.mode("overwrite").partitionBy(partCol).parquet(tmp)
-        // a fully-emptied partition writes no dir — it is RETIRED from
-        // the manifest rather than swapped
-        val present = listPartitionDirs(fs, tmp, partCol)
-        val emptied = dates.diff(present)
-        // same commit-section discipline as the batch merge: lease first
-        // (exclusive section), epoch re-check under it, fencing check
-        // before the publish
-        val lease =
-          try acquireStoreLease(fs, path, baseEpoch)
-          catch { case e: Throwable =>
-            fs.delete(new HPath(tmp), true)
-            throw e
-          }
-        try {
-          conflictCheck("at commit")
-          sweepOrphanStaging(fs, path, exclude = tmp,
-            ttlMs = DefaultLeaseTtlMs)
-          val baseParts =
-            committedPartitions(fs, path, partCol, latestManifest(fs, path))
-          writeBakEpoch(fs, path, baseEpoch)
-          present.foreach { dt =>
-            swapDir(fs, new HPath(s"$tmp/$partCol=$dt"),
-              new HPath(s"$path/$partCol=$dt"),
-              new HPath(s"$path.bak/$partCol=$dt"))
-          }
-          emptied.foreach { dt =>
-            val dst = new HPath(s"$path/$partCol=$dt")
-            val bak = new HPath(s"$path.bak/$partCol=$dt")
-            if (fs.exists(bak)) fs.delete(bak, true)
-            if (fs.exists(dst)) {
-              if (!fs.exists(bak.getParent)) fs.mkdirs(bak.getParent)
-              Sources.renameOrFail(fs, dst, bak)
+      val epoch =
+        if (deleted == 0L) baseEpoch
+        else {
+          val dates = touched.select(col(partCol)).distinct()
+            .collect().map(_.getString(0)).sorted.toSeq
+          val tmp = stagingDir(path) // per-writer, as in upsertStore
+          // a fully-emptied partition writes no dir — publish RETIRES it
+          snapshot.where(col(partCol).isin(dates: _*))
+            .join(kv, keys, "left_anti")
+            .select(schema.fieldNames.map(col): _*)
+            .write.mode("overwrite").partitionBy(partCol).parquet(tmp)
+          commitSection(fs, path, baseEpoch, staged = Some(tmp)) { lease =>
+            publish(fs, path, tmp, partCol, dates, baseEpoch, lease,
+              DefaultLeaseTtlMs)
+            // erasure > deferred isolation: this batch's .bak copies carry
+            // the forgotten rows — delete them NOW instead of leaving them
+            // for the next batch's archive sweep (which would re-introduce
+            // the rows into .hist)
+            dates.foreach { dt =>
+              fs.delete(new HPath(s"$path.bak/$partCol=$dt"), true)
             }
           }
-          fs.delete(new HPath(tmp), true)
-          // post-delete row count in O(1) off the prior manifest's tally.
-          // Fallback (legacy/swept manifest): readOrInit here still serves
-          // the PRE-delete snapshot — the manifest hasn't moved and the
-          // bak-preferred read resolves the swapped partitions' backups —
-          // so its count IS the previous total
-          val prevTotal = latestManifest(fs, path).flatMap(_.rows)
-            .getOrElse(readOrInit(spark, path, schema).count())
-          verifyStoreLease(fs, path, lease)
-          writeManifest(fs, path, baseEpoch + 1, partCol,
-            (baseParts.diff(emptied) ++ present).distinct.sorted,
-            rows = Some(prevTotal - deleted))
-          dropOldManifests(fs, path, current = baseEpoch + 1)
-          // erasure > deferred isolation: this batch's .bak copies carry
-          // the forgotten rows — delete them NOW instead of leaving them
-          // for the next batch's archive sweep (which would re-introduce
-          // the rows into .hist)
-          dates.foreach { dt =>
-            fs.delete(new HPath(s"$path.bak/$partCol=$dt"), true)
-          }
-          epoch = baseEpoch + 1
-        } finally releaseStoreLease(fs, path, lease)
-      }
+          baseEpoch + 1
+        }
       // history purge — unconditional, so a crashed/partial prior run is
       // finished by a rerun. Archived dirs carry the data columns only
       // (the partition value is the dir name), so read with the explicit
       // data schema and rewrite in place when the keys appear.
       val dataSchema = StructType(schema.filterNot(_.name == partCol))
       val histRoot = new HPath(path + ".hist")
-      val FkOld = """_(.+)\.fk\.old""".r
-      val FkTmp = """_(.+)\.fk\.tmp""".r
       if (fs.exists(histRoot)) {
         for (ep <- fs.listStatus(histRoot).toSeq if ep.isDirectory) {
-          // recovery preamble: finish (or roll back) any half-done swap a
-          // crashed purge left, so the main pass below always starts from
-          // a live archived dir. Invariant the sequence maintains: at
-          // every instant at least one of {live dir, .fk.old copy,
-          // completed .fk.tmp rewrite} exists for each archived partition.
-          fs.listStatus(ep.getPath).toSeq.foreach { st =>
-            st.getPath.getName match {
-              case FkOld(orig) =>
-                val live = new HPath(ep.getPath, orig)
-                val tmp = new HPath(ep.getPath, s"_$orig.fk.tmp")
-                if (fs.exists(live)) fs.delete(st.getPath, true)
-                else if (fs.exists(tmp)) { // crash between the two renames
-                  Sources.renameOrFail(fs, tmp, live)
-                  fs.delete(st.getPath, true)
-                } else Sources.renameOrFail(fs, st.getPath, live)
-              case _ => ()
-            }
-          }
-          // a .fk.tmp whose live dir survived is a pre-swap leftover
-          fs.listStatus(ep.getPath).toSeq.foreach { st =>
-            st.getPath.getName match {
-              case FkTmp(orig) if fs.exists(new HPath(ep.getPath, orig)) =>
-                fs.delete(st.getPath, true)
-              case _ => ()
-            }
-          }
+          // recovery preamble: finish (or roll back) any rewrite a crashed
+          // purge left, so the pass below starts from live archived dirs
+          Sources.replacesUnder(fs, ep.getPath, HistStaged, HistAside)
+            .foreach { case (live, staged, aside) =>
+              Sources.recoverReplace(fs, live, staged, aside) }
           for (pd <- fs.listStatus(ep.getPath).toSeq
                if pd.isDirectory && pd.getPath.getName.startsWith(partCol + "=")) {
             val dir = pd.getPath.toString
             val h = spark.read.schema(dataSchema).parquet(dir)
-            if (h.join(kv, keys, "left_semi").limit(1).count() > 0) {
-              val htmp = new HPath(ep.getPath, s"_${pd.getPath.getName}.fk.tmp")
-              fs.delete(htmp, true)
-              spark.read.schema(dataSchema).parquet(dir)
-                .join(kv, keys, "left_anti")
-                .coalesce(1)
-                .write.parquet(htmp.toString)
-              // rename-aside swap (never delete-then-rename): a readable
-              // copy of the archive exists at every instant, and the
-              // preamble above finishes this swap if we crash inside it
-              val hOld = new HPath(ep.getPath, s"_${pd.getPath.getName}.fk.old")
-              fs.delete(hOld, true)
-              Sources.renameOrFail(fs, pd.getPath, hOld)
-              Sources.renameOrFail(fs, htmp, pd.getPath)
-              fs.delete(hOld, true)
-            }
+            if (h.join(kv, keys, "left_semi").limit(1).count() > 0)
+              Sources.replaceDir(fs, pd.getPath,
+                  Sources.sideDir(pd.getPath, HistStaged),
+                  Sources.sideDir(pd.getPath, HistAside)) { t =>
+                h.join(kv, keys, "left_anti").coalesce(1)
+                  .write.parquet(t.toString)
+              }
           }
         }
       }
@@ -825,54 +716,35 @@ object Pipeline {
     } finally { kv.unpersist(); () }
   }
 
+  /** Side-dir suffixes of the `.hist` purge's [[Sources.replaceDir]]. */
+  private val HistStaged = ".fk.tmp"
+  private val HistAside = ".fk.old"
+
+  /** (live, staged, aside) of the forget tombstone's
+    * [[Sources.replaceDir]]. */
+  private def tombstone(path: String)
+      : (org.apache.hadoop.fs.Path, org.apache.hadoop.fs.Path,
+        org.apache.hadoop.fs.Path) = {
+    import org.apache.hadoop.fs.{Path => HPath}
+    (new HPath(path + ".forget.pending"),
+      new HPath(path + ".forget.pending.inprogress"),
+      new HPath(path + ".forget.pending.old"))
+  }
+
   /** Finish a crashed [[forgetKeys]] whose tombstone is still outstanding
     * — the recovery entry point routine batches call before touching the
     * store, so erasure completes without anyone re-issuing the request.
     * No-op when no tombstone exists. */
   private[graft] def completePendingForget(spark: SparkSession, path: String,
       schema: StructType, partCol: String = "order_date"): Unit = {
-    import org.apache.hadoop.fs.{Path => HPath}
     val fs = Sources.fileSystem(spark, path)
     recoverUnderLease(fs, path)
-    val pending = new HPath(path + ".forget.pending")
+    val pending = tombstone(path)._1
     if (fs.exists(pending)) {
       val pend = spark.read.parquet(pending.toString)
       forgetKeys(spark, path, schema, pend, pend.columns.toSeq, partCol)
       ()
     }
-  }
-
-  /** Recovery preamble for the tombstone's own rename-aside publish (the
-    * same discipline the `.hist` purge swap uses): whichever of
-    * {published tombstone, rename-aside `.old` copy, completed
-    * `.inprogress` write} a crash left behind, promote exactly one back
-    * to the published name so a complete tombstone is never lost.
-    * Precedence: a published tombstone is authoritative (stale side files
-    * are dropped); else a COMPLETE in-progress write is published (it was
-    * finished before the swap began and is a superset of the `.old`
-    * copy); else the `.old` copy is restored; a torn in-progress write
-    * alone is deleted. Completeness = OUR `_graft_committed` marker
-    * (written by [[forgetKeys]] after the tombstone write returns — the
-    * committer's `_SUCCESS` is config-dependent and commonly disabled on
-    * object stores; it is honored as a legacy fallback only). */
-  private def resolvePendingSwap(fs: org.apache.hadoop.fs.FileSystem,
-      path: String): Unit = {
-    import org.apache.hadoop.fs.{Path => HPath}
-    val pending = new HPath(path + ".forget.pending")
-    val old = new HPath(path + ".forget.pending.old")
-    val tmp = new HPath(path + ".forget.pending.inprogress")
-    if (fs.exists(pending)) {
-      fs.delete(old, true)
-      fs.delete(tmp, true)
-    } else if (fs.exists(new HPath(tmp, "_graft_committed")) ||
-        fs.exists(new HPath(tmp, "_SUCCESS"))) {
-      Sources.renameOrFail(fs, tmp, pending)
-      fs.delete(old, true)
-    } else if (fs.exists(old)) {
-      fs.delete(tmp, true)
-      Sources.renameOrFail(fs, old, pending)
-    } else fs.delete(tmp, true)
-    ()
   }
 
   /** E57: manifest-aware retention sweep — expire store partitions whose
@@ -912,73 +784,55 @@ object Pipeline {
           s"store $path is partitioned by ${m.partCol}, not $partCol — " +
             "retention cutoffs would compare against the wrong column")
         // the whole mutating section (manifest bump + unlisted-dir GC)
-        // runs under the commit lease: an UNLISTED dir is otherwise
+        // runs in the commit section: an UNLISTED dir is otherwise
         // indistinguishable from a live writer's freshly swapped
         // new-date partition whose manifest hasn't published yet —
         // unguarded GC would delete it out from under the commit (the
         // round-9 recovery-sweep finding, retention flavor). A live
         // writer turns retention away clean; retry after it commits.
-        val lease = acquireStoreLease(fs, path, m.epoch)
-        try {
-          // epoch re-check under the lease (the upsertStore CAS
-          // convention): if the manifest moved between the read and the
-          // acquire, our lease was born epoch-stale — breakable mid-
-          // sweep — so abort clean and let the caller retry
-          val cur = latestManifest(fs, path).getOrElse(m)
-          if (cur.epoch != m.epoch)
-            throw new StoreConflictException(
-              s"store $path: manifest epoch moved ${m.epoch} -> " +
-                s"${cur.epoch} before the retention sweep's lease — " +
-                "aborted cleanly; retry against the new snapshot.")
-          val (keep, drop) = cur.partitions.partition(_ >= keepFrom)
+        commitSection(fs, path, m.epoch) { _ =>
+          val (keep, drop) = m.partitions.partition(_ >= keepFrom)
           if (drop.nonEmpty) {
             // rows deliberately absent: the expired partitions' counts
             // are not worth a scan of data being thrown away — the next
             // merge pays one full-count fallback and re-establishes the
             // tally
-            writeManifest(fs, path, cur.epoch + 1, cur.partCol,
-              keep.sorted)
-            dropOldManifests(fs, path, current = cur.epoch + 1)
+            writeManifest(fs, path, m.epoch + 1, m.partCol, keep.sorted)
+            dropOldManifests(fs, path, current = m.epoch + 1)
           }
           // GC only what the PRE-sweep manifest already didn't list —
           // the dirs this sweep just expired stay until the next one
           // (deferred deletion, see scaladoc); under the lease these can
           // only be crash debris, never a live writer's swap
-          val preListed = cur.partitions.toSet
-          listPartitionDirs(fs, path, cur.partCol)
+          val preListed = m.partitions.toSet
+          listPartitionDirs(fs, path, m.partCol)
             .filterNot(preListed)
             .foreach(pv =>
-              fs.delete(new HPath(path, s"${cur.partCol}=$pv"), true))
+              fs.delete(new HPath(path, s"${m.partCol}=$pv"), true))
           drop
-        } finally releaseStoreLease(fs, path, lease)
+        }
     }
   }
 
   /** E27 under the store protocol: partition compaction of the KPI
-    * store AS THE LEASE HOLDER. `Sources.compactPartitioned` swaps live
-    * partition directories, so running it beside a committing writer
-    * could interleave with that writer's own dir swap — the same race
-    * family the leased recovery sweep and retention sweep close. The
-    * manifest is untouched (same rows, fewer files ⇒ the epoch does not
-    * move), so the epoch re-check under the lease only guards the
-    * born-stale window. Run it in a read-quiet window like any file-
-    * level compaction: a reader mid-scan of a compacted partition can
-    * lose files (the store's manifest isolation is partition-grain, not
+    * store in the commit section ([[commitSection]]).
+    * `Sources.compactPartitioned` replaces live partition directories
+    * ([[Sources.replaceDir]]), so running it beside a committing writer
+    * could interleave with that writer's own dir swap; a compaction a
+    * crash interrupted is finished by the leased recovery sweep
+    * ([[recoverUnderLease]]) before any later mutator or compaction runs.
+    * The manifest is untouched (same rows, fewer files ⇒ the epoch does
+    * not move). Run it in a read-quiet window like any file-level
+    * compaction: a reader mid-scan of a compacted partition can lose
+    * files (the store's manifest isolation is partition-grain, not
     * file-grain — the Delta-versioned-file-names trade we did not take). */
   def compactStore(spark: SparkSession, path: String,
       targetBytes: Long = 128L * 1024 * 1024): Map[String, (Int, Int)] = {
     val fs = Sources.fileSystem(spark, path)
     recoverUnderLease(fs, path)
     val epoch = latestManifest(fs, path).map(_.epoch).getOrElse(0L)
-    val lease = acquireStoreLease(fs, path, epoch)
-    try {
-      val now = latestManifest(fs, path).map(_.epoch).getOrElse(0L)
-      if (now != epoch)
-        throw new StoreConflictException(
-          s"store $path: manifest epoch moved $epoch -> $now before the " +
-            "compaction lease — aborted cleanly; retry.")
-      Sources.compactPartitioned(spark, path, targetBytes)
-    } finally releaseStoreLease(fs, path, lease)
+    commitSection(fs, path, epoch)(
+      _ => Sources.compactPartitioned(spark, path, targetBytes))
   }
 
   // ---- commit lease -----------------------------------------------------
@@ -1176,20 +1030,26 @@ object Pipeline {
     * epoch) as a crash and rolled its partitions back mid-commit
     * (round-9 review); now recovery only proceeds as the lease holder,
     * and a live writer turns the caller away clean
-    * ([[StoreLeaseHeldException]]) BEFORE any mutation. The lease is
-    * only taken when there is evidence of interrupted work, so the
-    * common no-crash path stays two `exists` probes. */
+    * ([[StoreLeaseHeldException]]) BEFORE any mutation. It finishes or
+    * rolls back each interrupted [[Sources.replaceDir]] of the store (the
+    * forget tombstone, a compaction's partitions), then the interrupted
+    * partition swap ([[restoreBackups]]). The lease is only taken when
+    * there is evidence of interrupted work, so the common no-crash path
+    * stays `exists` probes and one listing of the store root. */
   private[graft] def recoverUnderLease(fs: org.apache.hadoop.fs.FileSystem,
       path: String, ttlMs: Long = DefaultLeaseTtlMs): Unit = {
     import org.apache.hadoop.fs.{Path => HPath}
+    val (pending, pendingTmp, pendingOld) = tombstone(path)
+    val compactions = Sources.crashedCompactions(fs, new HPath(path))
     val evidence = fs.exists(new HPath(path + ".bak")) ||
-      fs.exists(new HPath(path + ".forget.pending.old")) ||
-      fs.exists(new HPath(path + ".forget.pending.inprogress"))
+      fs.exists(pendingOld) || fs.exists(pendingTmp) || compactions.nonEmpty
     if (!evidence) return
     val recEpoch = latestManifest(fs, path).map(_.epoch).getOrElse(0L)
     val l = acquireStoreLease(fs, path, recEpoch, ttlMs)
     try {
-      resolvePendingSwap(fs, path)
+      Sources.recoverReplace(fs, pending, pendingTmp, pendingOld)
+      compactions.foreach { case (live, staged, aside) =>
+        Sources.recoverReplace(fs, live, staged, aside) }
       restoreBackups(fs, path)
     } finally releaseStoreLease(fs, path, l)
   }
@@ -1448,12 +1308,13 @@ object Pipeline {
     }
   }
 
-  /** Crash-safe directory swap: keep the old dir as a backup until the new
-    * one is in place (a failure leaves either the old data or old-as-bak +
-    * new-in-temp — never nothing). Backups are dropped by the caller after
-    * ALL touched partitions have swapped. */
+  /** Crash-safe partition swap: move the old `dst` (if any) to `bak`,
+    * then `src` (if any) into `dst` — without `src` the partition is
+    * retired. A failure leaves either the old data or old-as-bak +
+    * new-in-temp, never nothing. Backups are dropped after ALL touched
+    * partitions have swapped (see [[publish]]). */
   private def swapDir(fs: org.apache.hadoop.fs.FileSystem,
-      src: org.apache.hadoop.fs.Path,
+      src: Option[org.apache.hadoop.fs.Path],
       dst: org.apache.hadoop.fs.Path,
       bak: org.apache.hadoop.fs.Path): Unit = {
     if (fs.exists(bak)) fs.delete(bak, true)
@@ -1461,7 +1322,9 @@ object Pipeline {
       if (!fs.exists(bak.getParent)) fs.mkdirs(bak.getParent)
       Sources.renameOrFail(fs, dst, bak)
     }
-    if (!fs.exists(dst.getParent)) fs.mkdirs(dst.getParent)
-    Sources.renameOrFail(fs, src, dst)
+    src.foreach { s =>
+      if (!fs.exists(dst.getParent)) fs.mkdirs(dst.getParent)
+      Sources.renameOrFail(fs, s, dst)
+    }
   }
 }

@@ -1379,4 +1379,94 @@ class PipelineSpec extends SparkSpec {
     assert(cats() === Set("C", "E"), "aside copy {F} restored and erased")
     assert(!fs.exists(pending) && !fs.exists(old))
   }
+
+  test("compactStore crash between its renames: the partition is " +
+      "recovered before the next merge, never read as empty") {
+    import org.apache.spark.sql.functions.{col, typedLit}
+    import org.apache.hadoop.fs.{FileSystem, Path => HPath}
+    import spark.implicits._
+    val d = dir()
+    val path = s"$d/compactcrash"
+    val schema = org.apache.spark.sql.types.StructType.fromDDL(
+      "category STRING, order_date STRING, total_orders BIGINT, " +
+        "data_sources ARRAY<STRING>")
+    val dataSchema = org.apache.spark.sql.types.StructType(
+      schema.filterNot(_.name == "order_date"))
+    def upsert(rows: (String, String, Long)*) =
+      Pipeline.upsertStore(spark, path, schema,
+        rows.toSeq.toDF("category", "order_date", "total_orders")
+          .withColumn("data_sources", typedLit(Seq("orders")))
+          .select(schema.fieldNames.map(col): _*),
+        Seq("category", "order_date"), Seq("total_orders"))
+    def rows() = Pipeline.readOrInit(spark, path, schema).collect()
+      .map(r => (r.getAs[String]("category"), r.getAs[String]("order_date"))
+        -> r.getAs[Long]("total_orders")).toMap
+    val fs = FileSystem.get(new java.net.URI(path),
+      spark.sparkContext.hadoopConfiguration)
+    upsert(("A", "2024-06-01", 1L), ("B", "2024-06-01", 2L),
+      ("A", "2024-06-02", 3L))
+
+    // Sources.compact of 06-01 crashed between its two renames: the
+    // compacted copy is complete in the staged dir, the old partition
+    // moved aside, and no live dir is left
+    val live = new HPath(s"$path/order_date=2024-06-01")
+    val staged = new HPath(s"$path/_order_date=2024-06-01.compact.tmp")
+    val aside = new HPath(s"$path/_order_date=2024-06-01.compact.bak")
+    spark.read.schema(dataSchema).parquet(live.toString).coalesce(1)
+      .write.parquet(staged.toString)
+    assert(fs.rename(live, aside))
+    // a reader fails loud instead of reading the listed date as empty
+    val e = intercept[IllegalStateException] {
+      Pipeline.readOrInit(spark, path, schema)
+    }
+    assert(e.getMessage.contains("2024-06-01"))
+    // the next merge recovers the partition first and merges against it:
+    // B's row on the merged date survives
+    upsert(("A", "2024-06-01", 10L))
+    assert(rows() === Map(("A", "2024-06-01") -> 10L,
+      ("B", "2024-06-01") -> 2L, ("A", "2024-06-02") -> 3L))
+    assert(!fs.exists(staged) && !fs.exists(aside))
+
+    // the staged copy never completed: the aside copy is restored, here by
+    // compactStore's own recovery before it compacts
+    assert(fs.rename(live, aside))
+    fs.mkdirs(staged)
+    Pipeline.compactStore(spark, path)
+    assert(rows() === Map(("A", "2024-06-01") -> 10L,
+      ("B", "2024-06-01") -> 2L, ("A", "2024-06-02") -> 3L))
+    assert(!fs.exists(staged) && !fs.exists(aside))
+    deleteRec(d)
+  }
+
+  test("readOrInit fails loud on a listed partition that no root holds") {
+    import org.apache.spark.sql.functions.{col, lit, typedLit}
+    import org.apache.hadoop.fs.{FileSystem, Path => HPath}
+    import spark.implicits._
+    val d = dir()
+    val path = s"$d/lostpart"
+    val schema = org.apache.spark.sql.types.StructType.fromDDL(
+      "order_date STRING, total_orders BIGINT, " +
+        "data_sources ARRAY<STRING>, last_updated STRING")
+    def upsert(stamp: String, rows: (String, Long)*) =
+      Pipeline.upsertStore(spark, path, schema,
+        rows.toSeq.toDF("order_date", "total_orders")
+          .withColumn("data_sources", typedLit(Seq("orders")))
+          .withColumn("last_updated", lit(stamp))
+          .select(schema.fieldNames.map(col): _*),
+        Seq("order_date"), Seq("total_orders", "last_updated"))
+    val fs = FileSystem.get(new java.net.URI(path),
+      spark.sparkContext.hadoopConfiguration)
+    upsert("t1", ("2024-06-01", 1L), ("2024-06-02", 2L))
+    upsert("t2", ("2024-06-01", 5L))
+    // the commit left a STALE .bak copy of 06-01 (stamped epoch 1): it is
+    // no copy of the epoch-2 snapshot, so losing the live dir loses 06-01
+    assert(fs.exists(new HPath(s"$path.bak/order_date=2024-06-01")))
+    assert(fs.delete(new HPath(s"$path/order_date=2024-06-01"), true))
+    val e = intercept[IllegalStateException] {
+      Pipeline.readOrInit(spark, path, schema)
+    }
+    assert(e.getMessage.contains("2024-06-01"))
+    assert(!e.getMessage.contains("2024-06-02"))
+    deleteRec(d)
+  }
 }
