@@ -31,6 +31,20 @@ private[graft] final class SchedulerCounters extends SparkListener {
 }
 
 object Bench {
+
+  /** Reference-surface 13-query subset (the round-1 baseline set in
+    * BASELINE.md): summed into the metric line's `subset` so the close
+    * and the judge read the subset-vs-baseline number straight off it
+    * instead of recomputing it from a detail file that later runs may
+    * replace. */
+  private[graft] val subsetNames = Set(
+    "a1_category_kpi", "a2_order_kpi_complete", "a3_order_kpi_items_only",
+    "a4_order_kpi_orders_only", "a6_null_check", "a8_distinct_keys",
+    "j3_ri_items_without_order", "j4_ri_items_without_product",
+    "m1_merge_category_kpi", "p1_filter_project",
+    "p3_anti_orders_without_items", "u1_union_parts_agg",
+    "w1_processing_date")
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = Session.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt)
@@ -60,17 +74,13 @@ object Bench {
       .map(_.split(",").map(_.trim).toSet)
     val passes = sys.env.get("SPARK_GRAFT_PASSES").map(_.toInt)
       .getOrElse(2).max(1)
-    val selected = SparkEntry.queries.toSeq
+    val selected = SparkEntry.byName.toSeq
       .filter { case (n, _) => only.forall(_.contains(n)) }
-    val overrides = SparkEntry.benchOverrides
-    val phased = SparkEntry.benchPhases
 
     final case class QRun(sec: Double, jobs: Long, stages: Long,
         tasks: Long, phases: Seq[(String, Double)], failed: Boolean,
         pass: Int)
-    def runOne(name: String, fn0: (SparkSession, String) =>
-        org.apache.spark.sql.DataFrame, pass: Int): QRun = {
-      val fn = overrides.getOrElse(name, fn0)
+    def runOne(name: String, spec: QuerySpec, pass: Int): QRun = {
       var failed = false
       // a crashing query must NEVER pass silently as a near-zero "best"
       // time: the failure is announced on stderr and counted into the
@@ -87,8 +97,13 @@ object Bench {
         }
       val (j0, s0, t0c) = snapshot()
       val t0 = System.nanoTime()
-      val phaseSecs = phased.get(name) match {
-        case Some(mk) =>
+      def counted(fn: (SparkSession, String) =>
+          org.apache.spark.sql.DataFrame): Seq[(String, Double)] = {
+        guarded(-1L)(fn(spark, sfDir).count())
+        Nil
+      }
+      val phaseSecs = spec.bench match {
+        case Some(QuerySpec.Phased(mk)) =>
           // phased query: the headline time is still first-byte-to-last
           // (phase sum + plan build); each phase timed separately
           guarded(Seq.empty[(String, () => Long)])(mk(spark, sfDir))
@@ -97,9 +112,8 @@ object Bench {
               guarded(-1L)(thunk())
               label -> (System.nanoTime() - p0) / 1e9
             }
-        case None =>
-          guarded(-1L)(fn(spark, sfDir).count())
-          Nil
+        case Some(QuerySpec.Substitute(body)) => counted(body)
+        case None => counted(spec.build)
       }
       val dt = (System.nanoTime() - t0) / 1e9
       val (j1, s1, t1c) = snapshot()
@@ -110,8 +124,8 @@ object Bench {
       QRun(dt, j1 - j0, s1 - s0, t1c - t0c, phaseSecs, failed, pass)
     }
     val baseRuns: Seq[(String, QRun)] =
-      for (p <- 1 to passes; (name, fn0) <- selected)
-        yield name -> runOne(name, fn0, p)
+      for (p <- 1 to passes; (name, spec) <- selected)
+        yield name -> runOne(name, spec, p)
     // Adaptive extra pass (BENCH_r08 lesson: min-of-2 lost four queries
     // to a busy co-tenant — both passes of s3 drew load and the official
     // artifact overstated 4×). A query earns ONE more pass when its base
@@ -134,11 +148,11 @@ object Bench {
     val BandTrigger = 1.5
     val extraRuns: Seq[(String, QRun)] = if (passes < 2) Nil else
       for {
-        (name, fn0) <- selected
+        (name, spec) <- selected
         secs = baseRuns.collect { case (`name`, r) if !r.failed => r.sec }
         if secs.size >= 2 && (secs.max > secs.min * SpreadTrigger ||
           idleBands.get(name).exists(b => secs.min > b * BandTrigger))
-      } yield name -> runOne(name, fn0, passes + 1)
+      } yield name -> runOne(name, spec, passes + 1)
     val runs: Seq[(String, QRun)] = baseRuns ++ extraRuns
     // headline per query = MIN across passes (its counts/phases ride along
     // so bench_counts stays consistent with the reported seconds)
@@ -165,17 +179,6 @@ object Bench {
       s"""\"$k\":{"jobs":${r.jobs},"stages":${r.stages},"tasks":${r.tasks}$ph}"""
     }.mkString("{", ",", "}")
     val total = best.map(_._2.sec).sum
-    // Reference-surface 13-query subset (the round-1 baseline set in
-    // BASELINE.md): summed here so the close and the judge read the
-    // subset-vs-baseline number straight off the metric line instead of
-    // recomputing it from a detail file that later runs may replace.
-    val subsetNames = Set(
-      "a1_category_kpi", "a2_order_kpi_complete", "a3_order_kpi_items_only",
-      "a4_order_kpi_orders_only", "a6_null_check", "a8_distinct_keys",
-      "j3_ri_items_without_order", "j4_ri_items_without_product",
-      "m1_merge_category_kpi", "p1_filter_project",
-      "p3_anti_orders_without_items", "u1_union_parts_agg",
-      "w1_processing_date")
     val subsetRuns = best.filter { case (n, _) => subsetNames.contains(n) }
     val subsetSum = subsetRuns.map(_._2.sec).sum
     // queries whose EVERY pass failed: announced in the metric line so a

@@ -1,7 +1,9 @@
 package graft
 import java.nio.file.{Files, Paths}
-/** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+/** Correctness dump: the build of each registered query
+  * ([[SparkEntry.registry]], through its `queries` view) → parquet, plus
+  * every oracle (`oracleSql`) as oracle_sql.json, for the DuckDB compare
+  * (`tools/check_oracle.py`). */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args

@@ -14,7 +14,8 @@ import org.apache.spark.sql.functions._
   *                                   l_returnflag 'R'→'returned')
   *   products    ← part.parquet     (p_partkey→id, p_type→category, …)
   *
-  * The same renames appear as CTEs inside every oracle SQL (SparkEntry), so
+  * The same renames appear as CTEs inside every oracle SQL (the `oracle` of
+  * each [[graft.QuerySpec]] in `graft/queries`), so
   * Spark and DuckDB agree column-for-column. These are pure projections —
   * Catalyst collapses them into the scan (column pruning reaches the parquet
   * footer), so the adapter costs nothing at any scale.
@@ -60,4 +61,10 @@ object RefShape {
       |p AS (SELECT p_partkey AS id, p_type AS category,
       |  p_retailprice AS cost, p_name AS name, p_brand AS brand FROM part)
       |""".stripMargin
+
+  /** The KPI stage's 3-way join ([[graft.kpi.Kpi.threeWayJoin]]) over the
+    * [[sqlCtes]] names. */
+  val sqlKpiJoin: String =
+    """FROM o JOIN oi ON o.order_id = oi.order_id
+      |JOIN p ON oi.product_id = p.id""".stripMargin
 }

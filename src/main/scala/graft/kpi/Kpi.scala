@@ -56,7 +56,8 @@ object Kpi {
     * whose denominator column is entirely null would abort the whole KPI
     * job. NULL is the reference's own avg()-over-nothing answer; the
     * oracle twins mirror with NULLIF. One definition for every consumer
-    * (this file + SparkEntry's m1 halves and compat arm). */
+    * (this file + [[graft.queries.PipelineQueries]]' m1 halves and a1c
+    * compat arm). */
   private[graft] def ratio(num: Column, den: Column): Column =
     when(den === 0, lit(null).cast("double")).otherwise(num / den)
 

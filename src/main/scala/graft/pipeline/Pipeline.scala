@@ -217,7 +217,12 @@ object Pipeline {
     * the content at `m.epoch`. No version ⇒ the partition was never
     * rewritten after `m.epoch` and the live dir is exact; a stale `.bak`
     * (stamp below the epoch) is never a candidate. A partition no root
-    * holds FAILS LOUD.
+    * holds FAILS LOUD, and so does one whose deciding version root is
+    * mid-replace: a `.hist` purge that crashed inside its
+    * [[Sources.replaceDir]] left a side dir of the partition there, and
+    * with the partition dir gone the resolution would silently fall
+    * through to a later version or to live (the aside copy is no answer
+    * either: it still holds the erased rows).
     *
     * The roots are listed once each (manifest partitions never cost a
     * probe apiece), in the direction partitions move — live, `.bak`,
@@ -231,8 +236,21 @@ object Pipeline {
     if (m.partitions.isEmpty)
       return spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-    def held(root: String) = listPartitionDirs(fs, root, partCol).toSet
-    val live = held(path)
+    // one listing per root: the partitions it holds, and those with a
+    // side dir of the `.hist` purge's replace in it
+    val pre = partCol + "="
+    def held(root: String): (Set[String], Set[String]) = {
+      val dir = new HPath(root)
+      val names = if (!fs.exists(dir)) Nil
+        else fs.listStatus(dir).toSeq.filter(_.isDirectory)
+          .map(_.getPath.getName)
+      (names.filter(_.startsWith(pre)).map(_.stripPrefix(pre)).toSet,
+        names.flatMap(n => Seq(HistStaged, HistAside).collectFirst {
+          case sfx if n.startsWith("_" + pre) && n.endsWith(sfx) =>
+            n.substring(pre.length + 1, n.length - sfx.length)
+        }).toSet)
+    }
+    val live = held(path)._1
     val bak = bakEpoch(fs, path).filter(_ >= m.epoch)
       .map(e => (e, s"$path.bak", held(s"$path.bak"))).toSeq
     val histRoot = new HPath(path + ".hist")
@@ -242,11 +260,22 @@ object Pipeline {
         .flatMap(s => s.getPath.getName.toLongOption).filter(_ >= m.epoch)
         .map(h => (h, s"$path.hist/$h", held(s"$path.hist/$h")))
     val versions = (hist ++ bak).sortBy(_._1)
-    val resolved = m.partitions.map { pv =>
+    // per partition, the first root that holds it or is replacing it
+    val deciding = m.partitions.map { pv =>
       pv -> versions.collectFirst {
-        case (_, root, parts) if parts(pv) => s"$root/$partCol=$pv"
+        case (_, root, (parts, replacing)) if parts(pv) || replacing(pv) =>
+          (root, replacing(pv))
       }
     }
+    val midReplace = deciding.collect {
+      case (pv, Some((root, true))) => s"$root/$pre$pv" }
+    if (midReplace.nonEmpty)
+      throw new IllegalStateException(
+        s"store $path: epoch ${m.epoch} is not readable — partition " +
+          s"version(s) ${midReplace.mkString(", ")} are mid-replace after " +
+          "a crashed .hist purge (the pending forget's rerun finishes it)")
+    val resolved = deciding.map { case (pv, root) =>
+      pv -> root.map { case (r, _) => s"$r/$pre$pv" } }
     val missing = resolved.collect { case (pv, None) if !live(pv) => pv }
     if (missing.nonEmpty)
       throw new IllegalStateException(

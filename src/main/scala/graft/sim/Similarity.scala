@@ -653,8 +653,9 @@ object Similarity {
     * Scale: training state is NumCells × dim doubles from a CONSTANT-size
     * sample — the driver-side collect is bounded metadata, same rationale
     * as the seeded variant's seed collect. A production build would sample
-    * by hash cutoff ([[graft.SparkEntry]] t5 shape) instead of id prefix;
-    * id prefix is used here because the oracle must name the same rows. */
+    * by hash cutoff (t5's shape, [[graft.queries.TextQueries]]) instead
+    * of id prefix; id prefix is used here because the oracle must name the
+    * same rows. */
   def trainCentroids(emb: DataFrame): Array[Array[Double]] = {
     val rows = emb.filter(col("vec_id") < TrainSample)
       .orderBy(col("vec_id")).select(col("vec_id"), col("embedding"))

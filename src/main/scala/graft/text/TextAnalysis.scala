@@ -11,8 +11,9 @@ import graft.functions.TextFunctions._
   * All four are single-pass, shuffle-free per-row projections (narrow
   * transformations) built from codegen'd higher-order functions — at 100 TB
   * they scan once, prune to the columns they touch, and never exchange.
-  * Each has an exact DuckDB oracle (`graft.SparkEntry.oracleSql`) built from
-  * the same constants in [[graft.functions.TextFunctions]].
+  * Each has an exact DuckDB oracle (its query's [[graft.QuerySpec]] in
+  * [[graft.queries.TextQueries]]) built from the same constants in
+  * [[graft.functions.TextFunctions]].
   */
 object TextAnalysis {
 

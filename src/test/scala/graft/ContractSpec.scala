@@ -21,16 +21,37 @@ class ContractSpec extends AnyFunSuite {
       s"oracles with no query (dead weight): ${o -- q}")
   }
 
+  test("the registry names every query once, and its views cover exactly it") {
+    // a name registered twice would leave the by-name views with only one
+    // of the two (building the registry throws on it; this pins the count)
+    val names = SparkEntry.registry.map(_.name)
+    assert(names.diff(names.distinct) === Seq.empty[String],
+      "query names registered more than once")
+    assert(SparkEntry.registry.size === 191)
+    assert(SparkEntry.queries.size === SparkEntry.registry.size)
+    assert(SparkEntry.oracleSql.size === SparkEntry.registry.size)
+  }
+
   test("bench overrides and phase decompositions name real queries") {
-    // a bench-only body for a query id that doesn't exist would silently
-    // bench nothing (overrides are looked up per selected query)
+    // A bench body now lives on its query's QuerySpec, so it names a real
+    // query by construction, and `bench` holds ONE Substitute or ONE
+    // Phased split, so a query can no longer be both substituted and
+    // phase-decomposed: the type rules both cases out. Left to pin: which
+    // queries Bench times differently from their build.
+    val bench = SparkEntry.registry.flatMap(q => q.bench.map(q.name -> _))
+    assert(bench.collect { case (n, _: QuerySpec.Substitute) => n }.toSet ===
+      Set("v1x_table_profile_approx", "v4x_histogram_approx"))
+    assert(bench.collect { case (n, _: QuerySpec.Phased) => n }.toSet ===
+      Set("m1_merge_category_kpi"))
+  }
+
+  test("ScaleSweep's queries and Bench's reference subset are registered") {
+    // an unregistered sweep name fails only when the sweep reaches it; an
+    // unregistered subset name silently shrinks the metric line's subset_n
     val q = SparkEntry.queries.keySet
-    assert((SparkEntry.benchOverrides.keySet -- q) === Set.empty[String])
-    assert((SparkEntry.benchPhases.keySet -- q) === Set.empty[String])
-    // a query can't be both substituted and phase-decomposed — the
-    // phased path wins in Bench and the override would be dead weight
-    assert((SparkEntry.benchOverrides.keySet &
-      SparkEntry.benchPhases.keySet) === Set.empty[String])
+    assert((graft.tools.ScaleSweep.SweepQueries.toSet -- q) === Set.empty[String])
+    assert(Bench.subsetNames.size === 13)
+    assert((Bench.subsetNames -- q) === Set.empty[String])
   }
 
   test("README documents every driver query id") {

@@ -1191,6 +1191,58 @@ class PipelineSpec extends SparkSpec {
     assert(!fs.exists(new HPath(histEp, s"_$pn.fk.old")))
   }
 
+  test("readAt fails loud on a version a crashed .hist purge left mid-replace") {
+    import org.apache.spark.sql.functions.{col, typedLit}
+    import org.apache.hadoop.fs.{FileSystem, Path => HPath}
+    import spark.implicits._
+    val d = dir()
+    val path = s"$d/fkmid"
+    val schema = org.apache.spark.sql.types.StructType.fromDDL(
+      "category STRING, order_date STRING, total_orders BIGINT, " +
+        "data_sources ARRAY<STRING>")
+    def upsert(rows: (String, String, Long)*) =
+      Pipeline.upsertStore(spark, path, schema,
+        rows.toSeq.toDF("category", "order_date", "total_orders")
+          .withColumn("data_sources", typedLit(Seq("orders")))
+          .select(schema.fieldNames.map(col): _*),
+        Seq("category", "order_date"), Seq("total_orders"),
+        partCol = "order_date")
+    def rowsOf(df: org.apache.spark.sql.DataFrame) =
+      df.select("category", "total_orders").as[(String, Long)].collect().toMap
+    val fs = FileSystem.get(new java.net.URI(path),
+      spark.sparkContext.hadoopConfiguration)
+
+    upsert(("A", "2024-06-01", 1L), ("B", "2024-06-01", 2L)) // epoch 1
+    upsert(("A", "2024-06-01", 10L))                          // epoch 2
+    upsert(("B", "2024-06-01", 20L))                          // epoch 3
+    // epoch 1's partition resolves from .hist/1; .bak holds epoch 2's
+    assert(rowsOf(Pipeline.readAt(spark, path, 1L, schema)) ===
+      Map("A" -> 1L, "B" -> 2L))
+
+    // a purge of .hist/1 crashed between its two renames: the partition
+    // dir is gone, its rewrite and its aside copy are both on disk
+    val hist1 = new HPath(s"$path.hist/1")
+    val part = new HPath(hist1, "order_date=2024-06-01")
+    spark.read.parquet(part.toString).coalesce(1)
+      .write.parquet(new HPath(hist1, "_order_date=2024-06-01.fk.tmp").toString)
+    assert(fs.rename(part, new HPath(hist1, "_order_date=2024-06-01.fk.old")))
+    // without the partition dir, epoch 1 would resolve to the .bak copy
+    // (epoch 2's A = 10): a wrong version, returned without an error
+    val e = intercept[IllegalStateException] {
+      Pipeline.readAt(spark, path, 1L, schema)
+    }
+    assert(e.getMessage.contains("mid-replace"))
+    // an epoch the crashed root does not decide still reads
+    assert(rowsOf(Pipeline.readAt(spark, path, 2L, schema)) ===
+      Map("A" -> 10L, "B" -> 2L))
+
+    // the next forget's purge preamble finishes the replace: epoch 1 reads
+    Pipeline.forgetKeys(spark, path, schema,
+      Seq("Z").toDF("category"), Seq("category"), partCol = "order_date")
+    assert(rowsOf(Pipeline.readAt(spark, path, 1L, schema)) ===
+      Map("A" -> 1L, "B" -> 2L))
+  }
+
   test("manifest row tally tracks the true store count through merge/forget/sweep") {
     import org.apache.spark.sql.functions.{col, typedLit}
     import spark.implicits._
