@@ -6,7 +6,7 @@ import java.nio.file.{Files, Paths}
   * (`tools/check_oracle.py`). */
 object Verify {
   def main(args: Array[String]): Unit = {
-    val Array(sfDir, outDir) = args
+    val Array(sfDir, outDir) = args: @unchecked
     val spark = Session.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt)
     new java.io.File(outDir).mkdirs()
     // Fail LOUD: a query that errors leaves a visible marker file next to

@@ -218,9 +218,9 @@ object Sources {
     * a scan's task count (and the namenode/listing load) is driven by file
     * COUNT, not bytes. Rewrites the table to ~`targetBytes` files via one
     * round-robin repartition, and puts the rewrite in place with
-    * [[replaceDir]]; the side dirs are `_<name>.compact.tmp` and
-    * `_<name>.compact.bak`, and [[crashedCompactions]] finds what a crash
-    * left of them.
+    * [[replaceDir]]; the side dirs are `.<name>.compact.tmp` and
+    * `.<name>.compact.bak` ([[sideDir]]), and [[crashedCompactions]] finds
+    * what a crash left of them.
     *
     * Sizing uses the real on-disk byte sum from the FileSystem listing —
     * not a row-count heuristic — so compression ratio carries over.
@@ -244,11 +244,6 @@ object Sources {
       buf.toSeq
     }
     val table = new Path(path)
-    // the side dirs are UNDERSCORE-prefixed siblings, which
-    // compactPartitioned never takes for partitions. Spark's partition
-    // discovery skips them only when the name has no `=`: beside a store
-    // partition (`_order_date=X.compact.tmp`) a reader of the store fails
-    // loud (conflicting partition columns) while they exist
     val before = replaceDir(fs, table, sideDir(table, CompactStaged),
         sideDir(table, CompactAside)) { tmp =>
       val before = dataFiles(table)
@@ -323,10 +318,22 @@ object Sources {
     ()
   }
 
-  /** `_<name><suffix>` beside `live`: the side-dir naming of the replaces
-    * that live inside a listed directory. */
+  /** `.<name><suffix>` beside `live`: the side-dir naming of every
+    * replace. Spark's partition discovery skips every `.` name, where it
+    * would read a `_` name that contains `=` (`_order_date=X.compact.tmp`)
+    * as a partition and fail the scan of the whole store. */
   private[graft] def sideDir(live: Path, suffix: String): Path =
-    new Path(live.getParent, s"_${live.getName}$suffix")
+    new Path(live.getParent, s".${live.getName}$suffix")
+
+  /** The name of the live dir whose [[sideDir]] is named `name`, with
+    * either suffix; None for any other name. */
+  private[graft] def sideDirOwner(name: String, stagedSuffix: String,
+      asideSuffix: String): Option[String] =
+    Seq(stagedSuffix, asideSuffix).collectFirst {
+      case sfx if name.startsWith(".") && name.endsWith(sfx) &&
+          name.length > sfx.length + 1 =>
+        name.substring(1, name.length - sfx.length)
+    }
 
   /** `(live, staged, aside)` of every replace under `dir` that left a
     * [[sideDir]] named with either suffix — the arguments of
@@ -335,13 +342,11 @@ object Sources {
       stagedSuffix: String, asideSuffix: String): Seq[(Path, Path, Path)] = {
     val names = if (!fs.exists(dir)) Nil
       else fs.listStatus(dir).toSeq.map(_.getPath.getName)
-    names.flatMap(n => Seq(stagedSuffix, asideSuffix).collectFirst {
-      case sfx if n.startsWith("_") && n.endsWith(sfx) =>
-        n.substring(1, n.length - sfx.length)
-    }).distinct.map { name =>
-      val live = new Path(dir, name)
-      (live, sideDir(live, stagedSuffix), sideDir(live, asideSuffix))
-    }
+    names.flatMap(sideDirOwner(_, stagedSuffix, asideSuffix)).distinct
+      .map { name =>
+        val live = new Path(dir, name)
+        (live, sideDir(live, stagedSuffix), sideDir(live, asideSuffix))
+      }
   }
 
   /** Hadoop `FileSystem.rename` reports failure by RETURNING FALSE, not
@@ -364,10 +369,9 @@ object Sources {
     fs.listStatus(new Path(path)).toSeq
       .filter { s =>
         val n = s.getPath.getName
-        // real hive partition dirs only — skip `_`/`.` work dirs (e.g. a
-        // crashed run's `_<part>.compact.tmp`, which also contains '=')
-        s.isDirectory && n.contains("=") &&
-          !n.startsWith("_") && !n.startsWith(".")
+        // real hive partition dirs only — skip the `.` side dirs (e.g. a
+        // crashed run's `.<part>.compact.tmp`, which also contains '=')
+        s.isDirectory && n.contains("=") && !n.startsWith(".")
       }
       .map(s => s.getPath.getName ->
         compact(spark, s.getPath.toString, targetBytes))

@@ -155,7 +155,7 @@ object Kpi {
     // grouping_id sets the bit of each column a row's set leaves out
     val all = (1 << grouped.size) - 1
     def only(i: Int) = all - (1 << (grouped.size - 1 - i))
-    val passed = (cat.columns.tail ++ ord.columns.diff(countNames))
+    val passed = (cat.columns.tail ++ ord.columns.diff(countNames)).toSeq
       .map(c => max(when(col("gid").isin(only(0), all), col(c))).as(c))
     val rows = joined.groupingSets(Nil +: grouped.map(Seq(_)), grouped: _*)
       .agg(grouping_id().as("gid"), categoryAggs ++ orderMeasures: _*)

@@ -1,6 +1,6 @@
 package graft.multimodal
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.catalyst.encoders.RowEncoder
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -162,7 +162,7 @@ object Multimodal {
     * is lazy, so the cache outlives this call: the driver harness clears
     * caches per query; other callers should clearCache/unpersist after
     * materializing. */
-  def mediaSummary(spark: SparkSession, docs: DataFrame): DataFrame = {
+  def mediaSummary(docs: DataFrame): DataFrame = {
     val media = mediaCorpus(docs).persist()
     val decoded = decodeFeatures(media)
     val frames = sampleFrames(media, stride = 2)
@@ -194,7 +194,7 @@ object Multimodal {
     * shuffle until the fingerprint groupBy — exactly d1's one-shuffle
     * dedup plan at frame grain); with real codecs the fingerprint would
     * be a perceptual hash from [[MediaCodec]], same plan. */
-  def frameDedup(spark: SparkSession, docs: DataFrame): DataFrame = {
+  def frameDedup(docs: DataFrame): DataFrame = {
     val frames = sampleFrames(mediaCorpus(docs), stride = 1)
     frames
       .groupBy(col("frame_md5"))

@@ -127,15 +127,14 @@ object Pipeline {
     * dirs would otherwise infer `order_date=2024-06-01` as DATE, not
     * STRING).
     *
-    * Manifest-aware snapshot read: when the store carries a commit
-    * manifest ([[upsertStore]] writes one per batch), the latest one is
-    * resolved as [[readAt]] resolves any epoch ([[resolveAt]]): only
-    * manifest-listed partitions are visible, a swap in flight over this
-    * epoch is read from its `.bak` copies, and a listed partition that no
-    * root holds fails loud. A reader therefore sees exactly the last
-    * COMMITTED batch, also concurrently with a crashed multi-date swap.
-    * Stores without a manifest (validated tables, pre-manifest stores)
-    * read raw, as before.
+    * Snapshot read: the latest commit manifest ([[upsertStore]] writes
+    * one per batch) is resolved as [[readAt]] resolves any epoch
+    * ([[resolveAt]]): only manifest-listed partitions are visible, a swap
+    * in flight over this epoch is read from its `.bak` copies, and a
+    * listed partition that no root holds fails loud. A reader therefore
+    * sees exactly the last COMMITTED batch, also concurrently with a
+    * crashed multi-date swap. A store with no manifest is epoch 0 with no
+    * partitions: whatever dirs a crashed first commit left are not read.
     *
     * Concurrency contract vs a LIVE writer (writers themselves are
     * serialized by the single-flight runner, T4): resolution re-reads the
@@ -156,13 +155,11 @@ object Pipeline {
     var attempts = 0
     while (true) {
       val before = latestManifest(fs, path)
-      val resolved = before.fold(rawReadOrInit(spark, path, schema))(
-        resolveAt(spark, fs, path, schema, _))
+      val resolved = resolveAt(spark, fs, path, schema, before)
       // re-validate: a live writer may have committed between the manifest
       // read and the listings inside resolveAt; equal epochs on both sides
       // pin the whole plan to one snapshot
-      if (latestManifest(fs, path).map(_.epoch) == before.map(_.epoch))
-        return resolved
+      if (latestManifest(fs, path).epoch == before.epoch) return resolved
       attempts += 1
       if (attempts >= 5)
         throw new IllegalStateException(
@@ -171,22 +168,6 @@ object Pipeline {
             "reader can plan")
     }
     sys.error("unreachable")
-  }
-
-  private def rawReadOrInit(spark: SparkSession, path: String,
-      schema: StructType): DataFrame = {
-    // ONLY a genuinely absent store (first run) may fall back to the
-    // empty frame. A blanket Try here once swallowed transient FS errors
-    // (S3 throttle, listing hiccup) as "empty store" — the merge would
-    // then run against nothing and the partition swap would silently and
-    // durably DELETE every pre-existing row of the touched dates whose
-    // key wasn't in that batch. Existence is checked explicitly; any
-    // other failure propagates and aborts the batch (the safe outcome).
-    val fs = Sources.fileSystem(spark, path)
-    if (!fs.exists(new org.apache.hadoop.fs.Path(Sources.normalizeScheme(path))))
-      spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-    else spark.read.schema(schema).parquet(path)
   }
 
   /** E59: store TIME TRAVEL — read the store exactly as it was at
@@ -204,7 +185,7 @@ object Pipeline {
     resolveAt(spark, fs, path, schema, manifestAt(fs, path, epoch).getOrElse(
       throw new IllegalStateException(
         s"store $path: no manifest for epoch $epoch — it is outside the " +
-          s"$manifestsToKeep-epoch time-travel window or was never " +
+          s"$ManifestsToKeep-epoch time-travel window or was never " +
           "committed")))
   }
 
@@ -232,23 +213,21 @@ object Pipeline {
       fs: org.apache.hadoop.fs.FileSystem, path: String, schema: StructType,
       m: StoreManifest): DataFrame = {
     import org.apache.hadoop.fs.{Path => HPath}
-    val partCol = m.partCol
     if (m.partitions.isEmpty)
       return spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
     // one listing per root: the partitions it holds, and those with a
     // side dir of the `.hist` purge's replace in it
-    val pre = partCol + "="
+    val pre = PartCol + "="
+    def values(names: Seq[String]) =
+      names.filter(_.startsWith(pre)).map(_.stripPrefix(pre)).toSet
     def held(root: String): (Set[String], Set[String]) = {
       val dir = new HPath(root)
       val names = if (!fs.exists(dir)) Nil
         else fs.listStatus(dir).toSeq.filter(_.isDirectory)
           .map(_.getPath.getName)
-      (names.filter(_.startsWith(pre)).map(_.stripPrefix(pre)).toSet,
-        names.flatMap(n => Seq(HistStaged, HistAside).collectFirst {
-          case sfx if n.startsWith("_" + pre) && n.endsWith(sfx) =>
-            n.substring(pre.length + 1, n.length - sfx.length)
-        }).toSet)
+      (values(names),
+        values(names.flatMap(Sources.sideDirOwner(_, HistStaged, HistAside))))
     }
     val live = held(path)._1
     val bak = bakEpoch(fs, path).filter(_ >= m.epoch)
@@ -283,15 +262,15 @@ object Pipeline {
           s"partition(s) ${missing.mkString(", ")} are held by no live, " +
           ".bak or .hist dir (expired by retention, or lost)")
     val livePv = resolved.collect { case (pv, None) => pv }
-    val dataSchema = StructType(schema.filterNot(_.name == partCol))
+    val dataSchema = StructType(schema.filterNot(_.name == PartCol))
     val liveDf =
       if (livePv.isEmpty) Nil
       else Seq(spark.read.schema(schema).parquet(path)
-        .where(col(partCol).isin(livePv: _*)))
+        .where(col(PartCol).isin(livePv: _*)))
     val versioned = resolved.collect { case (pv, Some(dir)) =>
       spark.read.schema(dataSchema).parquet(dir)
-        .withColumn(partCol, lit(pv))
-        .select(schema.fieldNames.map(col): _*)
+        .withColumn(PartCol, lit(pv))
+        .select(schema.fieldNames.toSeq.map(col): _*)
     }
     (liveDf ++ versioned).reduce(_ unionByName _)
   }
@@ -350,7 +329,7 @@ object Pipeline {
         .withColumn("order_date", lit(processingDate))
         .withColumn("data_sources", typedLit(sources))
         .withColumn("last_updated", lit(now))
-        .select(schema.fieldNames.map(col): _*)
+        .select(schema.fieldNames.toSeq.map(col): _*)
       upsertStore(spark, s"$storeBase/$store", schema, updates, keys,
         schema.fieldNames.toSeq.diff(keys :+ "data_sources"))
     }.getOrElse(0L)
@@ -405,8 +384,7 @@ object Pipeline {
     */
   private[graft] def upsertStore(spark: SparkSession, path: String,
       schema: StructType, updates: DataFrame, keys: Seq[String],
-      fields: Seq[String], partCol: String = "order_date",
-      expectedEpoch: Option[Long] = None,
+      fields: Seq[String], expectedEpoch: Option[Long] = None,
       leaseTtlMs: Long = DefaultLeaseTtlMs): Long = {
     val fs = Sources.fileSystem(spark, path)
     // a crashed forgetKeys leaves a durable tombstone ([[forgetKeys]]'s
@@ -414,7 +392,7 @@ object Pipeline {
     // The recovery sweep inside runs UNDER the commit lease
     // ([[recoverUnderLease]]) — a live holder's in-flight swap must turn
     // this batch away clean here, not be "recovered" out from under it.
-    completePendingForget(spark, path, schema, partCol)
+    completePendingForget(spark, path, schema)
 
     // Optimistic concurrency (the Delta conflict-detection analogue over
     // the epoch manifest): the merge below is read-modify-write against
@@ -431,8 +409,8 @@ object Pipeline {
     // writer away clean ([[StoreLeaseHeldException]]), a crashed holder is
     // taken over by epoch/TTL fencing, and the write-once manifest publish
     // remains the final backstop beneath all of it.
-    val planEpoch = latestManifest(fs, path).map(_.epoch).getOrElse(0L)
-    val baseEpoch = expectedEpoch.getOrElse(planEpoch)
+    val base = latestManifest(fs, path)
+    val baseEpoch = expectedEpoch.getOrElse(base.epoch)
     checkEpoch(fs, path, baseEpoch, "before planning")
 
     val rel = updates.queryExecution.optimizedPlan match {
@@ -440,24 +418,23 @@ object Pipeline {
       case p => throw new IllegalArgumentException(
         s"store $path: updates must be a local frame, not ${p.nodeName}")
     }
-    val at = rel.schema.fieldIndex(partCol)
+    val at = rel.schema.fieldIndex(PartCol)
     val dates = rel.data.map(r => Option(r.getUTF8String(at)).map(_.toString)
       .orNull).distinct.sorted
     // new dates merge against an empty local target, which the optimizer
     // folds away: one shuffle-free plan for every such batch, and no
     // listing of the store (readOrInit lists every partition dir)
-    val stored = dates.filter(
-      committedPartitions(fs, path, partCol, latestManifest(fs, path)).toSet)
+    val stored = dates.filter(base.partitions.toSet)
     val target =
       if (stored.isEmpty) spark.createDataFrame(
         java.util.Collections.emptyList[org.apache.spark.sql.Row], schema)
-      else readOrInit(spark, path, schema).where(col(partCol).isin(stored: _*))
+      else readOrInit(spark, path, schema).where(col(PartCol).isin(stored: _*))
     // ONE partition: when the touched dates are new the join with the
     // empty target is dropped, and a multi-split local relation would then
     // write one file per split into the partition
     val merged = KpiMerge.merge(target, updates.coalesce(1),
       keys, fields, Some("data_sources"))
-      .select(schema.fieldNames.map(col): _*)
+      .select(schema.fieldNames.toSeq.map(col): _*)
 
     // PER-WRITER staging dir (round-9 review): a shared `.tmp` let a
     // second writer clobber the live lease holder's staged commit data
@@ -466,9 +443,9 @@ object Pipeline {
     val tmp = stagingDir(path)
     // the merge plan reads the store partitions being replaced, so write
     // to the temp dir first (finishes the read), then swap directories
-    merged.write.mode("overwrite").partitionBy(partCol).parquet(tmp)
+    merged.write.mode("overwrite").partitionBy(PartCol).parquet(tmp)
     commitSection(fs, path, baseEpoch, leaseTtlMs, staged = Some(tmp))(
-      publish(fs, path, tmp, partCol, dates, baseEpoch, _, leaseTtlMs))
+      publish(fs, path, tmp, dates, baseEpoch, _, leaseTtlMs))
   }
 
   /** Abort CLEAN ([[StoreConflictException]]) unless the store's latest
@@ -476,7 +453,7 @@ object Pipeline {
     * of every mutator. */
   private def checkEpoch(fs: org.apache.hadoop.fs.FileSystem, path: String,
       expected: Long, stage: String): Unit = {
-    val now = latestManifest(fs, path).map(_.epoch).getOrElse(0L)
+    val now = latestManifest(fs, path).epoch
     if (now != expected)
       throw new StoreConflictException(
         s"store $path: manifest epoch moved $expected -> $now ($stage)" +
@@ -530,7 +507,7 @@ object Pipeline {
     * 1–2: bak-preferred; uncommitted new dates unlisted) or epoch N+1
     * fully readable (steps 3–4), never a torn mix. */
   private def publish(fs: org.apache.hadoop.fs.FileSystem, path: String,
-      tmp: String, partCol: String, dates: Seq[String], baseEpoch: Long,
+      tmp: String, dates: Seq[String], baseEpoch: Long,
       lease: StoreLease, ttlMs: Long): Long = {
     import org.apache.hadoop.fs.{Path => HPath}
     // orphan staging dirs from crashed writers (unique-named): GC'd
@@ -539,48 +516,44 @@ object Pipeline {
     // than the TTL loses its swap to renameOrFail and aborts clean —
     // the same bound every other liveness decision uses)
     sweepOrphanStaging(fs, path, exclude = tmp, ttlMs = ttlMs)
-    val curManifest = latestManifest(fs, path)
-    val baseParts = committedPartitions(fs, path, partCol, curManifest)
-    val present = listPartitionDirs(fs, tmp, partCol).toSet
+    val cur = latestManifest(fs, path)
+    val present = listPartitionDirs(fs, tmp).toSet
     val retired = dates.filterNot(present)
-    def rowsIn(parts: Seq[String]) =
-      parts.map(dt => footerRows(fs, new HPath(s"$path/$partCol=$dt"))).sum
     // post-commit store size in O(touched), not O(store): the previous
-    // total rides the manifest (#rows; one count of every committed
-    // partition on a legacy/swept manifest); the committed partitions
-    // (their live dirs: recovery ran before planning and the lease +
-    // epoch check pin them) and the staged replacement are counted from
-    // parquet footers on the driver — the result is carried forward on
-    // the new manifest, so per-batch cost never grows with store age
-    val prevTotal = curManifest.flatMap(_.rows).getOrElse(rowsIn(baseParts))
-    val prevTouched = rowsIn(dates.filter(baseParts.toSet))
-    val newTotal = prevTotal - prevTouched + footerRows(fs, new HPath(tmp))
+    // total rides the manifest (#rows); the committed partitions (their
+    // live dirs: recovery ran before planning and the lease + epoch check
+    // pin them) and the staged replacement are counted from parquet
+    // footers on the driver — the result is carried forward on the new
+    // manifest, so per-batch cost never grows with store age
+    val newTotal = cur.rows -
+      partitionRows(fs, path, dates.filter(cur.partitions.toSet)) +
+      footerRows(fs, new HPath(tmp))
     writeBakEpoch(fs, path, baseEpoch)
     dates.foreach { dt =>
-      swapDir(fs, Option.when(present(dt))(new HPath(s"$tmp/$partCol=$dt")),
-        new HPath(s"$path/$partCol=$dt"),
+      swapDir(fs, Option.when(present(dt))(new HPath(s"$tmp/$PartCol=$dt")),
+        new HPath(s"$path/$PartCol=$dt"),
         // backups live OUTSIDE the store dir — a `order_date=X.bak` dir
         // inside it would be picked up by partition discovery
-        new HPath(s"$path.bak/$partCol=$dt"))
+        new HPath(s"$path.bak/$PartCol=$dt"))
     }
     fs.delete(new HPath(tmp), true)
     // fencing check: a takeover (stale-lease break by a writer that
     // judged us dead) must stop us HERE — publishing after being
     // fenced out could overwrite the successor's commit
     verifyStoreLease(fs, path, lease)
-    writeManifest(fs, path, baseEpoch + 1, partCol,
-      (baseParts.diff(retired) ++ dates.filter(present)).distinct.sorted,
-      rows = Some(newTotal))
+    writeManifest(fs, path, baseEpoch + 1,
+      (cur.partitions.diff(retired) ++ dates.filter(present)).distinct.sorted,
+      newTotal)
     dropOldManifests(fs, path, current = baseEpoch + 1)
     // no `.bak` delete here — see step 4 of the commit protocol above
     newTotal
   }
 
-  /** The committed snapshot's partitions (a pre-manifest store's dirs). */
-  private def committedPartitions(fs: org.apache.hadoop.fs.FileSystem,
-      path: String, partCol: String, manifest: Option[StoreManifest])
-      : Seq[String] =
-    manifest.map(_.partitions).getOrElse(listPartitionDirs(fs, path, partCol))
+  /** Rows in the store's live partition dirs of `parts`, from footers. */
+  private def partitionRows(fs: org.apache.hadoop.fs.FileSystem,
+      path: String, parts: Seq[String]): Long =
+    parts.map(pv =>
+      footerRows(fs, new org.apache.hadoop.fs.Path(s"$path/$PartCol=$pv"))).sum
 
   /** Rows in the parquet data files under `dir`, summed from their footers
     * on the driver (no Spark job); `_`/`.`-prefixed entries are skipped as
@@ -644,11 +617,10 @@ object Pipeline {
     *         current snapshot)
     */
   def forgetKeys(spark: SparkSession, path: String, schema: StructType,
-      keyValues: DataFrame, keys: Seq[String],
-      partCol: String = "order_date"): (Long, Long) = {
+      keyValues: DataFrame, keys: Seq[String]): (Long, Long) = {
     import org.apache.hadoop.fs.{Path => HPath}
-    require(!keys.contains(partCol),
-      s"forget keys must be data columns, not the partition column $partCol")
+    require(!keys.contains(PartCol),
+      s"forget keys must be data columns, not the partition column $PartCol")
     val fs = Sources.fileSystem(spark, path)
     // finish a tombstone publish a crash left half-swapped BEFORE looking
     // at the pending dir, so the read below always sees a complete record;
@@ -667,11 +639,11 @@ object Pipeline {
         if (pend.columns.toSet == keys.toSet)
           requested.unionByName(pend.select(keys.map(col): _*))
         else {
-          forgetKeys(spark, path, schema, pend, pend.columns.toSeq, partCol)
+          forgetKeys(spark, path, schema, pend, pend.columns.toSeq)
           requested
         }
       }
-    val baseEpoch = latestManifest(fs, path).map(_.epoch).getOrElse(0L)
+    val baseEpoch = latestManifest(fs, path).epoch
     // durable tombstone BEFORE any mutation, published by rename-aside
     // (never delete-then-rename — a crash between those two would lose a
     // still-pending prior erasure). Size is request-grain (the distinct
@@ -690,23 +662,22 @@ object Pipeline {
       val epoch =
         if (deleted == 0L) baseEpoch
         else {
-          val dates = touched.select(col(partCol)).distinct()
+          val dates = touched.select(col(PartCol)).distinct()
             .collect().map(_.getString(0)).sorted.toSeq
           val tmp = stagingDir(path) // per-writer, as in upsertStore
           // a fully-emptied partition writes no dir — publish RETIRES it
-          snapshot.where(col(partCol).isin(dates: _*))
+          snapshot.where(col(PartCol).isin(dates: _*))
             .join(kv, keys, "left_anti")
-            .select(schema.fieldNames.map(col): _*)
-            .write.mode("overwrite").partitionBy(partCol).parquet(tmp)
+            .select(schema.fieldNames.toSeq.map(col): _*)
+            .write.mode("overwrite").partitionBy(PartCol).parquet(tmp)
           commitSection(fs, path, baseEpoch, staged = Some(tmp)) { lease =>
-            publish(fs, path, tmp, partCol, dates, baseEpoch, lease,
-              DefaultLeaseTtlMs)
+            publish(fs, path, tmp, dates, baseEpoch, lease, DefaultLeaseTtlMs)
             // erasure > deferred isolation: this batch's .bak copies carry
             // the forgotten rows — delete them NOW instead of leaving them
             // for the next batch's archive sweep (which would re-introduce
             // the rows into .hist)
             dates.foreach { dt =>
-              fs.delete(new HPath(s"$path.bak/$partCol=$dt"), true)
+              fs.delete(new HPath(s"$path.bak/$PartCol=$dt"), true)
             }
           }
           baseEpoch + 1
@@ -715,7 +686,7 @@ object Pipeline {
       // finished by a rerun. Archived dirs carry the data columns only
       // (the partition value is the dir name), so read with the explicit
       // data schema and rewrite in place when the keys appear.
-      val dataSchema = StructType(schema.filterNot(_.name == partCol))
+      val dataSchema = StructType(schema.filterNot(_.name == PartCol))
       val histRoot = new HPath(path + ".hist")
       if (fs.exists(histRoot)) {
         for (ep <- fs.listStatus(histRoot).toSeq if ep.isDirectory) {
@@ -725,7 +696,7 @@ object Pipeline {
             .foreach { case (live, staged, aside) =>
               Sources.recoverReplace(fs, live, staged, aside) }
           for (pd <- fs.listStatus(ep.getPath).toSeq
-               if pd.isDirectory && pd.getPath.getName.startsWith(partCol + "=")) {
+               if pd.isDirectory && pd.getPath.getName.startsWith(PartCol + "=")) {
             val dir = pd.getPath.toString
             val h = spark.read.schema(dataSchema).parquet(dir)
             if (h.join(kv, keys, "left_semi").limit(1).count() > 0)
@@ -765,13 +736,13 @@ object Pipeline {
     * store, so erasure completes without anyone re-issuing the request.
     * No-op when no tombstone exists. */
   private[graft] def completePendingForget(spark: SparkSession, path: String,
-      schema: StructType, partCol: String = "order_date"): Unit = {
+      schema: StructType): Unit = {
     val fs = Sources.fileSystem(spark, path)
     recoverUnderLease(fs, path)
     val pending = tombstone(path)._1
     if (fs.exists(pending)) {
       val pend = spark.read.parquet(pending.toString)
-      forgetKeys(spark, path, schema, pend, pend.columns.toSeq, partCol)
+      forgetKeys(spark, path, schema, pend, pend.columns.toSeq)
       ()
     }
   }
@@ -795,51 +766,39 @@ object Pipeline {
     * by deferring `.bak` deletion, closed here the same way. The next
     * sweep (or any later one) finds them unlisted and removes them.
     *
-    * The manifest is authoritative for the partition column; a caller-
-    * supplied `partCol` that disagrees fails loud rather than silently
-    * comparing cutoffs against the wrong column's values.
-    *
     * @return the partition values expired from the manifest
     */
   def retentionSweep(spark: SparkSession, path: String,
-      keepFrom: String, partCol: String = "order_date"): Seq[String] = {
+      keepFrom: String): Seq[String] = {
     import org.apache.hadoop.fs.{Path => HPath}
     val fs = Sources.fileSystem(spark, path)
     recoverUnderLease(fs, path)
-    latestManifest(fs, path) match {
-      case None => Nil // pre-manifest store: nothing committed to expire
-      case Some(m) =>
-        require(m.partCol == partCol,
-          s"store $path is partitioned by ${m.partCol}, not $partCol — " +
-            "retention cutoffs would compare against the wrong column")
-        // the whole mutating section (manifest bump + unlisted-dir GC)
-        // runs in the commit section: an UNLISTED dir is otherwise
-        // indistinguishable from a live writer's freshly swapped
-        // new-date partition whose manifest hasn't published yet —
-        // unguarded GC would delete it out from under the commit (the
-        // round-9 recovery-sweep finding, retention flavor). A live
-        // writer turns retention away clean; retry after it commits.
-        commitSection(fs, path, m.epoch) { _ =>
-          val (keep, drop) = m.partitions.partition(_ >= keepFrom)
-          if (drop.nonEmpty) {
-            // rows deliberately absent: the expired partitions' counts
-            // are not worth a scan of data being thrown away — the next
-            // merge pays one full-count fallback and re-establishes the
-            // tally
-            writeManifest(fs, path, m.epoch + 1, m.partCol, keep.sorted)
-            dropOldManifests(fs, path, current = m.epoch + 1)
-          }
-          // GC only what the PRE-sweep manifest already didn't list —
-          // the dirs this sweep just expired stay until the next one
-          // (deferred deletion, see scaladoc); under the lease these can
-          // only be crash debris, never a live writer's swap
-          val preListed = m.partitions.toSet
-          listPartitionDirs(fs, path, m.partCol)
-            .filterNot(preListed)
-            .foreach(pv =>
-              fs.delete(new HPath(path, s"${m.partCol}=$pv"), true))
-          drop
-        }
+    val m = latestManifest(fs, path)
+    // the whole mutating section (manifest bump + unlisted-dir GC) runs in
+    // the commit section: an UNLISTED dir is otherwise indistinguishable
+    // from a live writer's freshly swapped new-date partition whose
+    // manifest hasn't published yet — unguarded GC would delete it out
+    // from under the commit (the round-9 recovery-sweep finding, retention
+    // flavor). A live writer turns retention away clean; retry after it
+    // commits.
+    commitSection(fs, path, m.epoch) { _ =>
+      val (keep, drop) = m.partitions.partition(_ >= keepFrom)
+      if (drop.nonEmpty) {
+        // the expired dirs are still live (deleted by the next sweep), so
+        // their footers give the rows leaving the tally
+        writeManifest(fs, path, m.epoch + 1, keep.sorted,
+          m.rows - partitionRows(fs, path, drop))
+        dropOldManifests(fs, path, current = m.epoch + 1)
+      }
+      // GC only what the PRE-sweep manifest already didn't list — the dirs
+      // this sweep just expired stay until the next one (deferred
+      // deletion, see scaladoc); under the lease these can only be crash
+      // debris, never a live writer's swap
+      val preListed = m.partitions.toSet
+      listPartitionDirs(fs, path)
+        .filterNot(preListed)
+        .foreach(pv => fs.delete(new HPath(path, s"$PartCol=$pv"), true))
+      drop
     }
   }
 
@@ -859,8 +818,7 @@ object Pipeline {
       targetBytes: Long = 128L * 1024 * 1024): Map[String, (Int, Int)] = {
     val fs = Sources.fileSystem(spark, path)
     recoverUnderLease(fs, path)
-    val epoch = latestManifest(fs, path).map(_.epoch).getOrElse(0L)
-    commitSection(fs, path, epoch)(
+    commitSection(fs, path, latestManifest(fs, path).epoch)(
       _ => Sources.compactPartitioned(spark, path, targetBytes))
   }
 
@@ -947,7 +905,7 @@ object Pipeline {
         val age = try
           System.currentTimeMillis() - fs.getFileStatus(p).getModificationTime
         catch { case _: java.io.IOException => 0L } // vanished: retry loop
-        val curEpoch = latestManifest(fs, path).map(_.epoch).getOrElse(0L)
+        val curEpoch = latestManifest(fs, path).epoch
         val stale = existing match {
           case Some(l) => l.epoch < curEpoch || age > ttlMs
           case None => age > ttlMs // torn lease: only time can condemn it
@@ -1011,7 +969,7 @@ object Pipeline {
       // it atomically (rename) for free. On the abort path (epoch
       // unchanged) our lease is younger than the TTL by construction, so
       // no breaker can race the matched delete.
-      val curEpoch = latestManifest(fs, path).map(_.epoch).getOrElse(0L)
+      val curEpoch = latestManifest(fs, path).epoch
       if (lease.epoch >= curEpoch &&
           parseLease(fs, leasePath(path)).contains(lease))
         fs.delete(leasePath(path), false)
@@ -1073,8 +1031,7 @@ object Pipeline {
     val evidence = fs.exists(new HPath(path + ".bak")) ||
       fs.exists(pendingOld) || fs.exists(pendingTmp) || compactions.nonEmpty
     if (!evidence) return
-    val recEpoch = latestManifest(fs, path).map(_.epoch).getOrElse(0L)
-    val l = acquireStoreLease(fs, path, recEpoch, ttlMs)
+    val l = acquireStoreLease(fs, path, latestManifest(fs, path).epoch, ttlMs)
     try {
       Sources.recoverReplace(fs, pending, pendingTmp, pendingOld)
       compactions.foreach { case (live, staged, aside) =>
@@ -1087,17 +1044,23 @@ object Pipeline {
   //
   // `_manifest.<epoch>` inside the store dir (underscore-prefixed files are
   // invisible to Spark's partition discovery, like `_SUCCESS`). Content:
-  // line 1 = the partition column name, remaining lines = committed
-  // partition values, one per line. The epoch lives in the filename so
-  // readers pick the max without parsing, and publication is a
-  // write-to-`.inprogress` + rename — atomic on a correct FileSystem.
+  // line 1 = the partition column name (always [[PartCol]]), a `#rows=`
+  // line, then the committed partition values, one per line. The epoch
+  // lives in the filename so readers pick the max without parsing, and
+  // publication is a write-to-`.inprogress` + rename — atomic on a
+  // correct FileSystem.
 
-  /** `rows` = committed row count of the snapshot (None on legacy
-    * manifests and after a retention sweep, whose expired rows are not
-    * re-counted): lets the per-batch merge report the post-merge store
-    * size in O(touched) instead of re-scanning the whole store. */
-  private[graft] final case class StoreManifest(epoch: Long, partCol: String,
-      partitions: Seq[String], rows: Option[Long] = None)
+  /** The store's one partition column. */
+  private final val PartCol = "order_date"
+
+  /** `rows` = committed row count of the snapshot: lets the per-batch
+    * merge report the post-merge store size in O(touched) instead of
+    * re-scanning the whole store. */
+  private[graft] final case class StoreManifest(epoch: Long,
+      partitions: Seq[String], rows: Long)
+
+  /** What a store with no manifest holds: nothing, at epoch 0. */
+  private val NoManifest = StoreManifest(0L, Nil, 0L)
 
   private val ManifestName = """_manifest\.(\d+)""".r
 
@@ -1106,33 +1069,36 @@ object Pipeline {
     * window behind the current epoch are pruned at each commit. The Delta
     * analogue is `delta.logRetentionDuration` — a small constant, because
     * every retained epoch holds a full copy of each partition it
-    * replaced. Overridable for tests (and ops) via the
-    * `graft.store.manifestsToKeep` system property. */
-  private[graft] def manifestsToKeep: Long =
-    sys.props.get("graft.store.manifestsToKeep").map(_.toLong).getOrElse(16L)
+    * replaced. */
+  private[graft] val ManifestsToKeep = 16L
 
   private def readManifestFile(fs: org.apache.hadoop.fs.FileSystem,
       epoch: Long, p: org.apache.hadoop.fs.Path): StoreManifest = {
     val in = fs.open(p)
     val lines = try scala.io.Source.fromInputStream(in, "UTF-8")
       .getLines().toList finally in.close()
-    val meta = lines.tail.filter(_.startsWith("#"))
-    val rows = meta.collectFirst { case l if l.startsWith("#rows=") =>
-      l.stripPrefix("#rows=").trim.toLong }
-    StoreManifest(epoch, lines.head,
-      lines.tail.filter(l => l.nonEmpty && !l.startsWith("#")), rows)
+    def bad(what: String) =
+      throw new IllegalStateException(s"manifest $p: $what")
+    lines match {
+      case PartCol :: rest =>
+        StoreManifest(epoch,
+          rest.filter(l => l.nonEmpty && !l.startsWith("#")),
+          rest.collectFirst { case s"#rows=$n" => n.trim.toLong }
+            .getOrElse(bad("no #rows line")))
+      case _ => bad(s"not partitioned by $PartCol")
+    }
   }
 
   private[graft] def latestManifest(fs: org.apache.hadoop.fs.FileSystem,
-      path: String): Option[StoreManifest] = {
+      path: String): StoreManifest = {
     import org.apache.hadoop.fs.{Path => HPath}
     val root = new HPath(path)
-    if (!fs.exists(root)) return None
+    if (!fs.exists(root)) return NoManifest
     val candidates = fs.listStatus(root).flatMap(s => s.getPath.getName match {
       case ManifestName(e) => Some(e.toLong -> s.getPath)
       case _ => None
     })
-    candidates.sortBy(-_._1).headOption.map { case (epoch, p) =>
+    candidates.sortBy(-_._1).headOption.fold(NoManifest) { case (epoch, p) =>
       readManifestFile(fs, epoch, p)
     }
   }
@@ -1145,19 +1111,12 @@ object Pipeline {
   }
 
   private def writeManifest(fs: org.apache.hadoop.fs.FileSystem, path: String,
-      epoch: Long, partCol: String, partitions: Seq[String],
-      rows: Option[Long] = None): Unit = {
+      epoch: Long, partitions: Seq[String], rows: Long): Unit = {
     import org.apache.hadoop.fs.{Path => HPath}
     val tmp = new HPath(path, s"_manifest.$epoch.inprogress")
     fs.delete(tmp, false) // leftover from a crash mid-publish
     val out = fs.create(tmp, true)
-    // `#`-prefixed metadata lines are ignored by THIS repo's partition
-    // parser; manifests WITHOUT the line stay readable (legacy manifests
-    // parse with rows = None). Note the compatibility is forward-only:
-    // a parser predating the '#' filter would read the line as a
-    // partition value — acceptable because the manifest format and its
-    // only readers live in this repo and version together
-    val body = partCol +: (rows.map(r => s"#rows=$r").toSeq ++ partitions)
+    val body = PartCol +: s"#rows=$rows" +: partitions
     try out.write(body.mkString("\n").getBytes("UTF-8"))
     finally out.close()
     // a manifest epoch is write-once: an existing file means a concurrent
@@ -1185,7 +1144,7 @@ object Pipeline {
   private def dropOldManifests(fs: org.apache.hadoop.fs.FileSystem,
       path: String, current: Long): Unit = {
     import org.apache.hadoop.fs.{Path => HPath}
-    val oldestKept = current - manifestsToKeep + 1
+    val oldestKept = current - ManifestsToKeep + 1
     // prune ONLY below the retention window. An epoch ABOVE `current` can
     // only be a concurrent writer's newer committed manifest — deleting it
     // would erase their commit record while their swapped dirs stay live,
@@ -1250,19 +1209,20 @@ object Pipeline {
   }
 
   private[graft] def listPartitionDirs(fs: org.apache.hadoop.fs.FileSystem,
-      path: String, partCol: String): Seq[String] = {
+      path: String): Seq[String] = {
     import org.apache.hadoop.fs.{Path => HPath}
     val root = new HPath(path)
     if (!fs.exists(root)) Nil
     else fs.listStatus(root).toSeq
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith(partCol + "="))
-      .map(_.getPath.getName.stripPrefix(partCol + "="))
+      .filter(s => s.isDirectory && s.getPath.getName.startsWith(PartCol + "="))
+      .map(_.getPath.getName.stripPrefix(PartCol + "="))
   }
 
   /** Crash recovery. Two regimes, told apart by the `.bak/_epoch` stamp:
     *
-    *  - **In-flight rollback** (`_epoch` == latest manifest epoch): the
-    *    previous batch crashed mid-swap before committing its manifest.
+    *  - **In-flight rollback** (`_epoch` == latest manifest epoch, 0
+    *    before the first): the previous batch crashed mid-swap before
+    *    committing its manifest.
     *    Every backed-up partition is rolled BACK over its (half-replaced)
     *    store dir, returning the store to exactly the committed snapshot
     *    readers were already being served ([[readOrInit]] preferred these
@@ -1275,27 +1235,23 @@ object Pipeline {
     *    updates to pristine committed data.
     *  - **Orphan restore** (no `_epoch`, or epoch ≠ manifest): backups are
     *    either stale leftovers from a committed batch (post-commit,
-    *    pre-cleanup crash) or pre-manifest-era. Only a backup whose store
+    *    pre-cleanup crash) or unstamped. Only a backup whose store
     *    partition is MISSING (the window between [[swapDir]]'s two
     *    renames) is restored — a backup is never deleted while it is the
     *    only copy. A stale backup whose live partition EXISTS is the
     *    pre-swap content a committed batch replaced: it is ARCHIVED to
     *    `<store>.hist/<bakEpoch>/` — the version store behind [[readAt]]
-    *    time travel — rather than deleted (pre-manifest backups, which
-    *    carry no epoch stamp, are still swept: there is no epoch to file
-    *    them under and no manifest to travel to).
+    *    time travel — rather than deleted (an unstamped backup is still
+    *    swept: there is no epoch to file it under).
     */
   private def restoreBackups(fs: org.apache.hadoop.fs.FileSystem,
       path: String): Unit = {
     import org.apache.hadoop.fs.{Path => HPath}
     val bakRoot = new HPath(path + ".bak")
     if (fs.exists(bakRoot)) {
-      val manifest = latestManifest(fs, path)
+      val m = latestManifest(fs, path)
       val be = bakEpoch(fs, path)
-      val inFlight = (be, manifest) match {
-        case (Some(b), Some(m)) => b == m.epoch
-        case _ => false
-      }
+      val inFlight = be.contains(m.epoch)
       // an outstanding forget tombstone means ORPHAN backups (post-commit
       // regime) are the crashed forget's own pre-delete copies — they
       // carry the forgotten rows, so erasure outranks both the
@@ -1326,12 +1282,11 @@ object Pipeline {
       // in-flight rollback also sweeps the crashed batch's UNCOMMITTED
       // new-date dirs (swapped in with no .bak copy, listed in no
       // manifest) — see the scaladoc's first regime
-      if (inFlight) manifest.foreach { m =>
+      if (inFlight) {
         val committed = m.partitions.toSet
-        listPartitionDirs(fs, path, m.partCol)
+        listPartitionDirs(fs, path)
           .filterNot(committed)
-          .foreach(pv =>
-            fs.delete(new HPath(path, s"${m.partCol}=$pv"), true))
+          .foreach(pv => fs.delete(new HPath(path, s"$PartCol=$pv"), true))
       }
       fs.delete(bakRoot, true)
     }

@@ -1,7 +1,6 @@
 package graft.queries
 
 import graft.QuerySpec
-import graft.io.Sources
 import graft.multimodal.Multimodal
 
 /** Frame and media operators over the multimodal tables. */
@@ -15,9 +14,8 @@ object MultimodalQueries {
     // E111: frame-level dedup — repeated frames (static intros/padding)
     // hide inside distinct media objects; dedup at the sampled-frame
     // grain, d1's one-shuffle plan over the frame generator.
-    QuerySpec("mm2_frame_dedup", (s, d) =>
-      Multimodal.frameDedup(s, Sources.table(s, d, "documents")),
-      oracle = Multimodal.frameDedupSql),
+    onDocs("mm2_frame_dedup", Multimodal.frameDedup,
+      Multimodal.frameDedupSql),
 
     // E181 (MM3): perceptual frame NEAR-dup — d5's SimHash shape at the
     // multimodal grain, closing the ladder mm2 starts: per-frame
@@ -56,8 +54,7 @@ object MultimodalQueries {
     // decode stub, frame sampling. The stub's byte-stat features follow
     // the repo determinism convention, so the DuckDB oracle
     // (Multimodal.mediaSummarySql) hash-verifies the whole summary.
-    QuerySpec("mm1_media_summary", (s, d) =>
-      Multimodal.mediaSummary(s, Sources.table(s, d, "documents")),
-      oracle = Multimodal.mediaSummarySql)
+    onDocs("mm1_media_summary", Multimodal.mediaSummary,
+      Multimodal.mediaSummarySql)
   )
 }

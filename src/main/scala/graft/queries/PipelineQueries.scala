@@ -593,7 +593,7 @@ object PipelineQueries {
     // exactly like the implicit cast did).
     QuerySpec("a1c_category_kpi_compat", (s, d) => {
       def strs(df: DataFrame) =
-        df.select(df.columns.map(c => col(c).cast("string").as(c)): _*)
+        df.select(df.columns.toSeq.map(c => col(c).cast("string").as(c)): _*)
       // The stringly-typed arm only exercises the columns the reference
       // query touches — project BEFORE the all-strings cast so column
       // pruning still reaches the scan (a whole-table cast would read and

@@ -12,6 +12,8 @@ object Runner {
 
   // ---- F5: filename routing (lambda/s3_validation.py:115-125) -------------
 
+  private val PartName = """(orders|order_items)_part(\d+)""".r
+
   /** Parse `.../orders_part2.csv` → (fileType, part). `products.csv` is the
     * un-parted special case. Unknown shapes → None. */
   def parseFilename(path: String): Option[(String, Option[Int])] = {
@@ -22,9 +24,7 @@ object Runner {
     }
     base match {
       case "products" => Some(("products", None))
-      case p if p.matches("(orders|order_items)_part\\d+") =>
-        val Array(t, part) = p.split("_part")
-        Some((t, Some(part.toInt)))
+      case PartName(t, part) => Some((t, Some(part.toInt)))
       case _ => None
     }
   }

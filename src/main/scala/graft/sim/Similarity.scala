@@ -449,7 +449,7 @@ object Similarity {
         struct((lit(-2.0) * dot(v, typedlit(s.toSeq)) + lit(s2)).as("d2"),
           lit(id).as("cell_id"))
       }
-      array_sort(array(ds: _*))
+      array_sort(array(ds.toSeq: _*))
     }
   }
 

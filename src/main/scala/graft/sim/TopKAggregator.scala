@@ -1,6 +1,6 @@
 package graft.sim
 
-import org.apache.spark.sql.{Encoder, Encoders}
+import org.apache.spark.sql.Encoder
 import org.apache.spark.sql.expressions.Aggregator
 
 /** Typed top-k aggregator — the `Aggregator[IN, BUF, OUT]` form of top-k

@@ -2119,7 +2119,7 @@ object TextAnalysis {
   private def bloomWord(pos: Column): Column = shiftright(pos, 5)
 
   private def bloomPositions(df: DataFrame): DataFrame =
-    df.select(df.columns.map(col) :+
+    df.select(df.columns.toSeq.map(col) :+
       explode(array((0 until CmsRows).map(r => bloomPos(col("fp"), r)): _*))
         .as("pos"): _*)
 

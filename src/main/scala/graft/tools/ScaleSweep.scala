@@ -504,7 +504,7 @@ object ScaleSweep {
   }
 
   def main(args: Array[String]): Unit = {
-    val Array(srcDir, workDir, factorsCsv) = args
+    val Array(srcDir, workDir, factorsCsv) = args: @unchecked
     val factors = factorsCsv.split(",").map(_.trim.toInt).toSeq
     // dev aid, like Bench's SPARK_GRAFT_ONLY: restrict the sweep set
     val only = sys.env.get("SPARK_GRAFT_SWEEP_ONLY")

@@ -51,7 +51,7 @@ class BatchConcurrencySpec extends SparkSpec {
   private def fs(path: String) = org.apache.hadoop.fs.FileSystem.get(
     new URI(path), spark.sparkContext.hadoopConfiguration)
   private def epoch(store: String): Long =
-    Pipeline.latestManifest(fs(store), store).map(_.epoch).getOrElse(0L)
+    Pipeline.latestManifest(fs(store), store).epoch
   private def rows(store: String, schema: String): Seq[String] =
     Pipeline.readOrInit(spark, store,
       org.apache.spark.sql.types.StructType.fromDDL(schema))

@@ -70,7 +70,7 @@ class MultimodalSpec extends SparkSpec
 
   test("mm2: frame dedup finds the synthesized payloads' repeated frames") {
     import org.apache.spark.sql.functions.col
-    val out = Multimodal.frameDedup(spark, docs).collect()
+    val out = Multimodal.frameDedup(docs).collect()
     assert(out.nonEmpty, "the repeat(md5) payloads guarantee intra-doc dups")
     // verify one group exhaustively against the raw frame stream
     val frames = Multimodal.sampleFrames(media, stride = 1)
@@ -93,7 +93,7 @@ class MultimodalSpec extends SparkSpec
   }
 
   test("mediaSummary joins decode + frames + pruned metadata") {
-    val out = Multimodal.mediaSummary(spark, docs)
+    val out = Multimodal.mediaSummary(docs)
     assert(out.count() === docs.count())
     val cols = out.columns.toSet
     assert(Set("doc_id", "format", "byte_len", "mean_byte", "width",

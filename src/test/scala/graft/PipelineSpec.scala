@@ -2,6 +2,7 @@ package graft
 
 import java.nio.file.{Files, Path}
 
+import graft.io.Sources
 import graft.pipeline.Pipeline
 
 /** End-to-end lifecycle (SURVEY §3): multi-part CSV ingest → validation
@@ -348,7 +349,7 @@ class PipelineSpec extends SparkSpec {
     val fs = org.apache.hadoop.fs.FileSystem.get(
       new java.net.URI(storePath), spark.sparkContext.hadoopConfiguration)
     assert(Pipeline.bakEpoch(fs, storePath).exists(
-      _ < Pipeline.latestManifest(fs, storePath).get.epoch),
+      _ < Pipeline.latestManifest(fs, storePath).epoch),
       "post-commit .bak must linger as a STALE backup (deferred cleanup)")
   }
 
@@ -421,7 +422,7 @@ class PipelineSpec extends SparkSpec {
     // swapped in with no backup, date 02 not yet swapped, NO new manifest
     val fs = org.apache.hadoop.fs.FileSystem.get(
       new java.net.URI(path), spark.sparkContext.hadoopConfiguration)
-    val epoch1 = Pipeline.latestManifest(fs, path).get.epoch
+    val epoch1 = Pipeline.latestManifest(fs, path).epoch
     Pipeline.writeBakEpoch(fs, path, epoch1)
     val p01 = d.resolve("isostore/order_date=2024-06-01")
     Files.move(p01, d.resolve("isostore.bak/order_date=2024-06-01"))
@@ -509,14 +510,8 @@ class PipelineSpec extends SparkSpec {
     assert(!Files.exists(d.resolve("retstore/order_date=2024-06-01")))
     assert(!Files.exists(d.resolve("retstore/order_date=2024-05-30")),
       "the sweep doubles as the store's orphan-dir garbage collector")
-    assert(Pipeline.latestManifest(fs, path).get.partitions ===
+    assert(Pipeline.latestManifest(fs, path).partitions ===
       Seq("2024-06-02", "2024-06-03"))
-
-    // manifest is authoritative for the partition column — fail loud
-    val e = intercept[IllegalArgumentException] {
-      Pipeline.retentionSweep(spark, path, "x", partCol = "shard")
-    }
-    assert(e.getMessage.contains("partitioned by order_date"))
   }
 
   test("in-flight rollback sweeps a crashed batch's uncommitted new-date dirs") {
@@ -541,7 +536,7 @@ class PipelineSpec extends SparkSpec {
     val fs = org.apache.hadoop.fs.FileSystem.get(
       new java.net.URI(path), spark.sparkContext.hadoopConfiguration)
     Pipeline.writeBakEpoch(fs, path,
-      Pipeline.latestManifest(fs, path).get.epoch)
+      Pipeline.latestManifest(fs, path).epoch)
     updates("t2-crashed", ("2024-06-09", 9L)).drop("order_date").write
       .parquet(d.resolve("gcstore/order_date=2024-06-09").toString)
     assert(Files.exists(d.resolve("gcstore/order_date=2024-06-09")))
@@ -664,7 +659,7 @@ class PipelineSpec extends SparkSpec {
     // writer A reads the store at epoch 1...
     Pipeline.upsertStore(spark, path, schema,
       updates("base", ("2024-06-01", 1L, 10.0)), Seq("order_date"), fields)
-    val epochA = Pipeline.latestManifest(fs, path).get.epoch
+    val epochA = Pipeline.latestManifest(fs, path).epoch
     // ...writer B commits first (epoch 2)...
     Pipeline.upsertStore(spark, path, schema,
       updates("b", ("2024-06-01", 5L, 50.0)), Seq("order_date"), fields)
@@ -680,13 +675,13 @@ class PipelineSpec extends SparkSpec {
     assert(row.map(r => r.getAs[Long]("total_orders")).toSeq === Seq(5L))
     assert(row.head.getAs[String]("last_updated") === "b")
     assert(!fs.exists(new org.apache.hadoop.fs.Path(path + ".tmp")))
-    assert(Pipeline.latestManifest(fs, path).get.epoch === epochA + 1)
+    assert(Pipeline.latestManifest(fs, path).epoch === epochA + 1)
     // A's RETRY (fresh snapshot, no CAS pin) merges against B's data
     Pipeline.upsertStore(spark, path, schema,
       updates("a", ("2024-06-01", 9L, 90.0)), Seq("order_date"), fields)
     val after = spark.read.schema(schema).parquet(path).collect()
     assert(after.map(r => r.getAs[Long]("total_orders")).toSeq === Seq(9L))
-    assert(Pipeline.latestManifest(fs, path).get.epoch === epochA + 2)
+    assert(Pipeline.latestManifest(fs, path).epoch === epochA + 2)
   }
 
   test("commit lease serializes interleaved upserts: loser aborts clean, retry lands (E60 lease)") {
@@ -716,7 +711,7 @@ class PipelineSpec extends SparkSpec {
     // and remove the successor's fresh lease. The epoch-stale leftover
     // must cost the next writer nothing: the acquire below (writer A)
     // breaks it for free via the rename-claim.
-    val epoch0 = Pipeline.latestManifest(fs, path).get.epoch
+    val epoch0 = Pipeline.latestManifest(fs, path).epoch
 
     // writer A is mid-commit-section (holds the lease, hasn't published)
     val held = Pipeline.acquireStoreLease(fs, path, epoch0)
@@ -728,7 +723,7 @@ class PipelineSpec extends SparkSpec {
     }
     assert(e.getMessage.contains("lease held"))
     assert(!fs.exists(new org.apache.hadoop.fs.Path(path + ".tmp")))
-    assert(Pipeline.latestManifest(fs, path).get.epoch === epoch0)
+    assert(Pipeline.latestManifest(fs, path).epoch === epoch0)
     assert(spark.read.schema(schema).parquet(path)
       .head().getAs[String]("last_updated") === "base")
     Pipeline.verifyStoreLease(fs, path, held) // still A's
@@ -737,7 +732,7 @@ class PipelineSpec extends SparkSpec {
     Pipeline.releaseStoreLease(fs, path, held)
     Pipeline.upsertStore(spark, path, schema, updates("b", 7L),
       Seq("order_date"), fields)
-    assert(Pipeline.latestManifest(fs, path).get.epoch === epoch0 + 1)
+    assert(Pipeline.latestManifest(fs, path).epoch === epoch0 + 1)
     assert(spark.read.schema(schema).parquet(path)
       .head().getAs[Long]("total_orders") === 7L)
     // B's post-publish lease may remain epoch-stale (release contract);
@@ -806,7 +801,7 @@ class PipelineSpec extends SparkSpec {
       new java.net.URI(path), spark.sparkContext.hadoopConfiguration)
     Pipeline.upsertStore(spark, path, schema, updates("base", 1L),
       Seq("order_date"), fields)
-    val epoch0 = Pipeline.latestManifest(fs, path).get.epoch
+    val epoch0 = Pipeline.latestManifest(fs, path).epoch
     // writer A holds the lease mid-swap: bak-epoch stamped at the
     // CURRENT epoch and a backup dir present — exactly the state the
     // unguarded sweep misread as a crash (round-9 review)
@@ -853,7 +848,7 @@ class PipelineSpec extends SparkSpec {
       Seq("order_date"), fields)
     val beforeRows = spark.read.schema(schema).parquet(path)
       .orderBy(col("order_date")).collect().map(_.toString).toSeq
-    val epoch = Pipeline.latestManifest(fs, path).get.epoch
+    val epoch = Pipeline.latestManifest(fs, path).epoch
     // a live writer blocks compaction cleanly
     val held = Pipeline.acquireStoreLease(fs, path, epoch)
     intercept[graft.pipeline.StoreLeaseHeldException] {
@@ -863,7 +858,7 @@ class PipelineSpec extends SparkSpec {
     // unleased: compacts, preserves bytes-for-rows and the manifest
     val res = Pipeline.compactStore(spark, path)
     assert(res.nonEmpty)
-    assert(Pipeline.latestManifest(fs, path).get.epoch === epoch)
+    assert(Pipeline.latestManifest(fs, path).epoch === epoch)
     val afterRows = spark.read.schema(schema).parquet(path)
       .orderBy(col("order_date")).collect().map(_.toString).toSeq
     assert(afterRows === beforeRows)
@@ -890,7 +885,7 @@ class PipelineSpec extends SparkSpec {
     val leaseFile = new org.apache.hadoop.fs.Path(path, "_lease")
     Pipeline.upsertStore(spark, path, schema, updates("base", 1L),
       Seq("order_date"), fields)
-    val epoch0 = Pipeline.latestManifest(fs, path).get.epoch
+    val epoch0 = Pipeline.latestManifest(fs, path).epoch
 
     // crashed holder: lease at the CURRENT epoch, never released. A live
     // TTL says honor it...
@@ -930,7 +925,7 @@ class PipelineSpec extends SparkSpec {
     fs.setTimes(leaseFile, System.currentTimeMillis() - 3600000L, -1L)
     Pipeline.upsertStore(spark, path, schema, updates("t", 9L),
       Seq("order_date"), fields, leaseTtlMs = 50L)
-    assert(Pipeline.latestManifest(fs, path).get.epoch === epoch0 + 1)
+    assert(Pipeline.latestManifest(fs, path).epoch === epoch0 + 1)
     assert(spark.read.schema(schema).parquet(path)
       .head().getAs[Long]("total_orders") === 9L)
     // post-publish the successful writer's (now epoch-stale) lease may
@@ -1015,27 +1010,21 @@ class PipelineSpec extends SparkSpec {
         .withColumn("last_updated", lit(now))
         .select(schema.fieldNames.map(col): _*)
 
-    // manifest-window pruning: with a 2-epoch window, epoch 1's manifest
-    // (and its .hist backing) are gone after the 3rd commit
+    // manifest-window pruning: one commit past the window, epoch 1's
+    // manifest (and its .hist backing) are gone
     val winPath = s"$d/ttwin"
-    System.setProperty("graft.store.manifestsToKeep", "2")
-    try {
+    (1L to Pipeline.ManifestsToKeep + 1).foreach(k =>
       Pipeline.upsertStore(spark, winPath, schema,
-        updates("t1", ("2024-06-01", 1L)), Seq("order_date"), fields)
-      Pipeline.upsertStore(spark, winPath, schema,
-        updates("t2", ("2024-06-01", 2L)), Seq("order_date"), fields)
-      Pipeline.upsertStore(spark, winPath, schema,
-        updates("t3", ("2024-06-01", 3L)), Seq("order_date"), fields)
-      val e1 = intercept[IllegalStateException] {
-        Pipeline.readAt(spark, winPath, 1L, schema)
-      }
-      assert(e1.getMessage.contains("no manifest for epoch 1"))
-      assert(e1.getMessage.contains("time-travel window"))
-      // epoch 2 is inside the window and still exact (01@2 came back
-      // through the .bak → .hist archival at batch-3 start)
-      assert(Pipeline.readAt(spark, winPath, 2L, schema).collect()
-        .map(_.getAs[Long]("total_orders")).toSeq === Seq(2L))
-    } finally System.clearProperty("graft.store.manifestsToKeep")
+        updates(s"t$k", ("2024-06-01", k)), Seq("order_date"), fields))
+    val e1 = intercept[IllegalStateException] {
+      Pipeline.readAt(spark, winPath, 1L, schema)
+    }
+    assert(e1.getMessage.contains("no manifest for epoch 1"))
+    assert(e1.getMessage.contains("time-travel window"))
+    // epoch 2 is the oldest kept and still exact (01@2 came back through
+    // the .bak → .hist archival at batch-4 start)
+    assert(Pipeline.readAt(spark, winPath, 2L, schema).collect()
+      .map(_.getAs[Long]("total_orders")).toSeq === Seq(2L))
 
     // data retention: a partition expired by the sweep and GC'd by the
     // next one makes epochs that listed it unreconstructable — loud
@@ -1073,8 +1062,7 @@ class PipelineSpec extends SparkSpec {
         .select(schema.fieldNames.map(col): _*)
     def upsert(rows: (String, String, Long)*) =
       Pipeline.upsertStore(spark, path, schema, updates(rows: _*),
-        Seq("category", "order_date"), Seq("total_orders"),
-        partCol = "order_date")
+        Seq("category", "order_date"), Seq("total_orders"))
     def rowsOf(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getAs[String]("category"), r.getAs[String]("order_date"))
         -> r.getAs[Long]("total_orders")).toMap
@@ -1085,7 +1073,7 @@ class PipelineSpec extends SparkSpec {
     upsert(("B", "2024-06-01", 20L))                    // epoch 3
 
     val (epoch, deleted) = Pipeline.forgetKeys(spark, path, schema,
-      Seq("A").toDF("category"), Seq("category"), partCol = "order_date")
+      Seq("A").toDF("category"), Seq("category"))
     assert(epoch === 4L && deleted === 2L)
     // current snapshot: A gone, B rows untouched
     assert(rowsOf(Pipeline.readOrInit(spark, path, schema)) ===
@@ -1098,13 +1086,12 @@ class PipelineSpec extends SparkSpec {
       Map(("B", "2024-06-01") -> 20L, ("B", "2024-06-02") -> 4L))
     // idempotent rerun: nothing left to delete, epoch unchanged
     val (epoch2, deleted2) = Pipeline.forgetKeys(spark, path, schema,
-      Seq("A").toDF("category"), Seq("category"), partCol = "order_date")
+      Seq("A").toDF("category"), Seq("category"))
     assert(epoch2 === 4L && deleted2 === 0L)
     // the partition column is not a legal forget key
     intercept[IllegalArgumentException] {
       Pipeline.forgetKeys(spark, path, schema,
-        Seq("2024-06-01").toDF("order_date"), Seq("order_date"),
-        partCol = "order_date")
+        Seq("2024-06-01").toDF("order_date"), Seq("order_date"))
     }
   }
 
@@ -1123,8 +1110,7 @@ class PipelineSpec extends SparkSpec {
         .select(schema.fieldNames.map(col): _*)
     def upsert(rows: (String, String, Long)*) =
       Pipeline.upsertStore(spark, path, schema, updates(rows: _*),
-        Seq("category", "order_date"), Seq("total_orders"),
-        partCol = "order_date")
+        Seq("category", "order_date"), Seq("total_orders"))
     def cats(df: org.apache.spark.sql.DataFrame) =
       df.select("category").distinct().as[String].collect().toSet
     val fs = FileSystem.get(new java.net.URI(path),
@@ -1167,28 +1153,28 @@ class PipelineSpec extends SparkSpec {
       .filter(_.isDirectory).head.getPath
     val liveDir = fs.listStatus(histEp).toSeq
       .filter(_.getPath.getName.startsWith("order_date=")).head.getPath
-    val pn = liveDir.getName
-    val tmpDir = new HPath(histEp, s"_$pn.fk.tmp")
+    val tmpDir = Sources.sideDir(liveDir, ".fk.tmp")
+    val oldDir = Sources.sideDir(liveDir, ".fk.old")
     spark.read.schema(dataSchema).parquet(liveDir.toString)
       .coalesce(1).write.parquet(tmpDir.toString)
-    assert(fs.rename(liveDir, new HPath(histEp, s"_$pn.fk.old")))
+    assert(fs.rename(liveDir, oldDir))
     // crash point: live missing, tmp + old on disk
     val (_, del2) = Pipeline.forgetKeys(spark, path, schema,
-      Seq("Z").toDF("category"), Seq("category"), partCol = "order_date")
+      Seq("Z").toDF("category"), Seq("category"))
     assert(del2 === 0L)
     assert(fs.exists(liveDir), "recovery promoted the rewrite to live")
-    assert(!fs.exists(new HPath(histEp, s"_$pn.fk.old")))
-    assert(!fs.exists(new HPath(histEp, s"_$pn.fk.tmp")))
+    assert(!fs.exists(oldDir))
+    assert(!fs.exists(tmpDir))
     assert(cats(spark.read.schema(dataSchema).parquet(liveDir.toString))
       === Set("B"))
 
     // --- rewrite-lost variant: only the .fk.old copy survives — recovery
     // must restore it (never delete the only copy)
-    assert(fs.rename(liveDir, new HPath(histEp, s"_$pn.fk.old")))
+    assert(fs.rename(liveDir, oldDir))
     Pipeline.forgetKeys(spark, path, schema,
-      Seq("Z").toDF("category"), Seq("category"), partCol = "order_date")
+      Seq("Z").toDF("category"), Seq("category"))
     assert(fs.exists(liveDir), "recovery restored the only surviving copy")
-    assert(!fs.exists(new HPath(histEp, s"_$pn.fk.old")))
+    assert(!fs.exists(oldDir))
   }
 
   test("readAt fails loud on a version a crashed .hist purge left mid-replace") {
@@ -1205,8 +1191,7 @@ class PipelineSpec extends SparkSpec {
         rows.toSeq.toDF("category", "order_date", "total_orders")
           .withColumn("data_sources", typedLit(Seq("orders")))
           .select(schema.fieldNames.map(col): _*),
-        Seq("category", "order_date"), Seq("total_orders"),
-        partCol = "order_date")
+        Seq("category", "order_date"), Seq("total_orders"))
     def rowsOf(df: org.apache.spark.sql.DataFrame) =
       df.select("category", "total_orders").as[(String, Long)].collect().toMap
     val fs = FileSystem.get(new java.net.URI(path),
@@ -1224,8 +1209,8 @@ class PipelineSpec extends SparkSpec {
     val hist1 = new HPath(s"$path.hist/1")
     val part = new HPath(hist1, "order_date=2024-06-01")
     spark.read.parquet(part.toString).coalesce(1)
-      .write.parquet(new HPath(hist1, "_order_date=2024-06-01.fk.tmp").toString)
-    assert(fs.rename(part, new HPath(hist1, "_order_date=2024-06-01.fk.old")))
+      .write.parquet(Sources.sideDir(part, ".fk.tmp").toString)
+    assert(fs.rename(part, Sources.sideDir(part, ".fk.old")))
     // without the partition dir, epoch 1 would resolve to the .bak copy
     // (epoch 2's A = 10): a wrong version, returned without an error
     val e = intercept[IllegalStateException] {
@@ -1238,7 +1223,7 @@ class PipelineSpec extends SparkSpec {
 
     // the next forget's purge preamble finishes the replace: epoch 1 reads
     Pipeline.forgetKeys(spark, path, schema,
-      Seq("Z").toDF("category"), Seq("category"), partCol = "order_date")
+      Seq("Z").toDF("category"), Seq("category"))
     assert(rowsOf(Pipeline.readAt(spark, path, 1L, schema)) ===
       Map("A" -> 1L, "B" -> 2L))
   }
@@ -1257,9 +1242,10 @@ class PipelineSpec extends SparkSpec {
         .select(schema.fieldNames.map(col): _*)
     def upsert(rows: (String, String, Long)*) =
       Pipeline.upsertStore(spark, path, schema, updates(rows: _*),
-        Seq("category", "order_date"), Seq("total_orders"),
-        partCol = "order_date")
+        Seq("category", "order_date"), Seq("total_orders"))
     def trueCount() = Pipeline.readOrInit(spark, path, schema).count()
+    val fs = org.apache.hadoop.fs.FileSystem.get(
+      new java.net.URI(path), spark.sparkContext.hadoopConfiguration)
 
     // the returned post-merge size is O(touched) arithmetic off the
     // manifest #rows tally — it must equal a full recount at every step
@@ -1270,16 +1256,17 @@ class PipelineSpec extends SparkSpec {
     assert(trueCount() === 3L)
     // forget maintains the tally through its delete
     val (_, del) = Pipeline.forgetKeys(spark, path, schema,
-      Seq("B").toDF("category"), Seq("category"), partCol = "order_date")
+      Seq("B").toDF("category"), Seq("category"))
     assert(del === 1L)
-    // a retention sweep DROPS the tally (expired rows are not recounted);
-    // the next merge pays one full-count fallback and re-establishes it
+    // a retention sweep subtracts the expired partitions' rows
     val expired = Pipeline.retentionSweep(spark, path, "2024-06-02")
     assert(expired.nonEmpty)
+    assert(Pipeline.latestManifest(fs, path).rows === trueCount(),
+      "the sweep's manifest must carry the recounted tally")
     assert(upsert(("D", "2024-06-04", 4L)) === trueCount(),
-      "post-sweep merge must fall back to a real count, not a stale tally")
+      "post-sweep merge must build on the sweep's tally")
     assert(upsert(("D", "2024-06-04", 5L), ("E", "2024-06-04", 6L))
-      === trueCount(), "tally re-established after the fallback")
+      === trueCount(), "tally carried forward")
   }
 
   test("forgetKeys crash after commit: emptied-partition backup erased, never restored") {
@@ -1297,8 +1284,7 @@ class PipelineSpec extends SparkSpec {
         .select(schema.fieldNames.map(col): _*)
     def upsert(rows: (String, String, Long)*) =
       Pipeline.upsertStore(spark, path, schema, updates(rows: _*),
-        Seq("category", "order_date"), Seq("total_orders"),
-        partCol = "order_date")
+        Seq("category", "order_date"), Seq("total_orders"))
     def cats() = Pipeline.readOrInit(spark, path, schema)
       .select("category").distinct().as[String].collect().toSet
     val fs = FileSystem.get(new java.net.URI(path),
@@ -1308,7 +1294,7 @@ class PipelineSpec extends SparkSpec {
     // partition is retired from the manifest, not swapped)
     upsert(("A", "2024-06-01", 1L), ("B", "2024-06-02", 2L)) // epoch 1
     val (ep2, del) = Pipeline.forgetKeys(spark, path, schema,
-      Seq("A").toDF("category"), Seq("category"), partCol = "order_date")
+      Seq("A").toDF("category"), Seq("category"))
     assert(del === 1L && ep2 === 2L)
     assert(cats() === Set("B"))
 
@@ -1368,8 +1354,7 @@ class PipelineSpec extends SparkSpec {
         .select(schema.fieldNames.map(col): _*)
     def upsert(rows: (String, String, Long)*) =
       Pipeline.upsertStore(spark, path, schema, updates(rows: _*),
-        Seq("category", "order_date"), Seq("total_orders"),
-        partCol = "order_date")
+        Seq("category", "order_date"), Seq("total_orders"))
     def cats() = Pipeline.readOrInit(spark, path, schema)
       .select("category").distinct().as[String].collect().toSet
     val fs = FileSystem.get(new java.net.URI(path),
@@ -1462,8 +1447,8 @@ class PipelineSpec extends SparkSpec {
     // compacted copy is complete in the staged dir, the old partition
     // moved aside, and no live dir is left
     val live = new HPath(s"$path/order_date=2024-06-01")
-    val staged = new HPath(s"$path/_order_date=2024-06-01.compact.tmp")
-    val aside = new HPath(s"$path/_order_date=2024-06-01.compact.bak")
+    val staged = Sources.sideDir(live, ".compact.tmp")
+    val aside = Sources.sideDir(live, ".compact.bak")
     spark.read.schema(dataSchema).parquet(live.toString).coalesce(1)
       .write.parquet(staged.toString)
     assert(fs.rename(live, aside))
@@ -1519,6 +1504,87 @@ class PipelineSpec extends SparkSpec {
     }
     assert(e.getMessage.contains("2024-06-01"))
     assert(!e.getMessage.contains("2024-06-02"))
+    deleteRec(d)
+  }
+
+  test("a crashed first commit is never read, and the next commit " +
+      "rolls it back") {
+    import org.apache.spark.sql.functions.{col, lit, typedLit}
+    import spark.implicits._
+    val d = dir()
+    val path = s"$d/firstcrash"
+    val schema = org.apache.spark.sql.types.StructType.fromDDL(
+      "order_date STRING, total_orders BIGINT, " +
+        "data_sources ARRAY<STRING>, last_updated STRING")
+    def updates(stamp: String, rows: (String, Long)*) =
+      rows.toSeq.toDF("order_date", "total_orders")
+        .withColumn("data_sources", typedLit(Seq("orders")))
+        .withColumn("last_updated", lit(stamp))
+        .select(schema.fieldNames.map(col): _*)
+    val fs = org.apache.hadoop.fs.FileSystem.get(
+      new java.net.URI(path), spark.sparkContext.hadoopConfiguration)
+    // the store's first commit crashed after its swap and before its
+    // manifest: .bak stamped with epoch 0, the new date in the root, no
+    // manifest
+    Pipeline.writeBakEpoch(fs, path, 0L)
+    updates("t1-crashed", ("2024-06-01", 1L)).drop("order_date").write
+      .parquet(d.resolve("firstcrash/order_date=2024-06-01").toString)
+    assert(Pipeline.readOrInit(spark, path, schema).count() === 0L,
+      "no manifest is epoch 0: the uncommitted rows must not be read")
+
+    // the next commit, of another date, rolls the crashed one back
+    Pipeline.upsertStore(spark, path, schema,
+      updates("t2", ("2024-06-02", 2L)), Seq("order_date"),
+      Seq("total_orders", "last_updated"))
+    assert(!Files.exists(d.resolve("firstcrash/order_date=2024-06-01")),
+      "the uncommitted first-commit partition must be deleted")
+    assert(Pipeline.readOrInit(spark, path, schema).collect()
+      .map(_.getAs[String]("order_date")).toSeq === Seq("2024-06-02"))
+    deleteRec(d)
+  }
+
+  test("a compaction staged beside a live partition is hidden from " +
+      "partition discovery, and compactStore clears it") {
+    import org.apache.spark.sql.functions.{col, typedLit}
+    import org.apache.hadoop.fs.{FileSystem, Path => HPath}
+    import spark.implicits._
+    val d = dir()
+    val path = s"$d/compactside"
+    val schema = org.apache.spark.sql.types.StructType.fromDDL(
+      "category STRING, order_date STRING, total_orders BIGINT, " +
+        "data_sources ARRAY<STRING>")
+    val dataSchema = org.apache.spark.sql.types.StructType(
+      schema.filterNot(_.name == "order_date"))
+    def upsert(rows: (String, String, Long)*) =
+      Pipeline.upsertStore(spark, path, schema,
+        rows.toSeq.toDF("category", "order_date", "total_orders")
+          .withColumn("data_sources", typedLit(Seq("orders")))
+          .select(schema.fieldNames.map(col): _*),
+        Seq("category", "order_date"), Seq("total_orders"))
+    def rowsOf(df: org.apache.spark.sql.DataFrame) = df.collect()
+      .map(r => (r.getAs[String]("category"), r.getAs[String]("order_date"))
+        -> r.getAs[Long]("total_orders")).toMap
+    val fs = FileSystem.get(new java.net.URI(path),
+      spark.sparkContext.hadoopConfiguration)
+    upsert(("A", "2024-06-01", 1L), ("B", "2024-06-01", 2L),
+      ("A", "2024-06-02", 3L))
+    val before = rowsOf(Pipeline.readOrInit(spark, path, schema))
+
+    // Sources.compact of 06-01 between its staged write and its renames:
+    // the complete compacted copy sits beside the live partition
+    val live = new HPath(s"$path/order_date=2024-06-01")
+    val staged = Sources.sideDir(live, ".compact.tmp")
+    spark.read.schema(dataSchema).parquet(live.toString).coalesce(1)
+      .write.parquet(staged.toString)
+    assert(fs.exists(new HPath(staged, "_SUCCESS")))
+    assert(rowsOf(spark.read.schema(schema).parquet(path)) === before,
+      "a plain scan of the store must not see the side dir")
+    assert(rowsOf(Pipeline.readOrInit(spark, path, schema)) === before)
+
+    Pipeline.compactStore(spark, path)
+    assert(rowsOf(Pipeline.readOrInit(spark, path, schema)) === before)
+    assert(!fs.listStatus(new HPath(path)).exists(
+      _.getPath.getName.contains(".compact.")), "no side dir is left")
     deleteRec(d)
   }
 }
