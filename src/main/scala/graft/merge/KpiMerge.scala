@@ -5,30 +5,24 @@ import org.apache.spark.sql.functions._
 
 /** Keyed merge-upsert (reference SURVEY.md §2.7) — the most engine-like piece
   * of the reference: its DynamoDB writers (`scripts/helperfunction.py:53-208`)
-  * read the existing item per key, take each new field if non-null else keep
-  * the old, union the `data_sources` provenance list, and batch-write.
+  * read the existing item per key, take each new field if non-null else
+  * keep the old, union the `data_sources` provenance list, and batch-write.
   * The three order-KPI source modes (`orders_only` / `order_items_only` /
   * `complete`) each set a *subset* of fields and must preserve the rest.
   *
   * Spark formulation: a full-outer join of updates vs target on the key,
-  * projecting `coalesce(update.f, target.f)` per field and
-  * `array_union` on provenance. Rows only in target pass through; rows only
-  * in updates insert. This is exactly Delta `MERGE INTO ... whenMatched
-  * updateExpr(coalesce...) whenNotMatched insertAll` — Delta jars are not on
-  * this classpath, so the join form is the storage-free equivalent with the
-  * same semantics and physical shape: ONE shuffle of both sides on the
-  * key. (A full-outer equi-join can NOT be planned as a broadcast hash
-  * join — preserving unmatched rows of both sides needs both sides
-  * partitioned — so small updates don't remove the target shuffle here.
-  * At 100 TB the shuffle-avoiding path is the partition-scoped store
-  * merge `Pipeline.upsertStore` uses: only the touched date partitions
-  * join, exactly as Delta prunes MERGE by partition predicate.)
+  * projecting `coalesce(update.f, target.f)` per field and `array_union`
+  * on provenance — Delta's `MERGE INTO ... whenMatched
+  * updateExpr(coalesce...) whenNotMatched insertAll` without Delta jars,
+  * with ONE shuffle of both sides on the key (a full-outer join cannot
+  * broadcast). An update's NULL field must NOT clobber the target's value
+  * (`helperfunction.py:149-151,179-181`), and applying the same update
+  * twice is a no-op (MergeSpec).
   *
-  * Null-field behavior is the subtle part: an update row with a NULL field
-  * must NOT clobber the target's value (reference
-  * `helperfunction.py:149-151,179-181`); `coalesce(u.f, t.f)` encodes that.
-  * Merge is idempotent: applying the same update twice is a no-op
-  * (property-tested in MergeSpec).
+  * This is the m1 query's merge. The KPI store merges only its touched
+  * date partitions, KPI-grain rows, so `Pipeline.upsertStore` merges them
+  * on the driver with [[KpiSink.mergeItem]]'s rule, which MergeLocalSpec
+  * pins equal to this one.
   */
 object KpiMerge {
 

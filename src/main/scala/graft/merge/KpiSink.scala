@@ -10,10 +10,10 @@ import scala.jdk.CollectionConverters._
   * read the existing item per key, take each new field if non-null else
   * keep the old, union the provenance list, drop null fields, write back.
   *
-  * [[KpiMerge]] is the plan-level (Delta-MERGE-shaped) formulation we
-  * prefer at scale; this sink exists for mechanism parity and for targets
-  * that really are external KV stores. The two are equivalence-tested in
-  * KpiSinkSpec. Executor-side I/O shape notes:
+  * Its per-item rule, [[mergeItem]], is the KPI store's merge too
+  * (`Pipeline.mergeLocal`); KpiSinkSpec and MergeLocalSpec test it equal
+  * to [[KpiMerge]]'s plan-level form. [[upsert]] is for targets that
+  * really are external KV stores. Executor-side I/O shape notes:
   *  - one store client per PARTITION (created inside the closure), never
   *    per row and never serialized from the driver;
   *  - writes are idempotent per key (last-writer-wins per field coalesce),
@@ -40,7 +40,7 @@ object KpiSink {
   /** Merge one row into the store: per-field coalesce(new, old),
     * provenance set-union, null-drop (reference helperfunction.py:38-40,
     * 84-101). */
-  private[merge] def mergeItem(existing: Option[Map[String, Any]],
+  private[graft] def mergeItem(existing: Option[Map[String, Any]],
       row: Map[String, Any], fields: Seq[String],
       provenanceCol: String): Map[String, Any] = {
     val old = existing.getOrElse(Map.empty)
@@ -52,7 +52,7 @@ object KpiSink {
     // filter nulls like KpiMerge's coalesce-to-empty does
     val prov = (old.get(provenanceCol).filter(_ != null).toSeq ++
         row.get(provenanceCol).filter(_ != null).toSeq)
-      .flatMap(_.asInstanceOf[Seq[String]]).distinct.sorted
+      .flatMap(_.asInstanceOf[scala.collection.Seq[String]]).distinct.sorted
     if (prov.isEmpty) merged else merged + (provenanceCol -> prov)
   }
 
@@ -76,13 +76,8 @@ object KpiSink {
       val store = factory.open() // per-partition client
       rows.foreach { r =>
         val key = keyIdx.map(i => String.valueOf(r.get(i)))
-        val asMap = names.zipWithIndex.map { case (n, i) =>
-          n -> (r.get(i) match {
-            case s: scala.collection.Seq[_] => s.toSeq
-            case v => v
-          })
-        }.toMap
-        store.put(key, mergeItem(store.get(key), asMap, fields, provenanceCol))
+        store.put(key, mergeItem(store.get(key), names.zip(r.toSeq).toMap,
+          fields, provenanceCol))
       }
     }
   }

@@ -1,13 +1,16 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.CatalystTypeConverters
 import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
+import scala.jdk.CollectionConverters._
+
 import graft.io.Sources
 import graft.kpi.Kpi
-import graft.merge.KpiMerge
+import graft.merge.KpiSink
 import graft.schema.Schemas
 import graft.validate.Validation
 
@@ -344,33 +347,33 @@ object Pipeline {
     * Delta jars. The store is PARTITIONED by `order_date`; a batch's
     * updates name a handful of dates (normally one), so the merge:
     *
-    *  1. reads ONLY the touched partitions of the store (partition-pruned),
-    *  2. full-outer merges them with the updates ([[KpiMerge.merge]]),
-    *  3. writes the merged partitions to a sibling temp dir,
+    *  1. collects ONLY the touched partitions the snapshot holds, through
+    *     the snapshot read's plan (new dates read nothing),
+    *  2. merges them with the updates per key on the driver
+    *     ([[mergeLocal]], the reference's per-item rule),
+    *  3. writes each date's merged rows as one local frame to its
+    *     partition dir in a sibling temp dir,
     *  4. swaps just those partition directories into the store.
     *
     * Untouched partitions are never read, rewritten, or moved — per-batch
-    * I/O is O(touched dates), not O(store), which is what keeps a daily
-    * merge viable against 100 TB of KPI history (the previous full-store
-    * rewrite was O(store) per batch). The swap is the manual form of
-    * dynamic partition overwrite; done via rename so a crash mid-swap
-    * leaves a recoverable `.bak`, never a deleted store (the
-    * delete-then-rename form had a window where the store was gone).
-    *
-    * Each batch COMMITS by publishing a `_manifest.<epoch>` file after all
-    * swaps (see the commit-protocol comment below) — the transaction-log
-    * analogue that gives manifest-aware readers ([[readOrInit]]) snapshot
-    * isolation across the multi-date swap window; a reader resolving the
-    * store mid-swap or after a crash sees the previous committed batch in
-    * full, never date A new + date B old.
+    * I/O is O(touched dates), not O(store), which keeps a daily merge
+    * viable against 100 TB of KPI history. The swap is the manual form of
+    * dynamic partition overwrite, done by rename so a crash mid-swap
+    * leaves a recoverable `.bak`, never a deleted store. Each batch
+    * COMMITS by publishing a `_manifest.<epoch>` after all swaps
+    * ([[publish]]), which gives readers ([[readOrInit]]) snapshot
+    * isolation across the multi-date swap window: never date A new +
+    * date B old.
     *
     * `updates` are KPI-grain rows (keys × touched dates, bounded at any
     * data scale) in a local frame, as [[Kpi.computeKpis]] returns them
-    * (any other plan is rejected), merged with no collect round trip. Only
-    * touched dates the snapshot holds are read, and row counts come from
-    * parquet footers. Measured on a 60-order daily batch at local[4]: new
-    * dates, 1 Spark job and 6 generated classes per store commit, the same
-    * for every batch; a rerun of a stored date, 3 jobs, ~15 classes more.
+    * (any other plan is rejected); their rows come from its
+    * `LocalRelation`, with no action. The stored rows of those dates are
+    * KPI-grain too, so new and stored dates take one shuffle-free,
+    * sort-free, one-file write; row counts come from parquet footers.
+    * Measured at local[4]: a new date is 1 Spark job and 1 generated
+    * class per store commit; a stored date 1 more job (the collect) and
+    * no class that a new-day commit and its snapshot read do not compile.
     *
     * Concurrency: every piece of state a commit touches — lease, manifest,
     * staging dir, `.bak`, `.hist` — is per store path, so commits to
@@ -388,27 +391,15 @@ object Pipeline {
       leaseTtlMs: Long = DefaultLeaseTtlMs): Long = {
     val fs = Sources.fileSystem(spark, path)
     // a crashed forgetKeys leaves a durable tombstone ([[forgetKeys]]'s
-    // crash contract); finish that erasure BEFORE this batch merges.
-    // The recovery sweep inside runs UNDER the commit lease
-    // ([[recoverUnderLease]]) — a live holder's in-flight swap must turn
-    // this batch away clean here, not be "recovered" out from under it.
+    // crash contract); finish that erasure, under the commit lease
+    // ([[recoverUnderLease]]), BEFORE this batch merges
     completePendingForget(spark, path, schema)
 
-    // Optimistic concurrency (the Delta conflict-detection analogue over
-    // the epoch manifest): the merge below is read-modify-write against
-    // ONE manifest epoch, so a commit by anyone else between our plan and
-    // our commit would silently lose their update. Pin the base epoch here
-    // (or take the caller's — the CAS form an orchestrator uses: "commit
-    // only if the store is still at the epoch I read"), and re-check it at
-    // every mutation boundary; a moved epoch aborts CLEAN (temp dir only,
-    // store untouched) with [[StoreConflictException]], and the retry
-    // re-merges against the new snapshot. The commit section itself
-    // ([[commitSection]]) is EXCLUSIVE under the `_lease` put-if-absent
-    // arbiter (see the commit lease block below): racing swaps past the
-    // entry check can no longer interleave, a live holder turns the second
-    // writer away clean ([[StoreLeaseHeldException]]), a crashed holder is
-    // taken over by epoch/TTL fencing, and the write-once manifest publish
-    // remains the final backstop beneath all of it.
+    // Optimistic concurrency over the epoch manifest: the merge is
+    // read-modify-write against ONE epoch (this one, or the caller's CAS
+    // epoch), re-checked under the `_lease` ([[commitSection]]): a moved
+    // epoch ([[StoreConflictException]]) or a live holder
+    // ([[StoreLeaseHeldException]]) aborts CLEAN, and a retry re-merges.
     val base = latestManifest(fs, path)
     val baseEpoch = expectedEpoch.getOrElse(base.epoch)
     checkEpoch(fs, path, baseEpoch, "before planning")
@@ -418,34 +409,54 @@ object Pipeline {
       case p => throw new IllegalArgumentException(
         s"store $path: updates must be a local frame, not ${p.nodeName}")
     }
-    val at = rel.schema.fieldIndex(PartCol)
-    val dates = rel.data.map(r => Option(r.getUTF8String(at)).map(_.toString)
-      .orNull).distinct.sorted
-    // new dates merge against an empty local target, which the optimizer
-    // folds away: one shuffle-free plan for every such batch, and no
-    // listing of the store (readOrInit lists every partition dir)
+    val toRow = CatalystTypeConverters.createToScalaConverter(rel.schema)
+    val rows = rel.data.map(toRow(_).asInstanceOf[Row])
+    val dates = rows.map(_.getAs[String](PartCol)).distinct.sorted
+    // new dates skip readOrInit, which lists every partition dir
     val stored = dates.filter(base.partitions.toSet)
     val target =
-      if (stored.isEmpty) spark.createDataFrame(
-        java.util.Collections.emptyList[org.apache.spark.sql.Row], schema)
-      else readOrInit(spark, path, schema).where(col(PartCol).isin(stored: _*))
-    // ONE partition: when the touched dates are new the join with the
-    // empty target is dropped, and a multi-split local relation would then
-    // write one file per split into the partition
-    val merged = KpiMerge.merge(target, updates.coalesce(1),
-      keys, fields, Some("data_sources"))
-      .select(schema.fieldNames.toSeq.map(col): _*)
-
-    // PER-WRITER staging dir (round-9 review): a shared `.tmp` let a
-    // second writer clobber the live lease holder's staged commit data
-    // before it even attempted the lease. Unique names make staging
-    // race-free; crashed writers' orphans are GC'd under the lease below.
+      if (stored.isEmpty) Nil
+      else readOrInit(spark, path, schema)
+        .where(col(PartCol).isin(stored: _*)).collect().toSeq
+    // PER-WRITER staging dir: a shared one would let a second writer
+    // clobber the lease holder's staged commit; crashed writers' orphans
+    // are GC'd under the lease ([[publish]])
     val tmp = stagingDir(path)
-    // the merge plan reads the store partitions being replaced, so write
-    // to the temp dir first (finishes the read), then swap directories
-    merged.write.mode("overwrite").partitionBy(PartCol).parquet(tmp)
+    // each date straight into its partition dir: no sort by the partition
+    // column, ONE file (a multi-split local relation writes one per
+    // split), and no `_SUCCESS` marker to swap into the store
+    val at = schema.fieldIndex(PartCol)
+    val dataSchema = StructType(schema.filterNot(_.name == PartCol))
+    mergeLocal(schema, target, rows, keys, fields).groupBy(_.getString(at))
+      .foreach { case (dt, part) => spark.createDataFrame(part.map(r =>
+        Row.fromSeq(r.toSeq.patch(at, Nil, 1))).asJava, dataSchema)
+        .coalesce(1).write
+        .option("mapreduce.fileoutputcommitter.marksuccessfuljobs", "false")
+        .parquet(s"$tmp/$PartCol=$dt")
+      }
     commitSection(fs, path, baseEpoch, leaseTtlMs, staged = Some(tmp))(
       publish(fs, path, tmp, dates, baseEpoch, _, leaseTtlMs))
+  }
+
+  /** The store's merge on the driver: per key, [[KpiSink.mergeItem]]
+    * folds in the target row, then the update row — a field is the
+    * update's if non-null, else the target's; the provenance is
+    * set-unioned and sorted. These are [[graft.merge.KpiMerge.merge]]'s
+    * semantics (`MergeLocalSpec`), and an absent provenance is written as
+    * its `[]`. Keys are string columns; rows come out sorted by key. */
+  private[graft] def mergeLocal(schema: StructType, target: Seq[Row],
+      updates: Seq[Row], keys: Seq[String], fields: Seq[String]): Seq[Row] = {
+    import scala.math.Ordering.Implicits.seqOrdering
+    val names = schema.fieldNames.toSeq
+    val merged = (target ++ updates).foldLeft(
+        Map.empty[Seq[Option[String]], Map[String, Any]]) { (m, r) =>
+      val k = keys.map(c => Option(r.getAs[String](c)))
+      m.updated(k, KpiSink.mergeItem(m.get(k), r.getValuesMap(names),
+        fields, "data_sources") ++ keys.map(c => c -> r.getAs[Any](c)))
+    }
+    merged.toSeq.sortBy(_._1).map { case (_, item) => Row.fromSeq(names.map(
+      n => item.getOrElse(n, if (n == "data_sources") Nil else null)))
+    }
   }
 
   /** Abort CLEAN ([[StoreConflictException]]) unless the store's latest
@@ -999,7 +1010,7 @@ object Pipeline {
     val now = System.currentTimeMillis()
     try fs.listStatus(parent).foreach { st =>
       val name = st.getPath.getName
-      if (name.startsWith(prefix) && st.getPath.toString != exclude &&
+      if (name.startsWith(prefix) && name != new HPath(exclude).getName &&
           now - st.getModificationTime > ttlMs)
         fs.delete(st.getPath, true)
     } catch { case _: java.io.IOException => () } // GC is best-effort

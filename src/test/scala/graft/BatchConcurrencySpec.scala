@@ -156,11 +156,11 @@ class BatchConcurrencySpec extends SparkSpec {
   test("every job of a clean batch carries the caller's local properties " +
       "and none starts after the batch returns") {
     // Measured on local[4] for the second of two fixture batches (the
-    // gate, three validated writes, the KPI aggregate, both store merge
-    // writes, each with its AQE stage jobs). The same code with the writes
-    // and the commits run one after another also runs 20: concurrency
-    // adds and drops no job.
-    val ExpectedJobs = 20
+    // gate, three validated writes, the KPI aggregate, and per store the
+    // collect of its stored rows and the merged write, each with its AQE
+    // stage jobs). The same code with the writes and the commits run one
+    // after another also runs 18: concurrency adds and drops no job.
+    val ExpectedJobs = 18
     val d = dir()
     val (op, ip, p) = BatchFixtures.clean(d)
     def batch(n: Int): Unit = {

@@ -52,8 +52,7 @@ class EntryPointSpec extends AnyFunSuite {
     "Verify" -> "main: the correctness dump, started by `runMain graft.Verify`",
     "ScaleSweep" -> "main: fan-out scaling curves, started by `runMain`",
     "Dev" -> "main: run | explain | stages of named queries",
-    "GraftExtensions" -> "loaded by class name from the `spark.sql.extensions` conf",
-    "KpiSink" -> "MIGRATION.md's KV writer for the reference's DynamoDB upsert")
+    "GraftExtensions" -> "loaded by class name from the `spark.sql.extensions` conf")
 
   /** Public members of top-level objects (and of the templates nested in
     * them) that no code outside their own declaration names, each kept

@@ -84,14 +84,15 @@ class PipelineSpec extends SparkSpec {
     // Every job of validate → transform → both store commits, counted by
     // a listener over the second of two batches of one date (the first
     // warms up and seeds the store, so the second merges against it).
-    // The gate is one action and the KPI families one more, and opening
-    // the validated tables reads their schema from a footer instead of an
-    // inference job each: 20 jobs under AQE on local[4] (23 with the
-    // gate's dedup aggregates before its existence lookups, 26 with the
-    // inference jobs; the six-action gate with the checkpointed KPI path
-    // ran 49). The ceiling keeps later changes from quietly adding
-    // actions back.
-    val MaxJobs = 20
+    // The gate is one action and the KPI families one more, opening the
+    // validated tables reads their schema from a footer instead of an
+    // inference job each, and each store merges its stored rows on the
+    // driver (one collect and one write): 18 jobs under AQE on local[4]
+    // (20 with the full-outer merge plan, 23 with the gate's dedup
+    // aggregates before its existence lookups, 26 with the inference
+    // jobs; the six-action gate with the checkpointed KPI path ran 49).
+    // The ceiling keeps later changes from quietly adding actions back.
+    val MaxJobs = 18
     val d = dir()
     val (op, ip, p) = cleanFixtures(d)
     def batch(n: Int): Unit = {
@@ -125,7 +126,10 @@ class PipelineSpec extends SparkSpec {
       "every batch") {
     // Spark caches compiled classes by their code, so a plan whose code
     // changes between batches (an aggregate over two distinct keys orders
-    // its Expand by expression-id hash) compiles again on every batch
+    // its Expand by expression-id hash) compiles again on every batch.
+    // A rerun of a stored date and an orphan rejection take the same
+    // plans: the rerun reads its stored rows as the snapshot read that
+    // follows every commit does, and the rejection is the gate alone.
     import org.apache.spark.sql.execution.QueryExecution
     import org.apache.spark.sql.execution.debug.codegenStringSeq
     val d = dir()
@@ -144,32 +148,67 @@ class PipelineSpec extends SparkSpec {
         "7,SKU7,10.0,toys,Car,BrandA,25.0,kids",
         "8,SKU8,30.0,books,Atlas,BrandB,75.0,media",
         "9,SKU9,20.0,games,Chess,BrandC,40.0,kids"))
-    def code(batch: (Seq[String], Seq[String], String), n: Int): Seq[String] = {
-      val plans = new java.util.concurrent.ConcurrentLinkedQueue[QueryExecution]
+    // the whole-stage code of every plan `body` runs
+    def plans(body: => Unit): Seq[QueryExecution] = {
+      val seen = new java.util.concurrent.ConcurrentLinkedQueue[QueryExecution]
       val listener = new org.apache.spark.sql.util.QueryExecutionListener {
         def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = {
-          plans.add(qe); ()
+          seen.add(qe); ()
         }
         def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
       }
       spark.listenerManager.register(listener)
       try {
-        val (op, ip, p) = batch
-        val res = Pipeline.validateJob(spark, op, ip, Some(p),
-          s"$d/validated$n", s"$d/result$n.json")
-        assert(res.status === "success")
-        Pipeline.transformJob(spark, s"$d/validated$n", res.processingDate.get,
-          s"$d/store$n", now = s"t$n")
+        body
         org.apache.spark.graft.ListenerDrain.drain(spark.sparkContext)
       } finally spark.listenerManager.unregister(listener)
-      // gate, three validated writes, KPI, two store commits
-      assert(plans.size === 7)
-      plans.toArray(Array.empty[QueryExecution]).toSeq
-        .flatMap(qe => codegenStringSeq(qe.executedPlan).map(_._2)).sorted
+      seen.toArray(Array.empty[QueryExecution]).toSeq
     }
-    val a = code(first, 1)
-    assert(a.nonEmpty)
-    assert(a === code(second, 2))
+    def code(qes: Seq[QueryExecution]): Seq[String] =
+      qes.flatMap(qe => codegenStringSeq(qe.executedPlan).map(_._2)).sorted
+    def batch(b: (Seq[String], Seq[String], String), n: Int, store: String)
+        : Seq[QueryExecution] = plans {
+      val (op, ip, p) = b
+      val res = Pipeline.validateJob(spark, op, ip, Some(p),
+        s"$d/validated$n", s"$d/result$n.json")
+      assert(res.status === "success")
+      Pipeline.transformJob(spark, s"$d/validated$n", res.processingDate.get,
+        s"$d/$store", now = s"t$n")
+      ()
+    }
+    val a = batch(first, 1, "store1")
+    val b = batch(second, 2, "store2")
+    // gate, three validated writes, KPI, two store commits
+    assert(a.size === 7 && b.size === 7)
+    assert(code(a).nonEmpty)
+    assert(code(a) === code(b))
+
+    val read = code(plans {
+      Seq("category_kpi" -> ("category STRING, order_date STRING, " +
+        "daily_revenue DOUBLE, avg_order_value DOUBLE, avg_return_rate " +
+        "DOUBLE, data_sources ARRAY<STRING>, last_updated STRING"),
+        "order_kpi" -> ("order_date STRING, total_orders BIGINT, " +
+          "total_revenue DOUBLE, total_items_sold BIGINT, return_rate " +
+          "DOUBLE, unique_customers BIGINT, data_sources ARRAY<STRING>, " +
+          "last_updated STRING")).foreach { case (s, ddl) =>
+        Pipeline.readOrInit(spark, s"$d/store1/$s",
+          org.apache.spark.sql.types.StructType.fromDDL(ddl)).collect()
+      }
+    })
+    val newDay = (code(a) ++ read).toSet
+    val rerun = batch(first, 3, "store1")
+    assert(rerun.size === 9) // a collect of each store's stored rows more
+    assert(code(rerun).toSet.diff(newDay).isEmpty)
+    val dangling = write(d, "order_items_orphan.csv", itemsHeader,
+      "101,999,10,7,complete,2024-06-01 10:00:00,,,,25.0")
+    val rejection = plans {
+      val res = Pipeline.validateJob(spark, first._1, Seq(dangling),
+        Some(first._3), s"$d/validated4", s"$d/result4.json")
+      assert(res.errorType === Some("REFERENTIAL_ERROR"))
+      ()
+    }
+    assert(rejection.size === 1) // the gate, and no second action
+    assert(code(rejection).toSet.diff(newDay).isEmpty)
   }
 
   test("orders-only rerun merges counts but preserves revenue fields") {

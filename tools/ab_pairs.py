@@ -10,8 +10,10 @@ each checkout, alternating which side runs first, and then prints, per
 end-to-end metric of BENCHMARK.json (read from the change checkout): each
 side's median and quartiles, the pairs the change wins (ties count for
 neither), the median change/parent ratio, and whether the median gap
-exceeds the parent's interquartile range. Each checkout is built once
-before the first pair. Exits 1 if any run is incorrect or has failed
+exceeds the parent's interquartile range; then, from perfbench's
+`op seconds:` stderr line, each side's median seconds per op index, which
+shows which op of the workload moved. Each checkout is built once before
+the first pair. Exits 1 if any run is incorrect or has failed
 operations, 2 if a run could not complete. Standard library only.
 """
 import argparse
@@ -38,8 +40,19 @@ def build(checkout):
         sys.exit(f"ab_pairs: build failed in {checkout}:\n{r.stdout[-3000:]}")
 
 
+def op_seconds(stderr):
+    """Seconds per op from the last `op seconds:` line of a run's stderr."""
+    found = []
+    for line in stderr.splitlines():
+        _, sep, rest = line.partition("op seconds:")
+        if sep:
+            found = [float(x) for x in rest.split()]
+    return found
+
+
 def run_once(checkout, workload, seed, seconds):
-    """The benchmark's result line, or None when the run did not finish."""
+    """The benchmark's result line with its per-op seconds added, or None
+    when the run did not finish."""
     r = subprocess.run(
         [sys.executable, "perfbench/run.py", "--workload", workload,
          "--seed", str(seed), "--seconds", str(seconds), "--trace", "0"],
@@ -50,7 +63,9 @@ def run_once(checkout, workload, seed, seconds):
         print(f"ab_pairs: {checkout} {workload} seed {seed} exited "
               f"{r.returncode}:\n{r.stderr[-2000:]}", file=sys.stderr)
         return None
-    return json.loads(lines[-1])
+    result = json.loads(lines[-1])
+    result["op_seconds"] = op_seconds(r.stderr)
+    return result
 
 
 def quartiles(xs):
@@ -78,6 +93,18 @@ def summarize(workload, metric, pairs):
             f"wins {wins}/{len(pairs)} (ties {ties})  ratio {ratio:.3f}  "
             f"gap {gap:.4g} vs parent IQR {iqr:.4g}"
             f"{'  -> gain holds' if holds else ''}")
+
+
+def per_op(workload, done):
+    """One report line per op index: each side's median seconds."""
+    lines = []
+    n = min(len(r[s]["op_seconds"]) for r in done for s in ("parent", "change"))
+    for i in range(n):
+        par = statistics.median(r["parent"]["op_seconds"][i] for r in done)
+        chg = statistics.median(r["change"]["op_seconds"][i] for r in done)
+        lines.append(f"{workload:14} op {i:<13} parent {par:.3f}  "
+                     f"change {chg:.3f}  ratio {chg / par if par else 0:.3f}")
+    return lines
 
 
 def main():
@@ -132,6 +159,8 @@ def main():
                 (r["parent"]["metrics"][n]["value"],
                  r["change"]["metrics"][n]["value"])
                 for r in done]))
+        for line in per_op(workload, done):
+            print(line)
     if broken:
         sys.exit(2)
     if bad:
