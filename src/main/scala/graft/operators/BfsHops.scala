@@ -63,40 +63,35 @@ object BfsHops {
     // skewed layout, where the pre-partitioned cache measured SLOWER
     // (the negative in BASELINE.md "Round-11 close") — the contract
     // stays per operator, set by measurement.
-    val edges = GraphState.persistGraph(PageRank.copurchaseEdges(lineitem)
-      .repartition(col("src")).sortWithinPartitions("src"))
-    try hubHopsFromEdges(edges, iters)
-    finally { edges.unpersist(); () }
-  }
-
-  /** The rounds over a CALLER-persisted edge relation: they
-    * materialize eagerly in-method, so the
-    * returned frame reads only round-K checkpoint blocks and holds no
-    * reference to the caller's cache. */
-  def hubHopsFromEdges(edges: DataFrame,
-      iters: Int = HopIters): DataFrame = {
-    val deg = edges.groupBy(col("src")).agg(count(lit(1)).as("deg"))
-    var hops = deg.orderBy(col("deg").desc, col("src")).limit(1)
-      .select(col("src").as("node"), lit(0L).as("hop"))
-    for (_ <- 1 to iters) {
-      val expand = hops.join(edges, hops("node") === edges("src"))
-        .select(col("dst").as("node"), (col("hop") + lit(1L)).as("hop"))
-      // one blocking job per round (the d9 discipline); the (node,
-      // hop)-narrow frame is checkpointed so next round's two
-      // consumers read blocks, not a doubling subtree. Round-15
-      // measured negative (recorded per the no-silent-caps rule): both
-      // a LAZY localCheckpoint and plain lazy per-round persists were
-      // tried to collapse the K round jobs into the caller's single
-      // action — neither does (localCheckpoint's `Dataset.rdd`
-      // finalizes the AQE plan by eagerly running the round's shuffle
-      // stages; cached rounds still materialize as per-stage jobs
-      // under AQE), and both measured at or above the eager form
-      // (4.7 / 5.1 / 5.9 s at sf0.1), so the eager, ×300-proven
-      // lifecycle stays.
-      hops = GraphState.checkpoint(hops.unionByName(expand)
-        .groupBy(col("node")).agg(min(col("hop")).as("hop")))
-    }
-    hops.select(col("node").as("product_id"), col("hop"))
+    // Rounds are eager, so the returned frame reads only round-K
+    // checkpoint blocks and the cache has no consumer left by return.
+    val edges = PageRank.copurchaseEdges(lineitem)
+      .repartition(col("src")).sortWithinPartitions("src").persist()
+    try {
+      val deg = edges.groupBy(col("src")).agg(count(lit(1)).as("deg"))
+      var hops = deg.orderBy(col("deg").desc, col("src")).limit(1)
+        .select(col("src").as("node"), lit(0L).as("hop"))
+      for (_ <- 1 to iters) {
+        val expand = hops.join(edges, hops("node") === edges("src"))
+          .select(col("dst").as("node"), (col("hop") + lit(1L)).as("hop"))
+        // one blocking job per round (the d9 discipline); the (node,
+        // hop)-narrow frame is checkpointed so next round's two
+        // consumers read blocks, not a doubling subtree. Round-15
+        // measured negative (recorded per the no-silent-caps rule): both
+        // a LAZY localCheckpoint and plain lazy per-round persists were
+        // tried to collapse the K round jobs into the caller's single
+        // action — neither does (localCheckpoint's `Dataset.rdd`
+        // finalizes the AQE plan by eagerly running the round's shuffle
+        // stages; cached rounds still materialize as per-stage jobs
+        // under AQE), and both measured at or above the eager form
+        // (4.7 / 5.1 / 5.9 s at sf0.1), so the eager, ×300-proven
+        // lifecycle stays.
+        hops = hops.unionByName(expand)
+          .groupBy(col("node")).agg(min(col("hop")).as("hop"))
+          .localCheckpoint(true)
+      }
+      hops.select(col("node").as("product_id"), col("hop"))
+    } finally { edges.unpersist(); () }
   }
 
   /** Oracle twin: the same seed election and K unrolled min-relaxation

@@ -61,46 +61,38 @@ object LabelPropagation {
     // measured par (58.6/61.2 s). The round cost is the edge-grain
     // (src, label) vote VOLUME, not its placement; keep the r15 shape.
     // Lifetime: the family contract on [[PageRank.copurchaseEdges]] —
-    // rounds are eager, so the cache has no consumer left by return.
-    // [[GraphState]] picks the level: memory-first by default, DISK_ONLY
-    // under the ×300 heap lever (results invariant, spec-pinned).
-    val edges = GraphState.persistGraph(PageRank.copurchaseEdges(lineitem))
-    try communitiesFromEdges(edges, iters)
-    finally { edges.unpersist(); () }
-  }
-
-  /** The rounds over a CALLER-persisted edge relation: they
-    * materialize eagerly in-method, so the
-    * returned frame reads only round-K checkpoint blocks and holds no
-    * reference to the caller's cache. */
-  def communitiesFromEdges(edges: DataFrame,
-      iters: Int = LpaIters): DataFrame = {
-    // symmetrized edges: every non-isolated node appears as src
-    val nodes = edges.select(col("src")).distinct()
-    var labels = GraphState.checkpoint(nodes.select(col("src").as("node"),
-      col("src").as("label")))
-    for (_ <- 1 to iters) {
-      // SHUFFLE_HASH on the node-grain label side (round 12): the
-      // edge⋈state join is the canonical shuffled-hash case — the
-      // build side is node-grain (linear in nodes, tiny per reduce
-      // partition) while SMJ would SORT the edge-grain side twice per
-      // round. Measured: at ×100 under the 8 GiB harness heap the SMJ
-      // form OOMs in its sort/spill-merge whatever the partition count
-      // (32/128/256 all die — the "raise shuffle partitions" lever is
-      // a measured negative result); the checkpointed label state has
-      // no stats, so the planner can't discover the asymmetry itself.
-      val votes = edges
-        .join(labels.hint("shuffle_hash"),
-          edges("dst") === labels("node"))
-        .groupBy(col("src"), col("label"))
-        .agg(count(lit(1)).as("cnt"))
-      labels = GraphState.checkpoint(votes
-        .groupBy(col("src"))
-        .agg(max(struct(col("cnt"), (-col("label")).as("nl"))).as("b"))
-        .select(col("src").as("node"), (-col("b.nl")).as("label")))
-    }
-    labels.select(col("node").as("product_id"),
-      col("label").as("community"))
+    // rounds are eager, so the returned frame reads only round-K
+    // checkpoint blocks and the cache has no consumer left by return.
+    val edges = PageRank.copurchaseEdges(lineitem).persist()
+    try {
+      // symmetrized edges: every non-isolated node appears as src
+      val nodes = edges.select(col("src")).distinct()
+      var labels = nodes.select(col("src").as("node"), col("src").as("label"))
+        .localCheckpoint(true)
+      for (_ <- 1 to iters) {
+        // SHUFFLE_HASH on the node-grain label side (round 12): the
+        // edge⋈state join is the canonical shuffled-hash case — the
+        // build side is node-grain (linear in nodes, tiny per reduce
+        // partition) while SMJ would SORT the edge-grain side twice per
+        // round. Measured: at ×100 under the 8 GiB harness heap the SMJ
+        // form OOMs in its sort/spill-merge whatever the partition count
+        // (32/128/256 all die — the "raise shuffle partitions" lever is
+        // a measured negative result); the checkpointed label state has
+        // no stats, so the planner can't discover the asymmetry itself.
+        val votes = edges
+          .join(labels.hint("shuffle_hash"),
+            edges("dst") === labels("node"))
+          .groupBy(col("src"), col("label"))
+          .agg(count(lit(1)).as("cnt"))
+        labels = votes
+          .groupBy(col("src"))
+          .agg(max(struct(col("cnt"), (-col("label")).as("nl"))).as("b"))
+          .select(col("src").as("node"), (-col("b.nl")).as("label"))
+          .localCheckpoint(true)
+      }
+      labels.select(col("node").as("product_id"),
+        col("label").as("community"))
+    } finally { edges.unpersist(); () }
   }
 
   /** Oracle twin: the same graph and K unrolled synchronous rounds as

@@ -133,8 +133,9 @@ object Pipeline {
     * Snapshot read: the latest commit manifest ([[upsertStore]] writes
     * one per batch) is resolved as [[readAt]] resolves any epoch
     * ([[resolveAt]]): only manifest-listed partitions are visible, a swap
-    * in flight over this epoch is read from its `.bak` copies, and a
-    * listed partition that no root holds fails loud. A reader therefore
+    * in flight over this epoch is read from the pre-images it moved to
+    * `.hist/<epoch>`, and a listed partition that no root holds fails
+    * loud. A reader therefore
     * sees exactly the last COMMITTED batch, also concurrently with a
     * crashed multi-date swap. A store with no manifest is epoch 0 with no
     * partitions: whatever dirs a crashed first commit left are not read.
@@ -143,13 +144,13 @@ object Pipeline {
     * serialized by the single-flight runner, T4): resolution re-reads the
     * manifest after planning and retries if the epoch moved, so the
     * returned plan is always pinned to ONE committed snapshot; and because
-    * a committing writer defers `.bak` deletion to the START of the next
-    * batch ([[publish]] step 4), the snapshot's `.bak` copies outlive
-    * the commit that supersedes them — a reader mid-scan never has its
-    * files deleted by the commit itself. The residual race is a scan still
-    * MATERIALIZING when the *next* batch starts swapping the same
-    * partitions; renamed-away files then fail the scan loudly
-    * (FileNotFoundException — never a torn row mix). There is no
+    * a commit moves each partition it replaces into `.hist/<epoch>`
+    * ([[publish]]), where it stays until [[dropOldManifests]] prunes it
+    * [[ManifestsToKeep]] epochs later, a reader scanning a pre-image
+    * never has its files moved or deleted by a later batch. The residual
+    * race is a scan of a LIVE partition still MATERIALIZING when a later
+    * batch swaps that partition; renamed-away files then fail the scan
+    * loudly (FileNotFoundException — never a torn row mix). There is no
     * automatic retry at that level: the error propagates to whoever ran
     * the action, and calling readOrInit again resolves the new committed
     * snapshot cleanly. */
@@ -177,8 +178,8 @@ object Pipeline {
     * committed `epoch` (the Delta `VERSION AS OF` analogue over the epoch
     * manifests). Historical manifests persist for [[ManifestsToKeep]]
     * epochs behind the current one; the partition content each commit
-    * replaced is archived under `<store>.hist/<epoch>/` (see
-    * [[restoreBackups]]) instead of deleted. The manifest is resolved by
+    * replaced is moved to `<store>.hist/<its base epoch>/` (see
+    * [[publish]]) instead of deleted. The manifest is resolved by
     * [[resolveAt]], which fails loud on a partition that cannot be
     * resolved anywhere (expired by [[retentionSweep]] and GC'd): time
     * travel never silently returns a partial snapshot. */
@@ -193,15 +194,14 @@ object Pipeline {
   }
 
   /** The snapshot manifest `m` committed, per listed partition: the
-    * SMALLEST version root with stamp h ≥ `m.epoch` that holds it —
-    * `.hist/<h>`, or `.bak` at its stamp (a swap in flight over that
-    * snapshot, or the not-yet-archived newest version) — holds its
-    * content AS OF epoch h, and no h' with epoch ≤ h' < h existing means
-    * the partition was untouched between the two, so the content at h IS
-    * the content at `m.epoch`. No version ⇒ the partition was never
-    * rewritten after `m.epoch` and the live dir is exact; a stale `.bak`
-    * (stamp below the epoch) is never a candidate. A partition no root
-    * holds FAILS LOUD, and so does one whose deciding version root is
+    * SMALLEST version root `.hist/<h>` with h ≥ `m.epoch` that holds it
+    * holds its content AS OF epoch h — the commit over epoch h moved it
+    * there, and `.hist/<m.epoch>` is also where a swap in flight over
+    * this very snapshot puts it — and no h' with epoch ≤ h' < h existing
+    * means the partition was untouched between the two, so the content at
+    * h IS the content at `m.epoch`. No version ⇒ the partition was never
+    * rewritten after `m.epoch` and the live dir is exact. A partition no
+    * root holds FAILS LOUD, and so does one whose deciding version root is
     * mid-replace: a `.hist` purge that crashed inside its
     * [[Sources.replaceDir]] left a side dir of the partition there, and
     * with the partition dir gone the resolution would silently fall
@@ -209,7 +209,7 @@ object Pipeline {
     * either: it still holds the erased rows).
     *
     * The roots are listed once each (manifest partitions never cost a
-    * probe apiece), in the direction partitions move — live, `.bak`,
+    * probe apiece), in the direction partitions move — live, then
     * `.hist` — so one that moves mid-resolution is seen in at least one
     * listing. The data read is one scan of exactly the snapshot's dirs. */
   private def resolveAt(spark: SparkSession,
@@ -233,19 +233,16 @@ object Pipeline {
         values(names.flatMap(Sources.sideDirOwner(_, HistStaged, HistAside))))
     }
     val live = held(path)._1
-    val bak = bakEpoch(fs, path).filter(_ >= m.epoch)
-      .map(e => (e, s"$path.bak", held(s"$path.bak"))).toSeq
     val histRoot = new HPath(path + ".hist")
-    val hist =
+    val versions =
       if (!fs.exists(histRoot)) Nil
       else fs.listStatus(histRoot).toSeq
         .flatMap(s => s.getPath.getName.toLongOption).filter(_ >= m.epoch)
-        .map(h => (h, s"$path.hist/$h", held(s"$path.hist/$h")))
-    val versions = (hist ++ bak).sortBy(_._1)
+        .sorted.map(h => (s"$path.hist/$h", held(s"$path.hist/$h")))
     // per partition, the first root that holds it or is replacing it
     val deciding = m.partitions.map { pv =>
       pv -> versions.collectFirst {
-        case (_, root, (parts, replacing)) if parts(pv) || replacing(pv) =>
+        case (root, (parts, replacing)) if parts(pv) || replacing(pv) =>
           (root, replacing(pv))
       }
     }
@@ -262,8 +259,8 @@ object Pipeline {
     if (missing.nonEmpty)
       throw new IllegalStateException(
         s"store $path: epoch ${m.epoch} is no longer reconstructable — " +
-          s"partition(s) ${missing.mkString(", ")} are held by no live, " +
-          ".bak or .hist dir (expired by retention, or lost)")
+          s"partition(s) ${missing.mkString(", ")} are held by no live " +
+          "or .hist dir (expired by retention, or lost)")
     val livePv = resolved.collect { case (pv, None) => pv }
     val dataSchema = StructType(schema.filterNot(_.name == PartCol))
     val liveDf =
@@ -299,7 +296,7 @@ object Pipeline {
     * Concurrency: once both KPI families are computed (one action), the
     * `category_kpi` and `order_kpi` commits ([[upsertStore]]) run
     * concurrently ([[ForkJoin.all]]); each keeps its own lease, CAS epoch
-    * checks, `.bak` swap and manifest. Both are joined before this returns
+    * checks, partition swap and manifest. Both are joined before this returns
     * or throws: a failed commit (say, a held lease) is rethrown only after
     * the other store's commit has finished, and that commit stands — a
     * rerun of the batch is idempotent on it.
@@ -359,7 +356,7 @@ object Pipeline {
     * I/O is O(touched dates), not O(store), which keeps a daily merge
     * viable against 100 TB of KPI history. The swap is the manual form of
     * dynamic partition overwrite, done by rename so a crash mid-swap
-    * leaves a recoverable `.bak`, never a deleted store. Each batch
+    * leaves the old partitions in `.hist/<epoch>`, never a deleted store. Each batch
     * COMMITS by publishing a `_manifest.<epoch>` after all swaps
     * ([[publish]]), which gives readers ([[readOrInit]]) snapshot
     * isolation across the multi-date swap window: never date A new +
@@ -376,7 +373,7 @@ object Pipeline {
     * no class that a new-day commit and its snapshot read do not compile.
     *
     * Concurrency: every piece of state a commit touches — lease, manifest,
-    * staging dir, `.bak`, `.hist` — is per store path, so commits to
+    * staging dir, `.hist` — is per store path, so commits to
     * DIFFERENT stores (what [[transformJob]] runs concurrently) never
     * interact. Concurrent commits to the SAME store are arbitrated by the
     * lease and the epoch CAS: the loser aborts clean, as between
@@ -500,23 +497,20 @@ object Pipeline {
     * from the store and the manifest. Returns the new snapshot's rows.
     *
     * Commit protocol (reader isolation — see [[readOrInit]]):
-    *  1. stamp `.bak/_epoch` with the CURRENT manifest epoch, so readers
-    *     know the backups about to appear belong to an in-flight swap
-    *     over that snapshot (and not to an already-committed one),
-    *  2. swap the touched partition dirs (old copies land in `.bak`),
-    *  3. COMMIT: atomically publish `_manifest.<epoch+1>` listing every
-    *     committed partition — the single instant the batch becomes
-    *     visible; readers before it resolve `.bak`, readers after it see
-    *     the new dirs and ignore the now-stale `.bak`,
-    *  4. clean up old manifests. `.bak` deletion is DEFERRED to the
-    *     start of the NEXT batch (restoreBackups sweeps a stale one):
-    *     deleting it here would yank files out from under a live reader
-    *     that resolved the pre-commit snapshot and is still scanning its
-    *     bak-preferred plan. The stale `.bak` (epoch < new manifest) is
-    *     ignored by every later reader.
+    *  1. create `<store>.hist/<baseEpoch>`: while the manifest is still
+    *     at `baseEpoch` it marks a commit in flight, which
+    *     [[rollBack]] undoes (first here, if a crashed writer left one),
+    *  2. swap the touched partition dirs: each old live dir moves to
+    *     `.hist/<baseEpoch>`, where readers of `baseEpoch` find it,
+    *  3. COMMIT: atomically publish `_manifest.<baseEpoch+1>` listing
+    *     every committed partition — the single instant the batch becomes
+    *     visible. From then on `.hist/<baseEpoch>` is the time-travel
+    *     version of what the batch replaced, and stays as it is (a reader
+    *     may still be scanning it) until [[dropOldManifests]] prunes it,
+    *  4. prune manifests and versions outside the window.
     * A crash at any point leaves either epoch N fully readable (steps
-    * 1–2: bak-preferred; uncommitted new dates unlisted) or epoch N+1
-    * fully readable (steps 3–4), never a torn mix. */
+    * 1–2: pre-images in `.hist/N`; uncommitted new dates unlisted) or
+    * epoch N+1 fully readable (steps 3–4), never a torn mix. */
   private def publish(fs: org.apache.hadoop.fs.FileSystem, path: String,
       tmp: String, dates: Seq[String], baseEpoch: Long,
       lease: StoreLease, ttlMs: Long): Long = {
@@ -528,24 +522,27 @@ object Pipeline {
     // the same bound every other liveness decision uses)
     sweepOrphanStaging(fs, path, exclude = tmp, ttlMs = ttlMs)
     val cur = latestManifest(fs, path)
+    // a commit over this epoch that crashed after this writer's recovery
+    // sweep ran: undo it before swapping over it
+    rollBack(fs, path, cur)
     val present = listPartitionDirs(fs, tmp).toSet
     val retired = dates.filterNot(present)
     // post-commit store size in O(touched), not O(store): the previous
     // total rides the manifest (#rows); the committed partitions (their
-    // live dirs: recovery ran before planning and the lease + epoch check
-    // pin them) and the staged replacement are counted from parquet
+    // live dirs: the rollback above and the lease + epoch check pin
+    // them) and the staged replacement are counted from parquet
     // footers on the driver — the result is carried forward on the new
     // manifest, so per-batch cost never grows with store age
     val newTotal = cur.rows -
       partitionRows(fs, path, dates.filter(cur.partitions.toSet)) +
       footerRows(fs, new HPath(tmp))
-    writeBakEpoch(fs, path, baseEpoch)
+    // versions live OUTSIDE the store dir, where partition discovery
+    // never sees them
+    val hist = new HPath(s"$path.hist/$baseEpoch")
+    fs.mkdirs(hist)
     dates.foreach { dt =>
       swapDir(fs, Option.when(present(dt))(new HPath(s"$tmp/$PartCol=$dt")),
-        new HPath(s"$path/$PartCol=$dt"),
-        // backups live OUTSIDE the store dir — a `order_date=X.bak` dir
-        // inside it would be picked up by partition discovery
-        new HPath(s"$path.bak/$PartCol=$dt"))
+        new HPath(s"$path/$PartCol=$dt"), new HPath(hist, s"$PartCol=$dt"))
     }
     fs.delete(new HPath(tmp), true)
     // fencing check: a takeover (stale-lease break by a writer that
@@ -556,7 +553,6 @@ object Pipeline {
       (cur.partitions.diff(retired) ++ dates.filter(present)).distinct.sorted,
       newTotal)
     dropOldManifests(fs, path, current = baseEpoch + 1)
-    // no `.bak` delete here — see step 4 of the commit protocol above
     newTotal
   }
 
@@ -591,13 +587,12 @@ object Pipeline {
     * epoch-commit protocol as the batch merge (touched partitions
     * rewritten by left-anti join, emptied partitions retired from the
     * manifest, one atomic manifest publish), and then COMPLETE the
-    * erasure in the version store: `.hist/<epoch>` archived partition
-    * copies (the readAt time-travel data) are rewritten dropping the
-    * keys, and this batch's own `.bak` copies are deleted immediately —
-    * erasure semantics deliberately trump the deferred-`.bak`
-    * reader-isolation window for the touched partitions, the same trade
-    * Delta makes when VACUUM removes files a straggling reader might
-    * still reference.
+    * erasure in the version store: every `.hist/<epoch>` partition
+    * version (the readAt time-travel data, the pre-images this call's own
+    * commit moved there included) is rewritten dropping the keys —
+    * erasure deliberately trumps a straggling reader of those versions,
+    * the same trade Delta makes when VACUUM removes files such a reader
+    * might still reference.
     *
     * The pass is IDEMPOTENT and crash-restartable: the history purge
     * runs unconditionally (not gated on current-snapshot hits), so a
@@ -609,20 +604,20 @@ object Pipeline {
     * for): before any mutation the keys are recorded durably as a
     * TOMBSTONE — a parquet directory at `<store>.forget.pending` — and
     * the tombstone is cleared only after the history purge completes.
-    * While it is outstanding, (a) [[restoreBackups]] DELETES orphan
-    * `.bak` copies instead of archiving them to `.hist` (they are the
-    * crashed forget's own pre-delete copies and carry the forgotten
-    * rows — erasure outranks the time-travel archive, the same trade
-    * this operator already makes for its own `.bak` cleanup), and
-    * (b) [[upsertStore]] and a fresh `forgetKeys` call complete the
-    * pending erasure at entry (same key columns are unioned in; a
-    * different key set is finished as its own pass first), so a routine
-    * batch after a crash can never silently retain the keys.
+    * While it is outstanding, [[upsertStore]] and a fresh `forgetKeys`
+    * call complete the pending erasure at entry (same key columns are
+    * unioned in; a different key set is finished as its own pass first),
+    * so a routine batch after a crash can never silently retain the
+    * keys. A commit that crashed before its manifest is rolled back like
+    * any other ([[rollBack]]), and the rerun erases what it restores.
     *
-    * The tombstone publish and each `.hist` rewrite are
-    * [[Sources.replaceDir]]s: the leased recovery sweep
-    * ([[recoverUnderLease]]) and the purge's per-epoch preamble finish or
-    * roll back whichever one a crash interrupted.
+    * The whole pass, from the tombstone publish to its delete, is ONE
+    * [[commitSection]]: another writer's recovery that finds the
+    * tombstone half-published is turned away by the held lease, never
+    * "recovers" it from under the write. The tombstone publish and each
+    * `.hist` rewrite are [[Sources.replaceDir]]s: the leased recovery
+    * sweep ([[recoverUnderLease]]) and the purge's per-epoch preamble
+    * finish or roll back whichever one a crash interrupted.
     *
     * @return (manifest epoch after the call, rows deleted from the
     *         current snapshot)
@@ -634,13 +629,12 @@ object Pipeline {
       s"forget keys must be data columns, not the partition column $PartCol")
     val fs = Sources.fileSystem(spark, path)
     // finish a tombstone publish a crash left half-swapped BEFORE looking
-    // at the pending dir, so the read below always sees a complete record;
-    // the whole recovery sweep (swap promote + backup restore) runs under
-    // the commit lease — a live writer's in-flight swap is NOT a crash
+    // at the pending dir, so the read below always sees a complete record
     recoverUnderLease(fs, path)
     // outstanding tombstone from a crashed prior forget: same key columns
     // fold into this pass (erasure is idempotent); a different key set is
-    // completed as its own pass first, clearing its tombstone
+    // completed as its own pass first, clearing its tombstone — before
+    // this pass takes the lease, which a nested pass would find held
     val (pendingDir, pendingTmp, pendingOld) = tombstone(path)
     val requested = keyValues.select(keys.map(col): _*)
     val kvIn =
@@ -655,76 +649,70 @@ object Pipeline {
         }
       }
     val baseEpoch = latestManifest(fs, path).epoch
-    // durable tombstone BEFORE any mutation, published by rename-aside
-    // (never delete-then-rename — a crash between those two would lose a
-    // still-pending prior erasure). Size is request-grain (the distinct
-    // keys of one delete request), not data-grain — a bounded write by
-    // construction.
-    Sources.replaceDir(fs, pendingDir, pendingTmp, pendingOld)(t =>
-      kvIn.distinct().coalesce(1).write.parquet(t.toString))
-    // the published tombstone is the authoritative key set: re-reading it
-    // (instead of keeping the in-memory union plan alive) means a cache
-    // eviction can never recompute through the superseded pending dir
-    val kv = spark.read.parquet(pendingDir.toString).persist()
-    try {
-      val snapshot = readOrInit(spark, path, schema)
-      val touched = snapshot.join(kv, keys, "left_semi")
-      val deleted = touched.count()
-      val epoch =
-        if (deleted == 0L) baseEpoch
-        else {
-          val dates = touched.select(col(PartCol)).distinct()
-            .collect().map(_.getString(0)).sorted.toSeq
-          val tmp = stagingDir(path) // per-writer, as in upsertStore
-          // a fully-emptied partition writes no dir — publish RETIRES it
-          snapshot.where(col(PartCol).isin(dates: _*))
-            .join(kv, keys, "left_anti")
-            .select(schema.fieldNames.toSeq.map(col): _*)
-            .write.mode("overwrite").partitionBy(PartCol).parquet(tmp)
-          commitSection(fs, path, baseEpoch, staged = Some(tmp)) { lease =>
+    commitSection(fs, path, baseEpoch) { lease =>
+      // durable tombstone BEFORE any mutation, published by rename-aside
+      // (never delete-then-rename — a crash between those two would lose
+      // a still-pending prior erasure). Size is request-grain (the
+      // distinct keys of one delete request), not data-grain — a bounded
+      // write by construction.
+      Sources.replaceDir(fs, pendingDir, pendingTmp, pendingOld)(t =>
+        kvIn.distinct().coalesce(1).write.parquet(t.toString))
+      // the published tombstone is the authoritative key set: re-reading
+      // it (instead of keeping the in-memory union plan alive) means a
+      // cache eviction can never recompute through the superseded dir
+      val kv = spark.read.parquet(pendingDir.toString).persist()
+      try {
+        val snapshot = readOrInit(spark, path, schema)
+        val touched = snapshot.join(kv, keys, "left_semi")
+        val deleted = touched.count()
+        val epoch =
+          if (deleted == 0L) baseEpoch
+          else {
+            val dates = touched.select(col(PartCol)).distinct()
+              .collect().map(_.getString(0)).sorted.toSeq
+            val tmp = stagingDir(path) // per-writer, as in upsertStore
+            // a fully-emptied partition writes no dir — publish RETIRES it
+            snapshot.where(col(PartCol).isin(dates: _*))
+              .join(kv, keys, "left_anti")
+              .select(schema.fieldNames.toSeq.map(col): _*)
+              .write.mode("overwrite").partitionBy(PartCol).parquet(tmp)
             publish(fs, path, tmp, dates, baseEpoch, lease, DefaultLeaseTtlMs)
-            // erasure > deferred isolation: this batch's .bak copies carry
-            // the forgotten rows — delete them NOW instead of leaving them
-            // for the next batch's archive sweep (which would re-introduce
-            // the rows into .hist)
-            dates.foreach { dt =>
-              fs.delete(new HPath(s"$path.bak/$PartCol=$dt"), true)
+            baseEpoch + 1
+          }
+        // history purge — unconditional, so a crashed/partial prior run is
+        // finished by a rerun. Versions carry the data columns only (the
+        // partition value is the dir name), so read with the explicit
+        // data schema and rewrite in place when the keys appear.
+        val dataSchema = StructType(schema.filterNot(_.name == PartCol))
+        val histRoot = new HPath(path + ".hist")
+        if (fs.exists(histRoot)) {
+          for (ep <- fs.listStatus(histRoot).toSeq if ep.isDirectory) {
+            // recovery preamble: finish (or roll back) any rewrite a
+            // crashed purge left, so the pass below starts from live dirs
+            Sources.replacesUnder(fs, ep.getPath, HistStaged, HistAside)
+              .foreach { case (live, staged, aside) =>
+                Sources.recoverReplace(fs, live, staged, aside) }
+            for (pd <- fs.listStatus(ep.getPath).toSeq
+                 if pd.isDirectory &&
+                   pd.getPath.getName.startsWith(PartCol + "=")) {
+              val dir = pd.getPath.toString
+              val h = spark.read.schema(dataSchema).parquet(dir)
+              if (h.join(kv, keys, "left_semi").limit(1).count() > 0)
+                Sources.replaceDir(fs, pd.getPath,
+                    Sources.sideDir(pd.getPath, HistStaged),
+                    Sources.sideDir(pd.getPath, HistAside)) { t =>
+                  h.join(kv, keys, "left_anti").coalesce(1)
+                    .write.parquet(t.toString)
+                }
             }
           }
-          baseEpoch + 1
         }
-      // history purge — unconditional, so a crashed/partial prior run is
-      // finished by a rerun. Archived dirs carry the data columns only
-      // (the partition value is the dir name), so read with the explicit
-      // data schema and rewrite in place when the keys appear.
-      val dataSchema = StructType(schema.filterNot(_.name == PartCol))
-      val histRoot = new HPath(path + ".hist")
-      if (fs.exists(histRoot)) {
-        for (ep <- fs.listStatus(histRoot).toSeq if ep.isDirectory) {
-          // recovery preamble: finish (or roll back) any rewrite a crashed
-          // purge left, so the pass below starts from live archived dirs
-          Sources.replacesUnder(fs, ep.getPath, HistStaged, HistAside)
-            .foreach { case (live, staged, aside) =>
-              Sources.recoverReplace(fs, live, staged, aside) }
-          for (pd <- fs.listStatus(ep.getPath).toSeq
-               if pd.isDirectory && pd.getPath.getName.startsWith(PartCol + "=")) {
-            val dir = pd.getPath.toString
-            val h = spark.read.schema(dataSchema).parquet(dir)
-            if (h.join(kv, keys, "left_semi").limit(1).count() > 0)
-              Sources.replaceDir(fs, pd.getPath,
-                  Sources.sideDir(pd.getPath, HistStaged),
-                  Sources.sideDir(pd.getPath, HistAside)) { t =>
-                h.join(kv, keys, "left_anti").coalesce(1)
-                  .write.parquet(t.toString)
-              }
-          }
-        }
-      }
-      // erasure complete (snapshot + every archived version): retire the
-      // tombstone — until this instant a crash re-enters the purge path
-      fs.delete(pendingDir, true)
-      (epoch, deleted)
-    } finally { kv.unpersist(); () }
+        // erasure complete (snapshot + every version): retire the
+        // tombstone — until this instant a crash re-enters the purge path
+        fs.delete(pendingDir, true)
+        (epoch, deleted)
+      } finally { kv.unpersist(); () }
+    }
   }
 
   /** Side-dir suffixes of the `.hist` purge's [[Sources.replaceDir]]. */
@@ -765,7 +753,8 @@ object Pipeline {
     * grows without bound.
     *
     * Ordering is the whole operator: (1) recover any crashed swap
-    * (restoreBackups — retention must never roll back OVER a half-swap),
+    * ([[recoverUnderLease]] — retention must never commit OVER a
+    * half-swap),
     * (2) COMMIT the shrunken partition list as a new manifest epoch —
     * from this instant the expired dates are invisible to every
     * manifest-aware reader, (3) garbage-collect dirs that were ALREADY
@@ -773,9 +762,9 @@ object Pipeline {
     * orphans). The just-expired dirs deliberately survive THIS sweep:
     * deleting them in the same invocation that commits would yank files
     * out from under a reader still materializing a plan pinned to the
-    * previous epoch — the same live-reader window the batch swap closes
-    * by deferring `.bak` deletion, closed here the same way. The next
-    * sweep (or any later one) finds them unlisted and removes them.
+    * previous epoch — the same live-reader window a batch commit closes
+    * by moving what it replaces into `.hist` instead of deleting it. The
+    * next sweep (or any later one) finds them unlisted and removes them.
     *
     * @return the partition values expired from the manifest
     */
@@ -852,8 +841,8 @@ object Pipeline {
   // or presumed dead (file age beyond the TTL). Takeover bumps the
   // fencing token; the previous holder, if actually alive, fails its
   // pre-publish [[verifyStoreLease]] and aborts WITHOUT publishing — its
-  // half-swapped dirs are exactly the crash shape [[restoreBackups]]
-  // already reconciles. Clock caveat: the TTL compares the driver clock
+  // half-swapped dirs, with `.hist/<epoch>` in place, are exactly the
+  // crash shape [[rollBack]] already reconciles. Clock caveat: the TTL compares the driver clock
   // with the store FileSystem's mtime — keep it generous (default 10
   // min) relative to plausible skew.
 
@@ -953,7 +942,7 @@ object Pipeline {
     * lease on disk must still be OURS (same owner AND token). A takeover
     * (stale-lease break) replaces it — this writer then aborts without
     * publishing, leaving only the crash shape the new holder's
-    * [[restoreBackups]] reconciles. */
+    * [[rollBack]] reconciles. */
   private[graft] def verifyStoreLease(fs: org.apache.hadoop.fs.FileSystem,
       path: String, lease: StoreLease): Unit = {
     val cur = parseLease(fs, leasePath(path))
@@ -962,8 +951,8 @@ object Pipeline {
         s"store $path: commit lease lost before publish (now held by " +
           s"${cur.map(l => s"${l.owner} token=${l.token}").getOrElse("nobody")}," +
           s" ours was token=${lease.token}) — a takeover fenced this " +
-          "writer out; aborting without publishing. The new holder's " +
-          "backup restore reconciles the swapped partition dirs.")
+          "writer out; aborting without publishing. The new holder " +
+          "rolls back the swapped partition dirs.")
   }
 
   /** Release = delete, but only while the lease is still ours — never
@@ -1023,31 +1012,31 @@ object Pipeline {
     } catch { case _: java.io.IOException => () }
   }
 
-  /** Crash-recovery sweep under the commit lease. The unguarded form
-    * treated a LIVE holder's in-flight swap (bak-epoch == manifest
-    * epoch) as a crash and rolled its partitions back mid-commit
-    * (round-9 review); now recovery only proceeds as the lease holder,
-    * and a live writer turns the caller away clean
-    * ([[StoreLeaseHeldException]]) BEFORE any mutation. It finishes or
-    * rolls back each interrupted [[Sources.replaceDir]] of the store (the
-    * forget tombstone, a compaction's partitions), then the interrupted
-    * partition swap ([[restoreBackups]]). The lease is only taken when
+  /** Crash-recovery sweep under the commit lease: a LIVE holder's
+    * in-flight commit looks exactly like a crashed one, so recovery only
+    * proceeds as the lease holder, and a live writer turns the caller
+    * away clean ([[StoreLeaseHeldException]]) BEFORE any mutation. It
+    * finishes or rolls back each interrupted [[Sources.replaceDir]] of
+    * the store (the forget tombstone, a compaction's partitions), then
+    * the interrupted commit ([[rollBack]]). The lease is only taken when
     * there is evidence of interrupted work, so the common no-crash path
-    * stays `exists` probes and one listing of the store root. */
+    * stays `exists` probes and two listings of the store root. */
   private[graft] def recoverUnderLease(fs: org.apache.hadoop.fs.FileSystem,
       path: String, ttlMs: Long = DefaultLeaseTtlMs): Unit = {
     import org.apache.hadoop.fs.{Path => HPath}
     val (pending, pendingTmp, pendingOld) = tombstone(path)
     val compactions = Sources.crashedCompactions(fs, new HPath(path))
-    val evidence = fs.exists(new HPath(path + ".bak")) ||
+    val epoch = latestManifest(fs, path).epoch
+    val evidence = fs.exists(new HPath(s"$path.hist/$epoch")) ||
       fs.exists(pendingOld) || fs.exists(pendingTmp) || compactions.nonEmpty
     if (!evidence) return
-    val l = acquireStoreLease(fs, path, latestManifest(fs, path).epoch, ttlMs)
+    val l = acquireStoreLease(fs, path, epoch, ttlMs)
     try {
       Sources.recoverReplace(fs, pending, pendingTmp, pendingOld)
       compactions.foreach { case (live, staged, aside) =>
         Sources.recoverReplace(fs, live, staged, aside) }
-      restoreBackups(fs, path)
+      // re-read under the lease: a writer may have committed since
+      rollBack(fs, path, latestManifest(fs, path))
     } finally releaseStoreLease(fs, path, l)
   }
 
@@ -1140,10 +1129,10 @@ object Pipeline {
       throw new StoreConflictException(
         s"store $path: manifest epoch $epoch was already published by a " +
           "concurrent writer during this commit section — swapped " +
-          "partition dirs may disagree with the winning manifest; the " +
-          "next writer's backup restore reconciles, but run writers " +
-          "single-flight (T4) or under a storage lease to avoid this " +
-          "window entirely.")
+          "partition dirs may disagree with the winning manifest. Two " +
+          "writers commit at once only when one's commit lease was taken " +
+          "over while it still ran: raise the lease TTL above the " +
+          "longest commit.")
     }
     Sources.renameOrFail(fs, tmp, dst)
   }
@@ -1175,50 +1164,6 @@ object Pipeline {
       }
   }
 
-  /** The manifest epoch the in-flight swap's backups were taken AGAINST —
-    * readers prefer `.bak` only while this matches the latest manifest.
-    * Fails LOUD on an unparseable stamp: the two recovery regimes make
-    * opposite decisions (roll back vs archive), so guessing a regime on
-    * a torn file could delete the only copy of pre-batch data. The
-    * atomic publish in [[writeBakEpoch]] means a torn `_epoch` can only
-    * predate that fix or indicate FS corruption — both operator
-    * territory. */
-  private[graft] def bakEpoch(fs: org.apache.hadoop.fs.FileSystem,
-      path: String): Option[Long] = {
-    import org.apache.hadoop.fs.{Path => HPath}
-    val p = new HPath(path + ".bak", "_epoch")
-    if (!fs.exists(p)) None
-    else {
-      val in = fs.open(p)
-      val raw =
-        try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim
-        finally in.close()
-      Some(raw.toLongOption.getOrElse(throw new java.io.IOException(
-        s"store $path: unparseable .bak/_epoch stamp '$raw' — recovery " +
-          "cannot tell the rollback and archive regimes apart; inspect " +
-          "the .bak tree manually before retrying")))
-    }
-  }
-
-  private[graft] def writeBakEpoch(fs: org.apache.hadoop.fs.FileSystem,
-      path: String, epoch: Long): Unit = {
-    import org.apache.hadoop.fs.{Path => HPath}
-    val root = new HPath(path + ".bak")
-    if (!fs.exists(root)) fs.mkdirs(root)
-    // write-tmp-then-rename, like the manifest and the forget tombstone:
-    // `_epoch` arbitrates which recovery REGIME runs, so a torn direct
-    // write (crash between create and close) would leave every reader,
-    // writer, and recovery path throwing on an unparseable stamp — the
-    // one commit-protocol file that previously skipped the atomic
-    // publish discipline
-    val tmp = new HPath(root, "_epoch.tmp")
-    fs.delete(tmp, true)
-    val out = fs.create(tmp, true)
-    try out.write(epoch.toString.getBytes("UTF-8")) finally out.close()
-    fs.delete(new HPath(root, "_epoch"), true)
-    Sources.renameOrFail(fs, tmp, new HPath(root, "_epoch"))
-  }
-
   private[graft] def listPartitionDirs(fs: org.apache.hadoop.fs.FileSystem,
       path: String): Seq[String] = {
     import org.apache.hadoop.fs.{Path => HPath}
@@ -1229,94 +1174,42 @@ object Pipeline {
       .map(_.getPath.getName.stripPrefix(PartCol + "="))
   }
 
-  /** Crash recovery. Two regimes, told apart by the `.bak/_epoch` stamp:
-    *
-    *  - **In-flight rollback** (`_epoch` == latest manifest epoch, 0
-    *    before the first): the previous batch crashed mid-swap before
-    *    committing its manifest.
-    *    Every backed-up partition is rolled BACK over its (half-replaced)
-    *    store dir, returning the store to exactly the committed snapshot
-    *    readers were already being served ([[readOrInit]] preferred these
-    *    same `.bak` copies). Partition dirs NOT listed in the committed
-    *    manifest — a crashed batch's brand-new dates, swapped in with no
-    *    `.bak` copy and never committed — are deleted too: they were
-    *    invisible to manifest readers but would otherwise accumulate as
-    *    permanent garbage and surface as torn data if the store were ever
-    *    re-bootstrapped from its dirs. The retried merge then applies its
-    *    updates to pristine committed data.
-    *  - **Orphan restore** (no `_epoch`, or epoch ≠ manifest): backups are
-    *    either stale leftovers from a committed batch (post-commit,
-    *    pre-cleanup crash) or unstamped. Only a backup whose store
-    *    partition is MISSING (the window between [[swapDir]]'s two
-    *    renames) is restored — a backup is never deleted while it is the
-    *    only copy. A stale backup whose live partition EXISTS is the
-    *    pre-swap content a committed batch replaced: it is ARCHIVED to
-    *    `<store>.hist/<bakEpoch>/` — the version store behind [[readAt]]
-    *    time travel — rather than deleted (an unstamped backup is still
-    *    swept: there is no epoch to file it under).
-    */
-  private def restoreBackups(fs: org.apache.hadoop.fs.FileSystem,
-      path: String): Unit = {
+  /** Crash recovery, as the lease holder, against the latest manifest
+    * `m`: `.hist/<m.epoch>` means a commit over `m` crashed before its
+    * manifest ([[publish]] step 1). Each partition it moved there goes
+    * back over its (half-replaced) live dir, the live dirs `m` does not
+    * list — the crashed commit's new dates — are deleted, and so is the
+    * `.hist/<m.epoch>` dir: the store is again exactly the snapshot
+    * readers were being served, and the retried batch merges against
+    * it. A crash inside the rollback leaves a state the next one
+    * finishes. */
+  private def rollBack(fs: org.apache.hadoop.fs.FileSystem, path: String,
+      m: StoreManifest): Unit = {
     import org.apache.hadoop.fs.{Path => HPath}
-    val bakRoot = new HPath(path + ".bak")
-    if (fs.exists(bakRoot)) {
-      val m = latestManifest(fs, path)
-      val be = bakEpoch(fs, path)
-      val inFlight = be.contains(m.epoch)
-      // an outstanding forget tombstone means ORPHAN backups (post-commit
-      // regime) are the crashed forget's own pre-delete copies — they
-      // carry the forgotten rows, so erasure outranks both the
-      // time-travel archive AND the missing-dir restore: delete, never
-      // file into .hist or rename back into the live tree. The dst-
-      // missing case is exactly a partition the forget EMPTIED and
-      // retired from the manifest — restoring it would park the
-      // forgotten rows in an unlisted live dir forever (the completing
-      // forget reads manifest-filtered and would never rewrite it).
-      // Pre-commit crashes are unaffected: they land in the inFlight
-      // regime above (bakEpoch == manifest epoch) and roll back, so a
-      // backup holding non-forgotten rows is never deleted here.
-      val forgetPending = fs.exists(new HPath(path + ".forget.pending"))
-      fs.listStatus(bakRoot)
-        .filterNot(_.getPath.getName.startsWith("_")).foreach { s =>
-          val dst = new HPath(path, s.getPath.getName)
-          if (inFlight) {
-            if (fs.exists(dst)) fs.delete(dst, true)
-            Sources.renameOrFail(fs, s.getPath, dst)
-          } else if (forgetPending) fs.delete(s.getPath, true)
-          else if (!fs.exists(dst)) Sources.renameOrFail(fs, s.getPath, dst)
-          else be.foreach { e =>
-            val histDir = new HPath(s"$path.hist/$e")
-            if (!fs.exists(histDir)) fs.mkdirs(histDir)
-            Sources.renameOrFail(fs, s.getPath, new HPath(histDir, s.getPath.getName))
-          }
-        }
-      // in-flight rollback also sweeps the crashed batch's UNCOMMITTED
-      // new-date dirs (swapped in with no .bak copy, listed in no
-      // manifest) — see the scaladoc's first regime
-      if (inFlight) {
-        val committed = m.partitions.toSet
-        listPartitionDirs(fs, path)
-          .filterNot(committed)
-          .foreach(pv => fs.delete(new HPath(path, s"$PartCol=$pv"), true))
+    val hist = new HPath(s"$path.hist/${m.epoch}")
+    if (fs.exists(hist)) {
+      fs.listStatus(hist).foreach { s =>
+        val dst = new HPath(path, s.getPath.getName)
+        if (fs.exists(dst)) fs.delete(dst, true)
+        Sources.renameOrFail(fs, s.getPath, dst)
       }
-      fs.delete(bakRoot, true)
+      val committed = m.partitions.toSet
+      listPartitionDirs(fs, path)
+        .filterNot(committed)
+        .foreach(pv => fs.delete(new HPath(path, s"$PartCol=$pv"), true))
+      fs.delete(hist, true)
     }
   }
 
-  /** Crash-safe partition swap: move the old `dst` (if any) to `bak`,
+  /** Crash-safe partition swap: move the old `dst` (if any) to `old`,
     * then `src` (if any) into `dst` — without `src` the partition is
-    * retired. A failure leaves either the old data or old-as-bak +
-    * new-in-temp, never nothing. Backups are dropped after ALL touched
-    * partitions have swapped (see [[publish]]). */
+    * retired. A failure leaves either the old data or old-at-`old` +
+    * new-in-temp, never nothing. */
   private def swapDir(fs: org.apache.hadoop.fs.FileSystem,
       src: Option[org.apache.hadoop.fs.Path],
       dst: org.apache.hadoop.fs.Path,
-      bak: org.apache.hadoop.fs.Path): Unit = {
-    if (fs.exists(bak)) fs.delete(bak, true)
-    if (fs.exists(dst)) {
-      if (!fs.exists(bak.getParent)) fs.mkdirs(bak.getParent)
-      Sources.renameOrFail(fs, dst, bak)
-    }
+      old: org.apache.hadoop.fs.Path): Unit = {
+    if (fs.exists(dst)) Sources.renameOrFail(fs, dst, old)
     src.foreach { s =>
       if (!fs.exists(dst.getParent)) fs.mkdirs(dst.getParent)
       Sources.renameOrFail(fs, s, dst)

@@ -77,16 +77,6 @@ object Validation {
         Seq(childKey), "left_anti")
       .distinct()
 
-  /** Full validation verdict over the three tables, mirroring
-    * `scripts/validation.py:176-191`: null gates first (NULL_VALIDATION_ERROR,
-    * every failing column listed), then order RI, then product RI
-    * (REFERENTIAL_ERROR). Returns the first failure, like the reference's
-    * exception flow, or None when valid. One action: see [[gate]]. */
-  def validate(orders: DataFrame, orderItems: DataFrame,
-      products: Option[DataFrame],
-      requiredNonNull: Map[String, Seq[String]]): Option[ValidationError] =
-    gate(orders, orderItems, products, requiredNonNull, None)._1
-
   /** The validation gate as ONE single-row plan, collected by ONE action
     * whatever the verdict:
     *  - per-table null/NaN counts ([[isNullOrNan]]), one aggregate per table;
@@ -100,8 +90,11 @@ object Validation {
     *    (the processing date in `Pipeline.validateJob`), returned as a
     *    string (None when it is NULL or not asked for).
     * The per-table rows are unioned and collected (AQE runs their stages
-    * concurrently), and the driver applies [[validate]]'s precedence to
-    * them. No aggregate has two distinct keys, so the code is the same
+    * concurrently), and the driver applies the reference's precedence
+    * (`scripts/validation.py:176-191`) to them: null gates first
+    * (NULL_VALIDATION_ERROR, every failing column listed), then order RI,
+    * then product RI (REFERENTIAL_ERROR) — the first failure, like the
+    * reference's exception flow, or None when valid. No aggregate has two distinct keys, so the code is the same
     * for every batch. Measured at local[4], clean or rejected: 6 Spark
     * jobs (AQE stages included), 26 generated classes. */
   def gate(orders: DataFrame, orderItems: DataFrame,

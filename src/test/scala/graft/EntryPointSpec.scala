@@ -52,7 +52,8 @@ class EntryPointSpec extends AnyFunSuite {
     "Verify" -> "main: the correctness dump, started by `runMain graft.Verify`",
     "ScaleSweep" -> "main: fan-out scaling curves, started by `runMain`",
     "Dev" -> "main: run | explain | stages of named queries",
-    "GraftExtensions" -> "loaded by class name from the `spark.sql.extensions` conf")
+    "GraftExtensions" -> "loaded by class name from the `spark.sql.extensions` conf",
+    "RefShape" -> "used through renaming imports (`RefShape.{orders => o, ...}`) by the query families")
 
   /** Public members of top-level objects (and of the templates nested in
     * them) that no code outside their own declaration names, each kept
@@ -83,14 +84,19 @@ class EntryPointSpec extends AnyFunSuite {
     "Pipeline.compactStore" -> "store compaction, on ROADMAP direction 3's crash enumeration",
     "Multimodal.TopBitsFrameCodec" -> "pins the FrameCodec seam that mm4 runs through")
 
-  /** Source with comments removed. String and char literals are kept
-    * verbatim: comment markers inside one are text, and a name spliced
-    * into an interpolation still counts. */
-  private def code(src: String): String =
-    """(?s)"{3}.*?"{3}"*|"(?:\\.|[^"\\\n])*"|'(?:\\.|[^'\\\n])'|/\*.*?\*/|//[^\n]*""".r
-      .replaceAllIn(src, m =>
-        if (m.matched.startsWith("/")) ""
-        else scala.util.matching.Regex.quoteReplacement(m.matched))
+  /** Source with comments and `package`/`import` lines removed: a
+    * package clause names its own members, and every imported name must
+    * be used in code anyway (`-Wunused:imports -Werror`). String and char
+    * literals are kept verbatim: comment markers inside one are text, and
+    * a name spliced into an interpolation still counts. */
+  private def code(src: String): String = {
+    val noComments =
+      """(?s)"{3}.*?"{3}"*|"(?:\\.|[^"\\\n])*"|'(?:\\.|[^'\\\n])'|/\*.*?\*/|//[^\n]*""".r
+        .replaceAllIn(src, m =>
+          if (m.matched.startsWith("/")) ""
+          else scala.util.matching.Regex.quoteReplacement(m.matched))
+    """(?m)^[ \t]*(?:package|import)\b.*$""".r.replaceAllIn(noComments, "")
+  }
 
   private val topLevel =
     """(?m)^(?:(?:private(?:\[\w+\])?|protected|final|sealed|abstract|case|implicit)\s+)*(?:object|class|trait)\s+(\w+)""".r

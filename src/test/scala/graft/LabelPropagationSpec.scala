@@ -51,26 +51,4 @@ class LabelPropagationSpec extends SparkSpec {
     assert(a === b)
     spark.catalog.clearCache()
   }
-
-  test("the DISK_ONLY round-state lever changes storage, not results (g3/g4)") {
-    // the ×300 heap lever (GraphState.diskBacked) must be result-
-    // invariant: same labels, same hop sets, only the block home moves
-    import graft.operators.{BfsHops, GraphState}
-    val base = li(100L -> 1L, 100L -> 2L, 100L -> 3L, 150L -> 3L,
-      150L -> 4L, 200L -> 10L, 200L -> 11L, 200L -> 12L, 250L -> 12L,
-      250L -> 13L, 250L -> 1L)
-    def hopsOf() = BfsHops.hubHops(base).collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toSet
-    assert(!GraphState.diskBacked, "suite assumes the default level")
-    val (lMem, hMem) = (labelsOf(base), hopsOf())
-    spark.catalog.clearCache()
-    GraphState.diskBacked = true
-    try {
-      assert(labelsOf(base) === lMem)
-      assert(hopsOf() === hMem)
-    } finally {
-      GraphState.diskBacked = false
-      spark.catalog.clearCache()
-    }
-  }
 }

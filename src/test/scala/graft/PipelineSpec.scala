@@ -355,20 +355,26 @@ class PipelineSpec extends SparkSpec {
       s"a literal NaN string must null-gate in compat mode, got $nanRes")
   }
 
-  test("upsertStore restores orphaned .bak partitions before merging") {
+  test("upsertStore rolls back a partition a crash left only in .hist before merging") {
     val d = dir()
     val (op, ip, p) = cleanFixtures(d)
     Pipeline.validateJob(spark, op, ip, Some(p),
       s"$d/validated", s"$d/result.json")
     Pipeline.transformJob(spark, s"$d/validated", "2024-06-01",
       s"$d/store", now = "t1")
+    val storePath = s"$d/store/order_kpi"
+    val fs = org.apache.hadoop.fs.FileSystem.get(
+      new java.net.URI(storePath), spark.sparkContext.hadoopConfiguration)
+    val epoch = Pipeline.latestManifest(fs, storePath).epoch
+    // a clean commit leaves no version root at the latest epoch
+    assert(!Files.exists(d.resolve(s"store/order_kpi.hist/$epoch")))
 
     // simulate a crash mid-swap: the order_kpi partition exists ONLY in
-    // the .bak sibling (the window between swapDir's two renames)
+    // .hist/<epoch> (the window between swapDir's two renames)
     val part = d.resolve("store/order_kpi/order_date=2024-06-01")
-    val bakDir = d.resolve("store/order_kpi.bak")
-    Files.createDirectories(bakDir)
-    Files.move(part, bakDir.resolve("order_date=2024-06-01"))
+    val histDir = d.resolve(s"store/order_kpi.hist/$epoch")
+    Files.createDirectories(histDir)
+    Files.move(part, histDir.resolve("order_date=2024-06-01"))
 
     // orders-only rerun: without recovery the merge target would be empty
     // and the complete-run revenue fields would be silently dropped
@@ -378,18 +384,13 @@ class PipelineSpec extends SparkSpec {
 
     val row = spark.read.parquet(s"$d/store/order_kpi").head()
     assert(row.getAs[Double]("total_revenue") === 170.0,
-      "backup partition must be restored and merged as the target")
+      "the pre-image must be rolled back and merged as the target")
     assert(row.getAs[String]("last_updated") === "t2")
-    // deferred cleanup: the successful commit leaves its OWN .bak behind
-    // (stale — epoch below the new manifest's), to be swept when the next
-    // batch starts; a reader of the pre-commit snapshot may still be
-    // scanning those files
-    val storePath = s"$d/store/order_kpi"
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(storePath), spark.sparkContext.hadoopConfiguration)
-    assert(Pipeline.bakEpoch(fs, storePath).exists(
-      _ < Pipeline.latestManifest(fs, storePath).epoch),
-      "post-commit .bak must linger as a STALE backup (deferred cleanup)")
+    // the retried commit moved that pre-image to .hist/<epoch> again, as
+    // the time-travel version of the epoch it replaced
+    assert(Pipeline.latestManifest(fs, storePath).epoch === epoch + 1)
+    assert(Files.exists(histDir.resolve("order_date=2024-06-01")))
+    assert(!Files.exists(d.resolve(s"store/order_kpi.hist/${epoch + 1}")))
   }
 
   test("upsertStore merges a multi-date batch, swapping every touched partition") {
@@ -456,15 +457,16 @@ class PipelineSpec extends SparkSpec {
       Seq("order_date"), fields)
 
     // hand-craft batch 2 crashed MID-SWAP, exactly as upsertStore would
-    // leave it: bak stamped with the current epoch, date 01 already
-    // swapped (new data in store, old copy in .bak), date 03 (a NEW date)
-    // swapped in with no backup, date 02 not yet swapped, NO new manifest
+    // leave it: .hist/<epoch> created, date 01 already swapped (new data
+    // in store, old copy in .hist/<epoch>), date 03 (a NEW date) swapped
+    // in with no old copy, date 02 not yet swapped, NO new manifest
     val fs = org.apache.hadoop.fs.FileSystem.get(
       new java.net.URI(path), spark.sparkContext.hadoopConfiguration)
     val epoch1 = Pipeline.latestManifest(fs, path).epoch
-    Pipeline.writeBakEpoch(fs, path, epoch1)
+    val hist1 = d.resolve(s"isostore.hist/$epoch1")
+    Files.createDirectories(hist1)
     val p01 = d.resolve("isostore/order_date=2024-06-01")
-    Files.move(p01, d.resolve("isostore.bak/order_date=2024-06-01"))
+    Files.move(p01, hist1.resolve("order_date=2024-06-01"))
     updates("t2-crashed", ("2024-06-01", 9L, 90.0))
       .drop("order_date").write.parquet(p01.toString)
     updates("t2-crashed", ("2024-06-03", 7L, 70.0))
@@ -472,7 +474,7 @@ class PipelineSpec extends SparkSpec {
       .parquet(d.resolve("isostore/order_date=2024-06-03").toString)
 
     // a reader resolving the store NOW must see batch 1 in full: date 01
-    // from the .bak copy, date 02 from the store, date 03 invisible
+    // from the .hist copy, date 02 from the store, date 03 invisible
     val seen = Pipeline.readOrInit(spark, path, schema).collect()
       .map(r => r.getAs[String]("order_date") ->
         (r.getAs[Long]("total_orders"), r.getAs[String]("last_updated")))
@@ -491,20 +493,24 @@ class PipelineSpec extends SparkSpec {
       .toMap
     assert(after === Map("2024-06-01" -> (9L, "t2"),
       "2024-06-02" -> (2L, "t1"), "2024-06-03" -> (7L, "t2")))
-    // deferred cleanup: batch 2's commit leaves a stale .bak (ignored by
-    // readers — `after` above came out t2, not the t1 bak copies); the
-    // NEXT batch sweeps it and leaves only its own
-    assert(Files.exists(d.resolve("isostore.bak")),
-      "stale .bak must outlive the commit that superseded it")
+    // each commit leaves exactly what it replaced in .hist/<its base
+    // epoch>, and those versions stay put through later batches (a reader
+    // may still be scanning them): readers of the latest epoch ignore them
     Pipeline.upsertStore(spark, path, schema,
       updates("t3", ("2024-06-02", 3L, 30.0)), Seq("order_date"), fields)
-    val bakLs = Files.list(d.resolve("isostore.bak"))
-    val bakLeft =
-      try bakLs.toArray.map(_.asInstanceOf[Path].getFileName.toString)
-        .filterNot(n => n.startsWith("_") || n.startsWith(".")).toSet
-      finally bakLs.close()
-    assert(bakLeft === Set("order_date=2024-06-02"),
-      "batch 2's stale backups swept at batch 3 start; only batch 3's own remain")
+    def names(p: Path): Set[String] = {
+      val ls = Files.list(p)
+      try ls.toArray.map(_.asInstanceOf[Path].getFileName.toString).toSet
+      finally ls.close()
+    }
+    assert(names(hist1) === Set("order_date=2024-06-01"),
+      "the rollback left only the retried batch's own pre-image")
+    assert(names(d.resolve(s"isostore.hist/${epoch1 + 1}")) ===
+      Set("order_date=2024-06-02"))
+    assert(!Files.exists(d.resolve(s"isostore.hist/${epoch1 + 2}")))
+    assert(Pipeline.readAt(spark, path, epoch1, schema).collect()
+      .map(r => r.getAs[String]("order_date") -> r.getAs[Long]("total_orders"))
+      .toMap === Map("2024-06-01" -> 1L, "2024-06-02" -> 2L))
   }
 
   test("retention sweep expires old partitions commit-first (crash-safe order)") {
@@ -570,12 +576,12 @@ class PipelineSpec extends SparkSpec {
     Pipeline.upsertStore(spark, path, schema,
       updates("t1", ("2024-06-01", 1L)), Seq("order_date"), fields)
 
-    // crash mid-swap: bak stamped with the live epoch, a brand-NEW date
-    // dir swapped in with no backup, no new manifest
+    // crash mid-swap: .hist/<live epoch> created, a brand-NEW date dir
+    // swapped in with no old copy, no new manifest
     val fs = org.apache.hadoop.fs.FileSystem.get(
       new java.net.URI(path), spark.sparkContext.hadoopConfiguration)
-    Pipeline.writeBakEpoch(fs, path,
-      Pipeline.latestManifest(fs, path).epoch)
+    fs.mkdirs(new org.apache.hadoop.fs.Path(
+      s"$path.hist/${Pipeline.latestManifest(fs, path).epoch}"))
     updates("t2-crashed", ("2024-06-09", 9L)).drop("order_date").write
       .parquet(d.resolve("gcstore/order_date=2024-06-09").toString)
     assert(Files.exists(d.resolve("gcstore/order_date=2024-06-09")))
@@ -591,7 +597,7 @@ class PipelineSpec extends SparkSpec {
     assert(seen === Seq("2024-06-01"))
   }
 
-  test("stale .bak from an already-committed batch is ignored by readers") {
+  test("a committed batch's pre-image in .hist is ignored by readers of the new epoch") {
     import org.apache.spark.sql.functions.{col, lit, typedLit}
     import spark.implicits._
     val d = dir()
@@ -610,20 +616,19 @@ class PipelineSpec extends SparkSpec {
     Pipeline.upsertStore(spark, path, schema, updates("t2", 2L),
       Seq("order_date"), fields)
 
-    // deferred cleanup makes this window the NORMAL post-commit state:
-    // batch 2's commit leaves a .bak stamped with epoch 1 (the snapshot
-    // its swap ran against) holding the OLD ("t1") partition copy
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(path), spark.sparkContext.hadoopConfiguration)
-    assert(Pipeline.bakEpoch(fs, path) === Some(1L),
-      "batch 2's .bak must linger, stamped with the pre-commit epoch")
-    assert(Files.exists(d.resolve("stalestore.bak/order_date=2024-06-01")),
-      "the stale .bak must still hold the old partition copy")
+    // batch 2's commit moved the OLD ("t1") partition to .hist/1 (the
+    // epoch its swap ran against), the time-travel version of epoch 1
+    assert(Files.exists(d.resolve("stalestore.hist/1/order_date=2024-06-01")),
+      "the committed batch's pre-image must stay in .hist/1")
+    assert(!Files.exists(d.resolve("stalestore.hist/2")),
+      "a clean commit leaves no version root at the new epoch")
 
     val seen = Pipeline.readOrInit(spark, path, schema).collect()
       .map(r => r.getAs[String]("last_updated")).toSeq
     assert(seen === Seq("t2"),
-      "a stale backup must not shadow committed data")
+      "a pre-image must not shadow committed data")
+    assert(Pipeline.readAt(spark, path, 1L, schema).collect()
+      .map(r => r.getAs[String]("last_updated")).toSeq === Seq("t1"))
   }
 
   test("store schema evolution: new column reads as null from old partitions") {
@@ -841,23 +846,24 @@ class PipelineSpec extends SparkSpec {
     Pipeline.upsertStore(spark, path, schema, updates("base", 1L),
       Seq("order_date"), fields)
     val epoch0 = Pipeline.latestManifest(fs, path).epoch
-    // writer A holds the lease mid-swap: bak-epoch stamped at the
-    // CURRENT epoch and a backup dir present — exactly the state the
-    // unguarded sweep misread as a crash (round-9 review)
+    // writer A holds the lease mid-swap: .hist/<CURRENT epoch> holding a
+    // pre-image — exactly the state a crashed commit leaves, which an
+    // unguarded sweep would roll back
     val held = Pipeline.acquireStoreLease(fs, path, epoch0)
-    val bakDir = new org.apache.hadoop.fs.Path(
-      path + ".bak/order_date=2024-06-01")
-    fs.mkdirs(bakDir)
-    val bakMarker = new org.apache.hadoop.fs.Path(bakDir, "part-old")
-    fs.create(bakMarker, true).close()
-    Pipeline.writeBakEpoch(fs, path, epoch0)
+    val histDir = new org.apache.hadoop.fs.Path(
+      s"$path.hist/$epoch0/order_date=2024-06-01")
+    fs.mkdirs(histDir)
+    val histMarker = new org.apache.hadoop.fs.Path(histDir, "part-old")
+    fs.create(histMarker, true).close()
     // writer B: turned away by the RECOVERY lease before any mutation —
-    // A's in-flight backup state must be byte-untouched
+    // A's in-flight swap state must be byte-untouched
     intercept[graft.pipeline.StoreLeaseHeldException] {
       Pipeline.upsertStore(spark, path, schema, updates("b", 7L),
         Seq("order_date"), fields)
     }
-    assert(fs.exists(bakMarker), "a live holder's backup dir was swept")
+    assert(fs.exists(histMarker), "a live holder's pre-image was rolled back")
+    assert(fs.exists(new org.apache.hadoop.fs.Path(
+      s"$path/order_date=2024-06-01")), "a live holder's partition was touched")
     Pipeline.verifyStoreLease(fs, path, held) // A still owns the lease
     Pipeline.releaseStoreLease(fs, path, held)
     deleteRec(d)
@@ -1000,7 +1006,7 @@ class PipelineSpec extends SparkSpec {
         .toMap
 
     // epoch 1: dates 01 + 02; epoch 2 REWRITES 01 and adds 03 (01's
-    // epoch-1 content survives only through the .bak → .hist archival);
+    // epoch-1 content survives only as the pre-image in .hist/1);
     // epoch 3 rewrites 02
     Pipeline.upsertStore(spark, path, schema,
       updates("t1", ("2024-06-01", 1L), ("2024-06-02", 2L)),
@@ -1060,8 +1066,8 @@ class PipelineSpec extends SparkSpec {
     }
     assert(e1.getMessage.contains("no manifest for epoch 1"))
     assert(e1.getMessage.contains("time-travel window"))
-    // epoch 2 is the oldest kept and still exact (01@2 came back through
-    // the .bak → .hist archival at batch-4 start)
+    // epoch 2 is the oldest kept and still exact (01@2 is the pre-image
+    // batch 3 moved to .hist/2)
     assert(Pipeline.readAt(spark, winPath, 2L, schema).collect()
       .map(_.getAs[Long]("total_orders")).toSeq === Seq(2L))
 
@@ -1158,14 +1164,14 @@ class PipelineSpec extends SparkSpec {
     upsert(("A", "2024-06-01", 1L), ("B", "2024-06-01", 2L)) // epoch 1
     upsert(("A", "2024-06-01", 10L))                          // epoch 2
     upsert(("B", "2024-06-01", 20L))                          // epoch 3
-    // after batch 3: .hist/1 archived, .bak holds epoch-2 copies (with A)
-    assert(fs.exists(new HPath(s"$path.hist/1")))
-    assert(fs.exists(new HPath(s"$path.bak/order_date=2024-06-01")))
+    // after batch 3: .hist/1 and .hist/2 hold the epoch-1 and epoch-2
+    // copies (both with A)
+    assert(fs.exists(new HPath(s"$path.hist/1/order_date=2024-06-01")))
+    assert(fs.exists(new HPath(s"$path.hist/2/order_date=2024-06-01")))
 
     // --- simulate a forget of A that crashed BEFORE any commit: only the
     // durable tombstone exists. A routine upsert must complete the erasure
-    // (snapshot + every archived version) and must NOT archive the stale
-    // .bak copies — they carry A — into .hist.
+    // (snapshot + every version in .hist).
     val pendTmp = new HPath(s"$path.forget.pending.inprogress")
     Seq("A").toDF("category").coalesce(1)
       .write.mode("overwrite").parquet(pendTmp.toString)
@@ -1174,8 +1180,8 @@ class PipelineSpec extends SparkSpec {
     upsert(("C", "2024-06-02", 5L)) // routine batch triggers recovery
     assert(!fs.exists(new HPath(s"$path.forget.pending")), "tombstone retired")
     assert(cats(Pipeline.readOrInit(spark, path, schema)) === Set("B", "C"))
-    // every surviving archived version is A-free (epoch-2 .bak copies were
-    // deleted, not archived; .hist/1 was rewritten by the purge)
+    // every version is A-free (the purge rewrote .hist/1 and .hist/2, and
+    // the routine batch's own pre-image was taken after the erasure)
     val dataSchema = org.apache.spark.sql.types.StructType(
       schema.filterNot(_.name == "order_date"))
     for (ep <- fs.listStatus(new HPath(s"$path.hist")).toSeq;
@@ -1188,9 +1194,8 @@ class PipelineSpec extends SparkSpec {
     // --- simulate a purge that crashed MID-SWAP in .hist: live dir absent,
     // completed .fk.tmp rewrite + .fk.old copy present. The next forget's
     // recovery preamble must promote the rewrite and drop the old copy.
-    val histEp = fs.listStatus(new HPath(s"$path.hist")).toSeq
-      .filter(_.isDirectory).head.getPath
-    val liveDir = fs.listStatus(histEp).toSeq
+    val liveDir = fs.listStatus(new HPath(s"$path.hist")).toSeq
+      .flatMap(ep => fs.listStatus(ep.getPath).toSeq)
       .filter(_.getPath.getName.startsWith("order_date=")).head.getPath
     val tmpDir = Sources.sideDir(liveDir, ".fk.tmp")
     val oldDir = Sources.sideDir(liveDir, ".fk.old")
@@ -1239,7 +1244,7 @@ class PipelineSpec extends SparkSpec {
     upsert(("A", "2024-06-01", 1L), ("B", "2024-06-01", 2L)) // epoch 1
     upsert(("A", "2024-06-01", 10L))                          // epoch 2
     upsert(("B", "2024-06-01", 20L))                          // epoch 3
-    // epoch 1's partition resolves from .hist/1; .bak holds epoch 2's
+    // epoch 1's partition resolves from .hist/1; .hist/2 holds epoch 2's
     assert(rowsOf(Pipeline.readAt(spark, path, 1L, schema)) ===
       Map("A" -> 1L, "B" -> 2L))
 
@@ -1250,8 +1255,8 @@ class PipelineSpec extends SparkSpec {
     spark.read.parquet(part.toString).coalesce(1)
       .write.parquet(Sources.sideDir(part, ".fk.tmp").toString)
     assert(fs.rename(part, Sources.sideDir(part, ".fk.old")))
-    // without the partition dir, epoch 1 would resolve to the .bak copy
-    // (epoch 2's A = 10): a wrong version, returned without an error
+    // without the partition dir, epoch 1 would resolve to the .hist/2
+    // copy (epoch 2's A = 10): a wrong version, returned without an error
     val e = intercept[IllegalStateException] {
       Pipeline.readAt(spark, path, 1L, schema)
     }
@@ -1339,33 +1344,32 @@ class PipelineSpec extends SparkSpec {
 
     // reconstruct the post-commit crash state that completed run cleaned
     // up: manifest already at epoch 2 WITHOUT 06-01, but (a) the emptied
-    // partition's pre-delete .bak copy still on disk, (b) the bak-epoch
-    // marker at the pre-commit epoch (orphan regime), (c) the forget
-    // tombstone still outstanding — i.e. a crash between writeManifest
-    // and the .bak cleanup / tombstone retire.
+    // partition's pre-delete copy in .hist/1 still holding A, (b) the
+    // forget tombstone still outstanding — i.e. a crash between
+    // writeManifest and the .hist purge / tombstone retire.
     val dataSchema = org.apache.spark.sql.types.StructType(
       schema.filterNot(_.name == "order_date"))
-    val bakDir = new HPath(s"$path.bak/order_date=2024-06-01")
+    val preImage = new HPath(s"$path.hist/1/order_date=2024-06-01")
+    fs.delete(preImage, true)
     Seq(("A", 1L)).toDF("category", "total_orders")
       .withColumn("data_sources", typedLit(Seq("orders")))
       .select(dataSchema.fieldNames.map(col): _*)
-      .coalesce(1).write.parquet(bakDir.toString)
-    Pipeline.writeBakEpoch(fs, path, 1L)
+      .coalesce(1).write.parquet(preImage.toString)
     Seq("A").toDF("category").coalesce(1)
       .write.parquet(s"$path.forget.pending")
 
     upsert(("C", "2024-06-03", 3L)) // routine batch triggers recovery
-    // the backup carried ONLY forgotten rows: erasure must delete it —
-    // restoring it would park A's rows in an unlisted live dir that the
-    // manifest-filtered completing forget can never rewrite
+    // the committed forget is never rolled back: the emptied partition is
+    // not restored into the live tree, where the manifest-filtered
+    // completing forget could never rewrite it
     assert(!fs.exists(new HPath(s"$path/order_date=2024-06-01")),
       "emptied partition must not be restored into the live tree")
-    // the A-rows backup itself is deleted (the .bak root may legitimately
-    // carry the routine upsert's own fresh epoch marker afterwards)
-    assert(!fs.exists(bakDir), "forgotten-rows backup erased")
+    // the pre-image is erased in place by the completing forget's purge
+    assert(spark.read.schema(dataSchema).parquet(preImage.toString)
+      .count() === 0L, "forgotten rows erased from the pre-image")
     assert(!fs.exists(new HPath(s"$path.forget.pending")), "tombstone retired")
     assert(cats() === Set("B", "C"))
-    // no archived version carries A either
+    // no version carries A either
     val histRoot = new HPath(s"$path.hist")
     if (fs.exists(histRoot)) {
       for (ep <- fs.listStatus(histRoot).toSeq if ep.isDirectory;
@@ -1534,9 +1538,9 @@ class PipelineSpec extends SparkSpec {
       spark.sparkContext.hadoopConfiguration)
     upsert("t1", ("2024-06-01", 1L), ("2024-06-02", 2L))
     upsert("t2", ("2024-06-01", 5L))
-    // the commit left a STALE .bak copy of 06-01 (stamped epoch 1): it is
-    // no copy of the epoch-2 snapshot, so losing the live dir loses 06-01
-    assert(fs.exists(new HPath(s"$path.bak/order_date=2024-06-01")))
+    // the commit left the epoch-1 copy of 06-01 in .hist/1: it is no
+    // copy of the epoch-2 snapshot, so losing the live dir loses 06-01
+    assert(fs.exists(new HPath(s"$path.hist/1/order_date=2024-06-01")))
     assert(fs.delete(new HPath(s"$path/order_date=2024-06-01"), true))
     val e = intercept[IllegalStateException] {
       Pipeline.readOrInit(spark, path, schema)
@@ -1563,9 +1567,8 @@ class PipelineSpec extends SparkSpec {
     val fs = org.apache.hadoop.fs.FileSystem.get(
       new java.net.URI(path), spark.sparkContext.hadoopConfiguration)
     // the store's first commit crashed after its swap and before its
-    // manifest: .bak stamped with epoch 0, the new date in the root, no
-    // manifest
-    Pipeline.writeBakEpoch(fs, path, 0L)
+    // manifest: .hist/0 created, the new date in the root, no manifest
+    fs.mkdirs(new org.apache.hadoop.fs.Path(s"$path.hist/0"))
     updates("t1-crashed", ("2024-06-01", 1L)).drop("order_date").write
       .parquet(d.resolve("firstcrash/order_date=2024-06-01").toString)
     assert(Pipeline.readOrInit(spark, path, schema).count() === 0L,

@@ -3,6 +3,7 @@ package graft
 import java.net.URI
 import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.Files
+import java.util.concurrent.atomic.AtomicInteger
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FSDataOutputStream, FileSystem, FilterFileSystem,
@@ -13,41 +14,66 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.io.Sources
 
-/** Local filesystem that throws [[CrashingFs.Crash]] instead of making its
-  * `crashAt`-th mutating call (create, mkdirs, rename, delete): the disk
-  * is left as a process crash at that point would leave it. `calls`
-  * counts the mutating calls made or attempted. */
-class CrashingFs(crashAt: Int)
-    extends FilterFileSystem(new RawLocalFileSystem) {
-  initialize(URI.create("file:///"), new Configuration())
-  var calls = 0
+/** Local filesystem that dies at its `crashAt`-th mutating call (create,
+  * mkdirs, rename, delete): that call and every later one throw
+  * [[CrashingFs.Crash]] without touching the disk, which is left as a
+  * process crash at that point would leave it. `calls` counts the
+  * mutating calls made or attempted, and `before` runs ahead of each with
+  * its name and path. Over `raw` it serves `raw`'s scheme: a [[CrashingFs.Registered]]
+  * serves [[CrashingFs.Scheme]] paths to every `FileSystem.get`, Spark's
+  * writers included. */
+class CrashingFs(@volatile var crashAt: Int,
+    raw: RawLocalFileSystem = new RawLocalFileSystem)
+    extends FilterFileSystem(raw) {
+  initialize(raw.getUri, new Configuration())
+  val calls = new AtomicInteger
+  @volatile var before: (String, Path) => Unit = (_, _) => ()
 
-  private def mutate(): Unit = {
-    calls += 1
-    if (calls == crashAt) throw new CrashingFs.Crash(calls)
+  private def mutate(op: String, p: Path): Unit = {
+    before(op, p)
+    val k = calls.incrementAndGet()
+    if (k >= crashAt) throw new CrashingFs.Crash(k)
   }
   override def create(f: Path, permission: FsPermission, overwrite: Boolean,
       bufferSize: Int, replication: Short, blockSize: Long,
       progress: Progressable): FSDataOutputStream = {
-    mutate()
+    mutate("create", f)
     super.create(f, permission, overwrite, bufferSize, replication,
       blockSize, progress)
   }
-  override def mkdirs(f: Path): Boolean = { mutate(); super.mkdirs(f) }
+  override def mkdirs(f: Path): Boolean = {
+    mutate("mkdirs", f); super.mkdirs(f)
+  }
   override def mkdirs(f: Path, permission: FsPermission): Boolean = {
-    mutate(); super.mkdirs(f, permission)
+    mutate("mkdirs", f); super.mkdirs(f, permission)
   }
   override def rename(src: Path, dst: Path): Boolean = {
-    mutate(); super.rename(src, dst)
+    mutate("rename", src); super.rename(src, dst)
   }
   override def delete(f: Path, recursive: Boolean): Boolean = {
-    mutate(); super.delete(f, recursive)
+    mutate("delete", f); super.delete(f, recursive)
   }
 }
 
 object CrashingFs {
   final class Crash(k: Int)
     extends RuntimeException(s"crash at mutating call $k")
+
+  /** The scheme a [[Registered]] instance serves; `register` maps it. */
+  val Scheme = "crashfs"
+
+  /** The local filesystem under [[Scheme]]. */
+  final class SchemeLocal extends RawLocalFileSystem {
+    override def getUri: URI = URI.create(s"$Scheme:///")
+  }
+
+  /** What Hadoop instantiates for [[Scheme]] paths: it never crashes
+    * until a test sets `crashAt` on the cached instance. */
+  final class Registered extends CrashingFs(Int.MaxValue, new SchemeLocal)
+
+  /** Map [[Scheme]] to [[Registered]] in `conf`. */
+  def register(conf: Configuration): Unit =
+    conf.set(s"fs.$Scheme.impl", classOf[Registered].getName)
 }
 
 /** The store's one directory-replace protocol ([[Sources.replaceDir]] and
@@ -89,7 +115,7 @@ class ReplaceDirSpec extends AnyFunSuite {
   private def callsOf(withLive: Boolean): Int = {
     val fs = new CrashingFs(Int.MaxValue)
     replace(fs, layout(withLive), "new")
-    fs.calls
+    fs.calls.get
   }
 
   /** Recovery after the crash leaves exactly the old or the new `live`

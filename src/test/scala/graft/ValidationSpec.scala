@@ -52,16 +52,16 @@ class ValidationSpec extends SparkSpec {
   test("validate returns NullValidationError before ReferentialError") {
     val orders = mk(
       StructType(Seq(StructField("order_id", LongType))), Row(10L))
-    val err = Validation.validate(orders, items, None,
-      Map("order_items" -> Seq("order_id")))
+    val err = Validation.gate(orders, items, None,
+      Map("order_items" -> Seq("order_id")), None)._1
     assert(err.exists(_.errorType === "NULL_VALIDATION_ERROR"))
   }
 
   test("validate flags referential errors when nulls pass") {
     val orders = mk(
       StructType(Seq(StructField("order_id", LongType))), Row(10L), Row(11L))
-    val err = Validation.validate(orders, items, None,
-      Map("order_items" -> Seq("id")))
+    val err = Validation.gate(orders, items, None,
+      Map("order_items" -> Seq("id")), None)._1
     assert(err.exists(_.errorType === "REFERENTIAL_ERROR"))
   }
 
@@ -70,8 +70,8 @@ class ValidationSpec extends SparkSpec {
       StructType(Seq(StructField("order_id", LongType))),
       Row(10L), Row(11L), Row(12L))
     val clean = items.filter("order_id IS NOT NULL")
-    assert(Validation.validate(orders, clean, None,
-      Map("order_items" -> Seq("id"))).isEmpty)
+    assert(Validation.gate(orders, clean, None,
+      Map("order_items" -> Seq("id")), None)._1.isEmpty)
   }
 
   // -- the gate ≡ the verdict derived from nullCheck and riViolations -------
@@ -117,7 +117,7 @@ class ValidationSpec extends SparkSpec {
 
   private def gateVerdict(orders: DataFrame, items: DataFrame,
       products: Option[DataFrame], required: Map[String, Seq[String]]) =
-    Validation.validate(orders, items, products, required)
+    Validation.gate(orders, items, products, required, None)._1
       .map(e => e.errorType -> e.message)
 
   private val gKey: Gen[java.lang.Long] = Gen.frequency(
