@@ -212,60 +212,6 @@ object Sources {
     ()
   }
 
-  /** Small-files compaction — the maintenance operator every incremental
-    * lake store eventually needs: per-batch upserts (e.g.
-    * `Pipeline.upsertStore`) accrete one file set per batch, and at 100 TB
-    * a scan's task count (and the namenode/listing load) is driven by file
-    * COUNT, not bytes. Rewrites the table to ~`targetBytes` files via one
-    * round-robin repartition, and puts the rewrite in place with
-    * [[replaceDir]]; the side dirs are `.<name>.compact.tmp` and
-    * `.<name>.compact.bak` ([[sideDir]]), and [[crashedCompactions]] finds
-    * what a crash left of them.
-    *
-    * Sizing uses the real on-disk byte sum from the FileSystem listing —
-    * not a row-count heuristic — so compression ratio carries over.
-    *
-    * @return (files before, files after)
-    */
-  def compact(spark: SparkSession, path: String,
-      targetBytes: Long = 128L * 1024 * 1024): (Int, Int) = {
-    val fs = fileSystem(spark, path)
-    def dataFiles(p: Path): Seq[FileStatus] = {
-      val it = fs.listFiles(p, true)
-      val buf = scala.collection.mutable.ArrayBuffer.empty[FileStatus]
-      while (it.hasNext) {
-        val f = it.next()
-        val n = f.getPath.getName
-        // skip _ AND . prefixes (ChecksumFileSystem .crc siblings, hidden
-        // files) — same filter compactPartitioned applies; counting crc
-        // bytes would roughly double totalBytes and miscompute nOut
-        if (!n.startsWith("_") && !n.startsWith(".")) buf += f
-      }
-      buf.toSeq
-    }
-    val table = new Path(path)
-    val before = replaceDir(fs, table, sideDir(table, CompactStaged),
-        sideDir(table, CompactAside)) { tmp =>
-      val before = dataFiles(table)
-      val totalBytes = before.map(_.getLen).sum
-      val nOut =
-        math.max(1L, (totalBytes + targetBytes - 1) / targetBytes).toInt
-      spark.read.parquet(path).repartition(nOut)
-        .write.mode("overwrite").parquet(tmp.toString)
-      before
-    }
-    (before.size, dataFiles(table).size)
-  }
-
-  private val CompactStaged = ".compact.tmp"
-  private val CompactAside = ".compact.bak"
-
-  /** The replaces a crashed [[compact]] left under `dir` (a partitioned
-    * store's root), as [[replacesUnder]] lists them. */
-  private[graft] def crashedCompactions(fs: FileSystem, dir: Path)
-      : Seq[(Path, Path, Path)] =
-    replacesUnder(fs, dir, CompactStaged, CompactAside)
-
   /** The marker [[replaceDir]] writes into a staged dir once its content
     * is complete; the committer's `_SUCCESS` counts too, but it depends on
     * mapreduce.fileoutputcommitter.marksuccessfuljobs, which object-store
@@ -320,8 +266,9 @@ object Sources {
 
   /** `.<name><suffix>` beside `live`: the side-dir naming of every
     * replace. Spark's partition discovery skips every `.` name, where it
-    * would read a `_` name that contains `=` (`_order_date=X.compact.tmp`)
-    * as a partition and fail the scan of the whole store. */
+    * would read a `_` name that contains `=` (`_order_date=X.fk.tmp` in a
+    * `.hist` version root) as a partition and fail the scan of the dir
+    * holding it. */
   private[graft] def sideDir(live: Path, suffix: String): Path =
     new Path(live.getParent, s".${live.getName}$suffix")
 
@@ -356,27 +303,6 @@ object Sources {
   private[graft] def renameOrFail(fs: FileSystem, src: Path, dst: Path): Unit =
     if (!fs.rename(src, dst))
       throw new java.io.IOException(s"rename failed: $src -> $dst")
-
-  /** Partition-aware compaction for hive-layout stores (`col=value`
-    * subdirectories, e.g. the `order_date`-partitioned KPI store): each
-    * partition directory is itself a plain parquet table, so it compacts
-    * independently — layout, partition values, and pruning are preserved,
-    * and a typical run compacts only the partitions recent batches
-    * fragmented. Returns per-partition (before, after) file counts. */
-  def compactPartitioned(spark: SparkSession, path: String,
-      targetBytes: Long = 128L * 1024 * 1024): Map[String, (Int, Int)] = {
-    val fs = fileSystem(spark, path)
-    fs.listStatus(new Path(path)).toSeq
-      .filter { s =>
-        val n = s.getPath.getName
-        // real hive partition dirs only — skip the `.` side dirs (e.g. a
-        // crashed run's `.<part>.compact.tmp`, which also contains '=')
-        s.isDirectory && n.contains("=") && !n.startsWith(".")
-      }
-      .map(s => s.getPath.getName ->
-        compact(spark, s.getPath.toString, targetBytes))
-      .toMap
-  }
 
   /** S6: JSON result doc (reference `scripts/validation.py:132-142`) — a
     * one-row control message, written driver-side (this is metadata, not

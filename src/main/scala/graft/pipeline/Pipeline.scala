@@ -225,10 +225,11 @@ object Pipeline {
     def values(names: Seq[String]) =
       names.filter(_.startsWith(pre)).map(_.stripPrefix(pre)).toSet
     def held(root: String): (Set[String], Set[String]) = {
-      val dir = new HPath(root)
-      val names = if (!fs.exists(dir)) Nil
-        else fs.listStatus(dir).toSeq.filter(_.isDirectory)
-          .map(_.getPath.getName)
+      // a root gone since it was listed (a commit that replaced nothing
+      // deletes its own after publishing) held nothing
+      val names = try fs.listStatus(new HPath(root)).toSeq
+          .filter(_.isDirectory).map(_.getPath.getName)
+        catch { case _: java.io.FileNotFoundException => Nil }
       (values(names),
         values(names.flatMap(Sources.sideDirOwner(_, HistStaged, HistAside))))
     }
@@ -506,7 +507,8 @@ object Pipeline {
     *     every committed partition — the single instant the batch becomes
     *     visible. From then on `.hist/<baseEpoch>` is the time-travel
     *     version of what the batch replaced, and stays as it is (a reader
-    *     may still be scanning it) until [[dropOldManifests]] prunes it,
+    *     may still be scanning it) until [[dropOldManifests]] prunes it;
+    *     a commit that replaced nothing (new dates only) deletes it here,
     *  4. prune manifests and versions outside the window.
     * A crash at any point leaves either epoch N fully readable (steps
     * 1–2: pre-images in `.hist/N`; uncommitted new dates unlisted) or
@@ -540,7 +542,7 @@ object Pipeline {
     // never sees them
     val hist = new HPath(s"$path.hist/$baseEpoch")
     fs.mkdirs(hist)
-    dates.foreach { dt =>
+    val moved = dates.count { dt =>
       swapDir(fs, Option.when(present(dt))(new HPath(s"$tmp/$PartCol=$dt")),
         new HPath(s"$path/$PartCol=$dt"), new HPath(hist, s"$PartCol=$dt"))
     }
@@ -552,6 +554,10 @@ object Pipeline {
     writeManifest(fs, path, baseEpoch + 1,
       (cur.partitions.diff(retired) ++ dates.filter(present)).distinct.sorted,
       newTotal)
+    // a commit that replaced nothing leaves no version to read; its root
+    // stays until here, where it stops marking a commit in flight (after
+    // a crash before this delete, dropOldManifests prunes it)
+    if (moved == 0) fs.delete(hist, false)
     dropOldManifests(fs, path, current = baseEpoch + 1)
     newTotal
   }
@@ -663,18 +669,23 @@ object Pipeline {
       val kv = spark.read.parquet(pendingDir.toString).persist()
       try {
         val snapshot = readOrInit(spark, path, schema)
-        val touched = snapshot.join(kv, keys, "left_semi")
-        val deleted = touched.count()
+        // rows deleted per touched date, in one action
+        val perDate = snapshot.join(kv, keys, "left_semi")
+          .groupBy(col(PartCol)).count().collect()
+          .map(r => r.getString(0) -> r.getLong(1)).toMap
+        val deleted = perDate.values.sum
         val epoch =
           if (deleted == 0L) baseEpoch
           else {
-            val dates = touched.select(col(PartCol)).distinct()
-              .collect().map(_.getString(0)).sorted.toSeq
+            val dates = perDate.keys.toSeq.sorted
             val tmp = stagingDir(path) // per-writer, as in upsertStore
-            // a fully-emptied partition writes no dir — publish RETIRES it
+            // each date's rows in one task, so the partitioned write leaves
+            // one file per date, as upsertStore does; a fully-emptied
+            // partition writes no dir — publish RETIRES it
             snapshot.where(col(PartCol).isin(dates: _*))
               .join(kv, keys, "left_anti")
               .select(schema.fieldNames.toSeq.map(col): _*)
+              .repartition(col(PartCol))
               .write.mode("overwrite").partitionBy(PartCol).parquet(tmp)
             publish(fs, path, tmp, dates, baseEpoch, lease, DefaultLeaseTtlMs)
             baseEpoch + 1
@@ -800,26 +811,6 @@ object Pipeline {
         .foreach(pv => fs.delete(new HPath(path, s"$PartCol=$pv"), true))
       drop
     }
-  }
-
-  /** E27 under the store protocol: partition compaction of the KPI
-    * store in the commit section ([[commitSection]]).
-    * `Sources.compactPartitioned` replaces live partition directories
-    * ([[Sources.replaceDir]]), so running it beside a committing writer
-    * could interleave with that writer's own dir swap; a compaction a
-    * crash interrupted is finished by the leased recovery sweep
-    * ([[recoverUnderLease]]) before any later mutator or compaction runs.
-    * The manifest is untouched (same rows, fewer files ⇒ the epoch does
-    * not move). Run it in a read-quiet window like any file-level
-    * compaction: a reader mid-scan of a compacted partition can lose
-    * files (the store's manifest isolation is partition-grain, not
-    * file-grain — the Delta-versioned-file-names trade we did not take). */
-  def compactStore(spark: SparkSession, path: String,
-      targetBytes: Long = 128L * 1024 * 1024): Map[String, (Int, Int)] = {
-    val fs = Sources.fileSystem(spark, path)
-    recoverUnderLease(fs, path)
-    commitSection(fs, path, latestManifest(fs, path).epoch)(
-      _ => Sources.compactPartitioned(spark, path, targetBytes))
   }
 
   // ---- commit lease -----------------------------------------------------
@@ -1016,25 +1007,23 @@ object Pipeline {
     * in-flight commit looks exactly like a crashed one, so recovery only
     * proceeds as the lease holder, and a live writer turns the caller
     * away clean ([[StoreLeaseHeldException]]) BEFORE any mutation. It
-    * finishes or rolls back each interrupted [[Sources.replaceDir]] of
-    * the store (the forget tombstone, a compaction's partitions), then
-    * the interrupted commit ([[rollBack]]). The lease is only taken when
-    * there is evidence of interrupted work, so the common no-crash path
-    * stays `exists` probes and two listings of the store root. */
+    * finishes or rolls back an interrupted [[Sources.replaceDir]] of the
+    * forget tombstone, then the interrupted commit ([[rollBack]]). The
+    * lease is only taken when there is evidence of interrupted work
+    * (`.hist/<latest epoch>` or a side dir of the tombstone), so the
+    * common no-crash path stays `exists` probes and one listing of the
+    * store root. */
   private[graft] def recoverUnderLease(fs: org.apache.hadoop.fs.FileSystem,
       path: String, ttlMs: Long = DefaultLeaseTtlMs): Unit = {
     import org.apache.hadoop.fs.{Path => HPath}
     val (pending, pendingTmp, pendingOld) = tombstone(path)
-    val compactions = Sources.crashedCompactions(fs, new HPath(path))
     val epoch = latestManifest(fs, path).epoch
     val evidence = fs.exists(new HPath(s"$path.hist/$epoch")) ||
-      fs.exists(pendingOld) || fs.exists(pendingTmp) || compactions.nonEmpty
+      fs.exists(pendingOld) || fs.exists(pendingTmp)
     if (!evidence) return
     val l = acquireStoreLease(fs, path, epoch, ttlMs)
     try {
       Sources.recoverReplace(fs, pending, pendingTmp, pendingOld)
-      compactions.foreach { case (live, staged, aside) =>
-        Sources.recoverReplace(fs, live, staged, aside) }
       // re-read under the lease: a writer may have committed since
       rollBack(fs, path, latestManifest(fs, path))
     } finally releaseStoreLease(fs, path, l)
@@ -1204,15 +1193,17 @@ object Pipeline {
   /** Crash-safe partition swap: move the old `dst` (if any) to `old`,
     * then `src` (if any) into `dst` — without `src` the partition is
     * retired. A failure leaves either the old data or old-at-`old` +
-    * new-in-temp, never nothing. */
+    * new-in-temp, never nothing. Returns whether an old `dst` moved. */
   private def swapDir(fs: org.apache.hadoop.fs.FileSystem,
       src: Option[org.apache.hadoop.fs.Path],
       dst: org.apache.hadoop.fs.Path,
-      old: org.apache.hadoop.fs.Path): Unit = {
-    if (fs.exists(dst)) Sources.renameOrFail(fs, dst, old)
+      old: org.apache.hadoop.fs.Path): Boolean = {
+    val replaced = fs.exists(dst)
+    if (replaced) Sources.renameOrFail(fs, dst, old)
     src.foreach { s =>
       if (!fs.exists(dst.getParent)) fs.mkdirs(dst.getParent)
       Sources.renameOrFail(fs, s, dst)
     }
+    replaced
   }
 }

@@ -81,7 +81,6 @@ class EntryPointSpec extends AnyFunSuite {
     "BatchRunner.assembleChunks" -> "BatchRunner API: the pure debounce chunker",
     "BatchRunner.streamChunks" -> "BatchRunner API: the streaming chunk driver",
     "BatchRunner.LogAlerter.alerts" -> "BatchRunner API: what the log alerter sent",
-    "Pipeline.compactStore" -> "store compaction, on ROADMAP direction 3's crash enumeration",
     "Multimodal.TopBitsFrameCodec" -> "pins the FrameCodec seam that mm4 runs through")
 
   /** Source with comments and `package`/`import` lines removed: a

@@ -869,47 +869,6 @@ class PipelineSpec extends SparkSpec {
     deleteRec(d)
   }
 
-  test("compactStore serializes with writers and preserves the store exactly") {
-    import org.apache.spark.sql.functions.{col, lit, typedLit}
-    import spark.implicits._
-    val d = dir()
-    val path = s"$d/compactstore"
-    val schema = org.apache.spark.sql.types.StructType.fromDDL(
-      "order_date STRING, total_orders BIGINT, total_revenue DOUBLE, " +
-        "data_sources ARRAY<STRING>, last_updated STRING")
-    def updates(dt: String, n: Long) =
-      Seq((dt, n, n * 10.0)).toDF(
-        "order_date", "total_orders", "total_revenue")
-        .withColumn("data_sources", typedLit(Seq("orders")))
-        .withColumn("last_updated", lit("t"))
-        .select(schema.fieldNames.map(col): _*)
-    val fields = Seq("total_orders", "total_revenue", "last_updated")
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(path), spark.sparkContext.hadoopConfiguration)
-    // several tiny batches fragment the partitions
-    Pipeline.upsertStore(spark, path, schema, updates("2024-06-01", 1L),
-      Seq("order_date"), fields)
-    Pipeline.upsertStore(spark, path, schema, updates("2024-06-02", 2L),
-      Seq("order_date"), fields)
-    val beforeRows = spark.read.schema(schema).parquet(path)
-      .orderBy(col("order_date")).collect().map(_.toString).toSeq
-    val epoch = Pipeline.latestManifest(fs, path).epoch
-    // a live writer blocks compaction cleanly
-    val held = Pipeline.acquireStoreLease(fs, path, epoch)
-    intercept[graft.pipeline.StoreLeaseHeldException] {
-      Pipeline.compactStore(spark, path)
-    }
-    Pipeline.releaseStoreLease(fs, path, held)
-    // unleased: compacts, preserves bytes-for-rows and the manifest
-    val res = Pipeline.compactStore(spark, path)
-    assert(res.nonEmpty)
-    assert(Pipeline.latestManifest(fs, path).epoch === epoch)
-    val afterRows = spark.read.schema(schema).parquet(path)
-      .orderBy(col("order_date")).collect().map(_.toString).toSeq
-    assert(afterRows === beforeRows)
-    deleteRec(d)
-  }
-
   test("stale lease takeover: TTL-expired holder is fenced by a bumped token, epoch-stale breaks free") {
     import org.apache.spark.sql.functions.{col, lit, typedLit}
     import spark.implicits._
@@ -1280,16 +1239,47 @@ class PipelineSpec extends SparkSpec {
     val schema = org.apache.spark.sql.types.StructType.fromDDL(
       "category STRING, order_date STRING, total_orders BIGINT, " +
         "data_sources ARRAY<STRING>")
+    val fs = org.apache.hadoop.fs.FileSystem.get(
+      new java.net.URI(path), spark.sparkContext.hadoopConfiguration)
+    // the store is compact by construction: after every op each listed
+    // partition holds one data file, and the root holds only partition
+    // dirs and manifests (with their .crc siblings) — no unpublished
+    // manifest, no side dir, and no held lease: a committed op leaves its
+    // own lease behind, at the epoch it committed over, which the next
+    // writer breaks without waiting for the TTL
+    def assertCompact(): Unit = {
+      val root = new java.io.File(path)
+      val m = Pipeline.latestManifest(fs, path)
+      root.list().foreach(n => assert(n.startsWith("order_date=") ||
+        n.matches("""_(manifest\.\d+|lease)|\._(manifest\.\d+|lease)\.crc"""),
+        s"$n left in the store root"))
+      val lease = new java.io.File(root, "_lease")
+      if (lease.exists)
+        assert(java.nio.file.Files.readString(lease.toPath).trim
+          .split(" ")(2).toLong < m.epoch, "a held lease is left")
+      m.partitions.foreach { pv =>
+        val data = new java.io.File(root, s"order_date=$pv").list()
+          .filterNot(n => n.startsWith("_") || n.startsWith("."))
+        assert(data.length === 1, s"order_date=$pv holds ${data.toSeq}")
+      }
+    }
     def updates(rows: (String, String, Long)*) =
       rows.toSeq.toDF("category", "order_date", "total_orders")
         .withColumn("data_sources", typedLit(Seq("orders")))
         .select(schema.fieldNames.map(col): _*)
-    def upsert(rows: (String, String, Long)*) =
-      Pipeline.upsertStore(spark, path, schema, updates(rows: _*),
+    def upsert(rows: (String, String, Long)*) = {
+      val n = Pipeline.upsertStore(spark, path, schema, updates(rows: _*),
         Seq("category", "order_date"), Seq("total_orders"))
+      assertCompact()
+      n
+    }
     def trueCount() = Pipeline.readOrInit(spark, path, schema).count()
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(path), spark.sparkContext.hadoopConfiguration)
+    def forget(cats: String*) = {
+      val r = Pipeline.forgetKeys(spark, path, schema,
+        cats.toSeq.toDF("category"), Seq("category"))
+      assertCompact()
+      r
+    }
 
     // the returned post-merge size is O(touched) arithmetic off the
     // manifest #rows tally — it must equal a full recount at every step
@@ -1299,11 +1289,11 @@ class PipelineSpec extends SparkSpec {
     assert(upsert(("A", "2024-06-01", 9L), ("C", "2024-06-03", 3L)) === 3L)
     assert(trueCount() === 3L)
     // forget maintains the tally through its delete
-    val (_, del) = Pipeline.forgetKeys(spark, path, schema,
-      Seq("B").toDF("category"), Seq("category"))
+    val (_, del) = forget("B")
     assert(del === 1L)
     // a retention sweep subtracts the expired partitions' rows
     val expired = Pipeline.retentionSweep(spark, path, "2024-06-02")
+    assertCompact()
     assert(expired.nonEmpty)
     assert(Pipeline.latestManifest(fs, path).rows === trueCount(),
       "the sweep's manifest must carry the recounted tally")
@@ -1311,6 +1301,13 @@ class PipelineSpec extends SparkSpec {
       "post-sweep merge must build on the sweep's tally")
     assert(upsert(("D", "2024-06-04", 5L), ("E", "2024-06-04", 6L))
       === trueCount(), "tally carried forward")
+    // 06-04 now holds a second row: a forget of C and D thins 06-04 to E
+    // and empties 06-03, which it retires
+    val (_, del2) = forget("C", "D")
+    assert(del2 === 2L)
+    val m = Pipeline.latestManifest(fs, path)
+    assert(m.partitions === Seq("2024-06-04"))
+    assert(m.rows === trueCount() && m.rows === 1L)
   }
 
   test("forgetKeys crash after commit: emptied-partition backup erased, never restored") {
@@ -1460,64 +1457,6 @@ class PipelineSpec extends SparkSpec {
     assert(!fs.exists(pending) && !fs.exists(old))
   }
 
-  test("compactStore crash between its renames: the partition is " +
-      "recovered before the next merge, never read as empty") {
-    import org.apache.spark.sql.functions.{col, typedLit}
-    import org.apache.hadoop.fs.{FileSystem, Path => HPath}
-    import spark.implicits._
-    val d = dir()
-    val path = s"$d/compactcrash"
-    val schema = org.apache.spark.sql.types.StructType.fromDDL(
-      "category STRING, order_date STRING, total_orders BIGINT, " +
-        "data_sources ARRAY<STRING>")
-    val dataSchema = org.apache.spark.sql.types.StructType(
-      schema.filterNot(_.name == "order_date"))
-    def upsert(rows: (String, String, Long)*) =
-      Pipeline.upsertStore(spark, path, schema,
-        rows.toSeq.toDF("category", "order_date", "total_orders")
-          .withColumn("data_sources", typedLit(Seq("orders")))
-          .select(schema.fieldNames.map(col): _*),
-        Seq("category", "order_date"), Seq("total_orders"))
-    def rows() = Pipeline.readOrInit(spark, path, schema).collect()
-      .map(r => (r.getAs[String]("category"), r.getAs[String]("order_date"))
-        -> r.getAs[Long]("total_orders")).toMap
-    val fs = FileSystem.get(new java.net.URI(path),
-      spark.sparkContext.hadoopConfiguration)
-    upsert(("A", "2024-06-01", 1L), ("B", "2024-06-01", 2L),
-      ("A", "2024-06-02", 3L))
-
-    // Sources.compact of 06-01 crashed between its two renames: the
-    // compacted copy is complete in the staged dir, the old partition
-    // moved aside, and no live dir is left
-    val live = new HPath(s"$path/order_date=2024-06-01")
-    val staged = Sources.sideDir(live, ".compact.tmp")
-    val aside = Sources.sideDir(live, ".compact.bak")
-    spark.read.schema(dataSchema).parquet(live.toString).coalesce(1)
-      .write.parquet(staged.toString)
-    assert(fs.rename(live, aside))
-    // a reader fails loud instead of reading the listed date as empty
-    val e = intercept[IllegalStateException] {
-      Pipeline.readOrInit(spark, path, schema)
-    }
-    assert(e.getMessage.contains("2024-06-01"))
-    // the next merge recovers the partition first and merges against it:
-    // B's row on the merged date survives
-    upsert(("A", "2024-06-01", 10L))
-    assert(rows() === Map(("A", "2024-06-01") -> 10L,
-      ("B", "2024-06-01") -> 2L, ("A", "2024-06-02") -> 3L))
-    assert(!fs.exists(staged) && !fs.exists(aside))
-
-    // the staged copy never completed: the aside copy is restored, here by
-    // compactStore's own recovery before it compacts
-    assert(fs.rename(live, aside))
-    fs.mkdirs(staged)
-    Pipeline.compactStore(spark, path)
-    assert(rows() === Map(("A", "2024-06-01") -> 10L,
-      ("B", "2024-06-01") -> 2L, ("A", "2024-06-02") -> 3L))
-    assert(!fs.exists(staged) && !fs.exists(aside))
-    deleteRec(d)
-  }
-
   test("readOrInit fails loud on a listed partition that no root holds") {
     import org.apache.spark.sql.functions.{col, lit, typedLit}
     import org.apache.hadoop.fs.{FileSystem, Path => HPath}
@@ -1582,51 +1521,6 @@ class PipelineSpec extends SparkSpec {
       "the uncommitted first-commit partition must be deleted")
     assert(Pipeline.readOrInit(spark, path, schema).collect()
       .map(_.getAs[String]("order_date")).toSeq === Seq("2024-06-02"))
-    deleteRec(d)
-  }
-
-  test("a compaction staged beside a live partition is hidden from " +
-      "partition discovery, and compactStore clears it") {
-    import org.apache.spark.sql.functions.{col, typedLit}
-    import org.apache.hadoop.fs.{FileSystem, Path => HPath}
-    import spark.implicits._
-    val d = dir()
-    val path = s"$d/compactside"
-    val schema = org.apache.spark.sql.types.StructType.fromDDL(
-      "category STRING, order_date STRING, total_orders BIGINT, " +
-        "data_sources ARRAY<STRING>")
-    val dataSchema = org.apache.spark.sql.types.StructType(
-      schema.filterNot(_.name == "order_date"))
-    def upsert(rows: (String, String, Long)*) =
-      Pipeline.upsertStore(spark, path, schema,
-        rows.toSeq.toDF("category", "order_date", "total_orders")
-          .withColumn("data_sources", typedLit(Seq("orders")))
-          .select(schema.fieldNames.map(col): _*),
-        Seq("category", "order_date"), Seq("total_orders"))
-    def rowsOf(df: org.apache.spark.sql.DataFrame) = df.collect()
-      .map(r => (r.getAs[String]("category"), r.getAs[String]("order_date"))
-        -> r.getAs[Long]("total_orders")).toMap
-    val fs = FileSystem.get(new java.net.URI(path),
-      spark.sparkContext.hadoopConfiguration)
-    upsert(("A", "2024-06-01", 1L), ("B", "2024-06-01", 2L),
-      ("A", "2024-06-02", 3L))
-    val before = rowsOf(Pipeline.readOrInit(spark, path, schema))
-
-    // Sources.compact of 06-01 between its staged write and its renames:
-    // the complete compacted copy sits beside the live partition
-    val live = new HPath(s"$path/order_date=2024-06-01")
-    val staged = Sources.sideDir(live, ".compact.tmp")
-    spark.read.schema(dataSchema).parquet(live.toString).coalesce(1)
-      .write.parquet(staged.toString)
-    assert(fs.exists(new HPath(staged, "_SUCCESS")))
-    assert(rowsOf(spark.read.schema(schema).parquet(path)) === before,
-      "a plain scan of the store must not see the side dir")
-    assert(rowsOf(Pipeline.readOrInit(spark, path, schema)) === before)
-
-    Pipeline.compactStore(spark, path)
-    assert(rowsOf(Pipeline.readOrInit(spark, path, schema)) === before)
-    assert(!fs.listStatus(new HPath(path)).exists(
-      _.getPath.getName.contains(".compact.")), "no side dir is left")
     deleteRec(d)
   }
 }

@@ -177,37 +177,6 @@ class SourcesSpec extends SparkSpec {
     assert(qe.sparkPlan.collect { case s: FileSourceScanExec => s }.size === 1)
   }
 
-  test("compact rewrites a fragmented table to few files, data intact") {
-    val out = s"$tmp/fragmented"
-    val df = Sources.table(spark, sf0001, "lineitem")
-    df.repartition(20).write.mode("overwrite").parquet(out)
-    val before = df.collect().map(_.toString).sorted
-    val (nBefore, nAfter) = Sources.compact(spark, out)
-    assert(nBefore === 20)
-    assert(nAfter < nBefore, s"expected fewer files, got $nAfter")
-    val after = spark.read.parquet(out).collect().map(_.toString).sorted
-    assert(after === before, "compaction must not change the data")
-  }
-
-  test("compactPartitioned compacts per partition, preserving layout") {
-    val out = s"$tmp/part_store"
-    val df = Sources.table(spark, sf0001, "region")
-    // two fragmented hive partitions, as batch upserts would leave them
-    // (partition value lives in the dir name only, like partitionBy writes)
-    df.repartition(5).write.mode("overwrite")
-      .parquet(s"$out/order_date=2024-06-01")
-    df.repartition(5).write.mode("overwrite")
-      .parquet(s"$out/order_date=2024-06-02")
-    val results = Sources.compactPartitioned(spark, out)
-    assert(results.keySet ===
-      Set("order_date=2024-06-01", "order_date=2024-06-02"))
-    results.values.foreach { case (b, a) => assert(b === 5 && a < b) }
-    // hive layout preserved: partition pruning still works
-    assert(Files.exists(java.nio.file.Paths.get(s"$out/order_date=2024-06-01")))
-    val read = spark.read.parquet(out)
-    assert(read.filter("order_date = '2024-06-02'").count() === df.count())
-  }
-
   test("epochUs/epochSec normalize every events.ts physical type the " +
       "driver has shipped (fixture contract)") {
     import org.apache.spark.sql.functions._

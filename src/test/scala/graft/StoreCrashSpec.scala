@@ -16,8 +16,9 @@ import org.scalatest.BeforeAndAfterAll
 import graft.io.Sources
 import graft.pipeline.{Pipeline, StoreLeaseHeldException}
 
-/** The epoch-manifest store under a crash at every mutating call of a
-  * commit, and beside another writer. The stores live under
+/** The epoch-manifest store's mutators (`upsertStore`, `forgetKeys`,
+  * `retentionSweep`) under a crash at every mutating call, and beside
+  * another writer. The stores live under
   * [[CrashingFs.Scheme]], so every mutation a store call makes, Spark's
   * writes included, goes through one [[CrashingFs]]. */
 class StoreCrashSpec extends SparkSpec with BeforeAndAfterAll {
@@ -47,11 +48,14 @@ class StoreCrashSpec extends SparkSpec with BeforeAndAfterAll {
   private def upsert(path: String, batch: DataFrame): Long =
     Pipeline.upsertStore(spark, path, schema, batch, keys, fields)
 
-  private def rows(path: String): Map[(String, String), (Long, String)] =
-    Pipeline.readOrInit(spark, path, schema).collect()
+  private def rowsOf(df: DataFrame): Map[(String, String), (Long, String)] =
+    df.collect()
       .map(r => (r.getAs[String]("category"), r.getAs[String]("order_date"))
         -> (r.getAs[Long]("total_orders"), r.getAs[String]("last_updated")))
       .toMap
+
+  private def rows(path: String) =
+    rowsOf(Pipeline.readOrInit(spark, path, schema))
 
   /** The store path inside local dir `d`. */
   private def store(d: JPath): String = s"${CrashingFs.Scheme}://$d/store"
@@ -83,6 +87,53 @@ class StoreCrashSpec extends SparkSpec with BeforeAndAfterAll {
   private def causes(e: Throwable): Seq[Throwable] =
     Iterator.iterate(e)(_.getCause).takeWhile(_ != null).toSeq
 
+  /** Runs `call` on a copy of the store dir `base`, crash-free, and then
+    * once per mutating call k it made, on a fresh copy crashed at call k.
+    * A reader of the crashed copy sees exactly the snapshot before or
+    * after the crash-free call; after [[expire]] a rerun of `call` reaches
+    * the crash-free snapshot and leaves no commit in flight and no
+    * staging dir. `check(at, d)` then checks the end state of copy `d`; it
+    * checks the crash-free copy too. Returns the crash-free call count. */
+  private def crashAtEveryCall(base: JPath)(call: String => Any)(
+      check: (String, JPath) => Unit): Int = {
+    val pre = rows(store(base))
+    val ref = copyOf(base)
+    fs.calls.set(0)
+    call(store(ref))
+    val n = fs.calls.get
+    val post = rows(store(ref))
+    check("crash-free", ref)
+    for (k <- 1 to n) {
+      val d = copyOf(base)
+      val path = store(d)
+      val at = s"crash at call $k of $n"
+      fs.calls.set(0)
+      fs.crashAt = k
+      val e = try intercept[Throwable](call(path))
+        finally fs.crashAt = Int.MaxValue
+      assert(causes(e).exists(_.isInstanceOf[CrashingFs.Crash]), s"$at: $e")
+      val seen = rows(path)
+      assert(seen == pre || seen == post, s"$at: a reader saw $seen")
+      expire(d)
+      call(path)
+      assert(rows(path) === post, at)
+      val m = Pipeline.latestManifest(fs, path)
+      assert(!Files.exists(d.resolve(s"store.hist/${m.epoch}")),
+        s"$at: a commit in flight is left")
+      assert(!tree(d).exists(_.getFileName.toString.startsWith("store.tmp")),
+        s"$at: a staging dir is left")
+      check(at, d)
+      tree(d).foreach(Files.delete)
+    }
+    tree(ref).foreach(Files.delete)
+    n
+  }
+
+  /** No forget tombstone, published or a side dir of one, is left. */
+  private def noTombstone(at: String, d: JPath): Unit =
+    assert(!tree(d).exists(_.getFileName.toString.contains(".forget.")),
+      s"$at: a tombstone is left")
+
   test("a commit crashed at any mutating call is read as before or after, " +
       "and the next commit converges") {
     val base = Files.createTempDirectory("graft-crash")
@@ -90,55 +141,97 @@ class StoreCrashSpec extends SparkSpec with BeforeAndAfterAll {
       ("B", "2024-06-01", 2L)))
     // one stored date and one new date
     val batch = updates("t2", ("A", "2024-06-01", 5L), ("A", "2024-06-02", 3L))
-    val pre = rows(store(base))
-
-    // the crash-free commit: its rows, its manifest tally, its calls
-    val ref = copyOf(base)
-    fs.calls.set(0)
-    upsert(store(ref), batch)
-    val n = fs.calls.get
-    val post = rows(store(ref))
-    val tally = Pipeline.latestManifest(fs, store(ref)).rows
-    assert(post === Map(("A", "2024-06-01") -> (5L, "t2"),
-      ("B", "2024-06-01") -> (2L, "t1"), ("A", "2024-06-02") -> (3L, "t2")))
-    assert(tally === 3L)
-    info(s"a crash-free commit makes $n mutating calls")
-
-    for (k <- 1 to n) {
-      val d = copyOf(base)
-      val path = store(d)
-      fs.calls.set(0)
-      fs.crashAt = k
-      val e = try intercept[Throwable](upsert(path, batch))
-        finally fs.crashAt = Int.MaxValue
-      assert(causes(e).exists(_.isInstanceOf[CrashingFs.Crash]),
-        s"crash at call $k of $n: $e")
-      val seen = rows(path)
-      assert(seen == pre || seen == post,
-        s"crash at call $k of $n: a reader saw $seen")
-      expire(d)
-      upsert(path, batch)
-      assert(rows(path) === post, s"crash at call $k of $n")
-      val m = Pipeline.latestManifest(fs, path)
-      assert(m.rows === tally, s"crash at call $k of $n")
-      assert(!Files.exists(d.resolve(s"store.hist/${m.epoch}")),
-        s"crash at call $k of $n: a commit in flight is left")
-      assert(!tree(d).exists(_.getFileName.toString.startsWith("store.tmp")),
-        s"crash at call $k of $n: a staging dir is left")
-      tree(d).foreach(Files.delete)
+    val n = crashAtEveryCall(base)(upsert(_, batch)) { (at, d) =>
+      assert(rows(store(d)) === Map(("A", "2024-06-01") -> (5L, "t2"),
+        ("B", "2024-06-01") -> (2L, "t1"), ("A", "2024-06-02") -> (3L, "t2")),
+        at)
+      assert(Pipeline.latestManifest(fs, store(d)).rows === 3L, at)
     }
-    Seq(base, ref).foreach(tree(_).foreach(Files.delete))
+    info(s"a crash-free commit makes $n mutating calls")
+    tree(base).foreach(Files.delete)
+  }
+
+  test("a forget crashed at any mutating call is read as before or after, " +
+      "and its rerun converges and erases every version") {
+    import spark.implicits._
+    val base = Files.createTempDirectory("graft-crash")
+    // A's forget thins 06-01 and empties 06-02
+    upsert(store(base), updates("t1", ("A", "2024-06-01", 1L),
+      ("B", "2024-06-01", 2L), ("A", "2024-06-02", 3L)))
+    val forgotten = Seq("A").toDF("category")
+    val dataSchema = StructType(schema.filterNot(_.name == "order_date"))
+    val n = crashAtEveryCall(base)(Pipeline.forgetKeys(spark, _, schema,
+        forgotten, Seq("category"))) { (at, d) =>
+      assert(rows(store(d)) === Map(("B", "2024-06-01") -> (2L, "t1")), at)
+      assert(Pipeline.latestManifest(fs, store(d)) ===
+        Pipeline.StoreManifest(2L, Seq("2024-06-01"), 1L), at)
+      noTombstone(at, d)
+      // epoch 1 reads without the key, and no purge side dir (which
+      // would hold a copy with it) is left
+      assert(rowsOf(Pipeline.readAt(spark, store(d), 1L, schema)) ===
+        Map(("B", "2024-06-01") -> (2L, "t1")), at)
+      assert(!tree(d).exists(_.getFileName.toString.contains(".fk.")),
+        s"$at: a purge side dir is left")
+      val versions = tree(d).filter(p =>
+        p.getFileName.toString.startsWith("order_date=") &&
+          p.getParent.getParent.getFileName.toString == "store.hist")
+      assert(versions.nonEmpty, at)
+      versions.foreach { v =>
+        assert(spark.read.schema(dataSchema).parquet(v.toString)
+          .where(col("category") === "A").count() === 0L, s"$at: $v holds A")
+      }
+    }
+    info(s"a crash-free forget makes $n mutating calls")
+    tree(base).foreach(Files.delete)
+  }
+
+  test("a retention sweep crashed at any mutating call is read as before " +
+      "or after, and its rerun converges") {
+    val base = Files.createTempDirectory("graft-crash")
+    upsert(store(base), updates("t1", ("A", "2024-06-01", 1L),
+      ("B", "2024-06-02", 2L)))
+    // 06-01 is expired and still on disk: the next sweep deletes it
+    Pipeline.retentionSweep(spark, store(base), "2024-06-02")
+    val n = crashAtEveryCall(base)(
+        Pipeline.retentionSweep(spark, _, "2024-06-03")) { (at, d) =>
+      assert(rows(store(d)).isEmpty, at)
+      assert(Pipeline.latestManifest(fs, store(d)) ===
+        Pipeline.StoreManifest(3L, Nil, 0L), at)
+      noTombstone(at, d)
+    }
+    info(s"a crash-free sweep makes $n mutating calls")
+    tree(base).foreach(Files.delete)
   }
 
   test("a clean commit leaves no recovery work: the next takes the lease once") {
     val d = Files.createTempDirectory("graft-crash")
-    upsert(store(d), updates("t1", ("A", "2024-06-01", 1L)))
+    val path = store(d)
+    val snapshots = scala.collection.mutable.Map.empty[Long,
+      Map[(String, String), (Long, String)]]
+    def commit(batch: DataFrame): Unit = {
+      upsert(path, batch)
+      snapshots(Pipeline.latestManifest(fs, path).epoch) = rows(path)
+    }
+    commit(updates("t1", ("A", "2024-06-01", 1L)))
     val leases = new AtomicInteger
     fs.before = (op, p) =>
       if (op == "create" && p.getName == "_lease") leases.incrementAndGet()
-    try upsert(store(d), updates("t2", ("A", "2024-06-01", 2L)))
+    try commit(updates("t2", ("A", "2024-06-01", 2L)))
     finally fs.before = (_, _) => ()
     assert(leases.get === 1)
+    // two new-day commits: they replace nothing, so keep no version root
+    commit(updates("t3", ("B", "2024-06-02", 3L)))
+    commit(updates("t4", ("C", "2024-06-03", 4L)))
+    val hist = d.resolve("store.hist").toFile
+    assert(hist.list().toSeq === Seq("1"),
+      "only the commit over epoch 1 replaced a partition")
+    assert(new java.io.File(hist, "1").list().nonEmpty)
+    // every retained epoch still reads exactly as it was committed
+    assert(snapshots.keySet === Set(1L, 2L, 3L, 4L))
+    snapshots.foreach { case (e, want) =>
+      assert(rowsOf(Pipeline.readAt(spark, path, e, schema)) === want,
+        s"readAt($e)")
+    }
     tree(d).foreach(Files.delete)
   }
 
